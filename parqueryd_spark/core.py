@@ -20,6 +20,7 @@ oracle we match.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -97,35 +98,25 @@ def aggregate_files(
             return df.groupBy(*groupby_cols).agg(*aggs)
         return df.agg(*aggs)
 
+    existing = resolve_paths(paths, data_dir=data_dir, spark=spark)
+    if not existing:
+        return None
     if manifest is not None:
         from pyspark.sql import functions as _F
 
         from parqueryd_spark.sources.manifest import prune_paths
 
-        existing = resolve_paths(paths, data_dir=data_dir, spark=spark)
-        if not existing:
-            return None
         kept = prune_paths(manifest, existing, where_terms)
         if not kept:
             # every shard provably disjoint from the predicate: same result
             # as filtering everything out (schema from a real shard, 0 rows)
             return _one(spark.read.parquet(existing[0]).filter(_F.lit(False)))
-        paths, data_dir = kept, None
+        existing = kept
 
     if shard_merge == "concat" and aggregate:
-        existing = resolve_paths(paths, data_dir=data_dir, spark=spark)
-        if not existing:
-            return None
         parts = [_one(spark.read.parquet(p)) for p in existing]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    df = read_parquet(spark, paths, data_dir=data_dir)
-    if df is None:
-        return None
-    return _one(df)
+        return reduce(DataFrame.unionByName, parts)
+    return _one(spark.read.parquet(*existing))
 
 
 # agg methods whose output type is knowable without reading any shard; the

@@ -4,7 +4,8 @@ The reference passes two opaque list structures straight through to its compute
 dependency (reference: parqueryd/worker.py:382-385):
 
 - ``where_terms_list``: AND-combined ``[col, op, value]`` triples with ops
-  ``== != > >= < <= in "not in"`` (SURVEY.md §2 O2).
+  ``== != > >= < <= in "not in"`` (SURVEY.md §2 O2), plus the SQL
+  spellings ``=`` and ``<>``.
 - ``aggregation_list``: ``[input_col, method, output_col]`` triples, with the
   bare-name shorthand ``['col']`` meaning sum into the same name
   (reference: README.md:105,111; tests/test_simple_rpc.py:114).
@@ -28,11 +29,14 @@ class QueryCompileError(ValueError):
     reference's RPCError on malformed args (worker.py:404-406)."""
 
 
+# SQL spellings of the canonical ops. Folded once here, so the executor
+# (compile_where_terms) and the zone-map planner (sources/manifest.py) share
+# one op vocabulary.
+_OP_ALIASES = {"=": "==", "<>": "!="}
+
 _COMPARE_OPS = {
     "==": lambda c, v: c == v,
-    "=": lambda c, v: c == v,
     "!=": lambda c, v: c != v,
-    "<>": lambda c, v: c != v,
     ">": lambda c, v: c > v,
     ">=": lambda c, v: c >= v,
     "<": lambda c, v: c < v,
@@ -40,32 +44,42 @@ _COMPARE_OPS = {
 }
 
 
-def compile_where_terms(where_terms: Sequence[Sequence] | None) -> Column | None:
-    """``[[col, op, value], ...]`` -> AND-combined Column predicate, or None
-    for an empty/absent list (the reference's in-tree calls all pass ``[]``)."""
-    if not where_terms:
-        return None
-    preds: list[Column] = []
-    for term in where_terms:
+def normalize_where_terms(where_terms: Sequence[Sequence] | None) -> list[tuple[str, str, object]]:
+    """Validate ``[[col, op, value], ...]`` and canonicalize each term to
+    ``(col, op, value)``: ops lower-cased, stripped and de-aliased (``=`` ->
+    ``==``, ``<>`` -> ``!=``); an ``in`` / ``not in`` value becomes a list
+    (a scalar is a one-element set)."""
+    out: list[tuple[str, str, object]] = []
+    for term in where_terms or []:
         if not isinstance(term, (list, tuple)) or len(term) != 3:
             raise QueryCompileError(f"where term must be [col, op, value], got {term!r}")
         col_name, op, value = term
-        col = F.col(col_name)
         if not isinstance(op, str):
             raise QueryCompileError(f"where op must be a string, got {op!r} in term {term!r}")
         op_key = op.strip().lower()
+        op_key = _OP_ALIASES.get(op_key, op_key)
         if op_key in ("in", "not in"):
-            if not isinstance(value, (list, tuple, set)):
-                value = [value]
-            pred = col.isin(*value)
-            if op_key == "not in":
-                pred = ~pred
-        elif op_key in _COMPARE_OPS:
-            pred = _COMPARE_OPS[op_key](col, F.lit(value))
-        else:
+            value = list(value) if isinstance(value, (list, tuple, set)) else [value]
+        elif op_key not in _COMPARE_OPS:
             raise QueryCompileError(f"unsupported where op {op!r} in term {term!r}")
+        out.append((col_name, op_key, value))
+    return out
+
+
+def compile_where_terms(where_terms: Sequence[Sequence] | None) -> Column | None:
+    """``[[col, op, value], ...]`` -> AND-combined Column predicate, or None
+    for an empty/absent list (the reference's in-tree calls all pass ``[]``)."""
+    preds: list[Column] = []
+    for col_name, op, value in normalize_where_terms(where_terms):
+        col = F.col(col_name)
+        if op in ("in", "not in"):
+            pred = col.isin(*value)
+            if op == "not in":
+                pred = ~pred
+        else:
+            pred = _COMPARE_OPS[op](col, F.lit(value))
         preds.append(pred)
-    return reduce(lambda a, b: a & b, preds)
+    return reduce(lambda a, b: a & b, preds) if preds else None
 
 
 def _std(col: str) -> Column:

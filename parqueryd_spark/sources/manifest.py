@@ -17,9 +17,9 @@ directory of parquet. This module is that layer as plain DataFrames:
   persist it next to the data and rebuild incrementally per publish batch
   (it unions/overwrites per file, like the other incremental indexes).
 - ``prune_files``: evaluate the reference's ``[[col, op, value], ...]``
-  where-terms (the same triples ``functions/compile.py`` executes — one
-  predicate language for execution AND planning) against the manifest,
-  yielding a per-file keep verdict.
+  where-terms (the same triples ``functions/compile.py`` executes, through
+  the same op normalization — one predicate language for execution AND
+  planning) against the manifest, yielding a per-file keep verdict.
 - ``scan_pruned``: read only the kept files, then apply the exact compiled
   filter — pruning is an optimization, never a semantics change.
 
@@ -32,9 +32,15 @@ unsatisfiable on an all-null chunk (``x != v`` is NULL for NULL x), so
 even a pruning bug a perf bug, not a wrong answer — but the property test
 asserts kept ⊇ matching-files anyway.
 
-Driver-side cost is one collect of the KEPT file paths — the same O(files)
-planning-time listing Spark's own FileIndex does; verdict evaluation stays
-distributed. Hive-partitioned layouts compose: ``build_manifest`` records
+Every per-file verdict — keep, full satisfaction, row count, one column's
+bounds — comes from ONE ``groupBy("file")`` aggregation over the manifest
+(``_file_verdicts``): each term is a ``bool_and`` over the file's stats row
+for the term's column, so the number of terms never adds joins or stages.
+The driver then collects one small row per file — the same O(files)
+planning-time listing Spark's own FileIndex does. ``prune_paths`` without
+where-terms keeps every path and runs no job at all.
+
+Hive-partitioned layouts compose: ``build_manifest`` records
 directory-derived ``key=value`` partition values as constant-per-file stats
 rows (so partition terms prune through the same verdict machinery as data
 stats), and pruned subset reads pass ``basePath`` so the partition columns
@@ -44,7 +50,9 @@ skips via both layers at once.
 
 from __future__ import annotations
 
+import bisect
 import datetime as _dt
+import operator
 from collections.abc import Iterable, Sequence
 from functools import reduce
 
@@ -59,7 +67,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from parqueryd_spark.functions.compile import QueryCompileError, compile_where_terms
+from parqueryd_spark.functions.compile import compile_where_terms, normalize_where_terms
 from parqueryd_spark.sources.fs import HadoopFS
 
 MANIFEST_SCHEMA = StructType(
@@ -75,6 +83,8 @@ MANIFEST_SCHEMA = StructType(
         StructField("max_str", StringType(), True),
     ]
 )
+
+_RANGE_OPS = {">": operator.gt, ">=": operator.ge, "<": operator.lt, "<=": operator.le}
 
 _EPOCH_DT = _dt.datetime(1970, 1, 1)
 _EPOCH_D = _dt.date(1970, 1, 1)
@@ -114,13 +124,19 @@ def build_manifest(
     distributed footer sweep; data pages are never read. ``columns`` limits
     the manifest to the hot filter columns (pruning treats absent columns as
     unprunable, so a narrow manifest stays sound)."""
-    files = HadoopFS(spark, path).list_files(path)
+    return _sweep_footers(spark, path, HadoopFS(spark, path).list_files(path), columns)
+
+
+def _sweep_footers(
+    spark: SparkSession, path: str, files: Sequence[str], columns: Sequence[str] | None
+) -> DataFrame:
+    """Manifest rows for ``files`` (under the dataset root ``path``): one
+    mapInPandas task per slice of files, each opening footers only."""
     if not files:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
-    slices = min(len(files), 64)
     return (
         spark.createDataFrame([(f,) for f in files], "file string")
-        .repartition(slices)
+        .repartition(min(len(files), 64))
         .mapInPandas(
             _footer_reader(list(columns) if columns else None, root=path),
             MANIFEST_SCHEMA,
@@ -140,11 +156,7 @@ def _footer_reader(wanted: list[str] | None, root: str | None = None):
     so where-terms on partition columns prune through the SAME verdict
     machinery as data-column stats, and the two pruning layers compose."""
     out_cols = [f.name for f in MANIFEST_SCHEMA.fields]
-    norm_root = (
-        ("/" + root.split(":", 1)[-1].lstrip("/") if ":" in root else root).rstrip("/")
-        if root is not None
-        else None
-    )
+    norm_root = _norm_path(root).rstrip("/") if root is not None else None
 
     def _footers(batches):
         # self-contained closure: executors must not need the repo on their
@@ -305,116 +317,173 @@ def refresh_manifest(
     atomic_publish swaps). Cost is O(new files), the same increment contract
     as the minhash/IVF/HLL indexes — a 100 TB corpus appending a daily batch
     re-reads a day of footers, not the standing corpus's."""
-    current = set(HadoopFS(spark, path).list_files(path))
-    if not current:
+    live = _split_refresh(spark, path, old)
+    if live is None:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
-    known = {r.file for r in old.select("file").distinct().collect()}
-    current_df = spark.createDataFrame([(f,) for f in sorted(current)], "file string")
-    # semi join, not a giant isin literal: the file list can be millions long
-    kept = old.join(current_df, "file", "left_semi")
-    new_files = sorted(current - known)
+    kept, new_files = live
     if not new_files:
         return kept
-    slices = min(len(new_files), 64)
-    fresh = (
-        spark.createDataFrame([(f,) for f in new_files], "file string")
-        .repartition(slices)
-        .mapInPandas(
-            _footer_reader(list(columns) if columns else None, root=path),
-            MANIFEST_SCHEMA,
-        )
-    )
-    return kept.unionByName(fresh)
+    return kept.unionByName(_sweep_footers(spark, path, new_files, columns))
+
+
+def _split_refresh(
+    spark: SparkSession, path: str, old: DataFrame
+) -> tuple[DataFrame, list[str]] | None:
+    """The refresh increment of a per-file index ``old`` over the dataset
+    at ``path``: (old's rows for files still live, live files old doesn't
+    cover), or None when ``path`` holds no files. Files match on
+    ``_norm_path``, because index rows may carry ``input_file_name()``
+    spellings (``file:///x``) while the lister yields ``file:/x``."""
+    current = HadoopFS(spark, path).list_files(path)
+    if not current:
+        return None
+    live = {_norm_path(f) for f in current}
+    known = [r.file for r in old.select("file").distinct().collect()]
+    still = spark.createDataFrame([(f,) for f in known if _norm_path(f) in live], "file string")
+    # semi join, not a giant isin literal: the file list can be millions long
+    kept = old.join(still, "file", "left_semi")
+    known_n = {_norm_path(f) for f in known}
+    return kept, sorted(f for f in current if _norm_path(f) not in known_n)
+
+
+def _bounds(value):
+    """``(lo, hi, v)`` Columns comparing ``value`` against the stats row's
+    bounds of its encoding family — numeric (numbers, dates, datetimes) or
+    lexical (strings) — or None for a value neither family encodes. Bounds
+    of the wrong family (a numeric term on a string column) are NULL, and
+    each caller coalesces NULL to its conservative answer."""
+    v_num = _coerce_num(value)
+    if v_num is not None:
+        return F.col("min_num"), F.col("max_num"), F.lit(v_num)
+    if isinstance(value, str):
+        return F.col("min_str"), F.col("max_str"), F.lit(value)
+    return None
 
 
 def _window_pred(value):
     """Column predicate: could [min, max] contain ``value``?"""
-    v_num = _coerce_num(value)
-    if v_num is not None:
-        lo, hi, v = F.col("min_num"), F.col("max_num"), F.lit(v_num)
-    elif isinstance(value, str):
-        lo, hi, v = F.col("min_str"), F.col("max_str"), F.lit(value)
-    else:
+    b = _bounds(value)
+    if b is None:
         return F.lit(True)  # unencodable type: never prune on it
-    # bounds of the wrong family (e.g. numeric term on a string column)
-    # stay conservative via the coalesce(True)
+    lo, hi, v = b
     return F.coalesce((lo <= v) & (hi >= v), F.lit(True))
 
 
 def _point_pred(value):
     """Column predicate: is the file constant at exactly ``value``?"""
-    v_num = _coerce_num(value)
-    if v_num is not None:
-        lo, hi, v = F.col("min_num"), F.col("max_num"), F.lit(v_num)
-    elif isinstance(value, str):
-        lo, hi, v = F.col("min_str"), F.col("max_str"), F.lit(value)
-    else:
+    b = _bounds(value)
+    if b is None:
         return F.lit(False)
+    lo, hi, v = b
     return F.coalesce((lo == v) & (hi == v), F.lit(False))
 
 
 def _bound_pred(op: str, value):
-    """Keep-verdict for one term over a (file, column) stats row that HAS
-    min/max bounds. Conservative by construction: anything uncertain
-    evaluates to keep."""
-    if op in ("==", "="):
+    """Keep-verdict for one normalized term over a (file, column) stats row
+    that HAS min/max bounds. Conservative by construction: anything
+    uncertain evaluates to keep."""
+    if op == "==":
         return _window_pred(value)
-    if op in (">", ">=", "<", "<="):
-        v_num = _coerce_num(value)
-        if v_num is not None:
-            lo, hi, v = F.col("min_num"), F.col("max_num"), F.lit(v_num)
-        elif isinstance(value, str):
-            lo, hi, v = F.col("min_str"), F.col("max_str"), F.lit(value)
-        else:
-            return F.lit(True)
-        cmp = {">": hi > v, ">=": hi >= v, "<": lo < v, "<=": lo <= v}[op]
-        return F.coalesce(cmp, F.lit(True))
     if op == "in":
-        vs = value if isinstance(value, (list, tuple, set)) else [value]
-        preds = [_window_pred(v) for v in vs]
-        return reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
+        return reduce(operator.or_, map(_window_pred, value), F.lit(False))
     if op == "!=":
         # a constant-at-v file has no satisfying non-null row; NULLs never
         # satisfy != either, so null_count is irrelevant here
         return ~_point_pred(value)
     if op == "not in":
-        vs = value if isinstance(value, (list, tuple, set)) else [value]
-        hit = [_point_pred(v) for v in vs]
-        return ~(reduce(lambda a, b: a | b, hit)) if hit else F.lit(True)
-    raise QueryCompileError(f"unsupported where op {op!r} for pruning")
+        return ~reduce(operator.or_, map(_point_pred, value), F.lit(False))
+    b = _bounds(value)
+    if b is None:
+        return F.lit(True)
+    lo, hi, v = b
+    # x > v is possible iff max > v; x < v is possible iff min < v
+    return F.coalesce(_RANGE_OPS[op](hi if op[0] == ">" else lo, v), F.lit(True))
+
+
+def _keep_pred(op: str, value):
+    """Keep-verdict for one normalized term over any (file, column) stats
+    row: an all-null chunk satisfies no op (SQL NULL comparison semantics);
+    a chunk without bounds is unprunable."""
+    all_null = F.col("null_count").isNotNull() & (F.col("null_count") == F.col("n_rows"))
+    return (
+        F.when(all_null, F.lit(False))
+        .when(~F.col("has_min_max"), F.lit(True))
+        .otherwise(_bound_pred(op, value))
+    )
+
+
+def _full_pred(op: str, value):
+    """Keep-verdict complement: does EVERY non-null row of a (file, column)
+    stats row satisfy the normalized term? Conservative toward False
+    (uncertain files get scanned, never stat-counted)."""
+    b = None if op in ("in", "not in") else _bounds(value)
+    if b is None:
+        # set-membership terms and unencodable values are never proved
+        # file-wide: such files scan
+        return F.lit(False)
+    lo, hi, v = b
+    if op == "==":
+        core = (lo == v) & (hi == v)
+    elif op == "!=":
+        core = (hi < v) | (lo > v)
+    else:
+        # every x > v iff min > v; every x < v iff max < v
+        core = _RANGE_OPS[op](lo if op[0] == ">" else hi, v)
+    # NULL rows never satisfy a predicate, so a stat-counted file must have
+    # a proven-zero null count for the term's column
+    return (
+        F.col("has_min_max")
+        & F.col("null_count").isNotNull()
+        & (F.col("null_count") == 0)
+        & F.coalesce(core, F.lit(False))
+    )
+
+
+def _file_verdicts(
+    mf: DataFrame, terms: list, full: bool = False, stats_col: str | None = None
+) -> DataFrame:
+    """Every per-file planning fact in ONE ``groupBy("file")`` aggregation
+    over the manifest, for normalized ``terms`` (AND-combined):
+
+    - ``n_rows``, and ``keep``: could the file hold a matching row?
+    - with ``full``, ``full``: does every non-null row provably match?
+    - with ``stats_col``, that column's ``has_min_max``/``min_num``/``max_num``.
+
+    Each term reads only its own column's stats row, as
+    ``bool_and(when(column == <col>, <pred>))``. A file without that row
+    (the column is absent from the manifest or from the file) gets NULL,
+    which coalesces to keep=True and full=False: absent stats never prune
+    and never prove."""
+
+    def all_terms(pred, missing: bool):
+        per_term = (
+            F.coalesce(F.bool_and(F.when(F.col("column") == c, pred(op, v))), F.lit(missing))
+            for c, op, v in terms
+        )
+        return reduce(operator.and_, per_term, F.lit(True))
+
+    aggs = [F.max("n_rows").alias("n_rows"), all_terms(_keep_pred, True).alias("keep")]
+    if full:
+        aggs.append(all_terms(_full_pred, False).alias("full"))
+    if stats_col is not None:
+        on = F.col("column") == stats_col
+        aggs += [
+            F.bool_and(F.when(on, F.col("has_min_max"))).alias("has_min_max"),
+            F.min(F.when(on, F.col("min_num"))).alias("min_num"),
+            F.max(F.when(on, F.col("max_num"))).alias("max_num"),
+        ]
+    return mf.groupBy("file").agg(*aggs)
 
 
 def prune_files(
     manifest: DataFrame, where_terms: Sequence[Sequence] | None
 ) -> DataFrame:
     """Per-file keep verdicts ``(file, keep)`` for AND-combined where-terms
-    (the reference's triple syntax — ``functions/compile.py``). A term whose
-    column is absent from the manifest keeps every file; an all-null chunk
-    satisfies no op (SQL NULL comparison semantics) and is skipped."""
-    files = manifest.select("file").distinct()
-    if not where_terms:
-        return files.withColumn("keep", F.lit(True))
-    out = files
-    for i, term in enumerate(where_terms):
-        if not isinstance(term, (list, tuple)) or len(term) != 3:
-            raise QueryCompileError(f"where term must be [col, op, value], got {term!r}")
-        col_name, op, value = term
-        op_key = str(op).strip().lower()
-        all_null = F.col("null_count").isNotNull() & (
-            F.col("null_count") == F.col("n_rows")
-        )
-        keep = F.when(all_null, F.lit(False)).otherwise(
-            F.when(~F.col("has_min_max"), F.lit(True)).otherwise(
-                _bound_pred(op_key, value)
-            )
-        )
-        verdict = (
-            manifest.filter(F.col("column") == col_name)
-            .select("file", keep.alias(f"__k{i}"))
-        )
-        out = out.join(verdict, "file", "left")
-    ks = [F.coalesce(F.col(f"__k{i}"), F.lit(True)) for i in range(len(where_terms))]
-    return out.select("file", reduce(lambda a, b: a & b, ks).alias("keep"))
+    (the reference's triple syntax — ``functions/compile.py``), from one
+    per-file aggregation over the manifest (``_file_verdicts``). A term
+    whose column is absent from the manifest keeps every file; an all-null
+    chunk satisfies no op (SQL NULL comparison semantics) and is skipped."""
+    return _file_verdicts(manifest, normalize_where_terms(where_terms)).select("file", "keep")
 
 
 def pruned_file_list(
@@ -444,15 +513,19 @@ def prune_paths(
     a directory is dropped only when EVERY manifest file under it is ruled
     out; a path with no manifest coverage at all is kept.
 
-    Driver-side cost is O(paths log files): verdict keys are sorted once and
-    each shard path binary-searches its prefix range (a per-path linear scan
-    of the verdict dict would be quadratic at millions of files).
+    Without where-terms every path is kept and no Spark job runs. Otherwise
+    the verdicts are one per-file aggregation (``prune_files``), and the
+    driver collects one ``(file, keep)`` row per manifest file. Matching is
+    O(paths log files): verdict keys are sorted once and each shard path
+    binary-searches its prefix range (a per-path linear scan of the verdict
+    dict would be quadratic at millions of files).
     """
-    import bisect
-
+    terms = normalize_where_terms(where_terms)
+    if not terms:
+        return list(paths)
     verdicts = {
         _norm_path(r.file): bool(r.keep)
-        for r in prune_files(manifest, where_terms).collect()
+        for r in _file_verdicts(manifest, terms).select("file", "keep").collect()
     }
     keys = sorted(verdicts)
     kept: list[str] = []
@@ -484,9 +557,7 @@ def skip_stats(manifest: DataFrame, where_terms: Sequence[Sequence] | None) -> d
     """How much the layout lets this predicate skip: files/rows total vs
     kept. ``rows_kept`` is the scheduling bound (rows in files we must
     read), not the match count."""
-    per_file = manifest.groupBy("file").agg(F.max("n_rows").alias("n_rows"))
-    joined = per_file.join(prune_files(manifest, where_terms), "file")
-    row = joined.agg(
+    row = _file_verdicts(manifest, normalize_where_terms(where_terms)).agg(
         F.count(F.lit(1)).alias("files_total"),
         F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("files_kept"),
         F.sum("n_rows").alias("rows_total"),
@@ -527,109 +598,41 @@ def scan_pruned(
         # caller-persisted manifests.
         kept = kept + _uncovered_live_files(spark, path, mf)
     if bloom_manifests:
-        norm = _norm_path
         dtypes = {f.name: f.dataType for f in spark.read.parquet(path).schema.fields}
-        for term in where_terms or []:
-            col_name, op, value = term
-            op_key = str(op).strip().lower()
-            if col_name not in bloom_manifests or op_key not in ("==", "=", "in"):
+        for col_name, op, value in normalize_where_terms(where_terms):
+            if col_name not in bloom_manifests or op not in ("==", "in"):
                 continue
-            vals = list(value) if isinstance(value, (list, tuple, set)) else [value]
+            vals = value if op == "in" else [value]
             verdicts = {
-                norm(r.file): bool(r.keep)
+                _norm_path(r.file): bool(r.keep)
                 for r in prune_files_bloom(
                     bloom_manifests[col_name], vals, value_type=dtypes.get(col_name)
                 ).collect()
             }
-            kept = [f for f in kept if verdicts.get(norm(f), True)]
-    pred = compile_where_terms(where_terms)
+            kept = [f for f in kept if verdicts.get(_norm_path(f), True)]
     if not kept:
         base = spark.read.parquet(path).filter(F.lit(False))
     else:
-        # basePath keeps directory-derived (hive) partition columns alive on
-        # a subset-of-files read — without it a pruned read of a partitioned
-        # dataset would silently drop those columns. Only meaningful when
-        # ``path`` is a directory above the kept files.
-        reader = spark.read
-        if any(_norm_path(f) != _norm_path(path) for f in kept):
-            reader = reader.option("basePath", path)
-        base = reader.parquet(*kept)
-        if pred is not None:
-            base = base.filter(pred)
+        base = _read_kept(spark, path, kept, where_terms)
     if select is not None:
         base = base.select(*select)
     return base
 
 
-def _full_pred(op: str, value):
-    """Keep-verdict complement: does EVERY non-null row of a (file, column)
-    stats row satisfy the term? Conservative toward False (uncertain files
-    get scanned, never stat-counted)."""
-    v_num = _coerce_num(value)
-    if v_num is not None:
-        lo, hi, v = F.col("min_num"), F.col("max_num"), F.lit(v_num)
-    elif isinstance(value, str):
-        lo, hi, v = F.col("min_str"), F.col("max_str"), F.lit(value)
-    else:
-        return F.lit(False)
-    if op in ("==", "="):
-        core = (lo == v) & (hi == v)
-    elif op == ">":
-        core = lo > v
-    elif op == ">=":
-        core = lo >= v
-    elif op == "<":
-        core = hi < v
-    elif op == "<=":
-        core = hi <= v
-    elif op == "!=":
-        core = (hi < v) | (lo > v)
-    elif op == "in":
-        vs = value if isinstance(value, (list, tuple, set)) else [value]
-        # whole file inside the set: only provable for a constant file
-        per = [_point_pred(x) for x in vs]
-        core = reduce(lambda a, b: a | b, per) if per else F.lit(False)
-    elif op == "not in":
-        vs = value if isinstance(value, (list, tuple, set)) else [value]
-        outs = [
-            (F.col("max_num") < _coerce_num(x)) | (F.col("min_num") > _coerce_num(x))
-            if _coerce_num(x) is not None
-            else (F.col("max_str") < x) | (F.col("min_str") > x)
-            if isinstance(x, str)
-            else F.lit(False)
-            for x in vs
-        ]
-        core = reduce(lambda a, b: a & b, outs) if outs else F.lit(True)
-    else:
-        return F.lit(False)
-    # NULL rows never satisfy a predicate, so a stat-counted file must have
-    # a proven-zero null count for the term's column
-    return (
-        F.col("has_min_max")
-        & F.col("null_count").isNotNull()
-        & (F.col("null_count") == 0)
-        & F.coalesce(core, F.lit(False))
-    )
-
-
-def _full_satisfaction(mf: DataFrame, terms: list) -> DataFrame:
-    """Per-file ``(file, full)``: does every non-null row of the file
-    provably satisfy EVERY term? (``_full_pred`` per term, AND-combined;
-    missing stats coalesce to False — uncertain files are boundary, never
-    stat-answered.)"""
-    per_file = mf.groupBy("file").agg(F.max("n_rows").alias("n_rows"))
-    if not terms:
-        return per_file.select("file", F.lit(True).alias("full"))
-    full = per_file.select("file")
-    for i, term in enumerate(terms):
-        col_name, op, value = term
-        sat = (
-            mf.filter(F.col("column") == col_name)
-            .select("file", _full_pred(str(op).strip().lower(), value).alias(f"__s{i}"))
-        )
-        full = full.join(sat, "file", "left")
-    alls = [F.coalesce(F.col(f"__s{i}"), F.lit(False)) for i in range(len(terms))]
-    return full.select("file", reduce(lambda a, b: a & b, alls).alias("full"))
+def _read_kept(
+    spark: SparkSession, path: str, files: Sequence[str], where_terms: Sequence[Sequence] | None
+) -> DataFrame:
+    """Read the kept ``files`` of the dataset at ``path`` and apply the
+    EXACT compiled filter. ``basePath`` keeps directory-derived (hive)
+    partition columns alive on a subset-of-files read — without it a pruned
+    read of a partitioned dataset would silently drop those columns. It is
+    only meaningful when ``path`` is a directory above the kept files."""
+    reader = spark.read
+    if any(_norm_path(f) != _norm_path(path) for f in files):
+        reader = reader.option("basePath", path)
+    df = reader.parquet(*files)
+    pred = compile_where_terms(where_terms)
+    return df if pred is None else df.filter(pred)
 
 
 def count_pruned(
@@ -647,14 +650,7 @@ def count_pruned(
     files of the range and sums the interior from kilobytes of manifest —
     the zone-map analog of partition-level count pushdown."""
     mf = manifest if manifest is not None else build_manifest(spark, path)
-    terms = list(where_terms or [])
-    per_file = mf.groupBy("file").agg(F.max("n_rows").alias("n_rows"))
-    plan = (
-        per_file.join(prune_files(mf, terms), "file")
-        .join(_full_satisfaction(mf, terms), "file")
-        .select("file", "n_rows", "keep", "full")
-        .collect()
-    )
+    plan = _file_verdicts(mf, normalize_where_terms(where_terms), full=True).collect()
     stat_count = sum(r.n_rows for r in plan if r.keep and r.full)
     boundary = sorted(r.file for r in plan if r.keep and not r.full)
     if manifest is not None:
@@ -663,14 +659,7 @@ def count_pruned(
         boundary = boundary + _uncovered_live_files(spark, path, mf)
     if not boundary:
         return int(stat_count)
-    pred = compile_where_terms(terms)
-    reader = spark.read
-    if any(_norm_path(f) != _norm_path(path) for f in boundary):
-        reader = reader.option("basePath", path)  # keep hive partition cols
-    scan = reader.parquet(*boundary)
-    if pred is not None:
-        scan = scan.filter(pred)
-    return int(stat_count + scan.count())
+    return int(stat_count + _read_kept(spark, path, boundary, where_terms).count())
 
 
 def minmax_pruned(
@@ -707,39 +696,21 @@ def minmax_pruned(
         dtype = dict(spark.read.parquet(path).dtypes).get(col)
     metadata_ok = dtype in num_types
     mf = manifest if manifest is not None else build_manifest(spark, path)
-    terms = list(where_terms or [])
-    colstats = mf.filter(F.col("column") == col).select(
-        "file",
-        F.col("has_min_max").alias("stat_hmm"),
-        F.col("min_num").alias("stat_lo"),
-        F.col("max_num").alias("stat_hi"),
-    )
-    plan = (
-        prune_files(mf, terms)
-        .join(_full_satisfaction(mf, terms), "file")
-        .join(colstats, "file", "left")
-        .collect()
-    )
+    plan = _file_verdicts(mf, normalize_where_terms(where_terms), full=True, stats_col=col).collect()
     lo = hi = None
     boundary = []
     for r in plan:
         if not r.keep:
             continue
-        if metadata_ok and r.full and r.stat_hmm and r.stat_lo is not None:
-            lo = r.stat_lo if lo is None else min(lo, r.stat_lo)
-            hi = r.stat_hi if hi is None else max(hi, r.stat_hi)
+        if metadata_ok and r.full and r.has_min_max and r.min_num is not None:
+            lo = r.min_num if lo is None else min(lo, r.min_num)
+            hi = r.max_num if hi is None else max(hi, r.max_num)
         else:
             boundary.append(r.file)
     if manifest is not None:
         boundary = boundary + _uncovered_live_files(spark, path, mf)
     if boundary:
-        pred = compile_where_terms(terms)
-        reader = spark.read
-        if any(_norm_path(f) != _norm_path(path) for f in boundary):
-            reader = reader.option("basePath", path)
-        scan = reader.parquet(*sorted(boundary))
-        if pred is not None:
-            scan = scan.filter(pred)
+        scan = _read_kept(spark, path, sorted(boundary), where_terms)
         row = scan.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
         s_lo, s_hi = row["lo"], row["hi"]
         if s_lo is not None:
@@ -782,23 +753,27 @@ def bloom_manifest(
     largest file's row count at ``fpp``. NULL keys are excluded (a NULL
     never equals a lookup value). Persist the rows next to the data and
     maintain per publish batch like the other incremental indexes."""
-    base = (
-        spark.read.parquet(path)
-        .select(F.input_file_name().alias("file"), F.col(key_col).alias("__k"))
-        .where(F.col("__k").isNotNull())
+    return _file_blooms(spark.read.parquet(path), key_col, fpp, num_bits, num_hashes)
+
+
+def _file_blooms(
+    df: DataFrame,
+    key_col: str,
+    fpp: float,
+    num_bits: int | None = None,
+    num_hashes: int | None = None,
+) -> DataFrame:
+    """``(file, n_bits, n_hashes, bitmap)``, one row per data file of ``df``,
+    over its non-NULL ``key_col`` values. Without both parameters the
+    filters are sized for the largest file's row count at ``fpp``."""
+    from parqueryd_spark.operators.membership import _SEED2, _positions_sql, bloom_params
+
+    base = df.select(F.input_file_name().alias("file"), F.col(key_col).alias("__k")).where(
+        F.col("__k").isNotNull()
     )
     if num_bits is None or num_hashes is None:
-        from parqueryd_spark.operators.membership import bloom_params
-
-        mx = (
-            base.groupBy("file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n"))
-            .collect()[0][0]
-        )
+        mx = base.groupBy("file").agg(F.count(F.lit(1)).alias("n")).agg(F.max("n")).collect()[0][0]
         num_bits, num_hashes = bloom_params(int(mx or 1), fpp)
-    from parqueryd_spark.operators.membership import _SEED2, _positions_sql
-
     lanes = (
         base.select(
             "file",
@@ -868,15 +843,11 @@ def scan_bloom_pruned(
     kept (conservative), matching the other pruned-scan contracts."""
     all_files = HadoopFS(spark, path).list_files(path)
     dtype = spark.read.parquet(path).schema[key_col].dataType
-
-    def norm(u: str) -> str:
-        return "/" + u.split(":", 1)[-1].lstrip("/") if ":" in u else u
-
     verdicts = {
-        norm(r.file): bool(r.keep)
+        _norm_path(r.file): bool(r.keep)
         for r in prune_files_bloom(bloom_mf, values, value_type=dtype).collect()
     }
-    kept = [f for f in all_files if verdicts.get(norm(f), True)]
+    kept = [f for f in all_files if verdicts.get(_norm_path(f), True)]
     typed = [F.lit(v).cast(dtype) for v in values]
     if not kept:
         return spark.read.parquet(path).filter(F.lit(False))
@@ -894,72 +865,16 @@ def refresh_bloom_manifest(
     for vanished files, and reuse the OLD rows' (n_bits, n_hashes) so every
     file probes identically — the refresh_manifest contract for the bloom
     layer. Cost is O(new files' rows), never the standing corpus."""
-    current = set(HadoopFS(spark, path).list_files(path))
-    if not current:
+    live = _split_refresh(spark, path, old)
+    if live is None:
         return old.limit(0)
-
-    def norm(u: str) -> str:
-        return "/" + u.split(":", 1)[-1].lstrip("/") if ":" in u else u
-
-    # manifest rows carry input_file_name() spellings (file:///x) while the
-    # lister yields Hadoop-qualified ones (file:/x) — join on the normalized
-    # path, not the raw string
-    norm_sql = F.concat(
-        F.lit("/"), F.expr("trim(LEADING '/' FROM element_at(split(file, ':', 2), -1))")
-    )
-    current_df = spark.createDataFrame(
-        [(norm(f),) for f in sorted(current)], "nf string"
-    )
-    kept = old.join(
-        current_df, norm_sql == F.col("nf"), "left_semi"
-    )
-    known = {r.file for r in old.select("file").distinct().collect()}
-    known_n = {norm(f) for f in known}
-    new_files = sorted(f for f in current if norm(f) not in known_n)
+    kept, new_files = live
     if not new_files:
         return kept
     params = old.select("n_bits", "n_hashes").limit(1).collect()
-    if params:
-        num_bits, num_hashes = int(params[0].n_bits), int(params[0].n_hashes)
-    else:
-        num_bits = num_hashes = None  # empty old manifest: size from the new files
-    from parqueryd_spark.operators.membership import _SEED2, _positions_sql, bloom_params
-
-    base = (
-        spark.read.parquet(*new_files)
-        .select(F.input_file_name().alias("file"), F.col(key_col).alias("__k"))
-        .where(F.col("__k").isNotNull())
-    )
-    if num_bits is None:
-        mx = (
-            base.groupBy("file").agg(F.count(F.lit(1)).alias("n")).agg(F.max("n")).collect()[0][0]
-        )
-        num_bits, num_hashes = bloom_params(int(mx or 1), 0.01)
-    lanes = (
-        base.select(
-            "file",
-            F.xxhash64("__k").alias("__h1"),
-            F.xxhash64("__k", F.lit(_SEED2)).alias("__h2"),
-        )
-        .select(
-            "file",
-            F.explode(
-                F.expr(_positions_sql("__h1", "__h2", str(num_hashes), f"{num_bits}L"))
-            ).alias("pos"),
-        )
-        .select(
-            "file",
-            F.expr("CAST(pos DIV 64 AS INT)").alias("word"),
-            F.expr("shiftleft(1L, CAST(pos % 64 AS INT))").alias("lane"),
-        )
-        .groupBy("file", "word")
-        .agg(F.expr("bit_or(lane)").alias("bits"))
-    )
-    fresh = lanes.groupBy("file").agg(
-        F.lit(num_bits).cast("bigint").alias("n_bits"),
-        F.lit(num_hashes).cast("int").alias("n_hashes"),
-        F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("bitmap"),
-    )
+    # an empty old manifest sizes the filters from the new files
+    num_bits, num_hashes = (params[0].n_bits, params[0].n_hashes) if params else (None, None)
+    fresh = _file_blooms(spark.read.parquet(*new_files), key_col, 0.01, num_bits, num_hashes)
     return kept.unionByName(fresh)
 
 

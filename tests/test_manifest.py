@@ -5,8 +5,10 @@ and full-scan equivalence hold for every where-op; all-null chunks skip."""
 from __future__ import annotations
 
 import datetime as dt
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.sources.manifest import (
@@ -53,6 +55,7 @@ TERMS = [
     [["name", "==", "u0123"]],
     [["d", "==", dt.date(2026, 1, 5)]],
     [["value", "!=", 1.0]],
+    [["value", "<>", 1.0]],
     [["value", "not in", [1.0, 2.0]]],
     [["value", ">=", 250.0], ["name", "<", "u0255"]],
     [],
@@ -70,6 +73,53 @@ def test_scan_pruned_equals_full_scan(spark, layout, manifest, terms):
     got = sorted(r.k for r in scan_pruned(spark, layout, terms, manifest=manifest).collect())
     want = sorted(r.k for r in full.collect())
     assert got == want and (not terms or len(want) < N_ROWS)
+
+
+def test_engine_groupby_with_manifest_equals_plain(spark, layout, manifest):
+    """The parity API's zone-map path (``ParquetEngine.groupby(manifest=)``)
+    gives the same groups as the plain call for every term set, over a
+    directory shard plus a missing shard name; and ``prune_paths`` without
+    where-terms keeps every path without submitting a Spark job."""
+    import os
+
+    from parqueryd_spark.core import ParquetEngine
+    from parqueryd_spark.sources.manifest import prune_paths
+
+    eng = ParquetEngine(spark, data_dir=os.path.dirname(layout))
+    names = [os.path.basename(layout), "no_such_shard.parquet"]
+    aggs = [["k", "count", "n"], ["value", "sum", "s"], ["name", "min", "lo"]]
+    # one collect for every call: tag each result with (term set, pruned)
+    results = reduce(
+        DataFrame.unionByName,
+        [
+            eng.groupby(names, ["d"], aggs, terms, manifest=mf).select(
+                F.lit(i).alias("i"), F.lit(mf is not None).alias("pruned"), "*"
+            )
+            for i, terms in enumerate(TERMS)
+            for mf in (None, manifest)
+        ],
+    ).collect()
+    for i, terms in enumerate(TERMS):
+        plain = sorted(r[2:] for r in results if r.i == i and not r.pruned)
+        pruned = sorted(r[2:] for r in results if r.i == i and r.pruned)
+        assert pruned == plain and plain, terms
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, terms):
+        sc.setJobGroup(group, group)
+        try:
+            kept = prune_paths(manifest, [layout, "/no/such/shard"], terms)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return kept, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    kept, jobs = jobs_of("prune-paths-no-terms", [])
+    assert kept == [layout, "/no/such/shard"] and jobs == []
+    # the probe sees jobs when there are any: a pruning call submits one
+    kept, jobs = jobs_of("prune-paths-one-term", [["value", ">", 1e9]])
+    assert kept == ["/no/such/shard"] and jobs
 
 
 def test_soundness_keeps_every_matching_file(spark, layout, manifest):
