@@ -7,7 +7,7 @@ Its distributed execution — per-file fan-out, locality scheduling, Arrow
 gather/concat — is subsumed by Spark; what remains is a compiler from that call
 shape to a DataFrame plan:
 
-    read.parquet(existing_shards) -> filter(where) -> groupBy(keys).agg(...)
+    read_resolved(existing_shards) -> filter(where) -> groupBy(keys).agg(...)
 
 Deliberate semantic deviation (documented, SURVEY.md §2 O7): the reference
 concatenates per-shard partial aggregates WITHOUT a final merge, so duplicate
@@ -29,7 +29,7 @@ from parqueryd_spark.functions.compile import (
     compile_where_terms,
     normalize_agg_list,
 )
-from parqueryd_spark.sources.parquet import read_parquet, resolve_paths
+from parqueryd_spark.sources.parquet import read_parquet, read_resolved, resolve_paths
 
 
 def aggregate_files(
@@ -75,6 +75,13 @@ def aggregate_files(
     reference's per-shard metadata skip. Pruning never changes results (the
     exact predicate still runs; a fully-pruned query returns the same empty
     aggregate a fully-filtered one would, not the all-missing ``None``).
+
+    Planning runs at most one Spark job: shards are read through
+    ``read_resolved``, whose schema comes from one driver-side footer read
+    rather than Spark's inference job (for every ``concat`` part too), so
+    only the manifest verdict — one job over a cached manifest, which
+    ``build_manifest``/``refresh_manifest`` cluster by file — runs before
+    the caller's action.
     """
     if shard_merge not in ("global", "concat"):
         raise ValueError(f"shard_merge must be 'global' or 'concat', got {shard_merge!r}")
@@ -110,13 +117,13 @@ def aggregate_files(
         if not kept:
             # every shard provably disjoint from the predicate: same result
             # as filtering everything out (schema from a real shard, 0 rows)
-            return _one(spark.read.parquet(existing[0]).filter(_F.lit(False)))
+            return _one(read_resolved(spark, existing[:1]).filter(_F.lit(False)))
         existing = kept
 
     if shard_merge == "concat" and aggregate:
-        parts = [_one(spark.read.parquet(p)) for p in existing]
+        parts = [_one(read_resolved(spark, [p])) for p in existing]
         return reduce(DataFrame.unionByName, parts)
-    return _one(spark.read.parquet(*existing))
+    return _one(read_resolved(spark, existing))
 
 
 # agg methods whose output type is knowable without reading any shard; the

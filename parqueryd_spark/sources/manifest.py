@@ -36,9 +36,16 @@ Every per-file verdict — keep, full satisfaction, row count, one column's
 bounds — comes from ONE ``groupBy("file")`` aggregation over the manifest
 (``_file_verdicts``): each term is a ``bool_and`` over the file's stats row
 for the term's column, so the number of terms never adds joins or stages.
-The driver then collects one small row per file — the same O(files)
-planning-time listing Spark's own FileIndex does. ``prune_paths`` without
-where-terms keeps every path and runs no job at all.
+The keep and full verdicts are each ONE SQL expression (``F.expr``), built
+as text with every term value and column name rendered by ``_lit`` — a
+handful of py4j calls whatever the term count, and no user value is ever
+quoted or escaped. ``build_manifest`` and ``refresh_manifest`` return the
+manifest hash-partitioned on ``file`` (``_by_file``), so once it is cached
+the aggregation (and ``select("file").distinct()``) plans no Exchange: a
+pruning call is one Spark job, the only one a ``manifest=`` call of the
+parity API runs before its query. The driver then collects one small row per
+file — the same O(files) planning-time listing Spark's own FileIndex does.
+``prune_paths`` without where-terms keeps every path and runs no job at all.
 
 Hive-partitioned layouts compose: ``build_manifest`` records
 directory-derived ``key=value`` partition values as constant-per-file stats
@@ -52,9 +59,7 @@ from __future__ import annotations
 
 import bisect
 import datetime as _dt
-import operator
 from collections.abc import Iterable, Sequence
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,8 +88,6 @@ MANIFEST_SCHEMA = StructType(
         StructField("max_str", StringType(), True),
     ]
 )
-
-_RANGE_OPS = {">": operator.gt, ">=": operator.ge, "<": operator.lt, "<=": operator.le}
 
 _EPOCH_DT = _dt.datetime(1970, 1, 1)
 _EPOCH_D = _dt.date(1970, 1, 1)
@@ -124,7 +127,15 @@ def build_manifest(
     distributed footer sweep; data pages are never read. ``columns`` limits
     the manifest to the hot filter columns (pruning treats absent columns as
     unprunable, so a narrow manifest stays sound)."""
-    return _sweep_footers(spark, path, HadoopFS(spark, path).list_files(path), columns)
+    return _by_file(_sweep_footers(spark, path, HadoopFS(spark, path).list_files(path), columns))
+
+
+def _by_file(mf: DataFrame) -> DataFrame:
+    """``mf`` hash-partitioned on ``file`` into the session's default
+    parallelism: every per-file aggregation over the cached result plans no
+    Exchange. A manifest read back from disk is not clustered and plans as
+    before."""
+    return mf.repartition(mf.sparkSession.sparkContext.defaultParallelism, "file")
 
 
 def _sweep_footers(
@@ -319,11 +330,11 @@ def refresh_manifest(
     re-reads a day of footers, not the standing corpus's."""
     live = _split_refresh(spark, path, old)
     if live is None:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return _by_file(spark.createDataFrame([], MANIFEST_SCHEMA))
     kept, new_files = live
-    if not new_files:
-        return kept
-    return kept.unionByName(_sweep_footers(spark, path, new_files, columns))
+    if new_files:
+        kept = kept.unionByName(_sweep_footers(spark, path, new_files, columns))
+    return _by_file(kept)
 
 
 def _split_refresh(
@@ -346,96 +357,102 @@ def _split_refresh(
     return kept, sorted(f for f in current if _norm_path(f) not in known_n)
 
 
+def _lit(value) -> str:
+    """SQL literal for a term value or a column name: a double as
+    ``CAST('<repr>' AS DOUBLE)`` (``inf``/``nan`` included), a string as
+    ``CAST(X'<utf-8 hex>' AS STRING)`` — no user text ever lands in the SQL
+    unescaped."""
+    if isinstance(value, str):
+        return f"CAST(X'{value.encode('utf-8').hex()}' AS STRING)"
+    return f"CAST('{float(value)!r}' AS DOUBLE)"
+
+
 def _bounds(value):
-    """``(lo, hi, v)`` Columns comparing ``value`` against the stats row's
+    """``(lo, hi, v)`` SQL comparing ``value`` against the stats row's
     bounds of its encoding family — numeric (numbers, dates, datetimes) or
     lexical (strings) — or None for a value neither family encodes. Bounds
     of the wrong family (a numeric term on a string column) are NULL, and
     each caller coalesces NULL to its conservative answer."""
     v_num = _coerce_num(value)
     if v_num is not None:
-        return F.col("min_num"), F.col("max_num"), F.lit(v_num)
+        return "min_num", "max_num", _lit(v_num)
     if isinstance(value, str):
-        return F.col("min_str"), F.col("max_str"), F.lit(value)
+        return "min_str", "max_str", _lit(value)
     return None
 
 
-def _window_pred(value):
-    """Column predicate: could [min, max] contain ``value``?"""
+def _window_pred(value) -> str:
+    """SQL predicate: could [min, max] contain ``value``?"""
     b = _bounds(value)
     if b is None:
-        return F.lit(True)  # unencodable type: never prune on it
+        return "true"  # unencodable type: never prune on it
     lo, hi, v = b
-    return F.coalesce((lo <= v) & (hi >= v), F.lit(True))
+    return f"coalesce({lo} <= {v} AND {hi} >= {v}, true)"
 
 
-def _point_pred(value):
-    """Column predicate: is the file constant at exactly ``value``?"""
+def _point_pred(value) -> str:
+    """SQL predicate: is the file constant at exactly ``value``?"""
     b = _bounds(value)
     if b is None:
-        return F.lit(False)
+        return "false"
     lo, hi, v = b
-    return F.coalesce((lo == v) & (hi == v), F.lit(False))
+    return f"coalesce({lo} = {v} AND {hi} = {v}, false)"
 
 
-def _bound_pred(op: str, value):
-    """Keep-verdict for one normalized term over a (file, column) stats row
-    that HAS min/max bounds. Conservative by construction: anything
+def _bound_pred(op: str, value) -> str:
+    """Keep-verdict SQL for one normalized term over a (file, column) stats
+    row that HAS min/max bounds. Conservative by construction: anything
     uncertain evaluates to keep."""
     if op == "==":
         return _window_pred(value)
     if op == "in":
-        return reduce(operator.or_, map(_window_pred, value), F.lit(False))
+        return "(" + " OR ".join(["false", *map(_window_pred, value)]) + ")"
     if op == "!=":
         # a constant-at-v file has no satisfying non-null row; NULLs never
         # satisfy != either, so null_count is irrelevant here
-        return ~_point_pred(value)
+        return f"NOT {_point_pred(value)}"
     if op == "not in":
-        return ~reduce(operator.or_, map(_point_pred, value), F.lit(False))
+        return "NOT (" + " OR ".join(["false", *map(_point_pred, value)]) + ")"
     b = _bounds(value)
     if b is None:
-        return F.lit(True)
+        return "true"
     lo, hi, v = b
     # x > v is possible iff max > v; x < v is possible iff min < v
-    return F.coalesce(_RANGE_OPS[op](hi if op[0] == ">" else lo, v), F.lit(True))
+    return f"coalesce({hi if op[0] == '>' else lo} {op} {v}, true)"
 
 
-def _keep_pred(op: str, value):
-    """Keep-verdict for one normalized term over any (file, column) stats
-    row: an all-null chunk satisfies no op (SQL NULL comparison semantics);
-    a chunk without bounds is unprunable."""
-    all_null = F.col("null_count").isNotNull() & (F.col("null_count") == F.col("n_rows"))
+def _keep_pred(op: str, value) -> str:
+    """Keep-verdict SQL for one normalized term over any (file, column)
+    stats row: an all-null chunk satisfies no op (SQL NULL comparison
+    semantics); a chunk without bounds is unprunable."""
     return (
-        F.when(all_null, F.lit(False))
-        .when(~F.col("has_min_max"), F.lit(True))
-        .otherwise(_bound_pred(op, value))
+        "CASE WHEN null_count IS NOT NULL AND null_count = n_rows THEN false"
+        f" WHEN NOT has_min_max THEN true ELSE {_bound_pred(op, value)} END"
     )
 
 
-def _full_pred(op: str, value):
-    """Keep-verdict complement: does EVERY non-null row of a (file, column)
-    stats row satisfy the normalized term? Conservative toward False
-    (uncertain files get scanned, never stat-counted)."""
+def _full_pred(op: str, value) -> str:
+    """Keep-verdict complement as SQL: does EVERY non-null row of a (file,
+    column) stats row satisfy the normalized term? Conservative toward
+    False (uncertain files get scanned, never stat-counted)."""
     b = None if op in ("in", "not in") else _bounds(value)
     if b is None:
         # set-membership terms and unencodable values are never proved
         # file-wide: such files scan
-        return F.lit(False)
+        return "false"
     lo, hi, v = b
     if op == "==":
-        core = (lo == v) & (hi == v)
+        core = f"{lo} = {v} AND {hi} = {v}"
     elif op == "!=":
-        core = (hi < v) | (lo > v)
+        core = f"{hi} < {v} OR {lo} > {v}"
     else:
         # every x > v iff min > v; every x < v iff max < v
-        core = _RANGE_OPS[op](lo if op[0] == ">" else hi, v)
+        core = f"{lo if op[0] == '>' else hi} {op} {v}"
     # NULL rows never satisfy a predicate, so a stat-counted file must have
     # a proven-zero null count for the term's column
     return (
-        F.col("has_min_max")
-        & F.col("null_count").isNotNull()
-        & (F.col("null_count") == 0)
-        & F.coalesce(core, F.lit(False))
+        "has_min_max AND null_count IS NOT NULL AND null_count = 0"
+        f" AND coalesce({core}, false)"
     )
 
 
@@ -450,29 +467,29 @@ def _file_verdicts(
     - with ``stats_col``, that column's ``has_min_max``/``min_num``/``max_num``.
 
     Each term reads only its own column's stats row, as
-    ``bool_and(when(column == <col>, <pred>))``. A file without that row
-    (the column is absent from the manifest or from the file) gets NULL,
-    which coalesces to keep=True and full=False: absent stats never prune
-    and never prove."""
+    ``bool_and(CASE WHEN column = <col> THEN <pred> END)``. A file without
+    that row (the column is absent from the manifest or from the file) gets
+    NULL, which coalesces to keep=True and full=False: absent stats never
+    prune and never prove. Every aggregate is one ``F.expr`` over SQL text,
+    so building them costs the same few py4j calls for any number of
+    terms."""
 
-    def all_terms(pred, missing: bool):
+    def all_terms(pred, missing: str) -> str:
         per_term = (
-            F.coalesce(F.bool_and(F.when(F.col("column") == c, pred(op, v))), F.lit(missing))
+            f"coalesce(bool_and(CASE WHEN `column` = {_lit(c)} THEN {pred(op, v)} END), {missing})"
             for c, op, v in terms
         )
-        return reduce(operator.and_, per_term, F.lit(True))
+        return " AND ".join(["true", *per_term])
 
-    aggs = [F.max("n_rows").alias("n_rows"), all_terms(_keep_pred, True).alias("keep")]
+    aggs = {"n_rows": "max(n_rows)", "keep": all_terms(_keep_pred, "true")}
     if full:
-        aggs.append(all_terms(_full_pred, False).alias("full"))
+        aggs["full"] = all_terms(_full_pred, "false")
     if stats_col is not None:
-        on = F.col("column") == stats_col
-        aggs += [
-            F.bool_and(F.when(on, F.col("has_min_max"))).alias("has_min_max"),
-            F.min(F.when(on, F.col("min_num"))).alias("min_num"),
-            F.max(F.when(on, F.col("max_num"))).alias("max_num"),
-        ]
-    return mf.groupBy("file").agg(*aggs)
+        on = f"`column` = {_lit(stats_col)}"
+        aggs["has_min_max"] = f"bool_and(CASE WHEN {on} THEN has_min_max END)"
+        aggs["min_num"] = f"min(CASE WHEN {on} THEN min_num END)"
+        aggs["max_num"] = f"max(CASE WHEN {on} THEN max_num END)"
+    return mf.groupBy("file").agg(*(F.expr(f"{sql} AS {name}") for name, sql in aggs.items()))
 
 
 def prune_files(

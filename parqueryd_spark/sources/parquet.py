@@ -9,6 +9,13 @@ Spark's ``read.parquet`` raises on missing paths, so we pre-filter for existence
 At scale the "table" is a directory of many Parquet files on shared storage;
 ``spark.read.parquet(*paths)`` maps each row-group/split to a task, which strictly
 generalizes the reference's 1-file-=-1-worker model (controller.py:628-645).
+
+Planning a read touches no data and runs no Spark job, as the reference
+controller plans from its in-memory ``files_map`` (controller.py:618-645).
+``spark.read.parquet`` infers the schema with a one-task job over one footer;
+``read_resolved`` reads that same footer on the driver through the JVM code
+the inference task runs and hands Spark the schema, so building the
+DataFrame costs a few py4j calls instead of a job.
 """
 
 from __future__ import annotations
@@ -17,7 +24,12 @@ import os
 import re
 from collections.abc import Sequence
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
+
+from parqueryd_spark.sources.fs import HadoopFS
 
 # URI scheme prefix (s3a://, hdfs://, file://, abfss://, gs://, ...)
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
@@ -101,10 +113,68 @@ def read_parquet(
     existing = resolve_paths(paths, data_dir=data_dir, spark=spark)
     if not existing:
         return None
+    return read_resolved(spark, existing, merge_schema=merge_schema)
+
+
+def read_resolved(
+    spark: SparkSession, paths: Sequence[str], merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` over already-resolved shards, without
+    Spark's schema-inference job: the schema comes from one footer read on
+    the driver (``_footer_schema``) and is passed as ``.schema(S)``, so
+    partition discovery and the scan plan are Spark's own. Spark's
+    non-merging inference also reads a single footer, so the two agree.
+
+    ``merge_schema=True`` keeps Spark's merging inference (it must read
+    every footer). When no footer can be read — no data file under the
+    first path, or an unreadable one — this is a plain ``spark.read.parquet``
+    and Spark raises its own error."""
     reader = spark.read
     if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*existing)
+        return reader.option("mergeSchema", "true").parquet(*paths)
+    schema = _footer_schema(spark, paths[0])
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The data schema Spark infers for ``path``, from the footer of its
+    first data file (sorted, hidden files skipped), converted on the driver
+    by the calls Spark's inference task makes:
+    ``ParquetFileReader.readFooter`` without row groups, then
+    ``ParquetFileFormat.readSchemaFromFooter`` with a converter built from
+    the session conf (``binaryAsString``, ``int96AsTimestamp``,
+    ``inferTimestampNTZ``, ``nanosAsLong``). None when there is no file or
+    its footer does not convert.
+
+    Classes are named in full through ``JavaClass``: one reflection call per
+    member used, where a ``spark._jvm.org.apache...`` lookup pays one per
+    package segment."""
+
+    def jclass(name: str) -> JavaClass:
+        return JavaClass(name, spark._jvm._gateway_client)
+
+    spark_pq = "org.apache.spark.sql.execution.datasources.parquet."
+    try:
+        files = HadoopFS(spark, path).list_files(path, suffix=None)
+        if not files:
+            return None
+        jpath = jclass("org.apache.hadoop.fs.Path")(files[0])
+        meta = jclass("org.apache.parquet.hadoop.ParquetFileReader").readFooter(
+            spark._jsc.hadoopConfiguration(),
+            jpath,
+            jclass("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+        )
+        schema = jclass(spark_pq + "ParquetFileFormat").readSchemaFromFooter(
+            jclass("org.apache.parquet.hadoop.Footer")(jpath, meta),
+            jclass(spark_pq + "ParquetToSparkSchemaConverter")(
+                spark._jsparkSession.sessionState().conf()
+            ),
+        )
+    except Py4JJavaError:
+        return None
+    return _parse_datatype_json_string(schema.json())
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -131,11 +201,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(path)
+        df = read_resolved(spark, [path])
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if ts_type == "timestamp_ntz":
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return read_resolved(spark, [path])

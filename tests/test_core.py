@@ -164,3 +164,64 @@ def test_entry_contract(spark):
     qs, osql = e.queries(), e.oracle_sql()
     assert set(osql) <= set(qs)
     assert "q1_pricing_summary" in qs
+
+
+def test_read_resolved_schema_equals_spark_inference(spark, tmp_path):
+    """``read_resolved`` takes its schema from one driver-side footer read
+    instead of Spark's inference job; schema and rows equal
+    ``spark.read.parquet``'s for single files, Spark-written and
+    hive-partitioned directories, a partition subdirectory and a
+    TIMESTAMP(NANOS) file under ``nanosAsLong``. With no data file to read,
+    it raises the error Spark raises."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from parqueryd_spark.sources.parquet import _footer_schema, read_resolved
+
+    single = str(tmp_path / "single.parquet")
+    pq.write_table(
+        pa.table({"k": [1, 2, 3], "s": ["a", None, "c"], "d": [dt.date(2026, 1, i) for i in (1, 2, 3)]}),
+        single,
+    )
+    spark_dir = str(tmp_path / "spark_dir")
+    hive_dir = str(tmp_path / "hive_dir")
+    rows = spark.range(40).select(
+        "id", (F.col("id") % 3).alias("p"), F.format_string("v%02d", "id").alias("v")
+    )
+    rows.coalesce(2).write.parquet(spark_dir)
+    rows.write.partitionBy("p").parquet(hive_dir)
+    nanos = str(tmp_path / "nanos.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1_700_000_000_123_456_789, 5], pa.timestamp("ns")), "x": [1.5, 2.5]}),
+        nanos,
+        version="2.6",
+    )
+    assert os.path.exists(os.path.join(spark_dir, "_SUCCESS"))
+
+    def check(path):
+        assert _footer_schema(spark, path) is not None, path  # no fallback
+        want = spark.read.parquet(path)
+        got = read_resolved(spark, [path])
+        assert got.schema == want.schema, path
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), path
+
+    for path in (single, spark_dir, hive_dir, os.path.join(hive_dir, "p=1")):
+        check(path)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        check(nanos)
+    finally:
+        spark.conf.set(key, before)
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(Exception) as want_err:
+        spark.read.parquet(str(empty))
+    with pytest.raises(Exception) as got_err:
+        read_resolved(spark, [str(empty)])
+    assert type(got_err.value) is type(want_err.value)

@@ -5,7 +5,7 @@ and full-scan equivalence hold for every where-op; all-null chunks skip."""
 from __future__ import annotations
 
 import datetime as dt
-from functools import reduce
+from functools import partial, reduce
 
 import pytest
 from pyspark.sql import DataFrame
@@ -59,7 +59,24 @@ TERMS = [
     [["value", "not in", [1.0, 2.0]]],
     [["value", ">=", 250.0], ["name", "<", "u0255"]],
     [],
+    # term values the verdict SQL renders as literals: quotes, backslashes,
+    # non-ASCII text and infinities never reach the SQL text unescaped
+    [["name", "<", "u0005'\\é"]],
+    [["name", "in", ["u0007", "x'; DROP", "u0993"]]],
+    [["value", ">", float("-inf")], ["value", "<", 5.0]],
 ]
+
+
+def _jobs_submitted(spark, group: str, fn):
+    """``(fn(), ids of the Spark jobs fn submitted)``, tracked by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("terms", TERMS)
@@ -104,22 +121,71 @@ def test_engine_groupby_with_manifest_equals_plain(spark, layout, manifest):
         pruned = sorted(r[2:] for r in results if r.i == i and r.pruned)
         assert pruned == plain and plain, terms
 
-    sc = spark.sparkContext
-
     def jobs_of(group, terms):
-        sc.setJobGroup(group, group)
-        try:
-            kept = prune_paths(manifest, [layout, "/no/such/shard"], terms)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        return kept, list(sc.statusTracker().getJobIdsForGroup(group))
+        return _jobs_submitted(
+            spark, group, lambda: prune_paths(manifest, [layout, "/no/such/shard"], terms)
+        )
 
     kept, jobs = jobs_of("prune-paths-no-terms", [])
     assert kept == [layout, "/no/such/shard"] and jobs == []
     # the probe sees jobs when there are any: a pruning call submits one
     kept, jobs = jobs_of("prune-paths-one-term", [["value", ">", 1e9]])
     assert kept == ["/no/such/shard"] and jobs
+
+
+def test_parity_call_plans_with_at_most_the_verdict_job(spark, tmp_path):
+    """Building a parity call's DataFrame (no action) submits no Spark job
+    but the zone-map verdict: none for a plain call, for ``concat`` over 3
+    shards and for ``attach_tables``; exactly one for where-terms under a
+    cached built or refreshed manifest, whose verdict plan has no
+    Exchange (the manifest is clustered by file)."""
+    import os
+
+    from parqueryd_spark.core import ParquetEngine, aggregate_files
+    from parqueryd_spark.functions.compile import normalize_where_terms
+    from parqueryd_spark.sources.manifest import _file_verdicts, refresh_manifest
+
+    data = str(tmp_path / "data")
+    rows = spark.range(300).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("g"), F.col("id").cast("double").alias("value")
+    )
+    for i in range(3):
+        rows.filter(F.col("k") % 3 == i).write.parquet(os.path.join(data, f"s{i}"))
+    eng = ParquetEngine(spark, data)
+    names = ["s0", "s1", "s2", "no_such_shard"]
+    aggs = [["value", "sum", "v"]]
+    terms = [["value", ">=", 100.0], ["value", "<", 150.0]]
+
+    def n_jobs(group, fn):
+        return len(_jobs_submitted(spark, group, fn)[1])
+
+    plain = partial(eng.groupby, names, ["g"], aggs, terms)
+    concat = partial(
+        aggregate_files, spark, names, ["g"], aggs, terms, data_dir=data, shard_merge="concat"
+    )
+    assert n_jobs("plan-plain", plain) == 0
+    assert n_jobs("plan-concat", concat) == 0
+
+    built = build_manifest(spark, data).cache()
+    built.count()
+    rows.limit(10).write.parquet(os.path.join(data, "s3"))
+    refreshed = refresh_manifest(spark, data, built).cache()
+    refreshed.count()
+    for tag, mf in (("built", built), ("refreshed", refreshed)):
+        call = partial(eng.groupby, names, ["g"], aggs, terms, manifest=mf)
+        assert n_jobs(f"plan-{tag}-manifest", call) == 1, tag
+        plan = _file_verdicts(mf, normalize_where_terms(terms))._jdf.queryExecution()
+        # the cached relation's own build plan (below InMemoryRelation) shuffles
+        above_cache = plan.executedPlan().toString().split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in above_cache and "Exchange" not in above_cache, tag
+    refreshed.unpersist()
+    built.unpersist()
+
+    tables = str(tmp_path / "tables")
+    for name in ("a", "b"):
+        rows.write.parquet(os.path.join(tables, f"{name}.parquet"))
+    attached, jobs = _jobs_submitted(spark, "plan-attach", ParquetEngine(spark, tables).attach_tables)
+    assert attached == ["a", "b"] and jobs == []
 
 
 def test_soundness_keeps_every_matching_file(spark, layout, manifest):
