@@ -55,6 +55,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.text import ngrams_all
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import read_batches, write_batch
 
 
 @dataclass
@@ -209,8 +211,10 @@ def lm_publish(
 ) -> None:
     """Persist the LM as a living dataset — the same publish/load/append
     posture as the ANN indexes (operators/squant.py:sq_publish): partial
-    bigram counts land under ``<lm_dir>/counts/batch=<batch>`` (idempotent
-    per-batch overwrite) and the smoothing constant under ``<lm_dir>/meta``.
+    bigram counts land as the ``<batch>`` partition of ``<lm_dir>/counts``
+    (``sources/sinks.write_batch``: re-publishing a batch overwrites only
+    that batch, never the accumulated ones) and the smoothing constant
+    under ``<lm_dir>/meta``.
     The served model is merge-on-read over ALL batches (linearity: ≡
     one-shot training on the concatenated corpus, bit-exact), so growing the
     training corpus is ``lm_append`` at O(increment) cost — the standing
@@ -218,17 +222,7 @@ def lm_publish(
     spark.createDataFrame([(float(k), int(n))], "k double, n int").write.mode(
         "overwrite"
     ).parquet(f"{lm_dir}/meta")
-    (
-        ngram_counts(docs, text_col, n)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        # dynamic: re-publishing a batch overwrites ONLY that batch partition
-        # — a static overwrite would wipe every previously appended batch and
-        # silently destroy the accumulated model
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{lm_dir}/counts")
-    )
+    write_batch(ngram_counts(docs, text_col, n), f"{lm_dir}/counts", batch)
 
 
 def lm_append(
@@ -237,23 +231,15 @@ def lm_append(
     """Incremental training: count ONLY the increment at the index's OWN
     persisted order (meta-driven, the sq_append contract), landing it as its
     own ``batch=<batch>`` partition (replays overwrite themselves)."""
-    meta = spark.read.parquet(f"{lm_dir}/meta").collect()[0]
-    (
-        ngram_counts(new_docs, text_col, int(meta["n"]))
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{lm_dir}/counts")
-    )
+    meta = read_resolved(spark, [f"{lm_dir}/meta"]).collect()[0]
+    write_batch(ngram_counts(new_docs, text_col, int(meta["n"])), f"{lm_dir}/counts", batch)
 
 
 def lm_load(spark, lm_dir: str) -> NgramLM:
     """The served LM: merge-on-read of every published count batch (the
     1-row meta collect is the only driver-side read)."""
-    meta = spark.read.parquet(f"{lm_dir}/meta").collect()[0]
-    parts = spark.read.parquet(f"{lm_dir}/counts").drop("batch")
-    return lm_merge([parts], float(meta["k"]), int(meta["n"]))
+    meta = read_resolved(spark, [f"{lm_dir}/meta"]).collect()[0]
+    return lm_merge([read_batches(spark, f"{lm_dir}/counts")], float(meta["k"]), int(meta["n"]))
 
 
 def _suffix(col, start: int, length: int):

@@ -49,6 +49,8 @@ from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.similarity import as_double, norm
 from parqueryd_spark.operators.util import spread_partitions
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import publish_batch, write_batch
 
 
 def _nv_col(vec_col: str, normalize: bool) -> F.Column:
@@ -594,12 +596,7 @@ def ivfpq_publish(
     spark.createDataFrame(
         [(bool(residual), str(codebook))], "residual boolean, codebook string"
     ).write.mode("overwrite").parquet(f"{index_dir}/meta")
-    (
-        encoded.withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/codes")
-    )
+    publish_batch(encoded, f"{index_dir}/codes", batch, partition_by=["centroid_id"])
 
 
 def ivfpq_meta(spark, index_dir: str) -> dict:
@@ -607,7 +604,7 @@ def ivfpq_meta(spark, index_dir: str) -> dict:
     published before a flag existed default to raw-vector encoding with the
     seeded-kmeans trainer."""
     try:
-        row = spark.read.parquet(f"{index_dir}/meta").collect()[0]
+        row = read_resolved(spark, [f"{index_dir}/meta"]).collect()[0]
         cbmode = row["codebook"] if "codebook" in row.__fields__ else "kmeans"
         return {"residual": bool(row["residual"]), "codebook": str(cbmode or "kmeans")}
     except Exception:
@@ -619,9 +616,9 @@ def ivfpq_load(spark, index_dir: str):
     codebooks parquet is collected back to the nested-list form the
     encode/LUT operators take — m x k_codes rows, metadata scale, same
     posture as the centroid bootstrap."""
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    cents = spark.read.parquet(f"{index_dir}/centroids")
-    rows = spark.read.parquet(f"{index_dir}/codebooks").collect()
+    codes = read_resolved(spark, [f"{index_dir}/codes"])
+    cents = read_resolved(spark, [f"{index_dir}/centroids"])
+    rows = read_resolved(spark, [f"{index_dir}/codebooks"]).collect()
     mm = 1 + max(r["j"] for r in rows)
     kk = 1 + max(r["code"] for r in rows)
     cb = [[None] * kk for _ in range(mm)]
@@ -827,8 +824,8 @@ def ivfpq_append(
     never a re-scan, re-cluster, or re-train of the existing corpus. Returns
     per-centroid counts of the appended batch.
 
-    Re-running the same batch id overwrites exactly that partition (dynamic
-    partition overwrite), so a failed-and-replayed ingest cannot
+    Re-running the same batch id overwrites exactly that partition
+    (``sources/sinks.write_batch``), so a failed-and-replayed ingest cannot
     double-count.
 
     Both quantizers are frozen at publish time: appended vectors far from
@@ -841,7 +838,7 @@ def ivfpq_append(
     from parqueryd_spark.operators.similarity import ivf_assign
 
     _, _, cb = ivfpq_load(spark, index_dir)
-    centroids = spark.read.parquet(f"{index_dir}/centroids")
+    centroids = read_resolved(spark, [f"{index_dir}/centroids"])
     meta = ivfpq_meta(spark, index_dir)
     # a spread index's bit-exact replay contract extends to APPENDS: the
     # numpy encoder's pairwise-summation norms differ from the JVM fold at
@@ -850,26 +847,17 @@ def ivfpq_append(
     encoder = pq_encode_cols if meta["codebook"] == "spread" else pq_encode
     if meta["residual"]:
         resid = _residual_frame(new_vectors, centroids, id_col, vec_col)
-        assigned = (
-            encoder(resid, cb, id_col=id_col, vec_col="__resid", normalize=False)
-            .join(resid.select(id_col, "centroid_id"), id_col)
-            .withColumn("batch", F.lit(batch))
+        assigned = encoder(resid, cb, id_col=id_col, vec_col="__resid", normalize=False).join(
+            resid.select(id_col, "centroid_id"), id_col
         )
     else:
         assignment = ivf_assign(new_vectors, centroids, id_col, vec_col)
-        assigned = (
-            encoder(new_vectors, cb, id_col=id_col, vec_col=vec_col)
-            .join(assignment, id_col)
-            .withColumn("batch", F.lit(batch))
+        assigned = encoder(new_vectors, cb, id_col=id_col, vec_col=vec_col).join(
+            assignment, id_col
         )
-    (
-        assigned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/codes")
-    )
+    write_batch(assigned, f"{index_dir}/codes", batch, partition_by=["centroid_id"])
     return (
-        spark.read.parquet(f"{index_dir}/codes")
+        read_resolved(spark, [f"{index_dir}/codes"])
         .filter(F.col("batch") == batch)
         .groupBy("centroid_id")
         .agg(F.count("*").alias("n_appended"))

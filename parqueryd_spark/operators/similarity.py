@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.util import spread_partitions
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import publish_batch, write_batch
 
 
 def as_double(vec) -> F.Column:
@@ -368,12 +370,11 @@ def ivf_publish(
                 f"centroids must be a DataFrame, 'kmeans', or 'first_k'; got {centroids!r}"
             )
     centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    (
-        ivf_index(corpus, centroids, id_col, vec_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/vectors")
+    publish_batch(
+        ivf_index(corpus, centroids, id_col, vec_col),
+        f"{index_dir}/vectors",
+        batch,
+        partition_by=["centroid_id"],
     )
 
 
@@ -382,8 +383,8 @@ def ivf_load(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
     search-ready for :func:`ivf_search` — partition pruning on centroid_id
     still applies through the extra batch directory level."""
     return (
-        spark.read.parquet(f"{index_dir}/vectors"),
-        spark.read.parquet(f"{index_dir}/centroids"),
+        read_resolved(spark, [f"{index_dir}/vectors"]),
+        read_resolved(spark, [f"{index_dir}/centroids"]),
     )
 
 
@@ -402,26 +403,24 @@ def ivf_append(
     vector twin of dedup.incremental_minhash_pairs). Returns per-centroid
     counts of the appended batch.
 
-    Re-running the same batch id overwrites exactly that partition (dynamic
-    partition overwrite), so a failed-and-replayed ingest cannot double-count.
+    Re-running the same batch id overwrites exactly that partition
+    (``sources/sinks.write_batch``), so a failed-and-replayed ingest cannot
+    double-count.
 
     Centroids are frozen at publish time; appended vectors that sit far from
     every centroid degrade recall silently. Watch :func:`ivf_bucket_stats` —
     when new batches skew heavily into few buckets (or grow a bucket far past
     the mean), rebuild with fresh ``kmeans_centroids`` and republish.
     """
-    centroids = spark.read.parquet(f"{index_dir}/centroids")
-    assigned = ivf_index(new_vectors, centroids, id_col, vec_col).withColumn(
-        "batch", F.lit(batch)
-    )
-    (
-        assigned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/vectors")
+    centroids = read_resolved(spark, [f"{index_dir}/centroids"])
+    write_batch(
+        ivf_index(new_vectors, centroids, id_col, vec_col),
+        f"{index_dir}/vectors",
+        batch,
+        partition_by=["centroid_id"],
     )
     return (
-        spark.read.parquet(f"{index_dir}/vectors")
+        read_resolved(spark, [f"{index_dir}/vectors"])
         .filter(F.col("batch") == batch)
         .groupBy("centroid_id")
         .agg(F.count("*").alias("n_appended"))
@@ -433,7 +432,7 @@ def ivf_bucket_stats(spark, index_dir: str) -> DataFrame:
     trigger metric (metadata-scale output: n_centroids x n_batches rows,
     computed from a column-pruned scan of the two partition columns)."""
     return (
-        spark.read.parquet(f"{index_dir}/vectors")
+        read_resolved(spark, [f"{index_dir}/vectors"])
         .groupBy("centroid_id", "batch")
         .agg(F.count("*").alias("n_vectors"))
     )

@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.similarity import as_double, cosine, norm
 from parqueryd_spark.operators.util import spread_partitions
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import publish_batch, write_batch
 
 
 def _normalized(vec_col, do_norm: bool):
@@ -268,20 +270,15 @@ def sq_publish(
     ).parquet(f"{index_dir}/grid")
     lo = [r[1] for r in grid_rows]
     step = [r[2] for r in grid_rows]
-    (
-        sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(f"{index_dir}/codes")
-    )
+    codes = sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col)
+    publish_batch(codes, f"{index_dir}/codes", batch)
 
 
 def sq_load(spark, index_dir: str) -> tuple[DataFrame, list[float], list[float]]:
     """(codes, lo, step) of a published SQ index — the grid collect is
     metadata scale (dim rows)."""
-    rows = sorted(spark.read.parquet(f"{index_dir}/grid").collect(), key=lambda r: r["i"])
-    codes = spark.read.parquet(f"{index_dir}/codes")
+    rows = sorted(read_resolved(spark, [f"{index_dir}/grid"]).collect(), key=lambda r: r["i"])
+    codes = read_resolved(spark, [f"{index_dir}/codes"])
     return codes, [float(r["lo"]) for r in rows], [float(r["step"]) for r in rows]
 
 
@@ -296,19 +293,13 @@ def sq_append(
     """Incremental SQ maintenance: encode the increment against the index's
     OWN persisted grid — one map pass over the new rows, never a re-scan of
     the standing corpus — and land it as the ``batch=<batch>`` partition
-    (dynamic partition overwrite: replays can't double-count). Vectors
+    (``sources/sinks.write_batch``: replays can't double-count). Vectors
     outside the trained grid saturate to code 0/255 (bounded, sound);
     if increments drift far from the base distribution, retrain and
     republish."""
     _, lo, step = sq_load(spark, index_dir)
-    (
-        sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{index_dir}/codes")
-    )
+    codes = sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col)
+    write_batch(codes, f"{index_dir}/codes", batch)
 
 
 def _resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed):
@@ -363,22 +354,20 @@ def ivfsq_publish(
     from parqueryd_spark.operators.similarity import ivf_assign
 
     assigned = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
-    (
-        sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col)
-        .join(assigned, id_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/codes")
+    publish_batch(
+        sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col).join(assigned, id_col),
+        f"{index_dir}/codes",
+        batch,
+        partition_by=["centroid_id"],
     )
 
 
 def ivfsq_load(spark, index_dir: str):
     """(codes, centroids, lo, step) of a published IVF-SQ index."""
-    rows = sorted(spark.read.parquet(f"{index_dir}/grid").collect(), key=lambda r: r["i"])
+    rows = sorted(read_resolved(spark, [f"{index_dir}/grid"]).collect(), key=lambda r: r["i"])
     return (
-        spark.read.parquet(f"{index_dir}/codes"),
-        spark.read.parquet(f"{index_dir}/centroids"),
+        read_resolved(spark, [f"{index_dir}/codes"]),
+        read_resolved(spark, [f"{index_dir}/centroids"]),
         [float(r["lo"]) for r in rows],
         [float(r["step"]) for r in rows],
     )
@@ -475,7 +464,7 @@ def ivfsq_append(
 ) -> None:
     """Incremental IVF-SQ maintenance: assign against the index's persisted
     centroids and encode against its persisted grid — one broadcast-assign +
-    one map-encode pass over the increment; dynamic partition overwrite
+    one map-encode pass over the increment; ``sources/sinks.write_batch``
     keeps replays idempotent. Both quantizers are frozen at publish; on
     distribution drift (bucket skew, saturating codes) rebuild and
     republish."""
@@ -483,12 +472,9 @@ def ivfsq_append(
 
     codes, cents, lo, step = ivfsq_load(spark, index_dir)
     assigned = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col)
-    (
-        sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col)
-        .join(assigned, id_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/codes")
+    write_batch(
+        sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col).join(assigned, id_col),
+        f"{index_dir}/codes",
+        batch,
+        partition_by=["centroid_id"],
     )

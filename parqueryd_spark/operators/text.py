@@ -537,13 +537,22 @@ def text_index_publish(
     query time, which keeps the index maintainable by appending postings for
     new docs without rewriting df counts.
     """
-    root = index_dir.rstrip("/")
-    _index_postings(df, id_col, text_col, n_buckets).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(root + "/postings/batch=-1")
-    _index_stats_partial(df, text_col, n_buckets).write.mode("overwrite").parquet(
-        root + "/_stats/batch=-1"
+    _write_index_batch(df, index_dir.rstrip("/"), -1, id_col, text_col, n_buckets)
+
+
+def _write_index_batch(df, root: str, batch, id_col: str, text_col: str, n_buckets: int) -> None:
+    """Land ``df``'s postings and stats partial as batch ``batch`` of the
+    index at ``root`` (``sources/sinks.write_batch``, postings sub-partitioned
+    by ``bucket``)."""
+    from parqueryd_spark.sources.sinks import write_batch
+
+    write_batch(
+        _index_postings(df, id_col, text_col, n_buckets),
+        root + "/postings",
+        batch,
+        partition_by=["bucket"],
     )
+    write_batch(_index_stats_partial(df, text_col, n_buckets), root + "/_stats", batch)
 
 
 def bm25_from_index(
@@ -571,9 +580,11 @@ def bm25_from_index(
         # the postings join scores each (token, doc) once, so a repeated term
         # would silently lose the scan path's bag-of-terms double weight
         raise ValueError("query_terms must be distinct for the index serve path")
+    from parqueryd_spark.sources.parquet import read_resolved
+
     root = index_dir.rstrip("/")
     stats_row = (
-        spark.read.parquet(root + "/_stats")
+        read_resolved(spark, [root + "/_stats"])
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
@@ -589,7 +600,7 @@ def bm25_from_index(
     )
     buckets = [r["bucket"] for r in term_rows.select("bucket").collect()]
     postings = (
-        spark.read.parquet(root + "/postings")
+        read_resolved(spark, [root + "/postings"])
         .where(F.col("bucket").isin(buckets))  # partition pruning
         .where(F.col("token").isin(query_terms))
         .select("token", "doc", "tf", "dl")
@@ -617,19 +628,6 @@ def bm25_from_index(
     )
 
 
-def _index_batches(spark, root: str) -> list[int]:
-    from parqueryd_spark.sources.fs import HadoopFS
-
-    fs = HadoopFS(spark, root)
-    if not fs.is_dir(root + "/postings"):
-        raise FileNotFoundError(f"no published index at {root}")
-    out = []
-    for d in fs.listdir(root + "/postings"):
-        if d.startswith("batch="):
-            out.append(int(d.split("=", 1)[1]))
-    return out
-
-
 def text_index_append(
     spark,
     index_dir: str,
@@ -655,17 +653,15 @@ def text_index_append(
     Precondition: id-disjoint from already-indexed docs (re-ingesting an id
     would double its postings; dedup upstream with
     ``dedup.incremental_minhash_pairs`` / exact id anti-join)."""
+    from parqueryd_spark.sources.parquet import read_resolved
+    from parqueryd_spark.sources.sinks import batch_ids
+
     root = index_dir.rstrip("/")
-    batches = _index_batches(spark, root)
-    nxt = min(batches, default=-1) - 1
-    stats_any = spark.read.parquet(root + "/_stats").head()
-    n_buckets = stats_any["n_buckets"]
-    _index_postings(new_docs, id_col, text_col, n_buckets).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(root + f"/postings/batch={nxt}")
-    _index_stats_partial(new_docs, text_col, n_buckets).write.mode(
-        "overwrite"
-    ).parquet(root + f"/_stats/batch={nxt}")
+    batches = [int(b) for b in batch_ids(spark, root + "/postings")]
+    if not batches:
+        raise FileNotFoundError(f"no published index at {root}")
+    n_buckets = read_resolved(spark, [root + "/_stats"]).head()["n_buckets"]
+    _write_index_batch(new_docs, root, min(batches) - 1, id_col, text_col, n_buckets)
 
 
 def bigram_logprob(df, id_col: str, text_col: str, add_k: float = 1.0):

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from parqueryd_spark.core import aggregate_files
 from parqueryd_spark.queries import query, table_path
+from parqueryd_spark.sources.parquet import read_resolved
 
 
 def _li(sf_dir: str) -> str:
@@ -223,7 +224,7 @@ def _served_manifest(spark: SparkSession, sf_dir: str, table: str, kind: str, **
             path = tempfile.mkdtemp(prefix=f"parqueryd_spark_{kind}_manifest_")
             mf.write.mode("overwrite").parquet(path)
             _MANIFEST_SERVE_CACHE[key] = path
-    return spark.read.parquet(path)
+    return read_resolved(spark, [path])
 
 
 @query(
@@ -337,7 +338,7 @@ def _drift_shards(spark: SparkSession, sf_dir: str) -> str:
             return path
         from pyspark.sql import functions as F
 
-        orders = spark.read.parquet(table_path(sf_dir, "orders"))
+        orders = read_resolved(spark, [table_path(sf_dir, "orders")])
         d = tempfile.mkdtemp(prefix="parqueryd_spark_drift_")
         orders.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.parquet(
             os.path.join(d, "shard_even.parquet")
@@ -426,7 +427,7 @@ def _hive_events(spark: SparkSession, sf_dir: str) -> tuple:
             mdir = os.path.join(base, "manifest")
             build_manifest(spark, d).write.parquet(mdir)
             _HIVE_CACHE[key] = (d, mdir)
-    return d, spark.read.parquet(mdir)
+    return d, read_resolved(spark, [mdir])
 
 
 @query(

@@ -26,7 +26,7 @@ from parqueryd_spark.operators.dedup import (
     simhash_md5_near_pairs,
 )
 from parqueryd_spark.queries import query
-from parqueryd_spark.sources.parquet import load_table
+from parqueryd_spark.sources.parquet import load_table, read_resolved
 
 # Shared oracle: exact all-pairs 3-gram-shingle Jaccard >= 0.8 via inverted index.
 _EXACT_JACCARD_SQL = """
@@ -129,7 +129,7 @@ def served_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).parquet(path)
             _MINHASH_INDEX_CACHE[key] = path
-    return spark.read.parquet(path)
+    return read_resolved(spark, [path])
 
 
 @query("dedup_minhash_lsh", oracle=_EXACT_JACCARD_SQL, bench=True)

@@ -410,6 +410,7 @@ def _served_cm_state(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from parqueryd_spark.operators.sketches import count_min_sketch
+    from parqueryd_spark.sources.sinks import write_batch
 
     key = os.path.abspath(sf_dir)
     with _CM_STATE_LOCK:
@@ -418,12 +419,10 @@ def _served_cm_state(spark: SparkSession, sf_dir: str) -> str:
             path = tempfile.mkdtemp(prefix="parqueryd_spark_cm_")
             ev = load_table(spark, sf_dir, "events")
             for i in range(3):
-                count_min_sketch(
-                    ev.where(increment_of("event_id", i)),
-                    "user_id",
-                    width=256,
-                    depth=4,
-                ).write.mode("overwrite").parquet(os.path.join(path, f"batch={i}"))
+                cells = count_min_sketch(
+                    ev.where(increment_of("event_id", i)), "user_id", width=256, depth=4
+                )
+                write_batch(cells, path, i)
             _CM_STATE_CACHE[key] = path
     return path
 

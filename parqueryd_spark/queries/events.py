@@ -401,6 +401,7 @@ def _served_kmv_state(spark: SparkSession, sf_dir: str, k: int = 128) -> str:
     import tempfile
 
     from parqueryd_spark.operators.sketches import kmv_sketch
+    from parqueryd_spark.sources.sinks import write_batch
 
     key = (os.path.abspath(sf_dir), k)
     with _KMV_STATE_LOCK:
@@ -409,13 +410,14 @@ def _served_kmv_state(spark: SparkSession, sf_dir: str, k: int = 128) -> str:
             path = tempfile.mkdtemp(prefix="parqueryd_spark_kmv_")
             ev = load_table(spark, sf_dir, "events")
             for i in range(3):
-                kmv_sketch(
+                sketch = kmv_sketch(
                     ev.where(increment_of("event_id", i)),
                     ["event_type"],
                     "user_id",
                     k=k,
                     hash_fn="md5_52",
-                ).write.mode("overwrite").parquet(os.path.join(path, f"batch={i}"))
+                )
+                write_batch(sketch, path, i)
             _KMV_STATE_CACHE[key] = path
     return path
 
@@ -477,6 +479,7 @@ def _served_kmv_compacted_state(spark: SparkSession, sf_dir: str, k: int = 128) 
     import tempfile
 
     from parqueryd_spark.operators.sketches import kmv_sketch
+    from parqueryd_spark.sources.sinks import write_batch
     from parqueryd_spark.streaming.rollup import compact_kmv_state
 
     key = (os.path.abspath(sf_dir), k, "compacted")
@@ -486,13 +489,14 @@ def _served_kmv_compacted_state(spark: SparkSession, sf_dir: str, k: int = 128) 
             path = tempfile.mkdtemp(prefix="parqueryd_spark_kmvc_")
             ev = load_table(spark, sf_dir, "events")
             for i in range(3):
-                kmv_sketch(
+                sketch = kmv_sketch(
                     ev.where(increment_of("event_id", i)),
                     ["event_type"],
                     "user_id",
                     k=k,
                     hash_fn="md5_52",
-                ).write.mode("overwrite").parquet(os.path.join(path, f"batch={i}"))
+                )
+                write_batch(sketch, path, i)
             compact_kmv_state(spark, path, ("event_type",), k=k)
             _KMV_STATE_CACHE[key] = path
     return path

@@ -938,6 +938,7 @@ def _served_lm_compacted(spark: SparkSession, sf_dir: str) -> str:
 
     from parqueryd_spark.operators.lm import ngram_counts
     from parqueryd_spark.queries import increment_of
+    from parqueryd_spark.sources.sinks import write_batch
     from parqueryd_spark.streaming.lm import compact_lm_state
 
     lock = _LM_SERVE_CACHE.setdefault("__lock", threading.Lock())
@@ -951,9 +952,7 @@ def _served_lm_compacted(spark: SparkSession, sf_dir: str) -> str:
                 "overwrite"
             ).parquet(os.path.join(path, "_meta"))
             for i in range(3):
-                ngram_counts(docs.where(increment_of("doc_id", i)), "text", 2).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(path, f"batch={i}"))
+                write_batch(ngram_counts(docs.where(increment_of("doc_id", i)), "text", 2), path, i)
             compact_lm_state(spark, path)
             _LM_SERVE_CACHE[key] = path
     return path
@@ -1327,6 +1326,7 @@ def _served_hh_state(spark: SparkSession, sf_dir: str, capacity: int = 1024) -> 
     import tempfile
 
     from parqueryd_spark.operators.sketches import _mg_summaries_grouped
+    from parqueryd_spark.sources.sinks import write_batch
 
     key = (os.path.abspath(sf_dir), capacity)
     with _HH_STATE_LOCK:
@@ -1338,9 +1338,7 @@ def _served_hh_state(spark: SparkSession, sf_dir: str, capacity: int = 1024) -> 
                 toks = docs.where(increment_of("doc_id", i)).select(
                     "lang", F.explode(T.tokens("text")).alias("token")
                 )
-                _mg_summaries_grouped(toks, "lang", "token", capacity).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(path, f"batch={i}"))
+                write_batch(_mg_summaries_grouped(toks, "lang", "token", capacity), path, i)
             _HH_STATE_CACHE[key] = path
     return path
 

@@ -81,7 +81,7 @@ class HadoopFS:
         def walk(p: str) -> None:
             for st in self._fs.listStatus(self._Path(p)):
                 name = st.getPath().getName()
-                if name.startswith(("_", ".")):
+                if _hidden(name):
                     continue
                 q = st.getPath().toString()
                 if st.isDirectory():
@@ -91,3 +91,35 @@ class HadoopFS:
 
         walk(path)
         return sorted(out)
+
+    def first_file(self, path: str) -> str | None:
+        """``list_files(path, suffix=None)[0]`` without listing the whole
+        tree: a depth-first walk that lists one directory level at a time, in
+        the order of the full sorted listing, and stops at the first data
+        file. A directory sorts among its siblings by its name plus ``/``,
+        which is how its files' paths compare with theirs. None when a
+        directory holds no data file."""
+        if not self.is_dir(path):
+            return self.qualify(path)
+
+        def first(p) -> str | None:
+            entries = []
+            for st in self._fs.listStatus(p):
+                child = st.getPath()
+                name = child.getName()
+                if not _hidden(name):
+                    is_dir = st.isDirectory()
+                    entries.append((name + "/" if is_dir else name, is_dir, child))
+            for _key, is_dir, child in sorted(entries, key=lambda e: e[0]):
+                found = first(child) if is_dir else child.toString()
+                if found is not None:
+                    return found
+            return None
+
+        return first(self._Path(path))
+
+
+def _hidden(name: str) -> bool:
+    """Marker and sidecar entries dataset listings skip (``_SUCCESS``,
+    ``.crc``, ``_metadata``, ``_meta``)."""
+    return name.startswith(("_", "."))

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parqueryd_spark.sources.parquet import read_resolved
+
 
 def write_partitioned(
     df: DataFrame,
@@ -106,7 +108,7 @@ def publish_atomic(df: DataFrame, final_path: str) -> None:
 def cache_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     """Register + cache a parquet table (the thin analog of the reference's
     download-to-local-disk layer, O19 — Spark's cache replaces file copying)."""
-    df = spark.read.parquet(path)
+    df = read_resolved(spark, [path])
     df.createOrReplaceTempView(name)
     spark.catalog.cacheTable(name)
     return spark.table(name)

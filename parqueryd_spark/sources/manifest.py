@@ -74,6 +74,7 @@ from pyspark.sql.types import (
 
 from parqueryd_spark.functions.compile import compile_where_terms, normalize_where_terms
 from parqueryd_spark.sources.fs import HadoopFS
+from parqueryd_spark.sources.parquet import read_resolved
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -615,7 +616,7 @@ def scan_pruned(
         # caller-persisted manifests.
         kept = kept + _uncovered_live_files(spark, path, mf)
     if bloom_manifests:
-        dtypes = {f.name: f.dataType for f in spark.read.parquet(path).schema.fields}
+        dtypes = {f.name: f.dataType for f in read_resolved(spark, [path]).schema.fields}
         for col_name, op, value in normalize_where_terms(where_terms):
             if col_name not in bloom_manifests or op not in ("==", "in"):
                 continue
@@ -628,7 +629,7 @@ def scan_pruned(
             }
             kept = [f for f in kept if verdicts.get(_norm_path(f), True)]
     if not kept:
-        base = spark.read.parquet(path).filter(F.lit(False))
+        base = read_resolved(spark, [path]).filter(F.lit(False))
     else:
         base = _read_kept(spark, path, kept, where_terms)
     if select is not None:
@@ -644,10 +645,8 @@ def _read_kept(
     partition columns alive on a subset-of-files read — without it a pruned
     read of a partitioned dataset would silently drop those columns. It is
     only meaningful when ``path`` is a directory above the kept files."""
-    reader = spark.read
-    if any(_norm_path(f) != _norm_path(path) for f in files):
-        reader = reader.option("basePath", path)
-    df = reader.parquet(*files)
+    subset = any(_norm_path(f) != _norm_path(path) for f in files)
+    df = read_resolved(spark, files, base_path=path if subset else None)
     pred = compile_where_terms(where_terms)
     return df if pred is None else df.filter(pred)
 
@@ -710,7 +709,7 @@ def minmax_pruned(
     on disk at all)."""
     num_types = {"tinyint", "smallint", "int", "bigint", "float", "double"}
     if dtype is None:
-        dtype = dict(spark.read.parquet(path).dtypes).get(col)
+        dtype = dict(read_resolved(spark, [path]).dtypes).get(col)
     metadata_ok = dtype in num_types
     mf = manifest if manifest is not None else build_manifest(spark, path)
     plan = _file_verdicts(mf, normalize_where_terms(where_terms), full=True, stats_col=col).collect()
@@ -770,7 +769,7 @@ def bloom_manifest(
     largest file's row count at ``fpp``. NULL keys are excluded (a NULL
     never equals a lookup value). Persist the rows next to the data and
     maintain per publish batch like the other incremental indexes."""
-    return _file_blooms(spark.read.parquet(path), key_col, fpp, num_bits, num_hashes)
+    return _file_blooms(read_resolved(spark, [path]), key_col, fpp, num_bits, num_hashes)
 
 
 def _file_blooms(
@@ -859,7 +858,7 @@ def scan_bloom_pruned(
     identical results to a full scan. Files without manifest coverage are
     kept (conservative), matching the other pruned-scan contracts."""
     all_files = HadoopFS(spark, path).list_files(path)
-    dtype = spark.read.parquet(path).schema[key_col].dataType
+    dtype = read_resolved(spark, [path]).schema[key_col].dataType
     verdicts = {
         _norm_path(r.file): bool(r.keep)
         for r in prune_files_bloom(bloom_mf, values, value_type=dtype).collect()
@@ -867,8 +866,8 @@ def scan_bloom_pruned(
     kept = [f for f in all_files if verdicts.get(_norm_path(f), True)]
     typed = [F.lit(v).cast(dtype) for v in values]
     if not kept:
-        return spark.read.parquet(path).filter(F.lit(False))
-    return spark.read.parquet(*kept).filter(F.col(key_col).isin(*typed))
+        return read_resolved(spark, [path]).filter(F.lit(False))
+    return read_resolved(spark, kept).filter(F.col(key_col).isin(*typed))
 
 
 def refresh_bloom_manifest(
@@ -891,7 +890,7 @@ def refresh_bloom_manifest(
     params = old.select("n_bits", "n_hashes").limit(1).collect()
     # an empty old manifest sizes the filters from the new files
     num_bits, num_hashes = (params[0].n_bits, params[0].n_hashes) if params else (None, None)
-    fresh = _file_blooms(spark.read.parquet(*new_files), key_col, 0.01, num_bits, num_hashes)
+    fresh = _file_blooms(read_resolved(spark, new_files), key_col, 0.01, num_bits, num_hashes)
     return kept.unionByName(fresh)
 
 
@@ -936,7 +935,7 @@ def optimize_dataset(
         )
         zdir = os.path.join(manifest_dir, "zonemap")
         mf.write.mode("overwrite").parquet(zdir)
-        out["manifest_rows"] = spark.read.parquet(zdir).count()
+        out["manifest_rows"] = read_resolved(spark, [zdir]).count()
         for c in bloom_cols or []:
             bloom_manifest(spark, dataset_dir, c, fpp=bloom_fpp).write.mode(
                 "overwrite"

@@ -117,19 +117,28 @@ def read_parquet(
 
 
 def read_resolved(
-    spark: SparkSession, paths: Sequence[str], merge_schema: bool = False
+    spark: SparkSession,
+    paths: Sequence[str],
+    merge_schema: bool = False,
+    base_path: str | None = None,
 ) -> DataFrame:
     """``spark.read.parquet(*paths)`` over already-resolved shards, without
     Spark's schema-inference job: the schema comes from one footer read on
     the driver (``_footer_schema``) and is passed as ``.schema(S)``, so
     partition discovery and the scan plan are Spark's own. Spark's
     non-merging inference also reads a single footer, so the two agree.
+    This is the one read path for published datasets and state.
 
+    ``base_path`` is Spark's ``basePath`` option: a read of files below a
+    hive-partitioned directory keeps that directory's partition columns.
     ``merge_schema=True`` keeps Spark's merging inference (it must read
-    every footer). When no footer can be read — no data file under the
-    first path, or an unreadable one — this is a plain ``spark.read.parquet``
-    and Spark raises its own error."""
+    every footer). When no footer can be read — a missing path, no data
+    file under the first path, or an unreadable one — this is a plain
+    ``spark.read.parquet`` and Spark raises its own error
+    (``PATH_NOT_FOUND``, ``UNABLE_TO_INFER_SCHEMA``)."""
     reader = spark.read
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
     if merge_schema:
         return reader.option("mergeSchema", "true").parquet(*paths)
     schema = _footer_schema(spark, paths[0])
@@ -140,7 +149,7 @@ def read_resolved(
 
 def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     """The data schema Spark infers for ``path``, from the footer of its
-    first data file (sorted, hidden files skipped), converted on the driver
+    first data file (``HadoopFS.first_file``), converted on the driver
     by the calls Spark's inference task makes:
     ``ParquetFileReader.readFooter`` without row groups, then
     ``ParquetFileFormat.readSchemaFromFooter`` with a converter built from
@@ -157,10 +166,10 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
 
     spark_pq = "org.apache.spark.sql.execution.datasources.parquet."
     try:
-        files = HadoopFS(spark, path).list_files(path, suffix=None)
-        if not files:
+        first = HadoopFS(spark, path).first_file(path)
+        if first is None:
             return None
-        jpath = jclass("org.apache.hadoop.fs.Path")(files[0])
+        jpath = jclass("org.apache.hadoop.fs.Path")(first)
         meta = jclass("org.apache.parquet.hadoop.ParquetFileReader").readFooter(
             spark._jsc.hadoopConfiguration(),
             jpath,

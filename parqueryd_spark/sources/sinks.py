@@ -1,20 +1,42 @@
-"""Sinks — the reference's result-egress surface, Spark-first.
+"""Sinks — the reference's result-egress surface, Spark-first, and the one
+owner of published state.
 
 The reference ships results as Arrow IPC bytes to the client (worker.py:400-403,
 O10) and creates data with ``parquery.write.df_to_parquet`` (O11, README.md:25-28).
 Spark equivalents: ``to_pandas_result`` (Arrow-backed collect at the client
 edge, with the empty-result protocol) and ``write_parquet`` (distributed writer).
+
+Datasets are published whole through ``atomic_publish`` (the moveparquet
+barrier, worker.py:689-779). Maintained state — sketches, rollups, LM/NB
+counts, dedup and ANN indexes, stream outputs — is a directory of
+``batch=<id>`` partitions, and this module is the only code that knows that
+format:
+
+- ``write_batch`` lands one idempotent ``batch=<id>`` partition (a replayed
+  batch overwrites itself, so at-least-once delivery stays exactly-once);
+- ``read_batches`` is the merge-on-read view: every batch's rows, without
+  the ``batch`` column;
+- ``publish_batch`` atomically replaces the whole state with one batch (an
+  index publish), and ``compact_batches`` folds all batches into one
+  ``batch=-1`` generation that way, carrying the ``_meta`` sidecar along;
+- ``read_meta`` reads a ``_meta`` sidecar (None only when it is missing).
+
+Every read of published data goes through ``sources/parquet.read_resolved``,
+which takes the schema from a driver-side footer read instead of a Spark job.
 """
 
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from parqueryd_spark.sources.fs import HadoopFS
+from parqueryd_spark.sources.parquet import read_resolved
 
 
 def to_pandas_result(df: DataFrame | None, none_on_empty: bool = False) -> pd.DataFrame | None:
@@ -215,7 +237,7 @@ def upsert_parquet(
             "upsert_partitioned to preserve the layout and rewrite only the "
             "touched partitions"
         )
-    base = spark.read.parquet(dataset_dir)
+    base = read_resolved(spark, [dataset_dir])
     inserts = updates
     if delete_col is not None:
         inserts = inserts.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
@@ -254,7 +276,7 @@ def upsert_partitioned(
     nothing should go through a table format's metadata commit instead.
     """
     touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    base = spark.read.parquet(dataset_dir)
+    base = read_resolved(spark, [dataset_dir])
     slice_df = base.filter(F.col(partition_col).isin(touched))
     inserts = updates
     if delete_col is not None:
@@ -305,6 +327,108 @@ def _partition_dir(spark: SparkSession, col: str, value) -> str:
         return f"{col}={value}"
 
 
+def write_batch(
+    df: DataFrame, state_dir: str, batch, partition_by: list[str] | None = None
+) -> None:
+    """Land ``df`` as the ``batch=<batch>`` partition of the state at
+    ``state_dir``, replacing only that partition: a replayed batch rewrites
+    itself, so at-least-once delivery yields exactly-once state. The id is
+    hive-escaped as Spark's partition writer would. ``partition_by`` names
+    sub-partition columns below the batch directory (``bucket``,
+    ``centroid_id``)."""
+    target = f"{state_dir.rstrip('/')}/{_partition_dir(df.sparkSession, 'batch', batch)}"
+    write_parquet(df, target, partition_by=partition_by)
+
+
+def batch_ids(spark: SparkSession, state_dir: str) -> list[str]:
+    """The (hive-escaped) ids of the ``batch=<id>`` partitions under
+    ``state_dir``; empty when it does not exist. One directory listing."""
+    fs = HadoopFS(spark, state_dir)
+    if not fs.is_dir(state_dir):
+        return []
+    return [d.split("=", 1)[1] for d in fs.listdir(state_dir) if d.startswith("batch=")]
+
+
+def read_batches(spark: SparkSession, state_dir: str) -> DataFrame:
+    """Merge-on-read view of the state at ``state_dir``: the rows of every
+    published ``batch=<id>`` partition, without the ``batch`` column. A
+    missing or empty state directory raises Spark's ``PATH_NOT_FOUND`` or
+    ``UNABLE_TO_INFER_SCHEMA``."""
+    return read_resolved(spark, [state_dir]).drop("batch")
+
+
+def publish_batch(
+    df: DataFrame,
+    state_dir: str,
+    batch,
+    partition_by: list[str] | None = None,
+    sidecars: list[tuple[DataFrame, str]] | None = None,
+) -> None:
+    """Replace the whole state at ``state_dir`` with ``df`` as its only
+    ``batch=<batch>`` partition, through :func:`atomic_publish` (readers see
+    the old batches or the new one, never a mix). Index publishes start
+    their batches over this way; later increments land beside it with
+    :func:`write_batch`."""
+    atomic_publish(
+        df.withColumn("batch", F.lit(batch)),
+        state_dir,
+        partition_by=["batch", *(partition_by or [])],
+        sidecars=sidecars,
+    )
+
+
+def compact_batches(
+    spark: SparkSession,
+    state_dir: str,
+    fold: Callable[[DataFrame], DataFrame],
+    partition_by: list[str] | None = None,
+) -> int:
+    """Fold every batch of the state at ``state_dir`` into one ``batch=-1``
+    generation and swap it in with :func:`publish_batch`. ``fold`` maps
+    :func:`read_batches` to the compacted rows and must be the merge readers
+    perform anyway, so answers do not change. The hive ``batch`` layout (and
+    any ``partition_by`` sub-partitioning) is kept, so later batches land
+    beside ``batch=-1``; a ``_meta`` sidecar is republished inside the same
+    generation. Run between availableNow drains. Returns the compacted row
+    count."""
+    meta = f"{state_dir.rstrip('/')}/_meta"
+    sidecars = None
+    if HadoopFS(spark, meta).exists(meta):
+        sidecars = [(read_resolved(spark, [meta]), "_meta")]
+    publish_batch(fold(read_batches(spark, state_dir)), state_dir, -1, partition_by, sidecars)
+    return read_resolved(spark, [state_dir]).count()
+
+
+def read_meta(spark: SparkSession, path: str) -> Row | None:
+    """The one-row ``_meta`` sidecar at ``path`` (model parameters that
+    travel with the state), or None when ``path`` does not exist — the
+    pre-meta layout. Any other failure (a corrupt or unreadable file)
+    raises: silently defaulting could serve a model at the wrong
+    parameters."""
+    try:
+        return read_resolved(spark, [path]).collect()[0]
+    except AnalysisException as e:
+        cls = getattr(e, "getErrorClass", lambda: "")() or ""
+        if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):
+            return None
+        raise
+
+
+def _start_available_now(
+    stream: DataFrame, process: Callable[[DataFrame, int], None], checkpoint_dir: str
+):
+    """Start ``stream`` as an availableNow ``foreachBatch(process)`` query
+    checkpointed at ``checkpoint_dir``; ``process`` typically ends in
+    :func:`write_batch`. Returns the started StreamingQuery (callers
+    ``awaitTermination()``)."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def compact_parquet(
     spark: SparkSession,
     dataset_dir: str,
@@ -345,7 +469,7 @@ def compact_parquet(
                 f"{dataset_dir} is hive-partitioned (e.g. {part_dirs[0]}); pass partition_by "
                 "to preserve the layout — compacting without it would flatten the partitioning"
             )
-    df = spark.read.parquet(dataset_dir)
+    df = read_resolved(spark, [dataset_dir])
     if cluster_by and len(cluster_by) >= 2:
         from parqueryd_spark.sources.layout import zorder_layout
 
@@ -357,7 +481,7 @@ def compact_parquet(
     else:
         df = df.repartition(target_partitions)
     atomic_publish(df, dataset_dir, partition_by=partition_by)
-    return spark.read.parquet(dataset_dir).count()
+    return read_resolved(spark, [dataset_dir]).count()
 
 
 def publish_versioned(
@@ -452,13 +576,12 @@ def current_generation(spark: SparkSession, dataset_dir: str) -> int:
 
 def read_current(spark: SparkSession, dataset_dir: str) -> DataFrame:
     """The currently-published generation."""
-    gen = current_generation(spark, dataset_dir)
-    return spark.read.parquet(f"{dataset_dir}/gen={gen}")
+    return read_generation(spark, dataset_dir, current_generation(spark, dataset_dir))
 
 
 def read_generation(spark: SparkSession, dataset_dir: str, gen: int) -> DataFrame:
     """Time travel: read a retained historical generation."""
-    return spark.read.parquet(f"{dataset_dir}/gen={gen}")
+    return read_resolved(spark, [f"{dataset_dir}/gen={gen}"])
 
 
 def rollback_generation(spark: SparkSession, dataset_dir: str, gen: int) -> None:

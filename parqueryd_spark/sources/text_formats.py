@@ -23,14 +23,8 @@ def read_csv(
 ) -> DataFrame:
     """CSV reader; ``timestamp_cols`` mirrors the reference's parse_dates
     convention (tests/test_simple_rpc.py:23-25)."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    df = reader.csv(path)
+    opts = {"header": header, "inferSchema": schema is None, **options}
+    df = spark.read.options(**opts).csv(path, schema=schema)
     for c in timestamp_cols or []:
         from pyspark.sql import functions as F
 
@@ -46,12 +40,7 @@ def read_json(
     **options,
 ) -> DataFrame:
     """JSON-lines reader (multiline=True for whole-file JSON documents)."""
-    reader = spark.read.option("multiLine", str(multiline).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.json(path)
+    return spark.read.options(**{"multiLine": multiline, **options}).json(path, schema=schema)
 
 
 def ingest_to_parquet(

@@ -22,7 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parqueryd_spark.sources.sinks import upsert_parquet, upsert_partitioned
+from parqueryd_spark.sources.sinks import (
+    _start_available_now,
+    upsert_parquet,
+    upsert_partitioned,
+)
 
 
 def collapse_changes(
@@ -50,7 +54,6 @@ def stream_apply_cdc(
     partition_col: str | None = None,
     delete_col: str | None = None,
     seq_col: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start a foreachBatch query merging each micro-batch of changes into
     the parquet dataset at ``dataset_dir``. ``partition_col`` selects the
@@ -71,9 +74,4 @@ def stream_apply_cdc(
         else:
             upsert_parquet(spark, dataset_dir, changes, key_cols, delete_col)
 
-    writer = updates_stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_available_now(updates_stream, _apply, checkpoint_dir)

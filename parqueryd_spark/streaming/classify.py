@@ -4,31 +4,32 @@ publish the dense model table atomically (sources/sinks.atomic_publish, the
 same frozen-model contract as the published LM / BM25 / ANN indexes), then
 classify every incoming micro-batch against the FROZEN model. Scoring is
 per-document (no cross-document state), so per-batch outputs are
-batch-equivalent to one-shot scoring row-for-row, and idempotent
-``batch=<id>`` partitions give effectively-exactly-once output under
-checkpoint replay — the stream_score_documents contract, applied to
+batch-equivalent to one-shot scoring row-for-row. Maintained NB counts and
+per-batch outputs are batch state (``sources/sinks.write_batch``,
+``read_batches``, ``compact_batches``), whose replayed batches overwrite
+themselves; the feature-hash parameters live in a ``_meta`` sidecar read with
+``sinks.read_meta`` — the stream_score_documents contract, applied to
 classification."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
+from parqueryd_spark.sources.sinks import (
+    _start_available_now,
+    compact_batches,
+    read_batches,
+    read_meta,
+    write_batch,
+)
 
-def _read_meta(spark, nb_dir: str):
-    """(n_buckets, salt) the store was created with, or None if the store
-    has no meta yet. Only a genuinely missing path falls through; corrupt
-    meta or IO errors propagate (the streaming-LM lesson: silently
-    defaulting can serve a model at the wrong feature hash)."""
-    try:
-        meta = spark.read.parquet(os.path.join(nb_dir, "_meta")).collect()[0]
-    except AnalysisException as e:
-        cls = getattr(e, "getErrorClass", lambda: "")() or ""
-        if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):
-            return None
-        raise
+
+def _stored_meta(spark, nb_dir: str) -> tuple[int, str]:
+    """(n_buckets, salt) from the store's ``_meta``; raises when the store
+    has none (nothing maintained yet)."""
+    meta = read_meta(spark, f"{nb_dir}/_meta")
+    if meta is None:
+        raise ValueError(f"NB store at {nb_dir} has no _meta — nothing maintained yet?")
     return int(meta["n_buckets"]), str(meta["salt"])
 
 
@@ -58,11 +59,11 @@ def stream_maintain_nb(
         nonlocal meta_checked
         if not meta_checked:
             spark = batch_df.sparkSession
-            stored = _read_meta(spark, nb_dir)
-            if stored is not None and stored != (int(n_buckets), str(salt)):
+            stored = read_meta(spark, f"{nb_dir}/_meta")
+            if stored is not None and tuple(stored) != (int(n_buckets), str(salt)):
                 raise ValueError(
                     f"NB store at {nb_dir} was maintained with "
-                    f"(n_buckets, salt)={stored} but this stream requests "
+                    f"(n_buckets, salt)={tuple(stored)} but this stream requests "
                     f"({int(n_buckets)}, {salt!r}) — restarting maintenance "
                     "cannot change the feature hash (older batch partitions "
                     "would keep the old bucketing); use a fresh nb_dir"
@@ -70,17 +71,12 @@ def stream_maintain_nb(
             if stored is None:
                 spark.createDataFrame(
                     [(int(n_buckets), str(salt))], "n_buckets int, salt string"
-                ).write.mode("overwrite").parquet(os.path.join(nb_dir, "_meta"))
+                ).write.mode("overwrite").parquet(f"{nb_dir}/_meta")
             meta_checked = True
         part = nb_count_partials(batch_df, label_col, text_col, n_buckets, salt)
-        part.write.mode("overwrite").parquet(os.path.join(nb_dir, f"batch={batch_id}"))
+        write_batch(part, nb_dir, batch_id)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)
 
 
 def read_nb_model(spark, nb_dir: str, alpha: float = 1.0) -> DataFrame:
@@ -91,44 +87,31 @@ def read_nb_model(spark, nb_dir: str, alpha: float = 1.0) -> DataFrame:
     not a serve-time choice); alpha is a serve-time smoothing knob."""
     from parqueryd_spark.operators.classify import nb_model_from_partials
 
-    stored = _read_meta(spark, nb_dir)
-    if stored is None:
-        raise ValueError(f"NB store at {nb_dir} has no _meta — nothing maintained yet?")
-    n_buckets, _salt = stored
-    parts = spark.read.parquet(nb_dir).drop("batch")
-    return nb_model_from_partials(parts, n_buckets, alpha)
+    n_buckets, _salt = _stored_meta(spark, nb_dir)
+    return nb_model_from_partials(read_batches(spark, nb_dir), n_buckets, alpha)
 
 
 def compact_nb_state(spark, nb_dir: str) -> int:
-    """Fold accumulated per-batch NB count partitions into one ``batch=-1``
-    generation — the count-table compaction contract (streaming/lm.py
-    compact_lm_state) for the classifier's sufficient statistics. Partials
-    are integer counts per (label, bucket) — token counts at bucket >= 0,
-    per-class document counts at the bucket = -1 marker — and both kinds
-    merge by plain addition (the exact fold nb_model_from_partials performs
+    """Fold accumulated per-batch NB count partitions into one generation
+    (``sinks.compact_batches``) — the count-table compaction contract
+    (streaming/lm.py compact_lm_state) for the classifier's sufficient
+    statistics. Partials are integer counts per (label, bucket) — token
+    counts at bucket >= 0, per-class document counts at the bucket = -1
+    marker — and both kinds merge by plain addition (the exact fold nb_model_from_partials performs
     on every serve), so the compacted table finalizes to a bit-identical
     model while state shrinks from batches x sparse-rows to the global
     sparse table (<= classes x (n_buckets + 1) rows). The ``_meta``
-    (n_buckets, salt) sidecar rides inside the atomic_publish generation —
-    no reader window ever sees counts detached from their feature-hash
-    parameters. Run between availableNow drains; new batches land beside
-    ``batch=-1`` in the kept hive layout."""
+    (n_buckets, salt) sidecar rides inside the swapped-in generation — no
+    reader window ever sees counts detached from their feature-hash
+    parameters."""
     from pyspark.sql import functions as F
 
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    stored = _read_meta(spark, nb_dir)
-    if stored is None:
-        raise ValueError(f"NB store at {nb_dir} has no _meta — nothing maintained yet?")
-    parts = spark.read.parquet(nb_dir).drop("batch")
-    merged = (
-        parts.groupBy("label", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
-        .withColumn("batch", F.lit(-1))
+    _stored_meta(spark, nb_dir)
+    return compact_batches(
+        spark,
+        nb_dir,
+        lambda parts: parts.groupBy("label", "bucket").agg(F.sum("c").cast("long").alias("c")),
     )
-    meta_df = spark.createDataFrame([stored], "n_buckets int, salt string")
-    atomic_publish(merged, nb_dir, partition_by=["batch"], sidecars=[(meta_df, "_meta")])
-    return spark.read.parquet(nb_dir).count()
 
 
 def stream_classify_documents(
@@ -151,11 +134,6 @@ def stream_classify_documents(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         out = nb_score(batch_df, model, id_col, text_col, n_buckets, salt)
-        out.write.mode("overwrite").parquet(os.path.join(scores_dir, f"batch={batch_id}"))
+        write_batch(out, scores_dir, batch_id)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)

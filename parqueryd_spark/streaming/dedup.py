@@ -6,10 +6,10 @@ of :func:`parqueryd_spark.operators.dedup.incremental_minhash_pairs`.
 Why foreachBatch instead of stateful operators: the dedup "state" here is the
 corpus signature index, which must (a) outlive the stream, (b) be shared with
 batch pipelines, and (c) scale past executor state stores. A parquet dataset
-partitioned by batch id gives all three: per-batch output is written with
-OVERWRITE into its own ``batch=<id>`` partition, so a replayed micro-batch
-(at-least-once foreachBatch) rewrites the same partition instead of
-duplicating rows — idempotent, hence effectively exactly-once.
+partitioned by batch id gives all three: per-batch output lands through
+``sources/sinks.write_batch``, so a replayed micro-batch (at-least-once
+foreachBatch) rewrites its own partition instead of duplicating rows —
+idempotent, hence effectively exactly-once.
 
 Scale posture: per trigger the work is |batch| signature builds + a
 band-bucket join against the stored index — the index is never re-shingled,
@@ -19,13 +19,17 @@ in PRIOR batches are dropped too (Jaccard 1.0 >= any threshold).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.dedup import incremental_minhash_pairs, minhash_index
-from parqueryd_spark.sources.fs import HadoopFS
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import (
+    _start_available_now,
+    batch_ids,
+    compact_batches,
+    write_batch,
+)
 
 
 def stream_near_dedup(
@@ -64,12 +68,9 @@ def stream_near_dedup(
             # into `corpus` while lazily overwriting it below would delete
             # the files before the scan tasks read them (FileNotFound on
             # every restart). The partition filter prunes those files out.
-            fs = HadoopFS(spark, index_dir)
-            if fs.is_dir(index_dir) and any(
-                d.startswith("batch=") for d in fs.listdir(index_dir)
-            ):
+            if batch_ids(spark, index_dir):
                 corpus = (
-                    spark.read.parquet(index_dir)
+                    read_resolved(spark, [index_dir])
                     .where(F.col("batch") != F.lit(batch_id))
                     .select("doc", "sh", "sig")
                 )
@@ -97,45 +98,29 @@ def stream_near_dedup(
                 .alias("doc")
             ).distinct()
             kept = new_idx.join(drop, "doc", "left_anti")
-            kept.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"batch={batch_id}")
-            )
+            write_batch(kept, index_dir, batch_id)
         finally:
             new_idx.unpersist()
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)
 
 
 def read_index(spark, index_dir: str) -> DataFrame:
     """The published index as one DataFrame (doc, sh, sig) — what batch
     pipelines join against, and what a compaction pass rewrites."""
-    return spark.read.parquet(index_dir).select("doc", "sh", "sig")
+    return read_resolved(spark, [index_dir]).select("doc", "sh", "sig")
 
 
 def compact_index(spark, index_dir: str, target_partitions: int = 8) -> int:
-    """Fold the accumulated ``batch=<id>`` partitions into one ``batch=-1``
-    generation. Long-running streams add a partition directory per
-    micro-batch; left alone, ``read_index`` scan planning degrades into file
-    listing. The rewrite goes through ``atomic_publish`` (readers flip
-    generations atomically, rollback on failure) and keeps the hive ``batch``
-    layout so the stream's index-exists probe and per-batch overwrite
-    contract still hold — future micro-batches land beside ``batch=-1`` under
-    their own ids. Run it between availableNow drains (no concurrent writer).
-    Returns the compacted row count."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    df = (
-        read_index(spark, index_dir)
-        .withColumn("batch", F.lit(-1))
-        .repartition(target_partitions)
+    """Fold the accumulated ``batch=<id>`` partitions into one generation
+    (``sinks.compact_batches``). Long-running streams add a partition
+    directory per micro-batch; left alone, ``read_index`` scan planning
+    degrades into file listing. The kept hive layout means the stream's
+    index-exists probe and per-batch overwrite contract still hold. Returns
+    the compacted row count."""
+    return compact_batches(
+        spark, index_dir, lambda idx: idx.select("doc", "sh", "sig").repartition(target_partitions)
     )
-    atomic_publish(df, index_dir, partition_by=["batch"])
-    return read_index(spark, index_dir).count()
 
 
 def stream_substring_dedup(
@@ -169,13 +154,10 @@ def stream_substring_dedup(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         docs = batch_df.select(id_col, text_col)
-        fs = HadoopFS(spark, index_dir)
-        if fs.is_dir(index_dir) and any(
-            d.startswith("batch=") for d in fs.listdir(index_dir)
-        ):
+        if batch_ids(spark, index_dir):
             # exclude this batch's own (possibly half-written, crash-replay)
             # partition from the standing read — same rationale as above
-            raw = spark.read.parquet(index_dir).where(F.col("batch") != F.lit(batch_id))
+            raw = read_resolved(spark, [index_dir]).where(F.col("batch") != F.lit(batch_id))
             # keep the recorded window length so a restart at the wrong
             # min_tokens raises instead of silently matching nothing
             cols = ["digest"] + (["n"] if "n" in raw.columns else [])
@@ -186,20 +168,13 @@ def stream_substring_dedup(
             docs, standing, id_col, text_col, min_tokens, mode="droplist"
         )
         rebuilt = apply_token_droplist(docs, drops, id_col, text_col)
-        rebuilt.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
+        write_batch(rebuilt, out_dir, batch_id)
         new_digests = substring_index(docs, id_col, text_col, min_tokens).join(
             standing, "digest", "left_anti"
         )
-        new_digests.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
+        write_batch(new_digests, index_dir, batch_id)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)
 
 
 def stream_substring_decontaminate(
@@ -227,15 +202,10 @@ def stream_substring_decontaminate(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        taint = spark.read.parquet(contamination_index_dir)
+        taint = read_resolved(spark, [contamination_index_dir])
         out = substring_decontaminate(
             batch_df.select(id_col, text_col), taint, id_col, text_col, min_tokens
         )
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
+        write_batch(out, out_dir, batch_id)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)

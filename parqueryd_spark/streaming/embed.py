@@ -16,7 +16,7 @@ pruning keeps per-query cost ~nprobe/n_centroids of the corpus regardless of
 how many batches have accumulated.
 
 Replay safety: a replayed micro-batch id overwrites exactly its own
-``batch=<id>`` partition (dynamic partition overwrite), so at-least-once
+``batch=<id>`` partition (``sources/sinks.write_batch``), so at-least-once
 delivery can't double-insert vectors. Quantizer drift: centroids and the SQ
 grid are frozen at publish (out-of-grid vectors saturate soundly); on
 distribution drift, rebuild with ``ivfsq_publish`` between availableNow
@@ -28,6 +28,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import _start_available_now, write_batch
 
 
 def stream_embed_into_ivfsq(
@@ -66,12 +69,7 @@ def stream_embed_into_ivfsq(
         else:
             ivfsq_append(spark, index_dir, emb, batch=f"stream-{batch_id}")
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)
 
 
 def stream_ann_serve(
@@ -106,16 +104,11 @@ def stream_ann_serve(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         codes, cents, lo, step = ivfsq_load(spark, index_dir)
-        corpus = spark.read.parquet(corpus_path)
+        corpus = read_resolved(spark, [corpus_path])
         out = ivfsq_search(
             codes, cents, lo, step, batch_df, corpus=corpus,
             nprobe=nprobe, k=k, refine=refine, id_col=id_col, vec_col=vec_col,
         )
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
+        write_batch(out, out_dir, batch_id)
 
-    return (
-        query_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(query_stream, _process, checkpoint_dir)

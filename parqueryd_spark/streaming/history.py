@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame
 
 from parqueryd_spark.operators.history import scd2_apply, scd2_init
 from parqueryd_spark.sources.fs import HadoopFS
-from parqueryd_spark.sources.sinks import atomic_publish
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import _start_available_now, atomic_publish
 
 
 def stream_apply_scd2(
@@ -37,7 +38,6 @@ def stream_apply_scd2(
     ts_col: str,
     compare_cols: list[str] | None = None,
     tiebreak_cols: list[str] | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start a foreachBatch query folding each micro-batch of changes into
     the SCD2 history at ``history_dir`` (bootstrapped with ``scd2_init`` on
@@ -46,7 +46,7 @@ def stream_apply_scd2(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if HadoopFS(spark, history_dir).exists(history_dir):
-            history = spark.read.parquet(history_dir)
+            history = read_resolved(spark, [history_dir])
             merged = scd2_apply(
                 history, batch_df, key_cols, ts_col, compare_cols, tiebreak_cols
             )
@@ -54,9 +54,4 @@ def stream_apply_scd2(
             merged = scd2_init(batch_df, key_cols, ts_col, compare_cols, tiebreak_cols)
         atomic_publish(merged, history_dir)
 
-    writer = changes_stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_available_now(changes_stream, _apply, checkpoint_dir)

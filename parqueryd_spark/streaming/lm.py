@@ -3,12 +3,11 @@
 Two directions, mirroring the sketch family's batch/stream symmetry:
 
 - **maintain**: bigram counts are LINEAR (merge = sum matching gram rows),
-  so continuous training is the Count-Min/HLL contract from
-  streaming/rollup.py — each micro-batch lands its own partial count table
-  in an idempotent ``batch=<id>`` partition (replays overwrite themselves,
-  effectively-exactly-once), and the served LM is merge-on-read:
-  ``read_lm`` ≡ ``lm_train`` over the concatenated corpus, bit-exact, by
-  linearity. State per batch is O(distinct grams in the batch).
+  so continuous training is batch state (``sources/sinks.write_batch``,
+  ``read_batches``, ``compact_batches``): each micro-batch lands its own
+  partial count table and the served LM is merge-on-read — ``read_lm`` ≡
+  ``lm_train`` over the concatenated corpus, bit-exact, by linearity.
+  State per batch is O(distinct grams in the batch).
 - **score**: scoring a document stream against a FROZEN LM is stateless
   per-batch relational work (two equi-joins + an aggregation), so the
   streaming scorer is foreachBatch over the identical batch plan — the same
@@ -16,36 +15,25 @@ Two directions, mirroring the sketch family's batch/stream symmetry:
   model only moves when a maintenance trigger republishes it.
 
 Model parameters travel WITH the state: ``stream_maintain_lm`` persists a
-``_meta`` file (k, n) next to the batch partitions (the leading underscore
-hides it from the merge-on-read parquet listing), and ``read_lm`` reads it
-back — maintaining with n=3 then loading can never silently split grams at
-the wrong position.
+``_meta`` sidecar (k, n) that ``read_lm`` reads back with
+``sinks.read_meta`` — maintaining with n=3 then loading can never silently
+split grams at the wrong position.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.lm import NgramLM, lm_merge, lm_score, ngram_counts
-
-
-def _read_meta(spark, lm_dir: str) -> tuple[float, int] | None:
-    """The persisted (k, n) for an LM store, or None for the documented
-    pre-meta layout (missing ``_meta`` path). Only the missing-path
-    AnalysisException maps to None — corrupt meta, permission failures, and
-    every other error propagate instead of silently degrading to defaults."""
-    try:
-        meta = spark.read.parquet(os.path.join(lm_dir, "_meta")).collect()[0]
-    except AnalysisException as e:
-        cls = getattr(e, "getErrorClass", lambda: "")() or ""
-        if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):
-            return None
-        raise  # corrupt meta / unreadable store — never silently default
-    return float(meta["k"]), int(meta["n"])
+from parqueryd_spark.sources.sinks import (
+    _start_available_now,
+    compact_batches,
+    read_batches,
+    read_meta,
+    write_batch,
+)
 
 
 def _validate_order(spark, lm_dir: str, n: int) -> None:
@@ -54,7 +42,7 @@ def _validate_order(spark, lm_dir: str, n: int) -> None:
     raises on a store at a different or mixed order. A missing or
     batch-less store has nothing to validate."""
     try:
-        parts = spark.read.parquet(lm_dir).drop("batch")
+        parts = read_batches(spark, lm_dir)
     except AnalysisException as e:
         cls = getattr(e, "getErrorClass", lambda: "")() or ""
         if (
@@ -109,10 +97,10 @@ def stream_maintain_lm(
             # stream's: honor any existing meta (raise on mismatch), write
             # ours only on first creation
             spark = batch_df.sparkSession
-            stored = _read_meta(spark, lm_dir)
-            if stored is not None and stored != (float(k), int(n)):
+            stored = read_meta(spark, f"{lm_dir}/_meta")
+            if stored is not None and tuple(stored) != (float(k), int(n)):
                 raise ValueError(
-                    f"LM store at {lm_dir} was maintained with (k, n)={stored} "
+                    f"LM store at {lm_dir} was maintained with (k, n)={tuple(stored)} "
                     f"but this stream requests ({float(k)}, {int(n)}) — "
                     "restarting maintenance cannot change model parameters "
                     "(older batch partitions would keep the old order); use a "
@@ -124,17 +112,11 @@ def stream_maintain_lm(
                 _validate_order(spark, lm_dir, int(n))
                 spark.createDataFrame([(float(k), int(n))], "k double, n int").write.mode(
                     "overwrite"
-                ).parquet(os.path.join(lm_dir, "_meta"))
+                ).parquet(f"{lm_dir}/_meta")
             meta_checked = True
-        part = ngram_counts(batch_df, text_col, n)
-        part.write.mode("overwrite").parquet(os.path.join(lm_dir, f"batch={batch_id}"))
+        write_batch(ngram_counts(batch_df, text_col, n), lm_dir, batch_id)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)
 
 
 def read_lm(
@@ -165,12 +147,12 @@ def read_lm(
     forces the scan regardless (e.g. serving a store whose files were
     manipulated outside the maintenance contract); ``validate=False``
     skips it even for pre-meta stores (caller-asserted order)."""
-    stored = _read_meta(spark, lm_dir)
-    k = k if k is not None else (stored[0] if stored is not None else 0.5)
-    n = n if n is not None else (stored[1] if stored is not None else 2)
-    parts = spark.read.parquet(lm_dir).drop("batch")
+    stored = read_meta(spark, f"{lm_dir}/_meta")
+    k = k if k is not None else (stored["k"] if stored is not None else 0.5)
+    n = n if n is not None else (stored["n"] if stored is not None else 2)
+    parts = read_batches(spark, lm_dir)
     if validate is None:
-        validate = stored is None or int(n) != stored[1]
+        validate = stored is None or int(n) != stored["n"]
     if validate:
         toks = F.size(F.split("gram", " "))
         probe = parts.agg(F.min(toks).alias("lo"), F.max(toks).alias("hi")).collect()[0]
@@ -184,36 +166,18 @@ def read_lm(
 
 
 def compact_lm_state(spark, lm_dir: str) -> int:
-    """Fold accumulated per-batch LM count partitions into one ``batch=-1``
-    generation — the sketch-compaction contract (streaming/rollup.py
-    compact_kmv_state) applied to the count-table model family. N-gram
-    counts are LINEAR (merge = sum matching gram rows — the exact fold
-    :func:`read_lm` performs on every serve), so the compacted (gram, c)
-    table is bit-identical model state: scores are unchanged while the
-    store shrinks from batches x distinct-grams-per-batch rows to global
-    distinct grams, and serve-time scan planning stops paying a file
-    listing that grows with maintenance age (~1e5 partitions after a year
-    of 5-minute triggers). The ``_meta`` (k, n) sidecar travels INSIDE the
-    atomic_publish generation, so no reader window ever sees counts without
-    their model parameters (or defaults silently substituted). Run between
-    availableNow drains; a checkpointed stream never replays batches that
-    predate the compaction, and new batches land beside ``batch=-1`` in
-    the kept hive layout."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    stored = _read_meta(spark, lm_dir)
-    parts = spark.read.parquet(lm_dir).drop("batch")
-    merged = (
-        parts.groupBy("gram")
-        .agg(F.sum("c").cast("long").alias("c"))
-        .withColumn("batch", F.lit(-1))
+    """Fold accumulated per-batch LM count partitions into one generation
+    (``sinks.compact_batches``, which carries the ``_meta`` (k, n) sidecar
+    inside the swapped-in generation). N-gram counts are LINEAR (merge = sum
+    matching gram rows — the exact fold :func:`read_lm` performs on every
+    serve), so the compacted (gram, c) table is bit-identical model state:
+    scores are unchanged while the store shrinks from batches x
+    distinct-grams-per-batch rows to global distinct grams, and serve-time
+    scan planning stops paying a file listing that grows with maintenance
+    age (~1e5 partitions after a year of 5-minute triggers)."""
+    return compact_batches(
+        spark, lm_dir, lambda parts: parts.groupBy("gram").agg(F.sum("c").cast("long").alias("c"))
     )
-    sidecars = None
-    if stored is not None:
-        meta_df = spark.createDataFrame([stored], "k double, n int")
-        sidecars = [(meta_df, "_meta")]
-    atomic_publish(merged, lm_dir, partition_by=["batch"], sidecars=sidecars)
-    return spark.read.parquet(lm_dir).count()
 
 
 def stream_score_documents(
@@ -241,11 +205,6 @@ def stream_score_documents(
             out = kn_score(batch_df, id_col, lm, text_col)
         else:
             out = lm_score(batch_df, id_col, lm, text_col)
-        out.write.mode("overwrite").parquet(os.path.join(scores_dir, f"batch={batch_id}"))
+        write_batch(out, scores_dir, batch_id)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)

@@ -14,8 +14,9 @@ staleness guard makes ``scan_pruned``/``count_pruned`` conservatively keep
 any live file the manifest doesn't cover (a stale manifest costs speed,
 never rows).
 
-Replay safety: data lands with ``mode=overwrite`` into its own ``batch=<id>``
-directory (the at-least-once contract every streaming sink here follows), and
+Replay safety: data lands through ``sources/sinks.write_batch`` into its own
+``batch=<id>`` directory (the at-least-once contract every streaming sink here
+follows), and
 the refresh reconciles the manifest against the ACTUAL file listing — a
 replayed batch's rewritten part-files displace their predecessors' rows
 automatically.
@@ -26,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import _start_available_now, write_batch
 
 
 def stream_ingest_with_manifest(
@@ -69,12 +73,10 @@ def stream_ingest_with_manifest(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(data_dir, f"batch={batch_id}")
-        )
+        write_batch(batch_df, data_dir, batch_id)
         live = os.path.join(manifest_dir, "live")
         if os.path.isdir(live):
-            mf = refresh_manifest(spark, data_dir, spark.read.parquet(live), columns)
+            mf = refresh_manifest(spark, data_dir, read_resolved(spark, [live]), columns)
         else:
             mf = build_manifest(spark, data_dir, columns)
         _swap_in(mf, manifest_dir, batch_id)
@@ -82,19 +84,12 @@ def stream_ingest_with_manifest(
             bdir = os.path.join(manifest_dir, f"bloom={col}")
             blive = os.path.join(bdir, "live")
             if os.path.isdir(blive):
-                bm = refresh_bloom_manifest(
-                    spark, data_dir, col, spark.read.parquet(blive)
-                )
+                bm = refresh_bloom_manifest(spark, data_dir, col, read_resolved(spark, [blive]))
             else:
                 bm = bloom_manifest(spark, data_dir, col, fpp=bloom_fpp)
             _swap_in(bm, bdir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream, _process, checkpoint_dir)
 
 
 def read_pruned(
@@ -119,12 +114,12 @@ def read_pruned(
         blive = os.path.join(bdir, "live")
         if os.path.isdir(blive):
             col = os.path.basename(bdir).split("=", 1)[1]
-            blooms[col] = spark.read.parquet(blive)
+            blooms[col] = read_resolved(spark, [blive])
     return scan_pruned(
         spark,
         data_dir,
         where_terms,
-        manifest=spark.read.parquet(os.path.join(manifest_dir, "live")),
+        manifest=read_resolved(spark, [os.path.join(manifest_dir, "live")]),
         select=select,
         bloom_manifests=blooms or None,
     )

@@ -10,7 +10,7 @@ megabytes parquet row read once per batch. A batch with NO bloom hits (the
 common case for clean streams) never touches the benchmark table at all; a
 batch with hits probes it with a semi join whose build side is the tiny
 maybe-key set, so the benchmark is scanned but never shuffled. Output lands
-in idempotent ``batch=<id>`` partitions (overwrite-on-replay, the same
+through ``sources/sinks.write_batch`` (overwrite-on-replay, the same
 at-least-once contract as streaming/dedup.py), so crash-recovery replays
 cannot duplicate clean rows.
 
@@ -20,8 +20,6 @@ false negatives, and every maybe-row is verified against the true key set.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +28,8 @@ from parqueryd_spark.operators.membership import (
     bloom_params,
     with_bloom_flag,
 )
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import _start_available_now, write_batch
 
 
 def publish_bloom(
@@ -66,7 +66,7 @@ def stream_decontaminate(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bloom = spark.read.parquet(bloom_dir)
+        bloom = read_resolved(spark, [bloom_dir])
         maybe_keys = (
             with_bloom_flag(batch_df.select(key_col), key_col, bloom, "__maybe")
             .filter(F.col("__maybe"))
@@ -81,24 +81,17 @@ def stream_decontaminate(
             # shuffled; the verified contaminated set is then broadcast into
             # the final anti join.
             contaminated = (
-                spark.read.parquet(bench_parquet)
+                read_resolved(spark, [bench_parquet])
                 .select(key_col)
                 .join(maybe_keys, key_col, "left_semi")
                 .distinct()
             )
             clean = batch_df.join(contaminated, key_col, "left_anti")
-        clean.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
+        write_batch(clean, out_dir, batch_id)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)
 
 
 def read_clean(spark, out_dir: str) -> DataFrame:
     """Read every batch partition of the decontaminated output."""
-    return spark.read.parquet(out_dir)
+    return read_resolved(spark, [out_dir])

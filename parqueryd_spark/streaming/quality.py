@@ -4,22 +4,23 @@ appended to a parquet metrics dataset — the observability loop that catches a
 broken upstream feed (sudden nulls, duplicate keys, out-of-range values)
 before it lands in the serving tables.
 
-Per-batch results write with OVERWRITE into their own ``batch=<id>``
-partition (the idempotent-replay pattern shared with streaming/dedup and
-streaming/rollup), so an at-least-once foreachBatch replay rewrites the same
-partition instead of double-reporting. The metrics dataset is tiny — one row
+Per-batch results land through ``sources/sinks.write_batch`` (the
+idempotent-replay pattern shared with streaming/dedup and streaming/rollup),
+so an at-least-once foreachBatch replay rewrites its own partition instead
+of double-reporting. The metrics dataset is tiny — one row
 per check per trigger — and reads as a time series of feed health.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.quality import quality_report
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import _start_available_now, write_batch
 
 
 def stream_quality_monitor(
@@ -28,7 +29,6 @@ def stream_quality_monitor(
     checkpoint_dir: str,
     checks_fn: Callable[[DataFrame], list[DataFrame]],
     fail_fast: bool = False,
-    trigger_available_now: bool = True,
 ):
     """Start a foreachBatch query writing each micro-batch's quality report
     to ``metrics_dir``. ``checks_fn`` maps the batch to its check list (the
@@ -42,9 +42,7 @@ def stream_quality_monitor(
         rep = quality_report(checks_fn(batch_df)).withColumn(
             "n_batch_rows", F.lit(batch_df.count())
         )
-        rep.write.mode("overwrite").parquet(
-            os.path.join(metrics_dir, f"batch={batch_id}")
-        )
+        write_batch(rep, metrics_dir, batch_id)
         if fail_fast:
             failed = [r.check for r in rep.collect() if not r.passed]
             if failed:
@@ -52,18 +50,13 @@ def stream_quality_monitor(
                     f"quality gate failed on batch {batch_id}: {failed}"
                 )
 
-    writer = stream_df.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_available_now(stream_df, _process, checkpoint_dir)
 
 
 def read_quality_metrics(spark, metrics_dir: str) -> DataFrame:
     """The accumulated per-batch check history: (check, violations, passed,
     n_batch_rows, batch)."""
-    return spark.read.parquet(metrics_dir)
+    return read_resolved(spark, [metrics_dir])
 
 
 def stream_flag_outliers(
@@ -83,22 +76,15 @@ def stream_flag_outliers(
     a burst of anomalies cannot drag the yardstick it is judged against.
     Flagged batches land in idempotent ``batch=<id>`` partitions;
     batch-equivalence to the batch operator is row-for-row."""
-    import os
-
     from parqueryd_spark.operators.analytics import flag_with_baselines
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         out = flag_with_baselines(
             batch_df, baselines, list(keys), value_col, threshold
         )
-        out.write.mode("overwrite").parquet(os.path.join(flagged_dir, f"batch={batch_id}"))
+        write_batch(out, flagged_dir, batch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(event_stream, _process, checkpoint_dir)
 
 
 def stream_calibrate_scores(
@@ -123,11 +109,6 @@ def stream_calibrate_scores(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         out = calibration_score(ref_cdf, batch_df, group_col, score_col, id_col)
-        out.write.mode("overwrite").parquet(os.path.join(scores_dir, f"batch={batch_id}"))
+        write_batch(out, scores_dir, batch_id)
 
-    return (
-        new_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(new_stream, _process, checkpoint_dir)

@@ -1,14 +1,13 @@
 """Continuously-maintained rollups: the streaming face of
 :mod:`parqueryd_spark.operators.rollup`.
 
-Each micro-batch lands its mergeable partial aggregates in its own
-``batch=<id>`` partition (idempotent OVERWRITE — a replayed foreachBatch
-rewrites the same partition, so at-least-once delivery still yields
-effectively-exactly-once totals, same contract as
-:mod:`parqueryd_spark.streaming.dedup`). Readers merge-on-read: the rollup is
-grains × keys rows, so folding all partitions at query time is a small
-shuffle, and :func:`compact_rollup` periodically folds history into one
-``batch=-1`` generation so scan planning never degrades into file listing.
+Each micro-batch lands its mergeable partial aggregates (or sketch
+partials) through ``sources/sinks.write_batch``; readers merge-on-read over
+``sinks.read_batches`` (the rollup is grains × keys rows, so folding all
+batches at query time is a small shuffle), and the ``compact_*`` functions
+fold history into one generation through ``sinks.compact_batches`` so scan
+planning never degrades into file listing. Those helpers own the state
+format and its replay contract.
 
 Versus ``writeStream.outputMode("complete")`` over a windowed aggregate:
 complete mode re-emits (and the state store retains) EVERY window ever seen —
@@ -20,12 +19,16 @@ watermark-forced finality, arbitrarily old corrections stay mergeable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.rollup import finalize_rollup, merge_rollups, rollup_partials
+from parqueryd_spark.sources.sinks import (
+    _start_available_now,
+    compact_batches,
+    read_batches,
+    write_batch,
+)
 
 
 def stream_maintain_rollup(
@@ -43,14 +46,9 @@ def stream_maintain_rollup(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         part = rollup_partials(batch_df, grain, keys, ts_col, value_col)
-        part.write.mode("overwrite").parquet(os.path.join(rollup_dir, f"batch={batch_id}"))
+        write_batch(part, rollup_dir, batch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(event_stream, _process, checkpoint_dir)
 
 
 def read_rollup(
@@ -58,27 +56,22 @@ def read_rollup(
 ) -> DataFrame:
     """The maintained rollup, finalized: merge-on-read over all published
     ``batch=<id>`` partitions (one small shuffle over grains × keys rows)."""
-    parts = spark.read.parquet(rollup_dir).drop("batch")
+    parts = read_batches(spark, rollup_dir)
     return finalize_rollup(merge_rollups(parts, keys=keys), keys=keys)
 
 
 def compact_rollup(
     spark, rollup_dir: str, keys: tuple[str, ...] = ("event_type",), target_partitions: int = 4
 ) -> int:
-    """Fold accumulated per-batch partitions into one ``batch=-1`` generation
-    via atomic_publish (readers flip atomically, rollback on failure), keeping
-    the hive ``batch`` layout so future micro-batches land beside it. The
-    stored form stays PARTIAL (not finalized) so merging never stops being
-    possible. Run between availableNow drains. Returns the compacted row
-    count."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    parts = spark.read.parquet(rollup_dir).drop("batch")
-    merged = (
-        merge_rollups(parts, keys=keys).withColumn("batch", F.lit(-1)).repartition(target_partitions)
+    """Fold accumulated per-batch partitions into one generation
+    (``sinks.compact_batches``). The stored form stays PARTIAL (not
+    finalized) so merging never stops being possible. Returns the compacted
+    row count."""
+    return compact_batches(
+        spark,
+        rollup_dir,
+        lambda parts: merge_rollups(parts, keys=keys).repartition(target_partitions),
     )
-    atomic_publish(merged, rollup_dir, partition_by=["batch"])
-    return spark.read.parquet(rollup_dir).count()
 
 
 def stream_maintain_histogram(
@@ -102,14 +95,9 @@ def stream_maintain_histogram(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         part = histogram_partials(batch_df, lo, hi, bins, grain, keys, ts_col, value_col)
-        part.write.mode("overwrite").parquet(os.path.join(hist_dir, f"batch={batch_id}"))
+        write_batch(part, hist_dir, batch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(event_stream, _process, checkpoint_dir)
 
 
 def read_histogram_quantiles(
@@ -126,7 +114,7 @@ def read_histogram_quantiles(
     histogram_quantiles) — raw events are never touched."""
     from parqueryd_spark.operators.rollup import histogram_quantiles, merge_histograms
 
-    parts = spark.read.parquet(hist_dir).drop("batch")
+    parts = read_batches(spark, hist_dir)
     return histogram_quantiles(merge_histograms(parts, keys=keys), probs, lo, hi, bins, keys)
 
 
@@ -153,14 +141,9 @@ def stream_maintain_hll(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         part = hll_rollup(batch_df, list(keys), value_col, lgk)
-        part.write.mode("overwrite").parquet(os.path.join(hll_dir, f"batch={batch_id}"))
+        write_batch(part, hll_dir, batch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(event_stream, _process, checkpoint_dir)
 
 
 def read_hll_distinct(
@@ -171,7 +154,7 @@ def read_hll_distinct(
     raw values. Returns (keys..., n_rows, n_distinct)."""
     from parqueryd_spark.operators.sketches import hll_estimate, hll_rollup_merge
 
-    parts = spark.read.parquet(hll_dir).drop("batch")
+    parts = read_batches(spark, hll_dir)
     return hll_estimate(hll_rollup_merge([parts], list(keys)))
 
 
@@ -196,14 +179,9 @@ def stream_maintain_kmv(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         part = kmv_sketch(batch_df, list(keys), value_col, k)
-        part.write.mode("overwrite").parquet(os.path.join(kmv_dir, f"batch={batch_id}"))
+        write_batch(part, kmv_dir, batch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(event_stream, _process, checkpoint_dir)
 
 
 def read_kmv_distinct(
@@ -213,7 +191,7 @@ def read_kmv_distinct(
     the k-value arrays, never touching raw values."""
     from parqueryd_spark.operators.sketches import kmv_distinct, kmv_merge
 
-    parts = spark.read.parquet(kmv_dir).drop("batch")
+    parts = read_batches(spark, kmv_dir)
     return kmv_distinct(kmv_merge([parts], list(keys), k), k)
 
 
@@ -227,7 +205,7 @@ def read_kmv_overlap(
 
     from parqueryd_spark.operators.sketches import kmv_merge, kmv_set_estimates
 
-    parts = spark.read.parquet(kmv_dir).drop("batch")
+    parts = read_batches(spark, kmv_dir)
     merged = kmv_merge([parts], [key], k)
     a = merged.select(F.col(key).alias("t1"), F.col("kmv").alias("a_kmv"))
     b = merged.select(F.col(key).alias("t2"), F.col("kmv").alias("b_kmv"))
@@ -257,14 +235,9 @@ def stream_maintain_countmin(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         part = count_min_sketch(batch_df, key_col, width=width, depth=depth, salt=salt)
-        part.write.mode("overwrite").parquet(os.path.join(cm_dir, f"batch={batch_id}"))
+        write_batch(part, cm_dir, batch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(event_stream, _process, checkpoint_dir)
 
 
 def stream_maintain_heavy_hitters(
@@ -294,14 +267,9 @@ def stream_maintain_heavy_hitters(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         cols = [key_col] if weight_col is None else [key_col, weight_col]
         part = _mg_summaries(batch_df.select(*cols), key_col, int(capacity), weight_col)
-        part.write.mode("overwrite").parquet(os.path.join(hh_dir, f"batch={batch_id}"))
+        write_batch(part, hh_dir, batch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(event_stream, _process, checkpoint_dir)
 
 
 def read_heavy_hitters(
@@ -314,7 +282,7 @@ def read_heavy_hitters(
     operator, so the undercount invariant stays checkable at serve time."""
     from pyspark.sql import functions as F
 
-    parts = spark.read.parquet(hh_dir).drop("batch")
+    parts = read_batches(spark, hh_dir)
     bound = parts.where(F.col("key").isNull()).agg(F.sum("err").alias("max_undercount"))
     merged = (
         parts.where(F.col("key").isNotNull()).groupBy("key").agg(F.sum("cnt").alias("est_count"))
@@ -342,7 +310,7 @@ def read_countmin_estimates(
     key. Raw events are never touched. Returns (key, est)."""
     from parqueryd_spark.operators.sketches import count_min_merge, count_min_query
 
-    merged = count_min_merge([spark.read.parquet(cm_dir)])
+    merged = count_min_merge([read_batches(spark, cm_dir)])
     return count_min_query(merged, keys, key_col, width=width, depth=depth, salt=salt)
 
 
@@ -375,14 +343,9 @@ def stream_maintain_heavy_hitters_grouped(
         part = _mg_summaries_grouped(
             batch_df.select(*cols), group_col, key_col, int(capacity), weight_col
         )
-        part.write.mode("overwrite").parquet(os.path.join(hh_dir, f"batch={batch_id}"))
+        write_batch(part, hh_dir, batch_id)
 
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(event_stream, _process, checkpoint_dir)
 
 
 def read_heavy_hitters_grouped(
@@ -398,7 +361,7 @@ def read_heavy_hitters_grouped(
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    parts = spark.read.parquet(hh_dir).drop("batch")
+    parts = read_batches(spark, hh_dir)
     bound = (
         parts.where(F.col("key").isNull())
         .groupBy("group")
@@ -427,9 +390,8 @@ def read_heavy_hitters_grouped(
 def compact_kmv_state(
     spark, kmv_dir: str, keys: tuple[str, ...] = ("event_type",), k: int = 1024
 ) -> int:
-    """Fold accumulated per-batch KMV partitions into one ``batch=-1``
-    generation (the :func:`compact_rollup` contract: atomic_publish swap,
-    hive ``batch`` layout kept so future micro-batches land beside it).
+    """Fold accumulated per-batch KMV partitions into one generation
+    (``sinks.compact_batches``).
 
     Why it matters at 100 TB: merge-on-read cost grows with batches x keys
     rows; after a year of 5-minute triggers that is ~10^5 partitions per
@@ -439,25 +401,17 @@ def compact_kmv_state(
     after (pinned in tests). Run between availableNow drains; a checkpointed
     stream never replays batches that predate the compaction."""
     from parqueryd_spark.operators.sketches import kmv_merge
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(kmv_dir).drop("batch")
-    merged = kmv_merge([parts], list(keys), k).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, kmv_dir, partition_by=["batch"])
-    return spark.read.parquet(kmv_dir).count()
+    return compact_batches(spark, kmv_dir, lambda parts: kmv_merge([parts], list(keys), k))
 
 
 def compact_countmin_state(spark, cm_dir: str) -> int:
-    """Fold per-batch Count-Min cell partitions into one ``batch=-1``
-    generation. CM is linear (merge = cell sums), so the compacted
-    <= depth x width cells are bit-identical state — estimates unchanged."""
+    """Fold per-batch Count-Min cell partitions into one generation. CM is
+    linear (merge = cell sums), so the compacted <= depth x width cells are
+    bit-identical state — estimates unchanged."""
     from parqueryd_spark.operators.sketches import count_min_merge
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(cm_dir).drop("batch")
-    merged = count_min_merge([parts]).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, cm_dir, partition_by=["batch"])
-    return spark.read.parquet(cm_dir).count()
+    return compact_batches(spark, cm_dir, lambda parts: count_min_merge([parts]))
 
 
 def _compact_mg(spark, hh_dir: str, group_cols: list[str]) -> int:
@@ -467,68 +421,55 @@ def _compact_mg(spark, hh_dir: str, group_cols: list[str]) -> int:
     (the merge the read path performs anyway), so serve answers — est
     counts, undercount bounds, top-k order — are identical before and
     after."""
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(hh_dir).drop("batch")
-    counters = (
-        parts.where(F.col("key").isNotNull())
-        .groupBy(*group_cols, "key")
-        .agg(F.sum("cnt").alias("cnt"), F.lit(0).cast("long").alias("err"))
-    )
-    markers = (
-        parts.where(F.col("key").isNull())
-        .groupBy(*group_cols)
-        .agg(
-            F.first(F.col("key")).alias("key"),  # NULL, keeps the schema slot
-            F.lit(0).cast("long").alias("cnt"),
-            F.coalesce(F.sum("err"), F.lit(0)).cast("long").alias("err"),
+    def fold(parts: DataFrame) -> DataFrame:
+        counters = (
+            parts.where(F.col("key").isNotNull())
+            .groupBy(*group_cols, "key")
+            .agg(F.sum("cnt").alias("cnt"), F.lit(0).cast("long").alias("err"))
         )
-        .select(*group_cols, "key", "cnt", "err")
-    )
-    merged = counters.select(*group_cols, "key", "cnt", "err").unionByName(
-        markers
-    ).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, hh_dir, partition_by=["batch"])
-    return spark.read.parquet(hh_dir).count()
+        markers = (
+            parts.where(F.col("key").isNull())
+            .groupBy(*group_cols)
+            .agg(
+                F.first(F.col("key")).alias("key"),  # NULL, keeps the schema slot
+                F.lit(0).cast("long").alias("cnt"),
+                F.coalesce(F.sum("err"), F.lit(0)).cast("long").alias("err"),
+            )
+            .select(*group_cols, "key", "cnt", "err")
+        )
+        return counters.select(*group_cols, "key", "cnt", "err").unionByName(markers)
+
+    return compact_batches(spark, hh_dir, fold)
 
 
 def compact_histogram_state(
     spark, hist_dir: str, keys: tuple[str, ...] = ("event_type",)
 ) -> int:
-    """Fold accumulated per-batch histogram partitions into one ``batch=-1``
-    generation — the :func:`compact_kmv_state` contract applied to the
+    """Fold accumulated per-batch histogram partitions into one generation
+    — the :func:`compact_kmv_state` contract applied to the
     quantile state. Bin counts are LINEAR (merge = sum matching
     (grain, keys, bin) rows — exactly the fold :func:`read_histogram_quantiles`
     performs on every query), so the compacted state is bit-identical input
     to the cumulative walk: quantile answers are unchanged while state
-    shrinks from batches x bins x grains x keys rows to bins x grains x keys.
-    Run between availableNow drains; future micro-batches land beside
-    ``batch=-1`` in the kept hive layout and merge in as before."""
+    shrinks from batches x bins x grains x keys rows to bins x grains x keys."""
     from parqueryd_spark.operators.rollup import merge_histograms
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(hist_dir).drop("batch")
-    merged = merge_histograms(parts, keys=keys).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, hist_dir, partition_by=["batch"])
-    return spark.read.parquet(hist_dir).count()
+    return compact_batches(spark, hist_dir, lambda parts: merge_histograms(parts, keys=keys))
 
 
 def compact_hll_state(
     spark, hll_dir: str, keys: tuple[str, ...] = ("event_type",)
 ) -> int:
-    """Fold accumulated per-batch HLL partitions into one ``batch=-1``
-    generation. HLL union is register-wise max (associative, commutative,
-    idempotent), so the compacted sketch per key IS the sketch of everything
-    the batches saw — :func:`read_hll_distinct` performs this exact union on
-    every read, compaction just persists it once. Estimates and n_rows are
+    """Fold accumulated per-batch HLL partitions into one generation. HLL
+    union is register-wise max (associative, commutative, idempotent), so
+    the compacted sketch per key IS the sketch of everything the batches
+    saw — :func:`read_hll_distinct` performs this exact union on every
+    read, compaction just persists it once. Estimates and n_rows are
     unchanged; state shrinks from batches x keys sketches to keys."""
     from parqueryd_spark.operators.sketches import hll_rollup_merge
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(hll_dir).drop("batch")
-    merged = hll_rollup_merge([parts], list(keys)).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, hll_dir, partition_by=["batch"])
-    return spark.read.parquet(hll_dir).count()
+    return compact_batches(spark, hll_dir, lambda parts: hll_rollup_merge([parts], list(keys)))
 
 
 def compact_heavy_hitters_state(spark, hh_dir: str) -> int:

@@ -3,8 +3,8 @@ of documents lands its postings and stats partial in their own ``batch=<id>``
 partitions of a published text index (operators/text.py:text_index_publish),
 so the BM25 serve path (``bm25_from_index``) sees new documents one trigger
 after they arrive — the near-real-time-search face of the batch index
-lifecycle, structurally the same foreachBatch + idempotent-partition pattern
-as streaming/dedup and streaming/rollup.
+lifecycle, structurally the same batch-state pattern as streaming/dedup and
+streaming/rollup (``sources/sinks.write_batch`` / ``compact_batches``).
 
 Replay safety: foreachBatch is at-least-once, but a replayed batch id
 OVERWRITES its own ``batch=<id>`` partitions (postings and stats alike), so
@@ -26,7 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parqueryd_spark.operators.text import _index_postings, _index_stats_partial
+from parqueryd_spark.operators.text import _write_index_batch
+from parqueryd_spark.sources.parquet import read_resolved
+from parqueryd_spark.sources.sinks import _start_available_now, compact_batches
 
 
 def stream_index_text(
@@ -48,50 +50,37 @@ def stream_index_text(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         root = index_dir.rstrip("/")
-        n_buckets = spark.read.parquet(root + "/_stats").head()["n_buckets"]
-        _index_postings(batch_df, id_col, text_col, n_buckets).write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(root + f"/postings/batch={batch_id}")
-        _index_stats_partial(batch_df, text_col, n_buckets).write.mode(
-            "overwrite"
-        ).parquet(root + f"/_stats/batch={batch_id}")
+        n_buckets = read_resolved(spark, [root + "/_stats"]).head()["n_buckets"]
+        _write_index_batch(batch_df, root, batch_id, id_col, text_col, n_buckets)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(doc_stream, _process, checkpoint_dir)
 
 
 def compact_text_index(spark, index_dir: str, target_partitions: int = 8) -> int:
-    """Fold the accumulated ``batch=<id>`` generations into one ``batch=-1``
-    generation (postings re-bucketed, stats partials summed to a single row).
-    Long-running streams add a partition directory per micro-batch; left
-    alone, serve-path planning degrades into file listing. Goes through
-    ``atomic_publish`` (readers flip atomically, rollback on failure). Run
-    between availableNow drains. Returns the compacted posting count."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
+    """Fold the accumulated ``batch=<id>`` generations into one generation
+    (``sinks.compact_batches``: postings re-bucketed, stats partials summed
+    to a single row). Long-running streams add a partition directory per
+    micro-batch; left alone, serve-path planning degrades into file
+    listing. Returns the compacted posting count."""
     root = index_dir.rstrip("/")
-    n_buckets = spark.read.parquet(root + "/_stats").head()["n_buckets"]
-    postings = (
-        spark.read.parquet(root + "/postings")
-        .select("token", "doc", "tf", "dl", "bucket")
-        .withColumn("batch", F.lit(-1))
+    n_buckets = read_resolved(spark, [root + "/_stats"]).head()["n_buckets"]
+    n_postings = compact_batches(
+        spark,
+        root + "/postings",
         # without the repartition the rewrite keeps the accumulated
         # per-micro-batch file spray — the exact thing compaction exists to fix
-        .repartition(target_partitions, "bucket")
+        lambda p: p.select("token", "doc", "tf", "dl", "bucket").repartition(
+            target_partitions, "bucket"
+        ),
+        partition_by=["bucket"],
     )
-    atomic_publish(postings, root + "/postings", partition_by=["batch", "bucket"])
-    stats = (
-        spark.read.parquet(root + "/_stats")
-        .agg(
+    compact_batches(
+        spark,
+        root + "/_stats",
+        lambda s: s.agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),
             F.lit(n_buckets).alias("n_buckets"),
-        )
-        .withColumn("batch", F.lit(-1))
+        ),
     )
-    atomic_publish(stats, root + "/_stats", partition_by=["batch"])
-    return spark.read.parquet(root + "/postings").count()
+    return n_postings

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parqueryd_spark.sources.parquet import read_resolved
+
 # The events table's logical schema (TESTDATA.md) — the start-up fallback when
 # the stream directory has no files to probe yet (start-stream-then-land-files).
 EVENTS_SCHEMA = T.StructType(
@@ -59,7 +61,7 @@ def read_events_stream(
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if schema is None:
         try:
-            schema = spark.read.parquet(path).schema
+            schema = read_resolved(spark, [path]).schema
         except Exception:  # no files yet: 'unable to infer schema' at probe
             schema = EVENTS_SCHEMA
     ts_type = schema["ts"].dataType

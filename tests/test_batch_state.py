@@ -1,0 +1,146 @@
+"""Published ``batch=<id>`` state through its one helper set
+(``sources/sinks.write_batch`` / ``read_batches`` / ``compact_batches`` /
+``read_meta``) and reads of published data through ``read_resolved``: the
+layout each helper produces, the answers it keeps, and the Spark jobs a read
+submits (none for planning — the schema comes from a driver-side footer
+read)."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+
+def _jobs_submitted(spark, group: str, fn):
+    """``(fn(), ids of the Spark jobs fn submitted)``, tracked by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_first_file_is_first_of_full_listing(spark, tmp_path):
+    """``HadoopFS.first_file`` (the footer-schema file) equals the head of
+    the full sorted ``list_files`` listing on every dataset layout the
+    package reads: a flat file, a Spark dir with ``_SUCCESS``, a hive dir,
+    nested ``postings/batch=<id>/bucket=<b>`` state, ids whose names and
+    paths sort differently (``s`` vs ``s-1``), and a
+    ``batch=`` dir with a ``_meta`` sibling."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parqueryd_spark.sources.fs import HadoopFS
+    from parqueryd_spark.sources.sinks import write_batch
+
+    flat = str(tmp_path / "flat.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), flat)
+    rows = spark.range(12).select("id", (F.col("id") % 3).alias("p"))
+    spark_dir = str(tmp_path / "spark_dir")
+    rows.coalesce(2).write.parquet(spark_dir)
+    hive_dir = str(tmp_path / "hive_dir")
+    rows.write.partitionBy("p").parquet(hive_dir)
+    postings = str(tmp_path / "index" / "postings")
+    for b in (2, -1, 10):
+        write_batch(rows.withColumnRenamed("p", "bucket"), postings, b, partition_by=["bucket"])
+    string_ids = str(tmp_path / "string_ids")
+    for b in ("s", "s-1"):
+        write_batch(rows, string_ids, b)
+    state = str(tmp_path / "state")
+    for b in (1, 0):
+        write_batch(rows, state, b)
+    spark.createDataFrame([(0.5, 2)], "k double, n int").write.parquet(os.path.join(state, "_meta"))
+    assert os.path.exists(os.path.join(spark_dir, "_SUCCESS"))
+
+    for path in (flat, spark_dir, hive_dir, postings, string_ids, state):
+        fs = HadoopFS(spark, path)
+        assert fs.first_file(path) == fs.list_files(path, suffix=None)[0], path
+    assert "/batch=-1/bucket=0/" in HadoopFS(spark, postings).first_file(postings)
+    assert "/batch=s-1/" in HadoopFS(spark, string_ids).first_file(string_ids)
+    empty = tmp_path / "empty" / "batch=0"
+    empty.mkdir(parents=True)
+    (empty / "_SUCCESS").touch()
+    assert HadoopFS(spark, str(empty.parent)).first_file(str(empty.parent)) is None
+
+
+def test_batch_state_lifecycle_and_read_jobs(spark, tmp_path):
+    """write_batch → read_batches → compact_batches → read_meta: replayed
+    ids overwrite themselves (int and hive-escaped string ids alike), the
+    merge-on-read view drops ``batch`` and plans with no Spark job (Spark's
+    own inference read submits one), compaction keeps the folded answer and
+    the ``_meta`` sidecar, and ``read_meta`` is None only for a missing
+    path."""
+    from parqueryd_spark.sources.sinks import (
+        batch_ids,
+        compact_batches,
+        read_batches,
+        read_meta,
+        write_batch,
+    )
+
+    state = str(tmp_path / "state")
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        read_batches(spark, state)
+
+    def rows(key, n):
+        return spark.createDataFrame([(key, n)], "key string, n long")
+
+    write_batch(rows("a", 1), state, 0)
+    write_batch(rows("b", 2), state, 1)
+    write_batch(rows("c", 99), state, "late a:b")
+    write_batch(rows("c", 3), state, "late a:b")  # replay: overwrites itself
+    assert sorted(batch_ids(spark, state)) == ["0", "1", "late a%3Ab"]
+    spark.createDataFrame([(0.5, 2)], "k double, n int").write.parquet(os.path.join(state, "_meta"))
+
+    parts, jobs = _jobs_submitted(spark, "read-batches", lambda: read_batches(spark, state))
+    assert jobs == []
+    assert parts.columns == ["key", "n"]
+    assert sorted(map(tuple, parts.collect())) == [("a", 1), ("b", 2), ("c", 3)]
+    _, inference_jobs = _jobs_submitted(
+        spark, "spark-read-batches", lambda: spark.read.parquet(state).drop("batch")
+    )
+    assert len(inference_jobs) == 1
+
+    def total(df):
+        return df.agg(F.sum("n").alias("n"))
+
+    assert compact_batches(spark, state, total) == 1
+    assert batch_ids(spark, state) == ["-1"]
+    assert [tuple(r) for r in read_batches(spark, state).collect()] == [(6,)]
+    assert tuple(read_meta(spark, os.path.join(state, "_meta"))) == (0.5, 2)
+    write_batch(spark.createDataFrame([(4,)], "n long"), state, 2)  # lands beside -1
+    assert read_batches(spark, state).agg(F.sum("n")).head()[0] == 10
+
+    assert read_meta(spark, str(tmp_path / "no_such_meta")) is None
+    corrupt = tmp_path / "corrupt_meta"
+    corrupt.mkdir()
+    (corrupt / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        read_meta(spark, str(corrupt))
+
+
+def test_lm_load_and_read_current_plan_without_inference_jobs(spark, tmp_path):
+    """Loading a published LM runs only its 1-row meta collect (the parent
+    read path ran 3 jobs: two inferences and the collect), and opening the
+    current versioned generation runs none (1 inference job before)."""
+    from parqueryd_spark.operators.lm import lm_append, lm_load, lm_publish
+    from parqueryd_spark.sources.sinks import publish_versioned, read_current
+
+    docs = spark.createDataFrame([(0, "a b a c"), (1, "b c a b")], "doc_id int, text string")
+    lm_dir = str(tmp_path / "lm")
+    lm_publish(spark, lm_dir, docs, n=2)
+    lm_append(spark, lm_dir, docs.where("doc_id = 1"), batch="inc1")
+    lm, jobs = _jobs_submitted(spark, "lm-load", lambda: lm_load(spark, lm_dir))
+    assert len(jobs) == 1
+    assert lm.n == 2
+
+    versioned = str(tmp_path / "versioned")
+    publish_versioned(docs, versioned)
+    cur, jobs = _jobs_submitted(spark, "read-current", lambda: read_current(spark, versioned))
+    assert jobs == []
+    assert cur.count() == 2
