@@ -44,7 +44,13 @@ TRIALS = 5
 # 1k-row cached-frame aggregate timed through the exact run_once path — a
 # data-independent host-noise normalizer, so cross-round total swings can be
 # attributed (calib moved too => environment; calib flat => plans).
-FINAL_LINE_KEYS = ("metric", "value", "unit", "queries", "sf", "value_median", "calib")
+# ``calib_samples_min``/``calib_samples_max``: the range of the mid-run calib
+# re-probes (see ``calib_samples`` below), so a row read against host noise
+# can be read against the whole run's spread from the final line alone.
+FINAL_LINE_KEYS = (
+    "metric", "value", "unit", "queries", "sf", "value_median", "calib",
+    "calib_samples_min", "calib_samples_max",
+)
 # Measured: the driver keeps only the last ~2000 bytes of stdout. The final
 # line must fit ENTIRELY inside that window with margin for a trailing newline.
 DRIVER_TAIL_WINDOW = 2000
@@ -69,10 +75,12 @@ def build_outputs(
     carries the compact total KiB, the sidecar keeps the split.
     ``calib_trials`` are the host-noise calibration timings (see
     FINAL_LINE_KEYS comment); the final line carries their min, the
-    diagnostics the full list. The contract gates raise RuntimeError, not
-    assert, so they survive ``python -O`` (ADVICE r13)."""
+    diagnostics the full list. ``calib_samples`` are the mid-run re-probes;
+    the final line carries their min and max. The contract gates raise
+    RuntimeError, not assert, so they survive ``python -O`` (ADVICE r13)."""
     shuffle = shuffle or {}
     calib_trials = calib_trials or []
+    calib_samples = calib_samples or {}
     spreads = {n: round(max(ts) - min(ts), 4) for n, ts in trials.items()}
     # cross-round comparable subtotal (VERDICT r14 item #7): the bench set
     # grows by appending at END (BENCH_ORDER rule), so the sum over the
@@ -96,8 +104,8 @@ def build_outputs(
         # see a mid-run host-degradation window (r15's 32-core tail block —
         # a contiguous 0.2-0.4x stretch in BENCH_ORDER with byte-identical
         # plans); these samples make such a window detectable from the
-        # artifact itself. Diagnostics-only: the driver line is unchanged.
-        "calib_samples": calib_samples or {},
+        # artifact itself. The final line carries only their min and max.
+        "calib_samples": calib_samples,
         "shuffle_read_bytes": {n: rw[0] for n, rw in shuffle.items()},
         "shuffle_write_bytes": {n: rw[1] for n, rw in shuffle.items()},
         # per-query shuffle read+write KiB — the 100 TB axis wall time can't
@@ -113,6 +121,8 @@ def build_outputs(
         "sf": sf,
         "value_median": round(sum(medians.values()), 4),
         "calib": round(min(calib_trials), 4) if calib_trials else None,
+        "calib_samples_min": min(calib_samples.values(), default=None),
+        "calib_samples_max": max(calib_samples.values(), default=None),
     }
     if tuple(final) != FINAL_LINE_KEYS:
         raise RuntimeError(f"final-line keys drifted: {tuple(final)}")
@@ -122,6 +132,30 @@ def build_outputs(
             f"driver line {line_bytes}B exceeds {FINAL_LINE_MAX_BYTES}B budget"
         )
     return diagnostics, final
+
+
+def make_calib(spark):
+    """Fixed host-noise calibration query (VERDICT r13 item #2): a 1k-row
+    cached frame aggregated through the SAME run_once noop-write path as
+    every bench row. Data-independent and plan-trivial, so its timing moves
+    ONLY with host load + JVM state — the normalizer that lets a
+    cross-round total swing be attributed to environment vs plans. Returns
+    a registry-shaped ``(spark, sf_dir) -> DataFrame`` callable."""
+    from pyspark.sql import functions as F
+
+    calib_base = (
+        spark.range(1000)
+        .select(F.col("id"), (F.col("id") * 7 % 97).alias("v"))
+        .cache()
+    )
+    calib_base.count()  # materialize the cache before any timing
+
+    def calib_fn(spark_, sf_dir_):
+        return calib_base.groupBy((F.col("id") % 10).alias("b")).agg(
+            F.sum("v").alias("s"), F.count("*").alias("n")
+        )
+
+    return calib_fn
 
 
 def main() -> None:
@@ -148,24 +182,7 @@ def main() -> None:
 
     bench = Q.bench_queries()
 
-    # Fixed host-noise calibration query (VERDICT r13 item #2): a 1k-row
-    # cached frame aggregated through the SAME run_once noop-write path as
-    # every bench row. Data-independent and plan-trivial, so its timing
-    # moves ONLY with host load + JVM state — the normalizer that lets a
-    # cross-round total swing be attributed to environment vs plans.
-    from pyspark.sql import functions as F
-
-    calib_base = (
-        spark.range(1000)
-        .select(F.col("id"), (F.col("id") * 7 % 97).alias("v"))
-        .cache()
-    )
-    calib_base.count()  # materialize the cache before any timing
-
-    def calib_fn(spark_, sf_dir_):
-        return calib_base.groupBy((F.col("id") % 10).alias("b")).agg(
-            F.sum("v").alias("s"), F.count("*").alias("n")
-        )
+    calib_fn = make_calib(spark)
 
     # UNTIMED throwaway before position 0 (VERDICT r13 item #2): the pinned
     # BENCH_ORDER made q1 pay the whole JVM/codegen/noop-sink cold start

@@ -31,7 +31,6 @@ All signatures derive from F.xxhash64 — deterministic across runs/cluster.
 
 from __future__ import annotations
 
-import threading
 import warnings
 
 from pyspark.sql import DataFrame
@@ -496,12 +495,16 @@ def _keep_first_unit_dedup(
     of piling one window partition (the reason this is not a ROW_NUMBER).
 
     r16 (guide §4.1/§1.2, the predict_lang lesson applied to generators):
-    callers must hand in a ``units`` expression whose token/array source is
-    a PRE-PROJECTED column of ``df`` (see span_dedup's ``_toks``) — lambdas
-    get no CSE, so an inlined ``slice(split(text))`` re-ran split(text) PER
-    SPAN (~12x per doc at span_tokens=3; measured 1.09 -> 0.53 s for the
-    sf0.1 span derivation). The carry path's keeper join-back is also cut
-    to DUPLICATED digests only (count >= 2, the _mark_keepers posture):
+    a ``units`` expression that slices a token array inside a lambda must
+    read that array from a PRE-PROJECTED column of ``df`` (see span_dedup's
+    ``_toks``) — lambdas get no CSE, so an inlined ``slice(split(text))``
+    re-ran split(text) PER SPAN (~12x per doc at span_tokens=3; measured
+    1.09 -> 0.53 s for the sf0.1 span derivation). A lambda-free ``units``
+    (paragraph_dedup's ``split(text, sep)``) runs once per row either way
+    and needs no pre-projection. ``units`` must never hold a NULL element
+    (``split`` and ``concat_ws`` produce none): see the keeper join below.
+    The carry path's keeper join-back is also cut to DUPLICATED digests
+    only (count >= 2, the _mark_keepers posture):
     singleton spans are their own keepers by definition, so a left join
     with null keep => kept is identical — and the join build side shrinks
     from every distinct span to just the duplicated ones (~10x at sf0.1,
@@ -560,7 +563,10 @@ def _keep_first_unit_dedup(
         .select("digest", "keep")
     )
     # left join: a span whose digest is NOT duplicated has no keeper row and
-    # is kept by definition (it IS its first occurrence)
+    # is kept by definition (it IS its first occurrence). This relies on
+    # every digest being non-null, i.e. on no NULL unit (md5(NULL) is NULL):
+    # a NULL digest never equals its keeper's, so NULL units would all read
+    # as kept instead of being deduplicated among themselves.
     marked = spans.join(keepers, "digest", "left").withColumn(
         "is_kept",
         F.col("keep").isNull()
@@ -581,80 +587,23 @@ def _keep_first_unit_dedup(
     )
 
 
-_SHINGLE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_SHINGLE_CACHE_MAX = 4
-_SHINGLE_CACHE_LOCK = threading.Lock()
-
-
-def _shingle_cache_drop(entries) -> None:
-    """Unpersist displaced cache values so evicted/overwritten/cleared entries
-    release executor storage instead of pinning it to session end (ADVICE r7:
-    the overwrite and error-clear paths previously leaked the persisted
-    DataFrame)."""
-    for _, cached in entries:
-        try:
-            cached.unpersist()
-        except Exception:
-            pass
-
-
-def _hashed_shingle_arrays(
-    df: DataFrame, id_col: str, text_col: str, k: int, persist: bool
-) -> DataFrame:
+def _hashed_shingle_arrays(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(doc, sh: sorted array<long>) — each doc's shingle set as sorted
     xxhash64 longs. The shared intermediate of the Jaccard-family operators:
     candidate generation (prefix slice needs the sort), minhash signatures
     (affine rehash of the same longs) and exact verification (array_intersect)
     all read it, and tokenize->shingle->hash is the dominant per-doc cost —
     without sharing, one query evaluates that pipeline up to 3x (prefix pass
-    + one verify join per pair side). ``persist`` caches it MEMORY_AND_DISK
-    (hashes are ~8 bytes/shingle, spill-safe; measured ~25% end-to-end win at
-    sf0.1); pass False from one-shot/constrained contexts.
-
-    The persisted plan is memoized per (input plan, id/text col, k): repeated
-    invocations over the same input (bench warm-up + timed trials, a dedup
-    followed by dedup_groups) return the SAME DataFrame object, so Spark
-    reuses the already-materialized cache instead of re-registering an
-    identical plan each call ("Asked to cache already cached data" churn,
-    VERDICT r6 #3). Keyed by semanticHash and confirmed with sameSemantics;
-    small FIFO so evicted entries unpersist rather than pinning executor
-    memory forever."""
-    from pyspark.storagelevel import StorageLevel
-
-    base = _spread(df).select(
+    + one verify join per pair side). Returned lazy: an operator that reads
+    it more than once takes it through ``localCheckpoint(eager=True)``, so
+    it lives exactly as long as that call's plan (hashes are ~8 bytes per
+    shingle)."""
+    return _spread(df).select(
         F.col(id_col).alias("doc"),
         F.array_sort(F.transform(shingles(F.col(text_col), k), lambda s: F.xxhash64(s))).alias(
             "sh"
         ),
     )
-    if not persist:
-        return base
-    with _SHINGLE_CACHE_LOCK:
-        try:
-            key = (df.semanticHash(), id_col, text_col, k)
-            hit = _SHINGLE_CACHE.get(key)
-            if hit is not None:
-                src, cached = hit
-                if src.sameSemantics(df):
-                    return cached
-                # semanticHash collision with different semantics: the stale
-                # entry is displaced below — release its storage now
-                _shingle_cache_drop([_SHINGLE_CACHE.pop(key)])
-        except Exception:
-            # stale session / analysis failure on the cached handle: fall
-            # through to a fresh persist (correctness never depends on the
-            # memo); unpersist what we drop
-            _shingle_cache_drop(_SHINGLE_CACHE.values())
-            _SHINGLE_CACHE.clear()
-            key = None
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        if key is not None:
-            while len(_SHINGLE_CACHE) >= _SHINGLE_CACHE_MAX:
-                _shingle_cache_drop(
-                    [_SHINGLE_CACHE.pop(next(iter(_SHINGLE_CACHE)))]  # FIFO evict
-                )
-            _SHINGLE_CACHE[key] = (df, base)
-    return base
 
 
 def _verify_jaccard(
@@ -744,7 +693,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    persist_intermediate: bool = True,
     max_prefix_df: int | None = 1000,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard >= threshold, with prefix filtering.
@@ -777,8 +725,12 @@ def ngram_jaccard_pairs(
     pairs similar only through boilerplate are exactly the ones near-dup
     pipelines do not want. Pass ``max_prefix_df=None`` for the fully exact
     guarantee (verification is exact either way — precision stays 1.0).
+
+    The call runs one Spark job: it checkpoints the shared shingle arrays
+    eagerly (the within-call lifetime rule of ``queries.served_artifact``,
+    which also notes that the checkpoint is lost with its executor).
     """
-    base = _hashed_shingle_arrays(df, id_col, text_col, k, persist_intermediate)
+    base = _hashed_shingle_arrays(df, id_col, text_col, k).localCheckpoint(eager=True)
     candidates = _prefix_candidates(base, threshold, max_prefix_df)
     return _verify_jaccard(candidates, base, threshold)
 
@@ -841,7 +793,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 128,
     bands: int = 32,
     threshold: float = 0.8,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard.
 
@@ -850,7 +801,9 @@ def minhash_lsh_pairs(
     Verification: exact Jaccard on the candidates only (precision 1.0).
     The signature and the verification both read the shared hashed-shingle
     arrays (``_hashed_shingle_arrays``), so the tokenize->shingle->hash
-    pipeline runs once per doc, not three times.
+    pipeline runs once per doc, not three times. As in
+    :func:`ngram_jaccard_pairs`, the call runs one Spark job that
+    checkpoints those arrays eagerly.
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
     if bands < 1 or num_hashes % bands != 0:
@@ -859,7 +812,7 @@ def minhash_lsh_pairs(
             "otherwise signature rows are silently dropped or banding degenerates"
         )
     rows = num_hashes // bands
-    base = _hashed_shingle_arrays(df, id_col, text_col, k, persist_intermediate)
+    base = _hashed_shingle_arrays(df, id_col, text_col, k).localCheckpoint(eager=True)
     docs = base.withColumn("sig", minhash_signature_from_hashes(F.col("sh"), num_hashes))
     banded = _explode_bands(docs, bands, rows)
     candidates = (
@@ -892,7 +845,7 @@ def minhash_index(
     tokenize->shingle->xxhash pass runs exactly once per document ever. The
     index is ~1-2% the size of the text it summarizes (128 longs + the
     shingle hashes)."""
-    base = _hashed_shingle_arrays(df, id_col, text_col, k, persist=False)
+    base = _hashed_shingle_arrays(df, id_col, text_col, k)
     return base.withColumn("sig", minhash_signature_from_hashes(F.col("sh"), num_hashes))
 
 

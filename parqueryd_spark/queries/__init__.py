@@ -19,7 +19,11 @@ Domain modules register themselves via the ``@query`` decorator on import:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -62,6 +66,59 @@ def increment_of(key_col: str, i: int, n: int = 3):
     from pyspark.sql import functions as F
 
     return F.coalesce(F.pmod(F.col(key_col), F.lit(n)), F.lit(0)) == i
+
+
+_SERVED: dict[tuple, str] = {}
+_SERVED_LOCK = threading.RLock()
+_SERVED_ROOT: str | None = None
+
+
+def served_artifact(kind: str, key, build: Callable[[str], None]) -> str:
+    """The directory of the published artifact ``(kind, key)``: the one owner
+    of standing state in the registry. Reused data has exactly two lifetimes:
+
+    - Published standing state (indexes, manifests, sketch and LM state,
+      hand-laid shard copies) lives for the process, here. The first call
+      runs ``build(path)`` into a fresh empty dir under one process-scoped
+      root and records ``path`` only after ``build`` returns; later calls get
+      the recorded dir, and a recorded dir that has gone is rebuilt. A failed
+      build removes its partial dir and records nothing. The root is removed
+      at interpreter exit. This models state published at ingest: the
+      untimed warm-up builds it, timed runs only read it.
+    - A frame reused inside one call lives only as long as that call's plan:
+      take it through ``localCheckpoint(eager=True)``, whose blocks the
+      ContextCleaner frees with the plan, or ``persist()`` it and
+      ``unpersist()`` it before the function returns. A CacheManager entry
+      left behind outlives the call and serves the next one from memory.
+      The eager checkpoint has two costs: the operator runs a Spark job when
+      it is called, not when its result is used, and its blocks are not
+      recomputed if an executor is lost (Spark documents local checkpoints as
+      unsafe under dynamic allocation), where a persisted frame would be.
+
+    A lookup of a built artifact takes no lock. Builds are serialized
+    process-wide: one lock covers every kind, so a build waits for any other
+    build in flight. The lock is reentrant, so a build may itself call
+    ``served_artifact``.
+    """
+    global _SERVED_ROOT
+    path = _SERVED.get((kind, key))
+    if path is not None and os.path.isdir(path):
+        return path
+    with _SERVED_LOCK:
+        path = _SERVED.get((kind, key))
+        if path is not None and os.path.isdir(path):
+            return path
+        if _SERVED_ROOT is None or not os.path.isdir(_SERVED_ROOT):
+            _SERVED_ROOT = tempfile.mkdtemp(prefix="parqueryd_spark_served_")
+            atexit.register(shutil.rmtree, _SERVED_ROOT, True)
+        path = tempfile.mkdtemp(prefix=f"parqueryd_spark_{kind}_", dir=_SERVED_ROOT)
+        try:
+            build(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        _SERVED[(kind, key)] = path
+        return path
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from parqueryd_spark.core import aggregate_files
-from parqueryd_spark.queries import query, table_path
+from parqueryd_spark.queries import query, served_artifact, table_path
 from parqueryd_spark.sources.parquet import read_resolved
 
 
@@ -193,38 +193,28 @@ def global_agg_no_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MANIFEST_SERVE_CACHE: dict = {}
-
-
 def _served_manifest(spark: SparkSession, sf_dir: str, table: str, kind: str, **kw):
     """The skipping indexes on their SERVE path (VERDICT r8 item #2): build
-    the zone-map / bloom manifest ONCE per (process, sf_dir, table[, col]),
-    PUBLISH it to a temp-dir parquet dataset, and hand every later call the
+    the zone-map / bloom manifest once per (sf_dir, table[, col]), PUBLISH
+    it as a ``served_artifact`` parquet dataset, and hand every call the
     read-back — the `served_ivf_index` pattern. Standing data pays the footer
     sweep (zone map) or key-column read (bloom) at ingest/OPTIMIZE time and
     amortizes it over every query; the registry/bench rows now time the scan,
     not a per-call index rebuild. Maintenance between publishes is
     `refresh_manifest` / `refresh_bloom_manifest` (O(new files) — equality
     with a from-scratch rebuild is pytest-pinned)."""
-    import tempfile
-    import threading
+    from parqueryd_spark.sources.manifest import bloom_manifest, build_manifest
 
-    lock = _MANIFEST_SERVE_CACHE.setdefault("__lock", threading.Lock())
-    key = (kind, os.path.abspath(sf_dir), table, tuple(sorted(kw.items())))
-    with lock:
-        path = _MANIFEST_SERVE_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            from parqueryd_spark.sources.manifest import bloom_manifest, build_manifest
+    def build(path: str) -> None:
+        data = table_path(sf_dir, table)
+        if kind == "zonemap":
+            mf = build_manifest(spark, data)
+        else:
+            mf = bloom_manifest(spark, data, kw["key_col"], fpp=kw.get("fpp", 0.01))
+        mf.write.mode("overwrite").parquet(path)
 
-            data = table_path(sf_dir, table)
-            if kind == "zonemap":
-                mf = build_manifest(spark, data)
-            else:
-                mf = bloom_manifest(spark, data, kw["key_col"], fpp=kw.get("fpp", 0.01))
-            path = tempfile.mkdtemp(prefix=f"parqueryd_spark_{kind}_manifest_")
-            mf.write.mode("overwrite").parquet(path)
-            _MANIFEST_SERVE_CACHE[key] = path
-    return read_resolved(spark, [path])
+    key = (os.path.abspath(sf_dir), table, tuple(sorted(kw.items())))
+    return read_resolved(spark, [served_artifact(f"{kind}_manifest", key, build)])
 
 
 @query(
@@ -316,38 +306,26 @@ def scan_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DRIFT_CACHE: dict = {}
-
-
 def _drift_shards(spark: SparkSession, sf_dir: str) -> str:
-    """Two orders shards with DRIFTED schemas, built once per (process,
-    sf_dir) into a temp dir — the data-model semantic SURVEY §1 carries from
-    the reference's shard files (one logical table, per-shard schemas free to
+    """Two orders shards with DRIFTED schemas, kept by ``served_artifact``
+    per sf_dir — the data-model semantic SURVEY §1 carries from the
+    reference's shard files (one logical table, per-shard schemas free to
     evolve): shard_even has every column, shard_odd predates the
     ``o_orderpriority`` column. Deterministic content (keyed split of the
     standing table), so the DuckDB oracle can reproduce the merged read from
     the registered view alone."""
-    import tempfile
-    import threading
+    from pyspark.sql import functions as F
 
-    lock = _DRIFT_CACHE.setdefault("__lock", threading.Lock())
-    key = os.path.abspath(sf_dir)
-    with lock:
-        path = _DRIFT_CACHE.get(key)
-        if path is not None and os.path.isdir(path):
-            return path
-        from pyspark.sql import functions as F
-
+    def build(d: str) -> None:
         orders = read_resolved(spark, [table_path(sf_dir, "orders")])
-        d = tempfile.mkdtemp(prefix="parqueryd_spark_drift_")
         orders.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.parquet(
             os.path.join(d, "shard_even.parquet")
         )
         orders.filter(F.col("o_orderkey") % 2 == 1).drop("o_orderpriority").coalesce(
             1
         ).write.parquet(os.path.join(d, "shard_odd.parquet"))
-        _DRIFT_CACHE[key] = d
-        return d
+
+    return served_artifact("drift", os.path.abspath(sf_dir), build)
 
 
 @query(
@@ -389,45 +367,31 @@ def shard_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HIVE_CACHE: dict = {}
-
-
 def _hive_events(spark: SparkSession, sf_dir: str) -> tuple:
-    """(data_dir, manifest) for a hive-partitioned copy of events — built
-    once per (process, sf_dir): rows land under ``event_type=<v>/`` dirs and
-    files inside each partition are value-range-clustered, the layout where
-    BOTH pruning layers bite (directory values prune event_type terms, file
-    zone maps prune value terms). The manifest is published next to it and
-    read back — the serve path, same as _served_manifest."""
-    import tempfile
-    import threading
-
+    """(data_dir, manifest) for a hive-partitioned copy of events, kept by
+    ``served_artifact`` per sf_dir: rows land under ``events/event_type=<v>/``
+    dirs and files inside each partition are value-range-clustered, the
+    layout where BOTH pruning layers bite (directory values prune event_type
+    terms, file zone maps prune value terms). The manifest is published
+    beside it under ``manifest/`` and read back — the serve path, same as
+    _served_manifest."""
     from parqueryd_spark.sources.manifest import build_manifest
+    from parqueryd_spark.sources.parquet import load_table
 
-    lock = _HIVE_CACHE.setdefault("__lock", threading.Lock())
-    key = os.path.abspath(sf_dir)
-    with lock:
-        entry = _HIVE_CACHE.get(key)
-        if entry is not None and os.path.isdir(entry[0]):
-            d, mdir = entry
-        else:
-            from pyspark.sql import functions as F
+    def build(base: str) -> None:
+        d = os.path.join(base, "events")
+        ev = load_table(spark, sf_dir, "events").drop("ts")
+        (
+            ev.repartitionByRange(4, "value")
+            .sortWithinPartitions("value")
+            .write.partitionBy("event_type")
+            .parquet(d)
+        )
+        build_manifest(spark, d).write.parquet(os.path.join(base, "manifest"))
 
-            from parqueryd_spark.sources.parquet import load_table
-
-            base = tempfile.mkdtemp(prefix="parqueryd_spark_hive_")
-            d = os.path.join(base, "events")
-            ev = load_table(spark, sf_dir, "events").drop("ts")
-            (
-                ev.repartitionByRange(4, "value")
-                .sortWithinPartitions("value")
-                .write.partitionBy("event_type")
-                .parquet(d)
-            )
-            mdir = os.path.join(base, "manifest")
-            build_manifest(spark, d).write.parquet(mdir)
-            _HIVE_CACHE[key] = (d, mdir)
-    return d, read_resolved(spark, [mdir])
+    base = served_artifact("hive", os.path.abspath(sf_dir), build)
+    mf = read_resolved(spark, [os.path.join(base, "manifest")])
+    return os.path.join(base, "events"), mf
 
 
 @query(

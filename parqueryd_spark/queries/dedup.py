@@ -25,7 +25,7 @@ from parqueryd_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_md5_near_pairs,
 )
-from parqueryd_spark.queries import query
+from parqueryd_spark.queries import query, served_artifact
 from parqueryd_spark.sources.parquet import load_table, read_resolved
 
 # Shared oracle: exact all-pairs 3-gram-shingle Jaccard >= 0.8 via inverted index.
@@ -104,32 +104,23 @@ def dedup_ngram_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_INDEX_CACHE: dict[str, str] = {}
-_MINHASH_INDEX_LOCK = __import__("threading").Lock()
-
-
 def served_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table's published minhash index (operators/dedup.py:
-    minhash_index — (doc, sh, sig) rows, ~1-2% of the text size), built ONCE
-    per sf_dir per process into a session-scoped temp dir — the same
-    amortization posture as the served ANN indexes: shingle/hash at ingest,
-    every dedup run serves from the stored signatures."""
+    minhash_index — (doc, sh, sig) rows, ~1-2% of the text size), kept by
+    ``served_artifact`` per sf_dir — the same amortization posture as the
+    served ANN indexes: shingle/hash at ingest, every dedup run serves from
+    the stored signatures."""
     import os
-    import tempfile
 
     from parqueryd_spark.operators.dedup import minhash_index
 
-    key = os.path.abspath(sf_dir)
-    with _MINHASH_INDEX_LOCK:
-        path = _MINHASH_INDEX_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            path = tempfile.mkdtemp(prefix="parqueryd_spark_minhash_")
-            docs = load_table(spark, sf_dir, "documents")
-            minhash_index(docs, "doc_id", "text", k=3, num_hashes=128).write.mode(
-                "overwrite"
-            ).parquet(path)
-            _MINHASH_INDEX_CACHE[key] = path
-    return read_resolved(spark, [path])
+    def build(path: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        minhash_index(docs, "doc_id", "text", k=3, num_hashes=128).write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    return read_resolved(spark, [served_artifact("minhash", os.path.abspath(sf_dir), build)])
 
 
 @query("dedup_minhash_lsh", oracle=_EXACT_JACCARD_SQL, bench=True)

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parqueryd_spark.queries import increment_of, query
+from parqueryd_spark.queries import increment_of, query, served_artifact
 from parqueryd_spark.sources.parquet import load_table
 
 
@@ -395,36 +395,27 @@ def events_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CM_STATE_CACHE: dict = {}
-_CM_STATE_LOCK = __import__("threading").Lock()
-
-
 def _served_cm_state(spark: SparkSession, sf_dir: str) -> str:
-    """Published per-batch Count-Min state for events.user_id, built ONCE
-    per (process, sf_dir) into a temp dir: three disjoint increments
+    """Published per-batch Count-Min state for events.user_id, kept by
+    ``served_artifact`` per sf_dir: three disjoint increments
     (event_id mod 3) each sketched with count_min_sketch (width=256,
     depth=4, md5 cells) into the EXACT ``batch=<id>`` parquet layout
     streaming/rollup.py:stream_maintain_countmin writes, so the serving
     read path below is the streaming reader itself."""
     import os
-    import tempfile
 
     from parqueryd_spark.operators.sketches import count_min_sketch
     from parqueryd_spark.sources.sinks import write_batch
 
-    key = os.path.abspath(sf_dir)
-    with _CM_STATE_LOCK:
-        path = _CM_STATE_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            path = tempfile.mkdtemp(prefix="parqueryd_spark_cm_")
-            ev = load_table(spark, sf_dir, "events")
-            for i in range(3):
-                cells = count_min_sketch(
-                    ev.where(increment_of("event_id", i)), "user_id", width=256, depth=4
-                )
-                write_batch(cells, path, i)
-            _CM_STATE_CACHE[key] = path
-    return path
+    def build(path: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        for i in range(3):
+            cells = count_min_sketch(
+                ev.where(increment_of("event_id", i)), "user_id", width=256, depth=4
+            )
+            write_batch(cells, path, i)
+
+    return served_artifact("cm", os.path.abspath(sf_dir), build)
 
 
 @query(

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from parqueryd_spark.queries import increment_of, query
+from parqueryd_spark.queries import increment_of, query, served_artifact
 from parqueryd_spark.sources.parquet import load_table
 
 
@@ -385,41 +385,39 @@ def events_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_distinct(kmv_merge(parts, ["event_type"], k=k), k=k)
 
 
-_KMV_STATE_CACHE: dict = {}
-_KMV_STATE_LOCK = __import__("threading").Lock()
-
-
-def _served_kmv_state(spark: SparkSession, sf_dir: str, k: int = 128) -> str:
-    """Published per-batch KMV state for the events table, built ONCE per
-    (process, sf_dir) into a temp dir — the `served_minhash_index`
-    amortization posture applied to sketch state: three disjoint increments
-    (event_id mod 3, a stand-in for daily partitions) each sketched with
-    kmv_sketch (md5_52) into the EXACT ``batch=<id>`` parquet layout
-    streaming/rollup.py:stream_maintain_kmv writes, so the serving read
-    path below is the streaming reader itself."""
-    import os
-    import tempfile
-
+def _write_kmv_increments(spark: SparkSession, sf_dir: str, path: str, k: int) -> None:
+    """Three disjoint events increments (event_id mod 3, a stand-in for
+    daily partitions), each sketched with kmv_sketch (md5_52) into the EXACT
+    ``batch=<id>`` parquet layout streaming/rollup.py:stream_maintain_kmv
+    writes."""
     from parqueryd_spark.operators.sketches import kmv_sketch
     from parqueryd_spark.sources.sinks import write_batch
 
-    key = (os.path.abspath(sf_dir), k)
-    with _KMV_STATE_LOCK:
-        path = _KMV_STATE_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            path = tempfile.mkdtemp(prefix="parqueryd_spark_kmv_")
-            ev = load_table(spark, sf_dir, "events")
-            for i in range(3):
-                sketch = kmv_sketch(
-                    ev.where(increment_of("event_id", i)),
-                    ["event_type"],
-                    "user_id",
-                    k=k,
-                    hash_fn="md5_52",
-                )
-                write_batch(sketch, path, i)
-            _KMV_STATE_CACHE[key] = path
-    return path
+    ev = load_table(spark, sf_dir, "events")
+    for i in range(3):
+        sketch = kmv_sketch(
+            ev.where(increment_of("event_id", i)),
+            ["event_type"],
+            "user_id",
+            k=k,
+            hash_fn="md5_52",
+        )
+        write_batch(sketch, path, i)
+
+
+def _served_kmv_state(spark: SparkSession, sf_dir: str, k: int = 128) -> str:
+    """Published per-batch KMV state for the events table, kept by
+    ``served_artifact`` per (sf_dir, k) — the `served_minhash_index`
+    amortization posture applied to sketch state: the increments of
+    :func:`_write_kmv_increments`, so the serving read path below is the
+    streaming reader itself."""
+    import os
+
+    return served_artifact(
+        "kmv",
+        (os.path.abspath(sf_dir), k),
+        lambda path: _write_kmv_increments(spark, sf_dir, path, k),
+    )
 
 
 @query(
@@ -471,35 +469,18 @@ def events_kmv_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _served_kmv_compacted_state(spark: SparkSession, sf_dir: str, k: int = 128) -> str:
     """The :func:`_served_kmv_state` layout taken one lifecycle step further:
     after the three increments land, :func:`compact_kmv_state` folds them
-    into a single ``batch=-1`` generation (atomic_publish swap). Built once
-    per (process, sf_dir) into its own temp dir (prefix ``kmvc``) so the
-    uncompacted twin's state stays untouched and the two rows stay
-    independently plan-assertable."""
+    into a single ``batch=-1`` generation (atomic_publish swap). Kept as its
+    own artifact (kind ``kmvc``) so the uncompacted twin's state stays
+    untouched and the two rows stay independently plan-assertable."""
     import os
-    import tempfile
 
-    from parqueryd_spark.operators.sketches import kmv_sketch
-    from parqueryd_spark.sources.sinks import write_batch
     from parqueryd_spark.streaming.rollup import compact_kmv_state
 
-    key = (os.path.abspath(sf_dir), k, "compacted")
-    with _KMV_STATE_LOCK:
-        path = _KMV_STATE_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            path = tempfile.mkdtemp(prefix="parqueryd_spark_kmvc_")
-            ev = load_table(spark, sf_dir, "events")
-            for i in range(3):
-                sketch = kmv_sketch(
-                    ev.where(increment_of("event_id", i)),
-                    ["event_type"],
-                    "user_id",
-                    k=k,
-                    hash_fn="md5_52",
-                )
-                write_batch(sketch, path, i)
-            compact_kmv_state(spark, path, ("event_type",), k=k)
-            _KMV_STATE_CACHE[key] = path
-    return path
+    def build(path: str) -> None:
+        _write_kmv_increments(spark, sf_dir, path, k)
+        compact_kmv_state(spark, path, ("event_type",), k=k)
+
+    return served_artifact("kmvc", (os.path.abspath(sf_dir), k), build)
 
 
 @query(

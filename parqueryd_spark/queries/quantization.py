@@ -9,12 +9,10 @@ to the published IVF-PQ serving route (`served_ivfpq_index` /
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parqueryd_spark.queries import query
+from parqueryd_spark.queries import query, served_artifact
 from parqueryd_spark.sources.parquet import load_table
 
 
@@ -242,10 +240,6 @@ def pipeline_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFPQ_INDEX_CACHE: dict[tuple, str] = {}
-_IVFPQ_INDEX_LOCK = threading.Lock()
-
-
 def _ivfpq_topk_sql(
     n_centroids: int, nprobe: int, m: int, k_codes: int, sample_n: int,
     k: int, refine: int, dim: int,
@@ -395,9 +389,9 @@ def served_ivfpq_index(
 ):
     """(codes, centroids, codebooks) for the embeddings table, served from a
     PUBLISHED IVF-PQ index (operators/quantization.py:ivfpq_publish — coarse
-    centroids + PQ codebooks + codes partitioned by (batch, centroid_id)),
-    built ONCE per (sf_dir, n_centroids, residual, codebook, k_codes) per
-    process into a session-scoped temp dir. Same amortization posture as
+    centroids + PQ codebooks + codes partitioned by (batch, centroid_id))
+    kept by ``served_artifact`` per (sf_dir, n_centroids, residual,
+    codebook, k_codes). Same amortization posture as
     queries/similarity.py's served_ivf_index: index at ingest, every query
     batch serves from partition-pruned scans of 16-byte codes.
     ``residual=True`` publishes the residual-encoded variant (codes quantize
@@ -405,26 +399,23 @@ def served_ivfpq_index(
     publishes the deterministic SQL-replayable codebooks (searches should
     pass ``lut_mode="det"``)."""
     import os
-    import tempfile
 
     from parqueryd_spark.operators.quantization import ivfpq_load, ivfpq_publish
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = (
-        emb.orderBy(F.col("vec_id").asc())
-        .limit(n_centroids)
-        .select(F.col("vec_id").cast("int").alias("centroid_id"), "embedding")
-    )
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        cents = (
+            emb.orderBy(F.col("vec_id").asc())
+            .limit(n_centroids)
+            .select(F.col("vec_id").cast("int").alias("centroid_id"), "embedding")
+        )
+        ivfpq_publish(
+            spark, path, emb, cents, dim=64, m=16, k_codes=k_codes,
+            residual=residual, codebook=codebook,
+        )
+
     key = (os.path.abspath(sf_dir), n_centroids, bool(residual), codebook, k_codes)
-    with _IVFPQ_INDEX_LOCK:
-        path = _IVFPQ_INDEX_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            path = tempfile.mkdtemp(prefix="parqueryd_spark_ivfpq_")
-            ivfpq_publish(
-                spark, path, emb, cents, dim=64, m=16, k_codes=k_codes,
-                residual=residual, codebook=codebook,
-            )
-            _IVFPQ_INDEX_CACHE[key] = path
+    path = served_artifact("ivfpq", key, build)
     return ivfpq_load(spark, path)
 
 
@@ -587,32 +578,22 @@ def ann_sq_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFSQ_INDEX_CACHE: dict[tuple, str] = {}
-_IVFSQ_INDEX_LOCK = threading.Lock()
-
-
 def served_ivfsq_index(spark: SparkSession, sf_dir: str, n_centroids: int = 16):
     """(codes, centroids, lo, step) for the embeddings table, served from a
     PUBLISHED IVF-SQ index (operators/squant.py:ivfsq_publish — coarse
     centroids + a global SQ8 grid + 1-byte-per-dim codes partitioned by
-    (batch, centroid_id)), built ONCE per (sf_dir, n_centroids) per process
-    into a session-scoped temp dir. Same amortization posture as the served
-    IVF / IVF-PQ indexes."""
+    (batch, centroid_id)) kept by ``served_artifact`` per (sf_dir,
+    n_centroids). Same amortization posture as the served IVF / IVF-PQ
+    indexes."""
     import os
-    import tempfile
 
     from parqueryd_spark.operators.squant import ivfsq_load, ivfsq_publish
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    key = (os.path.abspath(sf_dir), n_centroids)
-    with _IVFSQ_INDEX_LOCK:
-        path = _IVFSQ_INDEX_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            path = tempfile.mkdtemp(prefix="parqueryd_spark_ivfsq_")
-            ivfsq_publish(
-                spark, path, emb, dim=64, centroids="first_k", n_centroids=n_centroids
-            )
-            _IVFSQ_INDEX_CACHE[key] = path
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        ivfsq_publish(spark, path, emb, dim=64, centroids="first_k", n_centroids=n_centroids)
+
+    path = served_artifact("ivfsq", (os.path.abspath(sf_dir), n_centroids), build)
     return ivfsq_load(spark, path)
 
 

@@ -10,8 +10,6 @@ neighbor id.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,7 +18,7 @@ from parqueryd_spark.operators.similarity import (
     cosine_near_dup_pairs,
     ivf_topk,
 )
-from parqueryd_spark.queries import query
+from parqueryd_spark.queries import query, served_artifact
 from parqueryd_spark.sources.parquet import load_table
 
 def cos_sql(x: str, y: str) -> str:
@@ -142,39 +140,30 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, emb.filter(F.col("vec_id") < 5), n_centroids=16, nprobe=4, k=5)
 
 
-_IVF_INDEX_CACHE: dict[tuple, str] = {}
-_IVF_INDEX_LOCK = threading.Lock()
-
-
 def served_ivf_index(
     spark: SparkSession, sf_dir: str, n_centroids: int = 16
 ) -> tuple[DataFrame, DataFrame]:
     """(vectors, centroids) for the embeddings table, served from a PUBLISHED
     IVF index (operators/similarity.py:ivf_publish layout — centroids file +
-    vectors partitioned by (batch, centroid_id)) — built ONCE per
-    (sf_dir, n_centroids) per process into a session-scoped temp dir, then
-    read back by every caller, so repeated query batches (driver gate + bench
-    warm/trials) pay corpus assignment once and serve from
+    vectors partitioned by (batch, centroid_id)) kept by ``served_artifact``
+    per (sf_dir, n_centroids), so repeated query batches (the correctness
+    gate, bench warm-up and trials) pay corpus assignment once and serve from
     dynamic-partition-pruned scans thereafter. This is the 100 TB pattern:
     index at ingest, amortize over every search."""
     import os
-    import tempfile
 
     from parqueryd_spark.operators.similarity import ivf_load, ivf_publish
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = (
-        emb.orderBy(F.col("vec_id").asc())
-        .limit(n_centroids)
-        .select(F.col("vec_id").cast("int").alias("centroid_id"), F.col("embedding"))
-    )
-    key = (os.path.abspath(sf_dir), n_centroids)
-    with _IVF_INDEX_LOCK:
-        path = _IVF_INDEX_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            path = tempfile.mkdtemp(prefix="parqueryd_spark_ivf_")
-            ivf_publish(spark, path, emb, cents)
-            _IVF_INDEX_CACHE[key] = path
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        cents = (
+            emb.orderBy(F.col("vec_id").asc())
+            .limit(n_centroids)
+            .select(F.col("vec_id").cast("int").alias("centroid_id"), F.col("embedding"))
+        )
+        ivf_publish(spark, path, emb, cents)
+
+    path = served_artifact("ivf", (os.path.abspath(sf_dir), n_centroids), build)
     return ivf_load(spark, path)
 
 

@@ -19,7 +19,8 @@ format:
 - ``publish_batch`` atomically replaces the whole state with one batch (an
   index publish), and ``compact_batches`` folds all batches into one
   ``batch=-1`` generation that way, carrying the ``_meta`` sidecar along;
-- ``read_meta`` reads a ``_meta`` sidecar (None only when it is missing).
+- ``write_meta`` / ``read_meta`` write and read a state's ``_meta``
+  sidecar (``read_meta`` is None only when it is missing).
 
 Every read of published data goes through ``sources/parquet.read_resolved``,
 which takes the schema from a driver-side footer read instead of a Spark job.
@@ -377,6 +378,13 @@ def publish_batch(
     )
 
 
+_META = "_meta"
+
+
+def _meta_path(state_dir: str) -> str:
+    return f"{state_dir.rstrip('/')}/{_META}"
+
+
 def compact_batches(
     spark: SparkSession,
     state_dir: str,
@@ -391,22 +399,28 @@ def compact_batches(
     beside ``batch=-1``; a ``_meta`` sidecar is republished inside the same
     generation. Run between availableNow drains. Returns the compacted row
     count."""
-    meta = f"{state_dir.rstrip('/')}/_meta"
+    meta = _meta_path(state_dir)
     sidecars = None
     if HadoopFS(spark, meta).exists(meta):
-        sidecars = [(read_resolved(spark, [meta]), "_meta")]
+        sidecars = [(read_resolved(spark, [meta]), _META)]
     publish_batch(fold(read_batches(spark, state_dir)), state_dir, -1, partition_by, sidecars)
     return read_resolved(spark, [state_dir]).count()
 
 
-def read_meta(spark: SparkSession, path: str) -> Row | None:
-    """The one-row ``_meta`` sidecar at ``path`` (model parameters that
-    travel with the state), or None when ``path`` does not exist — the
-    pre-meta layout. Any other failure (a corrupt or unreadable file)
-    raises: silently defaulting could serve a model at the wrong
-    parameters."""
+def write_meta(df: DataFrame, state_dir: str) -> None:
+    """Write ``df`` (one row of model parameters that travel with the state)
+    as the ``_meta`` sidecar of the state at ``state_dir``, replacing any
+    earlier one. :func:`compact_batches` carries it through the swap."""
+    df.write.mode("overwrite").parquet(_meta_path(state_dir))
+
+
+def read_meta(spark: SparkSession, state_dir: str) -> Row | None:
+    """The one-row ``_meta`` sidecar of the state at ``state_dir``, or None
+    when it does not exist — the pre-meta layout. Any other failure (a
+    corrupt or unreadable file) raises: silently defaulting could serve a
+    model at the wrong parameters."""
     try:
-        return read_resolved(spark, [path]).collect()[0]
+        return read_resolved(spark, [_meta_path(state_dir)]).collect()[0]
     except AnalysisException as e:
         cls = getattr(e, "getErrorClass", lambda: "")() or ""
         if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):

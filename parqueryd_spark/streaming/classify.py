@@ -21,13 +21,14 @@ from parqueryd_spark.sources.sinks import (
     read_batches,
     read_meta,
     write_batch,
+    write_meta,
 )
 
 
 def _stored_meta(spark, nb_dir: str) -> tuple[int, str]:
     """(n_buckets, salt) from the store's ``_meta``; raises when the store
     has none (nothing maintained yet)."""
-    meta = read_meta(spark, f"{nb_dir}/_meta")
+    meta = read_meta(spark, nb_dir)
     if meta is None:
         raise ValueError(f"NB store at {nb_dir} has no _meta — nothing maintained yet?")
     return int(meta["n_buckets"]), str(meta["salt"])
@@ -59,7 +60,7 @@ def stream_maintain_nb(
         nonlocal meta_checked
         if not meta_checked:
             spark = batch_df.sparkSession
-            stored = read_meta(spark, f"{nb_dir}/_meta")
+            stored = read_meta(spark, nb_dir)
             if stored is not None and tuple(stored) != (int(n_buckets), str(salt)):
                 raise ValueError(
                     f"NB store at {nb_dir} was maintained with "
@@ -69,9 +70,12 @@ def stream_maintain_nb(
                     "would keep the old bucketing); use a fresh nb_dir"
                 )
             if stored is None:
-                spark.createDataFrame(
-                    [(int(n_buckets), str(salt))], "n_buckets int, salt string"
-                ).write.mode("overwrite").parquet(f"{nb_dir}/_meta")
+                write_meta(
+                    spark.createDataFrame(
+                        [(int(n_buckets), str(salt))], "n_buckets int, salt string"
+                    ),
+                    nb_dir,
+                )
             meta_checked = True
         part = nb_count_partials(batch_df, label_col, text_col, n_buckets, salt)
         write_batch(part, nb_dir, batch_id)

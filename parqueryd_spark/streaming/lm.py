@@ -33,6 +33,7 @@ from parqueryd_spark.sources.sinks import (
     read_batches,
     read_meta,
     write_batch,
+    write_meta,
 )
 
 
@@ -97,7 +98,7 @@ def stream_maintain_lm(
             # stream's: honor any existing meta (raise on mismatch), write
             # ours only on first creation
             spark = batch_df.sparkSession
-            stored = read_meta(spark, f"{lm_dir}/_meta")
+            stored = read_meta(spark, lm_dir)
             if stored is not None and tuple(stored) != (float(k), int(n)):
                 raise ValueError(
                     f"LM store at {lm_dir} was maintained with (k, n)={tuple(stored)} "
@@ -110,9 +111,9 @@ def stream_maintain_lm(
                 # adopting a pre-meta store: its existing grams must BE at
                 # this stream's order before the meta certifies them
                 _validate_order(spark, lm_dir, int(n))
-                spark.createDataFrame([(float(k), int(n))], "k double, n int").write.mode(
-                    "overwrite"
-                ).parquet(f"{lm_dir}/_meta")
+                write_meta(
+                    spark.createDataFrame([(float(k), int(n))], "k double, n int"), lm_dir
+                )
             meta_checked = True
         write_batch(ngram_counts(batch_df, text_col, n), lm_dir, batch_id)
 
@@ -147,7 +148,7 @@ def read_lm(
     forces the scan regardless (e.g. serving a store whose files were
     manipulated outside the maintenance contract); ``validate=False``
     skips it even for pre-meta stores (caller-asserted order)."""
-    stored = read_meta(spark, f"{lm_dir}/_meta")
+    stored = read_meta(spark, lm_dir)
     k = k if k is not None else (stored["k"] if stored is not None else 0.5)
     n = n if n is not None else (stored["n"] if stored is not None else 2)
     parts = read_batches(spark, lm_dir)

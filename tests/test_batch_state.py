@@ -69,18 +69,19 @@ def test_first_file_is_first_of_full_listing(spark, tmp_path):
 
 
 def test_batch_state_lifecycle_and_read_jobs(spark, tmp_path):
-    """write_batch → read_batches → compact_batches → read_meta: replayed
-    ids overwrite themselves (int and hive-escaped string ids alike), the
-    merge-on-read view drops ``batch`` and plans with no Spark job (Spark's
-    own inference read submits one), compaction keeps the folded answer and
-    the ``_meta`` sidecar, and ``read_meta`` is None only for a missing
-    path."""
+    """write_batch → write_meta → read_batches → compact_batches →
+    read_meta: replayed ids overwrite themselves (int and hive-escaped
+    string ids alike), the merge-on-read view drops ``batch`` and plans with
+    no Spark job (Spark's own inference read submits one), compaction keeps
+    the folded answer and the ``_meta`` sidecar, and ``read_meta`` is None
+    only for a state without one."""
     from parqueryd_spark.sources.sinks import (
         batch_ids,
         compact_batches,
         read_batches,
         read_meta,
         write_batch,
+        write_meta,
     )
 
     state = str(tmp_path / "state")
@@ -95,7 +96,8 @@ def test_batch_state_lifecycle_and_read_jobs(spark, tmp_path):
     write_batch(rows("c", 99), state, "late a:b")
     write_batch(rows("c", 3), state, "late a:b")  # replay: overwrites itself
     assert sorted(batch_ids(spark, state)) == ["0", "1", "late a%3Ab"]
-    spark.createDataFrame([(0.5, 2)], "k double, n int").write.parquet(os.path.join(state, "_meta"))
+    write_meta(spark.createDataFrame([(0.5, 2)], "k double, n int"), state)
+    assert os.path.isdir(os.path.join(state, "_meta"))
 
     parts, jobs = _jobs_submitted(spark, "read-batches", lambda: read_batches(spark, state))
     assert jobs == []
@@ -112,14 +114,14 @@ def test_batch_state_lifecycle_and_read_jobs(spark, tmp_path):
     assert compact_batches(spark, state, total) == 1
     assert batch_ids(spark, state) == ["-1"]
     assert [tuple(r) for r in read_batches(spark, state).collect()] == [(6,)]
-    assert tuple(read_meta(spark, os.path.join(state, "_meta"))) == (0.5, 2)
+    assert tuple(read_meta(spark, state)) == (0.5, 2)
     write_batch(spark.createDataFrame([(4,)], "n long"), state, 2)  # lands beside -1
     assert read_batches(spark, state).agg(F.sum("n")).head()[0] == 10
 
-    assert read_meta(spark, str(tmp_path / "no_such_meta")) is None
-    corrupt = tmp_path / "corrupt_meta"
-    corrupt.mkdir()
-    (corrupt / "part-0.parquet").write_bytes(b"not a parquet file")
+    assert read_meta(spark, str(tmp_path / "no_such_state")) is None
+    corrupt = tmp_path / "corrupt_state"
+    (corrupt / "_meta").mkdir(parents=True)
+    (corrupt / "_meta" / "part-0.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception):
         read_meta(spark, str(corrupt))
 

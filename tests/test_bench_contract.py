@@ -30,8 +30,10 @@ def test_final_line_is_compact_and_parseable():
     names = list(Q.bench_queries())
     assert len(names) >= 15
     timings, medians, trials, shuffle, calib = _fake_results(names)
+    # one mid-run re-probe per 8 rows, as bench.main takes them
+    samples = {n: 0.1234 for n in names[7::8]}
     diagnostics, final = bench.build_outputs(
-        timings, medians, trials, 0.1, shuffle, calib
+        timings, medians, trials, 0.1, shuffle, calib, samples
     )
 
     line = json.dumps(final)
@@ -107,7 +109,8 @@ def test_diagnostics_are_separate_from_driver_line():
 
 def test_mid_run_calib_samples_ride_diagnostics_only():
     """VERDICT r15 item #1b: the mid-run calib re-probes must appear in the
-    diagnostics payload (keyed by bench row) and NEVER on the driver line."""
+    diagnostics payload (keyed by bench row); the final line carries only
+    their min and max, never the per-row samples."""
     names = list(Q.bench_queries())
     timings, medians, trials, shuffle, calib = _fake_results(names)
     samples = {names[7]: 0.21, names[15]: 0.22, names[-1]: 0.2}
@@ -116,6 +119,10 @@ def test_mid_run_calib_samples_ride_diagnostics_only():
     )
     assert diagnostics["calib_samples"] == samples
     assert "calib_samples" not in final
+    # the final line carries the samples' range, so a row can be read
+    # against the run's host-noise spread without the sidecar
+    assert (final["calib_samples_min"], final["calib_samples_max"]) == (0.2, 0.22)
     # omitted -> empty dict, not a crash (build_outputs stays pure/optional)
-    d2, _ = bench.build_outputs(timings, medians, trials, 0.1, shuffle, calib)
+    d2, f2 = bench.build_outputs(timings, medians, trials, 0.1, shuffle, calib)
     assert d2["calib_samples"] == {}
+    assert (f2["calib_samples_min"], f2["calib_samples_max"]) == (None, None)

@@ -32,7 +32,7 @@ def test_cap_bounds_candidates_linear_on_shared_header(spark, boiler_corpus):
     """Uncapped, the shared header makes every doc pair a candidate (~n^2/2);
     with the df cap the count collapses to O(n). Measured: 719,400 uncapped vs
     2,415 at cap=100 for n=1200."""
-    base = _hashed_shingle_arrays(boiler_corpus, "doc_id", "text", 3, persist=True)
+    base = _hashed_shingle_arrays(boiler_corpus, "doc_id", "text", 3)
     capped = _prefix_candidates(base, 0.8, max_prefix_df=100).count()
     assert capped <= 5 * N_DOCS, f"capped candidates {capped} not O(n)"
     uncapped = _prefix_candidates(base, 0.8, max_prefix_df=None).count()

@@ -1,8 +1,11 @@
 """Source scan that keeps one mechanism per job in ``parqueryd_spark/``:
 published data is read through ``sources/parquet.read_resolved``, batch
-state is written, merged and compacted through the ``sources/sinks`` helper
-set, and availableNow ``foreachBatch`` queries start through its one
-starter. No Spark needed."""
+state (and its ``_meta`` sidecar) is written, merged and compacted through
+the ``sources/sinks`` helper set, availableNow ``foreachBatch`` queries
+start through its one starter, and reused data follows the two lifetime
+rules of ``queries.served_artifact``: published standing state lives in that
+one helper, and nothing a function persists outlives the function. No Spark
+needed."""
 
 from __future__ import annotations
 
@@ -18,6 +21,9 @@ RULES = [
     (r"foreachBatch\(", {"sources/sinks.py", "streaming/windows.py"}, "sinks._start_available_now"),
     (r"\.drop\(\s*[\"']batch[\"']\s*\)", {"sources/sinks.py"}, "sinks.read_batches"),
     (r"batch=\{", {"sources/sinks.py"}, "sinks.write_batch"),
+    (r"_meta\"", {"sources/sinks.py"}, "sinks.write_meta / sinks.read_meta"),
+    (r"(?m)^\w*_CACHE\b", set(), "queries.served_artifact, or no memo at all"),
+    (r"mkdtemp\(", {"queries/__init__.py"}, "queries.served_artifact"),
 ]
 
 
@@ -55,3 +61,40 @@ def test_batch_drop_only_in_read_batches():
         for m in re.finditer(r"\.drop\(\s*[\"']batch[\"']\s*\)", text)
     ]
     assert lines and all(fn.lineno <= ln <= fn.end_lineno for ln in lines), lines
+
+
+def _persists_without_unpersist(text: str) -> list[int]:
+    """Line numbers of functions that call ``.persist(`` or ``.cache()`` but
+    never ``.unpersist(`` — a CacheManager entry left for nobody to drop."""
+    bad = []
+    for fn in ast.walk(ast.parse(text)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        calls = {
+            (n.func.attr, n.lineno)
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        }
+        names = {name for name, _ in calls}
+        if "unpersist" not in names:
+            bad += [ln for name, ln in calls if name in ("persist", "cache")]
+    return sorted(set(bad))
+
+
+def test_every_persist_is_unpersisted_in_its_function():
+    """A frame reused inside one call lives only as long as that call:
+    a function that persists or caches a frame also unpersists it (or
+    takes it through ``localCheckpoint`` instead). A persist left behind
+    serves the next call — and the next timed bench trial — from memory."""
+    found = [
+        f"{rel}:{ln}: persist()/cache() with no unpersist() in the same function"
+        for rel, text in _sources()
+        for ln in _persists_without_unpersist(text)
+    ]
+    assert not found, "\n".join(found)
+    assert _persists_without_unpersist(
+        "def f(df):\n    df = df.persist()\n    return df.count()\n"
+    ) == [2]
+    assert _persists_without_unpersist(
+        "def f(df):\n    df = df.cache()\n    n = df.count()\n    df.unpersist()\n    return n\n"
+    ) == []

@@ -133,21 +133,17 @@ def main() -> None:
         emb = spark.read.parquet(emb_path)
         n_docs, n_vecs = docs.count(), emb.count()
 
-        base = _hashed_shingle_arrays(docs, "doc_id", "text", 3, persist=False)
+        base = _hashed_shingle_arrays(docs, "doc_id", "text", 3)
         t0 = time.perf_counter()
         ppjoin_cands = _prefix_candidates(base, 0.8, max_prefix_df=1000).count()
         t_cand = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        jacc_pairs = ngram_jaccard_pairs(
-            docs, "doc_id", "text", persist_intermediate=True
-        ).count()
+        jacc_pairs = ngram_jaccard_pairs(docs, "doc_id", "text").count()
         t_jacc = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        mh_pairs = minhash_lsh_pairs(
-            docs, "doc_id", "text", persist_intermediate=True
-        ).count()
+        mh_pairs = minhash_lsh_pairs(docs, "doc_id", "text").count()
         t_mh = time.perf_counter() - t0
 
         # Embedding-side probe: IVF top-k SEARCH, with the operators' own
