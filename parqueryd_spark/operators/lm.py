@@ -55,8 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.text import ngrams_all
-from parqueryd_spark.sources.parquet import read_resolved
-from parqueryd_spark.sources.sinks import read_batches, write_batch
+from parqueryd_spark.sources.sinks import read_batches, read_meta, write_batch, write_meta
 
 
 @dataclass
@@ -214,14 +213,12 @@ def lm_publish(
     bigram counts land as the ``<batch>`` partition of ``<lm_dir>/counts``
     (``sources/sinks.write_batch``: re-publishing a batch overwrites only
     that batch, never the accumulated ones) and the smoothing constant
-    under ``<lm_dir>/meta``.
+    as the ``_meta`` sidecar of the counts (``sinks.write_meta``).
     The served model is merge-on-read over ALL batches (linearity: ≡
     one-shot training on the concatenated corpus, bit-exact), so growing the
     training corpus is ``lm_append`` at O(increment) cost — the standing
     corpus is never re-scanned."""
-    spark.createDataFrame([(float(k), int(n))], "k double, n int").write.mode(
-        "overwrite"
-    ).parquet(f"{lm_dir}/meta")
+    write_meta(spark.createDataFrame([(float(k), int(n))], "k double, n int"), f"{lm_dir}/counts")
     write_batch(ngram_counts(docs, text_col, n), f"{lm_dir}/counts", batch)
 
 
@@ -231,14 +228,23 @@ def lm_append(
     """Incremental training: count ONLY the increment at the index's OWN
     persisted order (meta-driven, the sq_append contract), landing it as its
     own ``batch=<batch>`` partition (replays overwrite themselves)."""
-    meta = read_resolved(spark, [f"{lm_dir}/meta"]).collect()[0]
+    meta = _lm_meta(spark, lm_dir)
     write_batch(ngram_counts(new_docs, text_col, int(meta["n"])), f"{lm_dir}/counts", batch)
+
+
+def _lm_meta(spark, lm_dir: str):
+    """The published (k, n) row; a store with no meta raises (its counts'
+    order is unknown)."""
+    meta = read_meta(spark, f"{lm_dir}/counts")
+    if meta is None:
+        raise FileNotFoundError(f"no published LM under {lm_dir}")
+    return meta
 
 
 def lm_load(spark, lm_dir: str) -> NgramLM:
     """The served LM: merge-on-read of every published count batch (the
     1-row meta collect is the only driver-side read)."""
-    meta = read_resolved(spark, [f"{lm_dir}/meta"]).collect()[0]
+    meta = _lm_meta(spark, lm_dir)
     return lm_merge([read_batches(spark, f"{lm_dir}/counts")], float(meta["k"]), int(meta["n"]))
 
 

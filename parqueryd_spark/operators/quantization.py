@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from parqueryd_spark.operators.similarity import as_double, norm
 from parqueryd_spark.operators.util import spread_partitions
 from parqueryd_spark.sources.parquet import read_resolved
-from parqueryd_spark.sources.sinks import publish_batch, write_batch
+from parqueryd_spark.sources.sinks import publish_batch, read_meta, write_batch
 
 
 def _nv_col(vec_col: str, normalize: bool) -> F.Column:
@@ -526,7 +526,8 @@ def ivfpq_publish(
     on the within-bucket spread, so un-refined ADC ranking is measurably
     sharper at equal (m, k_codes); searches then build one LUT per
     (query, probed centroid) pair instead of per query. The flag is
-    persisted in ``<index_dir>/meta`` and honored by load/append/search.
+    persisted as the codes' ``_meta`` sidecar (``sinks.publish_batch``) and
+    honored by load/append/search.
     """
     from parqueryd_spark.operators.similarity import ivf_assign, kmeans_centroids
 
@@ -593,22 +594,23 @@ def ivfpq_publish(
     spark.createDataFrame(cb_rows, "j int, code int, sub array<double>").write.mode(
         "overwrite"
     ).parquet(f"{index_dir}/codebooks")
-    spark.createDataFrame(
+    meta = spark.createDataFrame(
         [(bool(residual), str(codebook))], "residual boolean, codebook string"
-    ).write.mode("overwrite").parquet(f"{index_dir}/meta")
-    publish_batch(encoded, f"{index_dir}/codes", batch, partition_by=["centroid_id"])
+    )
+    publish_batch(encoded, f"{index_dir}/codes", batch, partition_by=["centroid_id"], meta=meta)
 
 
 def ivfpq_meta(spark, index_dir: str) -> dict:
-    """Index metadata ({'residual': bool, 'codebook': str}); indexes
-    published before a flag existed default to raw-vector encoding with the
-    seeded-kmeans trainer."""
-    try:
-        row = read_resolved(spark, [f"{index_dir}/meta"]).collect()[0]
-        cbmode = row["codebook"] if "codebook" in row.__fields__ else "kmeans"
-        return {"residual": bool(row["residual"]), "codebook": str(cbmode or "kmeans")}
-    except Exception:
+    """Index metadata ({'residual': bool, 'codebook': str}); an index
+    published without meta, or before a flag existed, defaults to
+    raw-vector encoding with the seeded-kmeans trainer. A meta that exists
+    but cannot be read raises: serving codes at a guessed encoding returns
+    wrong neighbors."""
+    row = read_meta(spark, f"{index_dir}/codes")
+    if row is None:
         return {"residual": False, "codebook": "kmeans"}
+    cbmode = row["codebook"] if "codebook" in row.__fields__ else "kmeans"
+    return {"residual": bool(row["residual"]), "codebook": str(cbmode or "kmeans")}
 
 
 def ivfpq_load(spark, index_dir: str):

@@ -358,31 +358,33 @@ def read_batches(spark: SparkSession, state_dir: str) -> DataFrame:
     return read_resolved(spark, [state_dir]).drop("batch")
 
 
-def publish_batch(
-    df: DataFrame,
-    state_dir: str,
-    batch,
-    partition_by: list[str] | None = None,
-    sidecars: list[tuple[DataFrame, str]] | None = None,
-) -> None:
-    """Replace the whole state at ``state_dir`` with ``df`` as its only
-    ``batch=<batch>`` partition, through :func:`atomic_publish` (readers see
-    the old batches or the new one, never a mix). Index publishes start
-    their batches over this way; later increments land beside it with
-    :func:`write_batch`."""
-    atomic_publish(
-        df.withColumn("batch", F.lit(batch)),
-        state_dir,
-        partition_by=["batch", *(partition_by or [])],
-        sidecars=sidecars,
-    )
-
-
 _META = "_meta"
 
 
 def _meta_path(state_dir: str) -> str:
     return f"{state_dir.rstrip('/')}/{_META}"
+
+
+def publish_batch(
+    df: DataFrame,
+    state_dir: str,
+    batch,
+    partition_by: list[str] | None = None,
+    meta: DataFrame | None = None,
+) -> None:
+    """Replace the whole state at ``state_dir`` with ``df`` as its only
+    ``batch=<batch>`` partition, through :func:`atomic_publish` (readers see
+    the old batches or the new one, never a mix). Index publishes start
+    their batches over this way; later increments land beside it with
+    :func:`write_batch`. ``meta`` (one row of model parameters) becomes the
+    state's ``_meta`` sidecar inside the same generation, so the codes and
+    the parameters they were encoded at become visible together."""
+    atomic_publish(
+        df.withColumn("batch", F.lit(batch)),
+        state_dir,
+        partition_by=["batch", *(partition_by or [])],
+        sidecars=None if meta is None else [(meta, _META)],
+    )
 
 
 def compact_batches(
@@ -399,11 +401,9 @@ def compact_batches(
     beside ``batch=-1``; a ``_meta`` sidecar is republished inside the same
     generation. Run between availableNow drains. Returns the compacted row
     count."""
-    meta = _meta_path(state_dir)
-    sidecars = None
-    if HadoopFS(spark, meta).exists(meta):
-        sidecars = [(read_resolved(spark, [meta]), _META)]
-    publish_batch(fold(read_batches(spark, state_dir)), state_dir, -1, partition_by, sidecars)
+    path = _meta_path(state_dir)
+    meta = read_resolved(spark, [path]) if HadoopFS(spark, path).exists(path) else None
+    publish_batch(fold(read_batches(spark, state_dir)), state_dir, -1, partition_by, meta)
     return read_resolved(spark, [state_dir]).count()
 
 

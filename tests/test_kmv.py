@@ -38,7 +38,8 @@ def groups(spark):
 def sketch(spark, groups):
     sk = kmv_sketch(groups, ["g"], "v", k=K).cache()
     sk.count()
-    return sk
+    yield sk
+    sk.unpersist()
 
 
 def test_small_groups_are_exact_and_nulls_excluded(sketch):

@@ -42,7 +42,8 @@ def layout(spark, tmp_path_factory):
 def manifest(spark, layout):
     mf = build_manifest(spark, layout).cache()
     mf.count()
-    return mf
+    yield mf
+    mf.unpersist()
 
 
 TERMS = [
@@ -308,6 +309,7 @@ def test_stale_persisted_manifest_keeps_new_files(spark, tmp_path):
     got = scan_pruned(spark, d, [["value", ">=", 50.0]], manifest=mf)
     assert sorted(r.k for r in got.collect()) == list(range(50, 200))
     assert count_pruned(spark, d, [["value", ">=", 50.0]], manifest=mf) == 150
+    mf.unpersist()
 
 
 def test_date_term_against_timestamp_column_prunes_soundly(spark, tmp_path):
@@ -399,6 +401,8 @@ def test_refresh_manifest_is_incremental(spark, tmp_path):
     m3 = refresh_manifest(spark, path, m2)
     files = [r.file for r in m3.select("file").distinct().collect()]
     assert len(files) == 1 and files[0].endswith("b.parquet")
+    m1.unpersist()
+    m2.unpersist()
 
 
 def test_aggregate_files_prunes_shards_with_manifest(spark, tmp_path):
@@ -487,6 +491,7 @@ def test_count_pruned_is_metadata_only_when_provable(spark, tmp_path):
 
     with _pytest.raises(Exception):
         count_pruned(spark, path, [["value", ">=", 500.0]], manifest=mf)
+    mf.unpersist()
 
 
 def test_bloom_manifest_point_lookup(spark, tmp_path):
@@ -528,6 +533,7 @@ def test_bloom_manifest_point_lookup(spark, tmp_path):
     assert kept <= 2  # fpp noise only
     missing = scan_bloom_pruned(spark, path, "k", [10**12], bm)
     assert missing.count() == 0
+    bm.unpersist()
 
 
 def test_optimize_dataset_compacts_and_rebuilds_indexes(spark, tmp_path):
@@ -601,6 +607,8 @@ def test_refresh_bloom_manifest_incremental(spark, tmp_path):
     m3 = refresh_bloom_manifest(spark, path, "k", m2)
     files = [r.file for r in m3.collect()]
     assert len(files) == 1 and files[0].endswith("b.parquet")
+    m1.unpersist()
+    m2.unpersist()
 
 
 def test_scan_pruned_stacks_bloom_and_zonemap(spark, tmp_path):
@@ -638,6 +646,8 @@ def test_scan_pruned_stacks_bloom_and_zonemap(spark, tmp_path):
         manifest=zm, bloom_manifests={"k": bm},
     )
     assert out2.count() == 0
+    zm.unpersist()
+    bm.unpersist()
 
 
 def test_refresh_then_scan_equals_rebuild_then_scan(spark, tmp_path):
@@ -729,6 +739,7 @@ def test_hive_partition_values_prune_and_survive_pruned_reads(spark, tmp_path):
 
     s = skip_stats(mf, [["p", "==", 1], ["value", ">=", 900.0]])
     assert s["files_kept"] <= total // 3
+    mf.unpersist()
 
 
 def test_optimize_dataset_hive_layout_manifest_composes(spark, tmp_path):
@@ -807,3 +818,4 @@ def test_minmax_pruned_is_metadata_only_when_provable(spark, tmp_path):
         spark, path, "value", [["value", ">=", 0.0]], manifest=mf, dtype="double"
     )
     assert got == (5.0, 1004.0)
+    mf.unpersist()

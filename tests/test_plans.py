@@ -430,6 +430,21 @@ def test_registry_lints_error_free(spark):
     assert errors == {}
 
 
+def test_bench_plans_lint_error_free(spark):
+    """Default-tier smoke audit: no bench row's plan carries an
+    error-severity lint finding (the full registry is
+    test_registry_lints_error_free, in the slow tier)."""
+    from parqueryd_spark.plans.audit import lint_plan
+    from parqueryd_spark.queries import bench_queries
+
+    errors = {}
+    for name, fn in bench_queries().items():
+        finds = [f for f in lint_plan(fn(spark, SF_SMOKE)) if f["severity"] == "error"]
+        if finds:
+            errors[name] = finds
+    assert errors == {}
+
+
 def test_ivf_index_search_is_partition_pruned(spark):
     """VERDICT r7 item #3: the gated/benched IVF row must serve from the
     published centroid-partitioned index with the scan pruned to the probed

@@ -17,7 +17,9 @@ K = 10
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return load_table(spark, SF, "embeddings").cache()
+    df = load_table(spark, SF, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -521,3 +523,36 @@ def test_ivfpq_append_preserves_spread_replay_encoding(spark, emb, tmp_path):
         r["vec_id"]: list(r["codes"]) for r in pq_encode_cols(inc, cb).collect()
     }
     assert appended == expect and len(appended) > 0
+
+
+def test_ivfpq_meta_defaults_only_when_missing(spark, emb, tmp_path):
+    """The encoding flags travel as the codes' ``_meta`` sidecar: read back
+    after a publish, defaulted only when the index has no meta, and a meta
+    that exists but cannot be read raises — a silent default would serve
+    residual codes as raw-vector ones."""
+    import glob
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from parqueryd_spark.operators.quantization import ivfpq_meta, ivfpq_publish
+
+    cents = emb.orderBy("vec_id").limit(1).select(
+        F.col("vec_id").cast("int").alias("centroid_id"), "embedding"
+    )
+    d = str(tmp_path / "ivfpq")
+    ivfpq_publish(spark, d, emb, cents, dim=64, m=16, k_codes=16, residual=True, codebook="spread")
+    assert ivfpq_meta(spark, d) == {"residual": True, "codebook": "spread"}
+
+    meta_dir = os.path.join(d, "codes", "_meta")
+    parts = glob.glob(os.path.join(meta_dir, "*.parquet"))
+    assert parts
+    for part in parts:
+        with open(part, "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        ivfpq_meta(spark, d)
+
+    shutil.rmtree(meta_dir)
+    assert ivfpq_meta(spark, d) == {"residual": False, "codebook": "kmeans"}

@@ -18,7 +18,9 @@ K = 10
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return load_table(spark, SF, "embeddings").cache()
+    df = load_table(spark, SF, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -4,8 +4,8 @@ state (and its ``_meta`` sidecar) is written, merged and compacted through
 the ``sources/sinks`` helper set, availableNow ``foreachBatch`` queries
 start through its one starter, and reused data follows the two lifetime
 rules of ``queries.served_artifact``: published standing state lives in that
-one helper, and nothing a function persists outlives the function. No Spark
-needed."""
+one helper, and nothing a function persists outlives the function — in the
+tests too, which share one session. No Spark needed."""
 
 from __future__ import annotations
 
@@ -13,7 +13,8 @@ import ast
 import os
 import re
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "parqueryd_spark")
+TESTS = os.path.dirname(os.path.abspath(__file__))
+PKG = os.path.join(os.path.dirname(TESTS), "parqueryd_spark")
 
 RULES = [
     # (pattern, files allowed to contain it, what to use instead)
@@ -21,19 +22,19 @@ RULES = [
     (r"foreachBatch\(", {"sources/sinks.py", "streaming/windows.py"}, "sinks._start_available_now"),
     (r"\.drop\(\s*[\"']batch[\"']\s*\)", {"sources/sinks.py"}, "sinks.read_batches"),
     (r"batch=\{", {"sources/sinks.py"}, "sinks.write_batch"),
-    (r"_meta\"", {"sources/sinks.py"}, "sinks.write_meta / sinks.read_meta"),
+    (r"[_/]meta\"", {"sources/sinks.py"}, "sinks.write_meta / sinks.read_meta"),
     (r"(?m)^\w*_CACHE\b", set(), "queries.served_artifact, or no memo at all"),
     (r"mkdtemp\(", {"queries/__init__.py"}, "queries.served_artifact"),
 ]
 
 
-def _sources():
-    for root, _dirs, files in os.walk(PKG):
+def _sources(top: str = PKG):
+    for root, _dirs, files in os.walk(top):
         for name in files:
             if name.endswith(".py"):
                 path = os.path.join(root, name)
                 with open(path) as f:
-                    yield os.path.relpath(path, PKG).replace(os.sep, "/"), f.read()
+                    yield os.path.relpath(path, top).replace(os.sep, "/"), f.read()
 
 
 def test_one_mechanism_per_job():
@@ -85,10 +86,15 @@ def test_every_persist_is_unpersisted_in_its_function():
     """A frame reused inside one call lives only as long as that call:
     a function that persists or caches a frame also unpersists it (or
     takes it through ``localCheckpoint`` instead). A persist left behind
-    serves the next call — and the next timed bench trial — from memory."""
+    serves the next call — and the next timed bench trial — from memory.
+    A test or fixture that caches a frame releases it the same way (a
+    module fixture yields, then unpersists), so no test leaves a
+    CacheManager entry behind for the rest of the shared session."""
     found = [
-        f"{rel}:{ln}: persist()/cache() with no unpersist() in the same function"
-        for rel, text in _sources()
+        f"{os.path.basename(top)}/{rel}:{ln}: persist()/cache() with no unpersist() "
+        "in the same function"
+        for top in (PKG, TESTS)
+        for rel, text in _sources(top)
         for ln in _persists_without_unpersist(text)
     ]
     assert not found, "\n".join(found)
