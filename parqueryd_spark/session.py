@@ -44,30 +44,7 @@ def get_spark(
         # dims are far below 10 MB; AQE still upgrades to broadcast from accurate
         # runtime stats when a shuffle side turns out tiny.
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
-        # Runtime Bloom-filter join pre-filtering (guide §3.2, VERDICT r15
-        # item #2) — EXAMINED, MEASURED, left at stock thresholds. The two
-        # sizing knobs are exposed as env parameters so a cluster deployment
-        # can widen them without code changes, but the local defaults stay
-        # Spark's stock values after measurement (OPTIMIZATION_r16.md):
-        # at sf0.1 the injection CANNOT fire for the engine's fact-fact
-        # joins (the date-filtered orders side is small enough that
-        # isProbablyShuffleJoin refuses — the SMJ only exists because of the
-        # scale-correctness merge hint), and at sf1, where it DOES fire
-        # (might_contain on the lineitem scan, plans/r16/
-        # q5_local_volume_sf1_bloom.txt), it costs a reproducible ~10% on
-        # q3/q5: the ~40-60%-selective date predicates do not drop enough
-        # big-side rows to pay for the second creation-side scan when the
-        # shuffle is local-disk-bound rather than network-bound. Raise
-        # SPARK_GRAFT_BLOOM_CREATION (and lower SPARK_GRAFT_BLOOM_APPLY) on
-        # network-bound clusters with genuinely selective build sides.
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            os.environ.get("SPARK_GRAFT_BLOOM_CREATION", "10MB"),
-        )
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            os.environ.get("SPARK_GRAFT_BLOOM_APPLY", "10GB"),
-        )
+        # runtime Bloom-filter join thresholds: Spark's stock 10MB/10GB, kept after measurement (OPTIMIZATION_r16.md)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/parqueryd_spark_warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -1,10 +1,10 @@
-"""Data layout: hive-partitioned writes, range-sorted files, atomic publish.
+"""Data layout: hive-partitioned writes, range-sorted and Z-ordered files.
 
 At 100 TB, layout IS performance: partition pruning turns full scans into
 single-partition reads, and range-sorted files give parquet row-group min/max
 stats real selectivity. Atomic publication lives in
 ``parqueryd_spark.sources.sinks.atomic_publish`` (the moveparquet-barrier
-analog); ``publish_atomic`` here is a thin deprecated alias to it.
+analog).
 """
 
 from __future__ import annotations
@@ -94,15 +94,6 @@ def zorder_layout(
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
     )
-
-
-def publish_atomic(df: DataFrame, final_path: str) -> None:
-    """Deprecated alias for :func:`parqueryd_spark.sources.sinks.atomic_publish`
-    (one concept, one implementation — the sinks version adds uuid-tokenized
-    staging dirs and rollback if the final rename fails)."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    atomic_publish(df, final_path)
 
 
 def cache_table(spark: SparkSession, path: str, name: str) -> DataFrame:

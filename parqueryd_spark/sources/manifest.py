@@ -16,12 +16,20 @@ directory of parquet. This module is that layer as plain DataFrames:
   numerically and lexically. The manifest is itself a small DataFrame —
   persist it next to the data and rebuild incrementally per publish batch
   (it unions/overwrites per file, like the other incremental indexes).
-- ``prune_files``: evaluate the reference's ``[[col, op, value], ...]``
+- ``_plan``: evaluate the reference's ``[[col, op, value], ...]``
   where-terms (the same triples ``functions/compile.py`` executes, through
   the same op normalization — one predicate language for execution AND
-  planning) against the manifest, yielding a per-file keep verdict.
+  planning) against the manifest, yielding one verdict per file. Every
+  pruned scan, count, min/max and skip statistic takes its file set from it.
 - ``scan_pruned``: read only the kept files, then apply the exact compiled
   filter — pruning is an optimization, never a semantics change.
+
+The file set is the dataset's live listing; the manifest only supplies
+stats. A live file without manifest stats is scanned, and a manifest row
+whose file no longer exists is ignored, so a stale manifest (files
+published or compacted away since its last refresh) costs speed, never rows.
+The parity hook ``prune_paths`` lists no shard directory: it drops a shard
+only when every manifest file under it is ruled out.
 
 Soundness: the parquet spec defines ``min_value``/``max_value`` as BOUNDS
 (they may be truncated toward wider ranges, e.g. long strings), so interval
@@ -41,11 +49,12 @@ as text with every term value and column name rendered by ``_lit`` — a
 handful of py4j calls whatever the term count, and no user value is ever
 quoted or escaped. ``build_manifest`` and ``refresh_manifest`` return the
 manifest hash-partitioned on ``file`` (``_by_file``), so once it is cached
-the aggregation (and ``select("file").distinct()``) plans no Exchange: a
-pruning call is one Spark job, the only one a ``manifest=`` call of the
-parity API runs before its query. The driver then collects one small row per
-file — the same O(files) planning-time listing Spark's own FileIndex does.
-``prune_paths`` without where-terms keeps every path and runs no job at all.
+the aggregation plans no Exchange: planning a pruned scan, a provable count
+or min/max, or a skip statistic is one Spark job, and it is the only one a
+``manifest=`` call of the parity API runs before its query. The driver then
+collects one small row per file (``_collect_by_file``) — the same O(files)
+planning-time listing Spark's own FileIndex does. ``prune_paths`` without
+where-terms keeps every path and runs no job at all.
 
 Hive-partitioned layouts compose: ``build_manifest`` records
 directory-derived ``key=value`` partition values as constant-per-file stats
@@ -60,8 +69,9 @@ from __future__ import annotations
 import bisect
 import datetime as _dt
 from collections.abc import Iterable, Sequence
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -280,9 +290,10 @@ def _footer_reader(wanted: list[str] | None, root: str | None = None):
                     )
                 # sentinel coverage row (column=""): EVERY swept file gets at
                 # least one manifest row, so a narrowed manifest over a file
-                # whose schema lacks every wanted column still registers the
-                # file in prune_files' universe (absent columns stay
-                # unprunable instead of silently dropping the file's rows)
+                # whose schema lacks every wanted column still carries its
+                # row count and stays in the manifest's own file set
+                # (pruned_file_list, prune_paths, skip_stats), its absent
+                # columns unprunable instead of its rows silently dropped
                 rows.append(
                     {
                         "file": uri,
@@ -493,25 +504,58 @@ def _file_verdicts(
     return mf.groupBy("file").agg(*(F.expr(f"{sql} AS {name}") for name, sql in aggs.items()))
 
 
-def prune_files(
-    manifest: DataFrame, where_terms: Sequence[Sequence] | None
-) -> DataFrame:
-    """Per-file keep verdicts ``(file, keep)`` for AND-combined where-terms
-    (the reference's triple syntax — ``functions/compile.py``), from one
-    per-file aggregation over the manifest (``_file_verdicts``). A term
-    whose column is absent from the manifest keeps every file; an all-null
-    chunk satisfies no op (SQL NULL comparison semantics) and is skipped."""
-    return _file_verdicts(manifest, normalize_where_terms(where_terms)).select("file", "keep")
+class _Verdict(NamedTuple):
+    """One file's planning facts (the ``_file_verdicts`` columns). A live
+    file the manifest has no stats for keeps these defaults: kept, never
+    proven full, no row count or bounds — it is scanned."""
+
+    file: str
+    keep: bool = True
+    full: bool = False
+    n_rows: int | None = None
+    has_min_max: bool | None = None
+    min_num: float | None = None
+    max_num: float | None = None
+
+
+def _collect_by_file(verdicts: DataFrame) -> dict[str, Row]:
+    """Collect per-file verdict rows, keyed by ``_norm_path(file)`` — the
+    one planning-time collect every pruning call makes (O(files), the analog
+    of Spark's own driver-side file listing)."""
+    return {_norm_path(r.file): r for r in verdicts.collect()}
+
+
+def _plan(
+    mf: DataFrame,
+    terms: list,
+    path: str | None = None,
+    full: bool = False,
+    stats_col: str | None = None,
+) -> list[_Verdict]:
+    """The zone-map planner: one verdict per file for normalized ``terms``,
+    from one collect of ``_file_verdicts``. With ``path`` the files are the
+    dataset's live listing and the manifest only supplies stats (a live file
+    without stats is kept, a row for a vanished file is ignored); without
+    it the manifest's own files are the set."""
+    rows = _collect_by_file(_file_verdicts(mf, terms, full=full, stats_col=stats_col))
+    if path is None:
+        return [_Verdict(**r.asDict()) for r in rows.values()]
+    plan = []
+    for f in HadoopFS(mf.sparkSession, path).list_files(path):
+        r = rows.get(_norm_path(f))
+        plan.append(_Verdict(f) if r is None else _Verdict(**{**r.asDict(), "file": f}))
+    return plan
 
 
 def pruned_file_list(
     manifest: DataFrame, where_terms: Sequence[Sequence] | None
 ) -> list[str]:
-    """The kept file paths — the planning-time collect (O(kept files), the
-    analog of Spark's own driver-side file listing)."""
-    return sorted(
-        r.file for r in prune_files(manifest, where_terms).filter("keep").collect()
-    )
+    """The manifest files that may hold a row matching the AND-combined
+    where-terms (the reference's triple syntax — ``functions/compile.py``).
+    A term whose column is absent from the manifest keeps every file; an
+    all-null chunk satisfies no op (SQL NULL comparison semantics) and is
+    skipped."""
+    return sorted(v.file for v in _plan(manifest, normalize_where_terms(where_terms)) if v.keep)
 
 
 def prune_paths(
@@ -529,10 +573,11 @@ def prune_paths(
 
     A shard path may be a FILE or a DIRECTORY of part-files (Spark writes):
     a directory is dropped only when EVERY manifest file under it is ruled
-    out; a path with no manifest coverage at all is kept.
+    out; a path with no manifest coverage at all is kept. Shard directories
+    are not listed, so the manifest is the file set here.
 
     Without where-terms every path is kept and no Spark job runs. Otherwise
-    the verdicts are one per-file aggregation (``prune_files``), and the
+    the verdicts are one per-file aggregation (``_file_verdicts``), and the
     driver collects one ``(file, keep)`` row per manifest file. Matching is
     O(paths log files): verdict keys are sorted once and each shard path
     binary-searches its prefix range (a per-path linear scan of the verdict
@@ -541,10 +586,7 @@ def prune_paths(
     terms = normalize_where_terms(where_terms)
     if not terms:
         return list(paths)
-    verdicts = {
-        _norm_path(r.file): bool(r.keep)
-        for r in _file_verdicts(manifest, terms).select("file", "keep").collect()
-    }
+    verdicts = _collect_by_file(_file_verdicts(manifest, terms).select("file", "keep"))
     keys = sorted(verdicts)
     kept: list[str] = []
     for p in paths:
@@ -554,34 +596,27 @@ def prune_paths(
         # [prefix, prefix + U+10FFFF); an exact-file shard matches np_ itself
         lo = bisect.bisect_left(keys, prefix)
         hi = bisect.bisect_left(keys, prefix + "\U0010ffff")
-        under = [verdicts[k] for k in keys[lo:hi]]
+        under = [verdicts[k].keep for k in keys[lo:hi]]
         if np_ in verdicts:
-            under.append(verdicts[np_])
+            under.append(verdicts[np_].keep)
         if not under or any(under):
             kept.append(p)
     return kept
 
 
-def _uncovered_live_files(spark: SparkSession, path: str, mf: DataFrame) -> list[str]:
-    """Live files under ``path`` with NO manifest coverage — a stale
-    persisted manifest's blind spot; callers keep (scan) them."""
-    covered = {_norm_path(r.file) for r in mf.select("file").distinct().collect()}
-    return sorted(
-        f for f in HadoopFS(spark, path).list_files(path) if _norm_path(f) not in covered
-    )
-
-
 def skip_stats(manifest: DataFrame, where_terms: Sequence[Sequence] | None) -> dict:
     """How much the layout lets this predicate skip: files/rows total vs
-    kept. ``rows_kept`` is the scheduling bound (rows in files we must
+    kept over the manifest's files, summed on the driver from the planner's
+    verdicts. ``rows_kept`` is the scheduling bound (rows in files we must
     read), not the match count."""
-    row = _file_verdicts(manifest, normalize_where_terms(where_terms)).agg(
-        F.count(F.lit(1)).alias("files_total"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("files_kept"),
-        F.sum("n_rows").alias("rows_total"),
-        F.sum(F.when(F.col("keep"), F.col("n_rows")).otherwise(0)).alias("rows_kept"),
-    ).collect()[0]
-    return {k: (0 if row[k] is None else int(row[k])) for k in row.asDict()}
+    plan = _plan(manifest, normalize_where_terms(where_terms))
+    kept = [v for v in plan if v.keep]
+    return {
+        "files_total": len(plan),
+        "files_kept": len(kept),
+        "rows_total": sum(v.n_rows for v in plan),
+        "rows_kept": sum(v.n_rows for v in kept),
+    }
 
 
 def scan_pruned(
@@ -592,9 +627,10 @@ def scan_pruned(
     select: Iterable[str] | None = None,
     bloom_manifests: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
-    """Read only the files the manifest cannot rule out, then apply the
-    EXACT compiled predicate — identical results to a full scan + filter
-    (property-tested), minus the skipped files' tasks. Pass a persisted
+    """Read only the live files the manifest cannot rule out, then apply
+    the EXACT compiled predicate — identical results to a full scan + filter
+    (property-tested), minus the skipped files' tasks. A file the manifest
+    has no stats for is read (see ``_plan``). Pass a persisted
     ``manifest`` for standing data; omitting it builds one on the fly (a
     footer sweep — still cheaper than a data scan for selective queries,
     but the point of the layer is to build once per publish).
@@ -606,28 +642,15 @@ def scan_pruned(
     AND key == X" reads only files passing both. Sound either way (bloom:
     no false negatives; zone map: spec bounds; exact filter regardless)."""
     mf = manifest if manifest is not None else build_manifest(spark, path)
-    kept = pruned_file_list(mf, where_terms)
-    if manifest is not None:
-        # a STALE persisted manifest (new files published since the last
-        # refresh) must not silently drop the uncovered files' rows: union
-        # the live listing and keep anything without manifest coverage
-        # (conservative — the same contract as an absent column). A freshly
-        # built manifest just listed the same files, so this only runs for
-        # caller-persisted manifests.
-        kept = kept + _uncovered_live_files(spark, path, mf)
+    terms = normalize_where_terms(where_terms)
+    kept = [v.file for v in _plan(mf, terms, path) if v.keep]
     if bloom_manifests:
         dtypes = {f.name: f.dataType for f in read_resolved(spark, [path]).schema.fields}
-        for col_name, op, value in normalize_where_terms(where_terms):
+        for col_name, op, value in terms:
             if col_name not in bloom_manifests or op not in ("==", "in"):
                 continue
             vals = value if op == "in" else [value]
-            verdicts = {
-                _norm_path(r.file): bool(r.keep)
-                for r in prune_files_bloom(
-                    bloom_manifests[col_name], vals, value_type=dtypes.get(col_name)
-                ).collect()
-            }
-            kept = [f for f in kept if verdicts.get(_norm_path(f), True)]
+            kept = _bloom_kept(kept, bloom_manifests[col_name], vals, dtypes.get(col_name))
     if not kept:
         base = read_resolved(spark, [path]).filter(F.lit(False))
     else:
@@ -664,15 +687,13 @@ def count_pruned(
     provably-all-matching — are scanned with the exact predicate. On a
     clustered layout (sources/layout.py) a range count touches the two edge
     files of the range and sums the interior from kilobytes of manifest —
-    the zone-map analog of partition-level count pushdown."""
+    the zone-map analog of partition-level count pushdown. Only live files
+    count, and one without manifest stats is a boundary file (see
+    ``_plan``)."""
     mf = manifest if manifest is not None else build_manifest(spark, path)
-    plan = _file_verdicts(mf, normalize_where_terms(where_terms), full=True).collect()
-    stat_count = sum(r.n_rows for r in plan if r.keep and r.full)
-    boundary = sorted(r.file for r in plan if r.keep and not r.full)
-    if manifest is not None:
-        # stale-manifest guard (see scan_pruned): uncovered live files can't
-        # be stat-counted or ruled out — scan them with the exact predicate
-        boundary = boundary + _uncovered_live_files(spark, path, mf)
+    plan = _plan(mf, normalize_where_terms(where_terms), path, full=True)
+    stat_count = sum(v.n_rows for v in plan if v.keep and v.full)
+    boundary = [v.file for v in plan if v.keep and not v.full]
     if not boundary:
         return int(stat_count)
     return int(stat_count + _read_kept(spark, path, boundary, where_terms).count())
@@ -705,28 +726,26 @@ def minmax_pruned(
 
     ``dtype`` (a Spark type string, e.g. ``"double"``) skips the schema
     lookup — pass it when the answer must come from the manifest ALONE (the
-    count_pruned posture: a fully-provable predicate then needs no data file
-    on disk at all)."""
+    count_pruned posture: a fully-provable predicate then reads no data
+    file, it only lists them)."""
     num_types = {"tinyint", "smallint", "int", "bigint", "float", "double"}
     if dtype is None:
         dtype = dict(read_resolved(spark, [path]).dtypes).get(col)
     metadata_ok = dtype in num_types
     mf = manifest if manifest is not None else build_manifest(spark, path)
-    plan = _file_verdicts(mf, normalize_where_terms(where_terms), full=True, stats_col=col).collect()
+    plan = _plan(mf, normalize_where_terms(where_terms), path, full=True, stats_col=col)
     lo = hi = None
     boundary = []
-    for r in plan:
-        if not r.keep:
+    for v in plan:
+        if not v.keep:
             continue
-        if metadata_ok and r.full and r.has_min_max and r.min_num is not None:
-            lo = r.min_num if lo is None else min(lo, r.min_num)
-            hi = r.max_num if hi is None else max(hi, r.max_num)
+        if metadata_ok and v.full and v.has_min_max and v.min_num is not None:
+            lo = v.min_num if lo is None else min(lo, v.min_num)
+            hi = v.max_num if hi is None else max(hi, v.max_num)
         else:
-            boundary.append(r.file)
-    if manifest is not None:
-        boundary = boundary + _uncovered_live_files(spark, path, mf)
+            boundary.append(v.file)
     if boundary:
-        scan = _read_kept(spark, path, sorted(boundary), where_terms)
+        scan = _read_kept(spark, path, boundary, where_terms)
         row = scan.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
         s_lo, s_hi = row["lo"], row["hi"]
         if s_lo is not None:
@@ -757,7 +776,7 @@ def bloom_manifest(
     """Per-FILE Bloom filters for point-lookup skipping on UNCLUSTERED
     columns — the skipping mechanism min/max zone maps can't provide: when a
     high-cardinality key is scattered (not range-clustered), every file's
-    [min, max] spans the whole domain and ``prune_files`` keeps everything,
+    [min, max] spans the whole domain and the zone map keeps everything,
     but a key lives in few files and each file's bloom proves its absence
     from the rest. One row per file ``(file, n_bits, n_hashes, bitmap)`` —
     the operators/membership.py filter at file grain, same double-hashing
@@ -846,6 +865,13 @@ def prune_files_bloom(bloom_mf: DataFrame, values: Sequence, value_type=None) ->
     )
 
 
+def _bloom_kept(files: Sequence[str], bloom_mf: DataFrame, values: Sequence, value_type) -> list[str]:
+    """The ``files`` whose bloom may contain one of ``values``; a file
+    without a bloom row is kept (conservative)."""
+    verdicts = _collect_by_file(prune_files_bloom(bloom_mf, values, value_type=value_type))
+    return [f for f in files if (r := verdicts.get(_norm_path(f))) is None or r.keep]
+
+
 def scan_bloom_pruned(
     spark: SparkSession,
     path: str,
@@ -857,13 +883,8 @@ def scan_bloom_pruned(
     ``values``; the exact ``isin`` filter then runs on the survivors —
     identical results to a full scan. Files without manifest coverage are
     kept (conservative), matching the other pruned-scan contracts."""
-    all_files = HadoopFS(spark, path).list_files(path)
     dtype = read_resolved(spark, [path]).schema[key_col].dataType
-    verdicts = {
-        _norm_path(r.file): bool(r.keep)
-        for r in prune_files_bloom(bloom_mf, values, value_type=dtype).collect()
-    }
-    kept = [f for f in all_files if verdicts.get(_norm_path(f), True)]
+    kept = _bloom_kept(HadoopFS(spark, path).list_files(path), bloom_mf, values, dtype)
     typed = [F.lit(v).cast(dtype) for v in values]
     if not kept:
         return read_resolved(spark, [path]).filter(F.lit(False))

@@ -365,6 +365,15 @@ def _meta_path(state_dir: str) -> str:
     return f"{state_dir.rstrip('/')}/{_META}"
 
 
+def _read_meta_files(spark: SparkSession, state_dir: str) -> DataFrame:
+    """The ``_meta`` sidecar of ``state_dir``, read through its part files:
+    Spark ignores a ``_``-prefixed path it is handed as hidden (and logs
+    ``All paths were ignored``). A missing sidecar raises Spark's
+    ``PATH_NOT_FOUND``."""
+    path = _meta_path(state_dir)
+    return read_resolved(spark, HadoopFS(spark, path).list_files(path) or [path])
+
+
 def publish_batch(
     df: DataFrame,
     state_dir: str,
@@ -402,7 +411,7 @@ def compact_batches(
     generation. Run between availableNow drains. Returns the compacted row
     count."""
     path = _meta_path(state_dir)
-    meta = read_resolved(spark, [path]) if HadoopFS(spark, path).exists(path) else None
+    meta = _read_meta_files(spark, state_dir) if HadoopFS(spark, path).exists(path) else None
     publish_batch(fold(read_batches(spark, state_dir)), state_dir, -1, partition_by, meta)
     return read_resolved(spark, [state_dir]).count()
 
@@ -420,7 +429,7 @@ def read_meta(spark: SparkSession, state_dir: str) -> Row | None:
     corrupt or unreadable file) raises: silently defaulting could serve a
     model at the wrong parameters."""
     try:
-        return read_resolved(spark, [_meta_path(state_dir)]).collect()[0]
+        return _read_meta_files(spark, state_dir).collect()[0]
     except AnalysisException as e:
         cls = getattr(e, "getErrorClass", lambda: "")() or ""
         if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):

@@ -9,10 +9,11 @@ files per trigger; ``refresh_manifest`` footer-sweeps ONLY those (O(new
 files), never the standing corpus) and drops rows for files a replayed batch
 overwrote. The manifest republishes through the same write-then-swap pattern
 the data uses, so readers either see the previous complete generation or the
-new one — and even a reader racing a swap stays CORRECT, because round 9's
-staleness guard makes ``scan_pruned``/``count_pruned`` conservatively keep
-any live file the manifest doesn't cover (a stale manifest costs speed,
-never rows).
+new one — and even a reader racing a swap stays CORRECT, because the
+pruned reads (``scan_pruned``/``count_pruned``/``minmax_pruned``) take
+their file set from the live listing and use the manifest only for stats:
+a live file it doesn't cover is scanned, a row for a vanished file is
+ignored (a stale manifest costs speed, never rows).
 
 Replay safety: data lands through ``sources/sinks.write_batch`` into its own
 ``batch=<id>`` directory (the at-least-once contract every streaming sink here
@@ -57,8 +58,8 @@ def stream_ingest_with_manifest(
 
     def _swap_in(mf: DataFrame, base_dir: str, batch_id: int) -> None:
         # write-then-swap: stage the new generation, then replace — readers
-        # hold the old generation's file handles or fall back to the
-        # conservative keep-uncovered path mid-swap
+        # hold the old generation's file handles, and a pruned read mid-swap
+        # scans whatever live files the manifest it holds doesn't cover
         import shutil
 
         live = os.path.join(base_dir, "live")

@@ -126,6 +126,32 @@ def test_batch_state_lifecycle_and_read_jobs(spark, tmp_path):
         read_meta(spark, str(corrupt))
 
 
+def test_meta_sidecar_is_read_through_its_part_files(spark, tmp_path, monkeypatch):
+    """``read_meta`` and the meta read of ``compact_batches`` hand Spark the
+    sidecar's part files, not the ``_meta`` directory (Spark ignores a
+    ``_``-prefixed path it is given and logs ``All paths were ignored``);
+    the row still round-trips through a compaction."""
+    from parqueryd_spark.sources import sinks
+
+    state = str(tmp_path / "state")
+    sinks.write_batch(spark.createDataFrame([(1,)], "n long"), state, 0)
+    sinks.write_meta(spark.createDataFrame([(0.5, 2)], "k double, n int"), state)
+    seen = []
+    read = sinks.read_resolved
+
+    def spy(spark_, paths, **kw):
+        seen.extend(paths)
+        return read(spark_, paths, **kw)
+
+    monkeypatch.setattr(sinks, "read_resolved", spy)
+    assert tuple(sinks.read_meta(spark, state)) == (0.5, 2)
+    assert sinks.compact_batches(spark, state, lambda df: df) == 1
+    assert tuple(sinks.read_meta(spark, state)) == (0.5, 2)
+    meta_reads = [p for p in seen if "/_meta" in p]
+    assert meta_reads, seen
+    assert all("/_meta/part-" in p and p.endswith(".parquet") for p in meta_reads), meta_reads
+
+
 def test_lm_load_and_read_current_plan_without_inference_jobs(spark, tmp_path):
     """Loading a published LM runs only its 1-row meta collect (the parent
     read path ran 3 jobs: two inferences and the collect), and opening the

@@ -9,8 +9,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from parqueryd_spark.plans.audit import explain_str
-from parqueryd_spark.sources.layout import optimize_layout, publish_atomic, write_partitioned
+from parqueryd_spark.sources.layout import optimize_layout, write_partitioned
 from parqueryd_spark.sources.parquet import load_table
+from parqueryd_spark.sources.sinks import atomic_publish
 from tests.conftest import SF_SMOKE
 
 
@@ -44,10 +45,10 @@ def test_optimize_layout_preserves_rows(spark, tmp_path):
 def test_publish_atomic_swap(spark, tmp_path):
     path = str(tmp_path / "published")
     v1 = spark.range(10).withColumnRenamed("id", "x")
-    publish_atomic(v1, path)
+    atomic_publish(v1, path)
     assert spark.read.parquet(path).count() == 10
     v2 = spark.range(25).withColumnRenamed("id", "x")
-    publish_atomic(v2, path)
+    atomic_publish(v2, path)
     assert spark.read.parquet(path).count() == 25
     assert not os.path.exists(path + ".staging") and not os.path.exists(path + ".old")
 

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from parqueryd_spark.sources.manifest import (
     build_manifest,
-    prune_files,
     pruned_file_list,
     scan_pruned,
     skip_stats,
@@ -189,6 +188,32 @@ def test_parity_call_plans_with_at_most_the_verdict_job(spark, tmp_path):
     assert attached == ["a", "b"] and jobs == []
 
 
+def test_pruned_calls_plan_with_one_verdict_job(spark, layout, manifest):
+    """Over a cached manifest with the files on disk, each zone-map consumer
+    plans from one verdict collect: building a ``scan_pruned`` DataFrame (no
+    action), a fully provable ``count_pruned``, a fully provable
+    ``minmax_pruned`` given ``dtype``, and ``skip_stats`` each submit exactly
+    one Spark job. The live file set comes from a driver-side listing."""
+    from parqueryd_spark.sources.manifest import count_pruned, minmax_pruned
+
+    provable = [["value", ">=", 0.0]]
+    calls = {
+        "scan": lambda: scan_pruned(spark, layout, TERMS[0], manifest=manifest),
+        "count": lambda: count_pruned(spark, layout, provable, manifest=manifest),
+        "minmax": lambda: minmax_pruned(
+            spark, layout, "value", provable, manifest=manifest, dtype="double"
+        ),
+        "skip-stats": lambda: skip_stats(manifest, TERMS[0]),
+    }
+    out = {}
+    for name, call in calls.items():
+        out[name], jobs = _jobs_submitted(spark, f"one-verdict-{name}", call)
+        assert len(jobs) == 1, (name, jobs)
+    assert out["count"] == N_ROWS
+    assert out["minmax"] == (0.0, float(N_ROWS - 1))
+    assert out["skip-stats"]["files_total"] == N_FILES
+
+
 def test_soundness_keeps_every_matching_file(spark, layout, manifest):
     """Property: any file containing a matching row MUST be kept — a false
     skip would silently drop rows (the exact residual filter can't recover
@@ -245,8 +270,9 @@ def test_absent_manifest_column_is_conservative(spark, layout):
 
 def test_narrow_manifest_keeps_files_lacking_every_wanted_column(spark, tmp_path):
     """ADVICE r8: a file whose schema lacks EVERY manifest column used to
-    emit zero manifest rows, so prune_files silently dropped it from the
-    universe and scan_pruned lost its rows. The sentinel row keeps it."""
+    emit zero manifest rows, so the manifest's file set silently dropped it
+    and scan_pruned lost its rows. The sentinel row keeps it in that set
+    (``pruned_file_list``); ``scan_pruned`` reads the live listing."""
     import os
 
     d = str(tmp_path / "drifted")
@@ -309,6 +335,44 @@ def test_stale_persisted_manifest_keeps_new_files(spark, tmp_path):
     got = scan_pruned(spark, d, [["value", ">=", 50.0]], manifest=mf)
     assert sorted(r.k for r in got.collect()) == list(range(50, 200))
     assert count_pruned(spark, d, [["value", ">=", 50.0]], manifest=mf) == 150
+    mf.unpersist()
+
+
+def test_stale_manifest_after_compaction_reads_the_live_files(spark, tmp_path):
+    """A manifest built before ``compact_parquet`` and one more publish
+    still gives exact answers: the live listing is the file set, rows for
+    the compacted-away files are ignored, and the compacted and new files
+    (no manifest stats) are scanned. Stat-counting the vanished files
+    double-counted a fully provable count (400 for 200 rows), and reading
+    them raised ``PATH_NOT_FOUND``."""
+    import os
+
+    from parqueryd_spark.functions.compile import compile_where_terms
+    from parqueryd_spark.sources.manifest import count_pruned, minmax_pruned
+    from parqueryd_spark.sources.sinks import compact_parquet
+
+    d = str(tmp_path / "compacted")
+    spark.range(200).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("value")
+    ).repartitionByRange(4, "value").write.parquet(d)
+    mf = build_manifest(spark, d).cache()
+    mf.count()
+    assert compact_parquet(spark, d, 2) == 200
+    stage = str(tmp_path / "stage")
+    spark.range(-50, 0).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("value")
+    ).coalesce(1).write.parquet(stage)
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    os.replace(os.path.join(stage, part), os.path.join(d, "late.parquet"))
+
+    assert count_pruned(spark, d, [["value", ">=", 0.0]], manifest=mf) == 200
+    for terms in ([["value", ">=", -20.0], ["value", "<", 150.0]], [["value", ">", 120.0]]):
+        want = spark.read.parquet(d).filter(compile_where_terms(terms))
+        got = scan_pruned(spark, d, terms, manifest=mf)
+        assert sorted(r.k for r in got.collect()) == sorted(r.k for r in want.collect()), terms
+        assert count_pruned(spark, d, terms, manifest=mf) == want.count(), terms
+        lo, hi = want.agg(F.min("value"), F.max("value")).collect()[0]
+        assert minmax_pruned(spark, d, "value", terms, manifest=mf) == (lo, hi), terms
     mf.unpersist()
 
 
@@ -467,29 +531,37 @@ def test_count_pruned_matches_exact(spark, layout, manifest):
         assert got == want, terms
 
 
+def _overwrite_with_junk(path: str) -> None:
+    """Replace every data file under ``path`` in place with bytes no parquet
+    reader accepts: the files stay in the live listing, so any read of them
+    raises."""
+    import os
+
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            if name.endswith(".parquet"):
+                with open(os.path.join(root, name), "wb") as f:
+                    f.write(b"not a parquet file")
+
+
 def test_count_pruned_is_metadata_only_when_provable(spark, tmp_path):
     """A predicate every file FULLY satisfies needs no data read at all:
-    delete the data files after building the manifest — a stat-only count
-    still answers; any accidental scan would blow up on the missing files."""
-    import os
-    import shutil
-
+    overwrite the data files with junk after building the manifest — a
+    stat-only count still answers; any accidental scan would raise on the
+    junk files."""
     from parqueryd_spark.sources.manifest import count_pruned
 
-    path = str(tmp_path / "gone")
+    path = str(tmp_path / "junk")
     spark.range(1000).select(F.col("id").cast("double").alias("value")).repartition(
         4
     ).write.parquet(path)
     mf = build_manifest(spark, path).cache()
     mf.count()
-    shutil.rmtree(path)
-    os.makedirs(path)
+    _overwrite_with_junk(path)
     assert count_pruned(spark, path, [["value", ">=", 0.0]], manifest=mf) == 1000
-    # range ending mid-data still stat-counts the provable prefix only if
-    # boundary files exist on disk — here they don't, so it must raise
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
+    # a range ending mid-data needs its boundary files scanned — here they
+    # are junk, so it must raise
+    with pytest.raises(Exception):
         count_pruned(spark, path, [["value", ">=", 500.0]], manifest=mf)
     mf.unpersist()
 
@@ -794,13 +866,11 @@ def test_minmax_pruned_matches_exact(spark, layout, manifest):
 
 def test_minmax_pruned_is_metadata_only_when_provable(spark, tmp_path):
     """A numeric min/max whose predicate every file fully satisfies needs no
-    data read: delete the files after the manifest — stats still answer."""
-    import os
-    import shutil
-
+    data read: overwrite the files with junk after the manifest — stats
+    still answer, and a predicate that needs a boundary scan raises."""
     from parqueryd_spark.sources.manifest import minmax_pruned
 
-    path = str(tmp_path / "gone2")
+    path = str(tmp_path / "junk2")
     spark.range(5, 1005).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("value")
     ).repartition(4).write.parquet(path)
@@ -810,12 +880,14 @@ def test_minmax_pruned_is_metadata_only_when_provable(spark, tmp_path):
         5.0,
         1004.0,
     )
-    shutil.rmtree(path)
-    os.makedirs(path)
-    # with files gone, a fully-provable predicate still answers from stats
-    # alone when the caller supplies the dtype (count_pruned posture)
+    _overwrite_with_junk(path)
+    # with the files unreadable, a fully-provable predicate still answers
+    # from stats alone when the caller supplies the dtype (count_pruned
+    # posture)
     got = minmax_pruned(
         spark, path, "value", [["value", ">=", 0.0]], manifest=mf, dtype="double"
     )
     assert got == (5.0, 1004.0)
+    with pytest.raises(Exception):
+        minmax_pruned(spark, path, "value", [["value", ">=", 500.0]], manifest=mf, dtype="double")
     mf.unpersist()

@@ -2,9 +2,10 @@
 published data is read through ``sources/parquet.read_resolved``, batch
 state (and its ``_meta`` sidecar) is written, merged and compacted through
 the ``sources/sinks`` helper set, availableNow ``foreachBatch`` queries
-start through its one starter, and reused data follows the two lifetime
-rules of ``queries.served_artifact``: published standing state lives in that
-one helper, and nothing a function persists outlives the function — in the
+start through its one starter, zone-map verdicts come from one planner,
+and reused data follows the two lifetime rules of
+``queries.served_artifact``: published standing state lives in that one
+helper, and nothing a function persists outlives the function — in the
 tests too, which share one session. No Spark needed."""
 
 from __future__ import annotations
@@ -62,6 +63,38 @@ def test_batch_drop_only_in_read_batches():
         for m in re.finditer(r"\.drop\(\s*[\"']batch[\"']\s*\)", text)
     ]
     assert lines and all(fn.lineno <= ln <= fn.end_lineno for ln in lines), lines
+
+
+def test_file_verdicts_collected_only_by_the_planner():
+    """Every zone-map consumer takes its per-file verdicts from one planner:
+    ``_file_verdicts(`` is called only in ``manifest._plan`` and in
+    ``prune_paths`` (which shares its collect helper but keeps its caller's
+    shard list), and nowhere else in the package."""
+    allowed = {"_plan", "prune_paths"}
+    found = []
+    for rel, text in _sources():
+        tree = ast.parse(text)
+        spans = [
+            (n.lineno, n.end_lineno)
+            for n in tree.body
+            if isinstance(n, ast.FunctionDef)
+            and n.name in allowed
+            and rel == "sources/manifest.py"
+        ]
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            name = getattr(n.func, "id", getattr(n.func, "attr", None))
+            if name == "_file_verdicts" and not any(a <= n.lineno <= b for a, b in spans):
+                found.append(f"{rel}:{n.lineno}: _file_verdicts( outside {sorted(allowed)}")
+    assert not found, "\n".join(found)
+    with open(os.path.join(PKG, "sources", "manifest.py")) as f:
+        calls = [
+            n
+            for n in ast.walk(ast.parse(f.read()))
+            if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_file_verdicts"
+        ]
+    assert len(calls) == 2, [n.lineno for n in calls]
 
 
 def _persists_without_unpersist(text: str) -> list[int]:
