@@ -228,10 +228,10 @@ def run_once(spark, fn, sf_dir: str) -> float:
 
 def time_rows(spark, fns: dict, sf_dir: str, calib_fn, trials: int = TRIALS) -> dict:
     """Time every ``(spark, sf_dir) -> DataFrame`` in ``fns`` the bench's way:
-    an untimed throwaway of the first row, ``trials`` calib timings, then per
-    row a warm-up count and ``trials`` timed runs (shuffle bytes taken
-    around the first), with a calib re-probe after every CALIB_EVERY rows
-    and after the last. Returns the keyword arguments of
+    an untimed throwaway of the first row, a warm-up count and ``trials``
+    calib timings, then per row a warm-up count and ``trials`` timed runs
+    (shuffle bytes taken around the first), with a calib re-probe after
+    every CALIB_EVERY rows and after the last. Returns the keyword arguments of
     :func:`build_outputs` except ``sf``; one progress line per row goes to
     stderr."""
     from parqueryd_spark.plans.telemetry import ShuffleDelta
@@ -248,6 +248,7 @@ def time_rows(spark, fns: dict, sf_dir: str, calib_fn, trials: int = TRIALS) -> 
     # (2.04 s first vs 0.45-0.62 s warm for the identical plan). Run the
     # first row through the full timed path once and discard it.
     timed(next(iter(fns.values())))
+    calib_fn(spark, sf_dir).count()  # the same untimed warm-up every row gets
     out = {"timings": {}, "medians": {}, "trials": {}, "shuffle": {},
            "calib_trials": [timed(calib_fn) for _ in range(trials)], "calib_samples": {}}
     report("calib", out["calib_trials"])

@@ -5,8 +5,10 @@ data (worker.py:544-594 downloads from S3/Azure; worker.py:689-779 swaps files
 into the serving dir), so the Spark analog's publish/probe paths must work on
 any Hadoop-supported scheme (``file:``, ``s3a:``, ``abfss:``, ``gs:``, ...),
 not just a POSIX mount. This wraps the same JVM-side ``FileSystem`` resolution
-Spark's own reader uses (see ``sources/parquet.py:_exists``) behind the small
-op set publication needs: exists / rename / delete / mkdirs / liststatus.
+Spark's own reader uses behind the small op set publication, existence probes
+(``sources/parquet.py:_exists``) and planning-time listings need: exists /
+rename / delete / mkdirs / touch / liststatus. It is the package's only
+``FileSystem`` resolution.
 
 Semantics note: Hadoop ``rename`` returns ``False`` on failure instead of
 raising, and (unlike POSIX) does not replace an existing destination —
@@ -17,15 +19,19 @@ docstrings on the publish functions call out the table-format upgrade path.
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
 
 
 class HadoopFS:
-    """One resolved Hadoop FileSystem (from an anchor path's scheme)."""
+    """One resolved Hadoop FileSystem (from an anchor path's scheme).
+
+    ``Path`` is named in full through ``JavaClass`` (one reflection call),
+    not as ``spark._jvm.org.apache...`` (one per package segment): a
+    planning call builds one of these per call."""
 
     def __init__(self, spark: SparkSession, anchor_path: str):
-        jvm = spark._jvm
-        self._Path = jvm.org.apache.hadoop.fs.Path
+        self._Path = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)
         self._fs = self._Path(anchor_path).getFileSystem(spark._jsc.hadoopConfiguration())
 
     def qualify(self, path: str) -> str:
@@ -46,11 +52,16 @@ class HadoopFS:
         return bool(self._fs.exists(self._Path(path)))
 
     def is_dir(self, path: str) -> bool:
-        p = self._Path(path)
-        return bool(self._fs.exists(p) and self._fs.getFileStatus(p).isDirectory())
+        """False for a file or a missing path (one call: planning asks this
+        of every shard it lists)."""
+        return bool(self._fs.isDirectory(self._Path(path)))
 
     def mkdirs(self, path: str) -> None:
         self._fs.mkdirs(self._Path(path))
+
+    def touch(self, path: str) -> None:
+        """Create (or truncate) an empty file at ``path``."""
+        self._fs.create(self._Path(path), True).close()
 
     def delete(self, path: str) -> None:
         """Recursive delete; no-op if absent (``shutil.rmtree(ignore_errors)``
@@ -78,18 +89,18 @@ class HadoopFS:
             return [self.qualify(path)]
         out: list[str] = []
 
-        def walk(p: str) -> None:
-            for st in self._fs.listStatus(self._Path(p)):
-                name = st.getPath().getName()
+        def walk(p) -> None:
+            for st in self._fs.listStatus(p):
+                child = st.getPath()
+                name = child.getName()
                 if _hidden(name):
                     continue
-                q = st.getPath().toString()
                 if st.isDirectory():
-                    walk(q)
+                    walk(child)
                 elif suffix is None or name.endswith(suffix):
-                    out.append(q)
+                    out.append(child.toString())
 
-        walk(path)
+        walk(self._Path(path))
         return sorted(out)
 
     def first_file(self, path: str) -> str | None:

@@ -24,12 +24,12 @@ directory of parquet. This module is that layer as plain DataFrames:
 - ``scan_pruned``: read only the kept files, then apply the exact compiled
   filter — pruning is an optimization, never a semantics change.
 
-The file set is the dataset's live listing; the manifest only supplies
-stats. A live file without manifest stats is scanned, and a manifest row
-whose file no longer exists is ignored, so a stale manifest (files
-published or compacted away since its last refresh) costs speed, never rows.
-The parity hook ``prune_paths`` lists no shard directory: it drops a shard
-only when every manifest file under it is ruled out.
+The file set is the live listing — the dataset's, or for the parity hook
+``prune_paths`` its shards' — and the manifest only supplies stats. A live
+file without manifest stats is scanned, and a manifest row whose file no
+longer exists is ignored, so a stale manifest (files published or compacted
+away since its last refresh) costs speed, never rows. ``prune_paths`` drops
+a shard only when every live data file under it is ruled out.
 
 Soundness: the parquet spec defines ``min_value``/``max_value`` as BOUNDS
 (they may be truncated toward wider ranges, e.g. long strings), so interval
@@ -54,7 +54,7 @@ or min/max, or a skip statistic is one Spark job, and it is the only one a
 ``manifest=`` call of the parity API runs before its query. The driver then
 collects one small row per file (``_collect_by_file``) — the same O(files)
 planning-time listing Spark's own FileIndex does. ``prune_paths`` without
-where-terms keeps every path and runs no job at all.
+where-terms keeps every path, lists nothing and runs no job at all.
 
 Hive-partitioned layouts compose: ``build_manifest`` records
 directory-derived ``key=value`` partition values as constant-per-file stats
@@ -66,7 +66,6 @@ skips via both layers at once.
 
 from __future__ import annotations
 
-import bisect
 import datetime as _dt
 from collections.abc import Iterable, Sequence
 from typing import NamedTuple
@@ -292,7 +291,7 @@ def _footer_reader(wanted: list[str] | None, root: str | None = None):
                 # least one manifest row, so a narrowed manifest over a file
                 # whose schema lacks every wanted column still carries its
                 # row count and stays in the manifest's own file set
-                # (pruned_file_list, prune_paths, skip_stats), its absent
+                # (pruned_file_list, skip_stats), its absent
                 # columns unprunable instead of its rows silently dropped
                 rows.append(
                     {
@@ -528,20 +527,20 @@ def _collect_by_file(verdicts: DataFrame) -> dict[str, Row]:
 def _plan(
     mf: DataFrame,
     terms: list,
-    path: str | None = None,
+    files: Sequence[str] | None = None,
     full: bool = False,
     stats_col: str | None = None,
 ) -> list[_Verdict]:
     """The zone-map planner: one verdict per file for normalized ``terms``,
-    from one collect of ``_file_verdicts``. With ``path`` the files are the
-    dataset's live listing and the manifest only supplies stats (a live file
-    without stats is kept, a row for a vanished file is ignored); without
-    it the manifest's own files are the set."""
+    from one collect of ``_file_verdicts``. With ``files`` (a live listing)
+    those are the set, in order, and the manifest only supplies stats (a
+    live file without stats is kept, a row for a vanished file is ignored);
+    without it the manifest's own files are the set."""
     rows = _collect_by_file(_file_verdicts(mf, terms, full=full, stats_col=stats_col))
-    if path is None:
+    if files is None:
         return [_Verdict(**r.asDict()) for r in rows.values()]
     plan = []
-    for f in HadoopFS(mf.sparkSession, path).list_files(path):
+    for f in files:
         r = rows.get(_norm_path(f))
         plan.append(_Verdict(f) if r is None else _Verdict(**{**r.asDict(), "file": f}))
     return plan
@@ -566,42 +565,27 @@ def prune_paths(
     """Filter a caller-resolved shard list by the manifest's verdicts — the
     hook the parity API uses (``aggregate_files(..., manifest=)``): the
     reference's worker skipped work via per-shard metadata; here the same
-    where-term triples skip whole shards before Spark ever lists them.
-    Paths absent from the manifest are KEPT (conservative), and scheme
-    spelling differences (``file:/x`` vs ``/x`` vs ``file:///x``) are
-    normalized away before matching.
+    where-term triples skip whole shards before Spark plans the read.
 
-    A shard path may be a FILE or a DIRECTORY of part-files (Spark writes):
-    a directory is dropped only when EVERY manifest file under it is ruled
-    out; a path with no manifest coverage at all is kept. Shard directories
-    are not listed, so the manifest is the file set here.
+    A shard path may be a FILE or a DIRECTORY of part-files (Spark writes).
+    Each is listed now (one ``HadoopFS`` per call), and the planner gives
+    one verdict per live data file (``_plan``): a shard is kept when any of
+    its live files is kept, or when it lists no data file (the plain read
+    then decides). A live file with no manifest row is kept and a row for a
+    vanished file is ignored, so a shard republished after the manifest was
+    built is planned on its new files, never its old files' stats.
 
-    Without where-terms every path is kept and no Spark job runs. Otherwise
-    the verdicts are one per-file aggregation (``_file_verdicts``), and the
-    driver collects one ``(file, keep)`` row per manifest file. Matching is
-    O(paths log files): verdict keys are sorted once and each shard path
-    binary-searches its prefix range (a per-path linear scan of the verdict
-    dict would be quadratic at millions of files).
+    Without where-terms every path is kept, nothing is listed and no Spark
+    job runs.
     """
     terms = normalize_where_terms(where_terms)
-    if not terms:
+    if not terms or not paths:
         return list(paths)
-    verdicts = _collect_by_file(_file_verdicts(manifest, terms).select("file", "keep"))
-    keys = sorted(verdicts)
-    kept: list[str] = []
-    for p in paths:
-        np_ = _norm_path(p)
-        prefix = np_.rstrip("/") + "/"
-        # files under the directory form a contiguous sorted range
-        # [prefix, prefix + U+10FFFF); an exact-file shard matches np_ itself
-        lo = bisect.bisect_left(keys, prefix)
-        hi = bisect.bisect_left(keys, prefix + "\U0010ffff")
-        under = [verdicts[k].keep for k in keys[lo:hi]]
-        if np_ in verdicts:
-            under.append(verdicts[np_].keep)
-        if not under or any(under):
-            kept.append(p)
-    return kept
+    fs = HadoopFS(manifest.sparkSession, paths[0])
+    listed = [(p, fs.list_files(p)) for p in paths]
+    plan = _plan(manifest, terms, [f for _p, files in listed for f in files])
+    keep = {v.file: v.keep for v in plan}
+    return [p for p, files in listed if not files or any(keep[f] for f in files)]
 
 
 def skip_stats(manifest: DataFrame, where_terms: Sequence[Sequence] | None) -> dict:
@@ -643,7 +627,8 @@ def scan_pruned(
     no false negatives; zone map: spec bounds; exact filter regardless)."""
     mf = manifest if manifest is not None else build_manifest(spark, path)
     terms = normalize_where_terms(where_terms)
-    kept = [v.file for v in _plan(mf, terms, path) if v.keep]
+    live = HadoopFS(spark, path).list_files(path)
+    kept = [v.file for v in _plan(mf, terms, live) if v.keep]
     if bloom_manifests:
         dtypes = {f.name: f.dataType for f in read_resolved(spark, [path]).schema.fields}
         for col_name, op, value in terms:
@@ -691,7 +676,8 @@ def count_pruned(
     count, and one without manifest stats is a boundary file (see
     ``_plan``)."""
     mf = manifest if manifest is not None else build_manifest(spark, path)
-    plan = _plan(mf, normalize_where_terms(where_terms), path, full=True)
+    live = HadoopFS(spark, path).list_files(path)
+    plan = _plan(mf, normalize_where_terms(where_terms), live, full=True)
     stat_count = sum(v.n_rows for v in plan if v.keep and v.full)
     boundary = [v.file for v in plan if v.keep and not v.full]
     if not boundary:
@@ -733,7 +719,8 @@ def minmax_pruned(
         dtype = dict(read_resolved(spark, [path]).dtypes).get(col)
     metadata_ok = dtype in num_types
     mf = manifest if manifest is not None else build_manifest(spark, path)
-    plan = _plan(mf, normalize_where_terms(where_terms), path, full=True, stats_col=col)
+    live = HadoopFS(spark, path).list_files(path)
+    plan = _plan(mf, normalize_where_terms(where_terms), live, full=True, stats_col=col)
     lo = hi = None
     boundary = []
     for v in plan:

@@ -38,8 +38,8 @@ _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 def _exists(path: str, spark: SparkSession | None) -> bool:
     """Existence check that honors the path's storage scheme.
 
-    Scheme-qualified URIs go through Hadoop ``FileSystem`` on the JVM gateway
-    (the same resolution Spark's own reader uses), so object-store shards are
+    Scheme-qualified URIs go through ``HadoopFS`` (the same ``FileSystem``
+    resolution Spark's own reader uses), so object-store shards are
     checked for real instead of being silently dropped by an ``os.path`` test
     that can never see them — the reference's missing-file contract skips only
     files that are genuinely absent from its files_map (controller.py:618-621,
@@ -57,10 +57,7 @@ def _exists(path: str, spark: SparkSession | None) -> bool:
         spark = _S.getActiveSession()
         if spark is None:
             return True
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+    return HadoopFS(spark, path).exists(path)
 
 
 def resolve_paths(
@@ -74,8 +71,8 @@ def resolve_paths(
     Directories (multi-file datasets) count as existing; bare names get the
     ``.parquet`` extension tried as a fallback, mirroring the reference's
     ``DATA_FILE_EXTENSION`` convention (worker.py:44). Existence of
-    scheme-qualified URIs (``s3a://`` etc.) is checked through Hadoop
-    ``FileSystem`` — see ``_exists``.
+    scheme-qualified URIs (``s3a://`` etc.) is checked through ``HadoopFS``
+    — see ``_exists``.
     """
     if isinstance(paths, str):
         paths = [paths]

@@ -534,7 +534,7 @@ def publish_versioned(
     gens = _generations(fs, root)
     new_gen = (max(gens) + 1) if gens else 0
     write_parquet(df, f"{root}/gen={new_gen}", partition_by=partition_by)
-    _write_pointer(df.sparkSession, fs, root, new_gen)
+    _write_pointer(fs, root, new_gen)
     for g in sorted(gens + [new_gen])[:-keep_generations]:
         if g != new_gen:
             fs.delete(f"{root}/gen={g}")
@@ -569,7 +569,7 @@ def _pointer_entries(fs: HadoopFS, root: str) -> list[tuple[int, int, str]]:
     return out
 
 
-def _write_pointer(spark: SparkSession, fs: HadoopFS, root: str, gen: int) -> None:
+def _write_pointer(fs: HadoopFS, root: str, gen: int) -> None:
     # append-only pointer: a NEW marker file ``_ptr.<seq>.<gen>`` appears via
     # rename to a unique name (atomic; never replaces anything), readers take
     # the highest seq, and older markers are pruned only AFTER the new one
@@ -580,8 +580,7 @@ def _write_pointer(spark: SparkSession, fs: HadoopFS, root: str, gen: int) -> No
     entries = _pointer_entries(fs, root)
     seq = (max(e[0] for e in entries) + 1) if entries else 0
     tmp = f"{root}/._ptrtmp_{uuid.uuid4().hex[:8]}"
-    stream = fs._fs.create(spark._jvm.org.apache.hadoop.fs.Path(tmp), True)
-    stream.close()
+    fs.touch(tmp)
     fs.rename_or_raise(tmp, f"{root}/_ptr.{seq:010d}.{gen}")
     for _seq, _gen, name in entries:
         fs.delete(f"{root}/{name}")
@@ -613,7 +612,7 @@ def rollback_generation(spark: SparkSession, dataset_dir: str, gen: int) -> None
     root = fs.qualify(dataset_dir)
     if gen not in _generations(fs, root):
         raise ValueError(f"generation {gen} is not retained under {dataset_dir}")
-    _write_pointer(spark, fs, root, gen)
+    _write_pointer(fs, root, gen)
 
 
 def list_generations(spark: SparkSession, dataset_dir: str) -> list[tuple[int, bool]]:

@@ -29,6 +29,7 @@ import os
 
 from pyspark.sql import DataFrame
 
+from parqueryd_spark.sources.fs import HadoopFS
 from parqueryd_spark.sources.parquet import read_resolved
 from parqueryd_spark.sources.sinks import _start_available_now, write_batch
 
@@ -56,7 +57,7 @@ def stream_embed_into_ivfsq(
         emb = hash_embed(batch_df, id_col, text_col, dim=dim).withColumnRenamed(
             id_col, "vec_id"
         )
-        if not os.path.isdir(os.path.join(index_dir, "grid")):
+        if not HadoopFS(spark, index_dir).is_dir(os.path.join(index_dir, "grid")):
             ivfsq_publish(
                 spark,
                 index_dir,

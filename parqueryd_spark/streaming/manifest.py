@@ -7,9 +7,11 @@ manifest) never go stale under continuous ingest.
 Why this shape at scale: a 100 TB dataset under continuous ingest adds a few
 files per trigger; ``refresh_manifest`` footer-sweeps ONLY those (O(new
 files), never the standing corpus) and drops rows for files a replayed batch
-overwrote. The manifest republishes through the same write-then-swap pattern
-the data uses, so readers either see the previous complete generation or the
-new one — and even a reader racing a swap stays CORRECT, because the
+overwrote. The manifest republishes through ``sources/sinks.atomic_publish``,
+the write-then-swap every published dataset uses: the new generation is
+written in full before the swap, so readers see the previous complete
+generation or the new one, and the refresh can read the generation it
+replaces. Even a reader racing a swap stays CORRECT, because the
 pruned reads (``scan_pruned``/``count_pruned``/``minmax_pruned``) take
 their file set from the live listing and use the manifest only for stats:
 a live file it doesn't cover is scanned, a row for a vanished file is
@@ -29,8 +31,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parqueryd_spark.sources.fs import HadoopFS
 from parqueryd_spark.sources.parquet import read_resolved
-from parqueryd_spark.sources.sinks import _start_available_now, write_batch
+from parqueryd_spark.sources.sinks import _start_available_now, atomic_publish, write_batch
 
 
 def stream_ingest_with_manifest(
@@ -56,39 +59,23 @@ def stream_ingest_with_manifest(
         refresh_manifest,
     )
 
-    def _swap_in(mf: DataFrame, base_dir: str, batch_id: int) -> None:
-        # write-then-swap: stage the new generation, then replace — readers
-        # hold the old generation's file handles, and a pruned read mid-swap
-        # scans whatever live files the manifest it holds doesn't cover
-        import shutil
-
-        live = os.path.join(base_dir, "live")
-        stage = os.path.join(base_dir, f"stage-{batch_id}")
-        mf.write.mode("overwrite").parquet(stage)
-        old = os.path.join(base_dir, f"old-{batch_id}")
-        if os.path.isdir(live):
-            os.replace(live, old)
-        os.replace(stage, live)
-        if os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         write_batch(batch_df, data_dir, batch_id)
+        fs = HadoopFS(spark, manifest_dir)
         live = os.path.join(manifest_dir, "live")
-        if os.path.isdir(live):
+        if fs.is_dir(live):
             mf = refresh_manifest(spark, data_dir, read_resolved(spark, [live]), columns)
         else:
             mf = build_manifest(spark, data_dir, columns)
-        _swap_in(mf, manifest_dir, batch_id)
+        atomic_publish(mf, live)
         for col in bloom_cols or []:
-            bdir = os.path.join(manifest_dir, f"bloom={col}")
-            blive = os.path.join(bdir, "live")
-            if os.path.isdir(blive):
+            blive = os.path.join(manifest_dir, f"bloom={col}", "live")
+            if fs.is_dir(blive):
                 bm = refresh_bloom_manifest(spark, data_dir, col, read_resolved(spark, [blive]))
             else:
                 bm = bloom_manifest(spark, data_dir, col, fpp=bloom_fpp)
-            _swap_in(bm, bdir, batch_id)
+            atomic_publish(bm, blive)
 
     return _start_available_now(stream, _process, checkpoint_dir)
 
@@ -106,16 +93,14 @@ def read_pruned(
     completed trigger. Any bloom manifests the ingest stream maintains
     (``manifest_dir/bloom=<col>/live``) stack automatically: point terms on
     those columns skip files both layers agree can't match."""
-    import glob
-
     from parqueryd_spark.sources.manifest import scan_pruned
 
+    fs = HadoopFS(spark, manifest_dir)
     blooms = {}
-    for bdir in glob.glob(os.path.join(manifest_dir, "bloom=*")):
-        blive = os.path.join(bdir, "live")
-        if os.path.isdir(blive):
-            col = os.path.basename(bdir).split("=", 1)[1]
-            blooms[col] = read_resolved(spark, [blive])
+    for name in fs.listdir(manifest_dir) if fs.is_dir(manifest_dir) else []:
+        blive = os.path.join(manifest_dir, name, "live")
+        if name.startswith("bloom=") and fs.is_dir(blive):
+            blooms[name.split("=", 1)[1]] = read_resolved(spark, [blive])
     return scan_pruned(
         spark,
         data_dir,

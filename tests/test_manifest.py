@@ -133,6 +133,51 @@ def test_engine_groupby_with_manifest_equals_plain(spark, layout, manifest):
     assert kept == ["/no/such/shard"] and jobs
 
 
+def test_parity_call_plans_a_republished_shard_on_its_live_files(spark, tmp_path):
+    """A shard republished after the manifest was built is planned on the
+    files it holds now: ``groupby(manifest=stale)`` counts what the plain
+    call counts, instead of pruning the shard on its old files' stats."""
+    import os
+
+    from parqueryd_spark.core import ParquetEngine
+    from parqueryd_spark.sources.sinks import atomic_publish
+
+    def publish(name, lo):
+        rows = spark.range(lo, lo + 100).select(
+            (F.col("id") % 5).alias("g"), F.col("id").cast("double").alias("value")
+        )
+        atomic_publish(rows, os.path.join(str(tmp_path), name))
+
+    publish("s0", 0)
+    publish("s1", 100)
+    stale = build_manifest(spark, str(tmp_path)).cache()
+    stale.count()
+    publish("s1", 1000)
+    call = partial(
+        ParquetEngine(spark, str(tmp_path)).groupby,
+        ["s0", "s1"], ["g"], [["value", "count", "n"]], [["value", ">=", 1000.0]],
+    )
+    try:
+        plain = sum(r.n for r in call().collect())
+        pruned = sum(r.n for r in call(manifest=stale).collect())
+    finally:
+        stale.unpersist()
+    assert plain == 100 and pruned == plain
+
+
+def test_prune_paths_keeps_a_shard_that_lists_no_data_file(spark, layout, manifest, tmp_path):
+    """An empty shard directory has no file to rule out: it is kept, and
+    the plain read decides what it holds."""
+    import os
+
+    from parqueryd_spark.sources.manifest import prune_paths
+
+    empty = str(tmp_path / "empty_shard")
+    os.makedirs(empty)
+    assert prune_paths(manifest, [layout, empty], [["value", ">", 1e9]]) == [empty]
+    assert prune_paths(manifest, [layout, empty], [["value", "<", 5.0]]) == [layout, empty]
+
+
 def test_parity_call_plans_with_at_most_the_verdict_job(spark, tmp_path):
     """Building a parity call's DataFrame (no action) submits no Spark job
     but the zone-map verdict: none for a plain call, for ``concat`` over 3

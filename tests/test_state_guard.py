@@ -3,10 +3,12 @@ published data is read through ``sources/parquet.read_resolved``, batch
 state (and its ``_meta`` sidecar) is written, merged and compacted through
 the ``sources/sinks`` helper set, availableNow ``foreachBatch`` queries
 start through its one starter, zone-map verdicts come from one planner,
-and reused data follows the two lifetime rules of
-``queries.served_artifact``: published standing state lives in that one
-helper, and nothing a function persists outlives the function — in the
-tests too, which share one session. No Spark needed."""
+datasets are swapped in only by ``sinks.atomic_publish``, every Hadoop
+``FileSystem`` is resolved by ``sources/fs.HadoopFS``, and reused data
+follows the two lifetime rules of ``queries.served_artifact``: published
+standing state lives in that one helper, and nothing a function persists
+outlives the function — in the tests too, which share one session. No
+Spark needed."""
 
 from __future__ import annotations
 
@@ -26,6 +28,8 @@ RULES = [
     (r"[_/]meta\"", {"sources/sinks.py"}, "sinks.write_meta / sinks.read_meta"),
     (r"(?m)^\w*_CACHE\b", set(), "queries.served_artifact, or no memo at all"),
     (r"mkdtemp\(", {"queries/__init__.py"}, "queries.served_artifact"),
+    (r"os\.replace\(|os\.rename\(", set(), "sources/sinks.atomic_publish"),
+    (r"getFileSystem\(", {"sources/fs.py"}, "sources/fs.HadoopFS"),
 ]
 
 
@@ -67,10 +71,10 @@ def test_batch_drop_only_in_read_batches():
 
 def test_file_verdicts_collected_only_by_the_planner():
     """Every zone-map consumer takes its per-file verdicts from one planner:
-    ``_file_verdicts(`` is called only in ``manifest._plan`` and in
-    ``prune_paths`` (which shares its collect helper but keeps its caller's
-    shard list), and nowhere else in the package."""
-    allowed = {"_plan", "prune_paths"}
+    ``_file_verdicts(`` is called once, in ``manifest._plan``, and nowhere
+    else in the package (the parity hook ``prune_paths`` plans through it
+    too)."""
+    allowed = {"_plan"}
     found = []
     for rel, text in _sources():
         tree = ast.parse(text)
@@ -94,7 +98,7 @@ def test_file_verdicts_collected_only_by_the_planner():
             for n in ast.walk(ast.parse(f.read()))
             if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_file_verdicts"
         ]
-    assert len(calls) == 2, [n.lineno for n in calls]
+    assert len(calls) == 1, [n.lineno for n in calls]
 
 
 def _persists_without_unpersist(text: str) -> list[int]:
