@@ -78,12 +78,9 @@ def main() -> None:
         )
 
         pq_idx = os.path.join(work, "ivfpq")
-        cents16 = (
-            emb.orderBy(F.col("vec_id").asc())
-            .limit(8)
-            .select(F.col("vec_id").cast("int").alias("centroid_id"), "embedding")
+        ivfpq_publish(
+            spark, pq_idx, emb, "first_k", dim=64, m=16, k_codes=16, n_centroids=8
         )
-        ivfpq_publish(spark, pq_idx, emb, cents16, dim=64, m=16, k_codes=16)
         codes, cen2, cb = ivfpq_load(spark, pq_idx)
         pq_approx = ivfpq_search(
             codes, cen2, cb, queries, corpus=emb, nprobe=3, k=5, refine=4

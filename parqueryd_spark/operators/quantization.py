@@ -30,8 +30,15 @@ Spark-first shape:
   The big side is never shuffled, and the float vectors are never re-read.
 - **refine** (the production default): ADC is a shortlist generator — take
   ``refine × k`` ADC candidates, join back the shortlist's true vectors, exact
-  cosine re-rank, emit top-k. Full-precision reads touch only
-  |queries| × refine × k rows instead of the corpus.
+  cosine re-rank, emit top-k (``similarity._rerank``, shared with the SQ
+  routes). Full-precision reads touch only |queries| × refine × k rows
+  instead of the corpus.
+
+The ``codebook`` mode picks one route for train, encode and query tables
+(``_pq_route``): ``"kmeans"`` (seeded numpy trainer, Arrow-batched encode,
+numpy LUTs — the production default) or ``"spread"`` (the deterministic,
+SQL-replayable route: :func:`pq_codebooks_spread`, :func:`pq_encode_cols`
+and driver-side LUTs that a DuckDB oracle reproduces bit for bit).
 
 Vectors are L2-normalized first (default) so squared-L2 ranking equals cosine
 ranking (‖a−b‖² = 2 − 2·cos for unit vectors) — comparable with the exact
@@ -47,8 +54,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parqueryd_spark.operators.similarity import as_double, norm
-from parqueryd_spark.operators.util import spread_partitions
+from parqueryd_spark.operators.similarity import (
+    _appended_counts,
+    _flat_candidates,
+    _probe,
+    _probed_candidates,
+    _publish_centroids,
+    _rerank,
+    _topk_per_query,
+    as_double,
+    ivf_assign,
+    norm,
+    resolve_centroids,
+)
 from parqueryd_spark.sources.parquet import read_resolved
 from parqueryd_spark.sources.sinks import publish_batch, read_meta, write_batch
 
@@ -155,50 +173,49 @@ def pq_encode_cols(
     return base.select(F.col(id_col), F.array(*codes).alias("codes"))
 
 
-def pq_lut_det(
-    queries: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    normalize: bool = True,
-    max_queries: int = 65536,
-) -> DataFrame:
-    """:func:`pq_lut`'s DETERMINISTIC twin for the replay route: the m x k
-    ADC table computed DRIVER-side in pure Python over the bounded query
-    batch. Python floats are IEEE doubles and the loops below accumulate in
-    the same left-assoc order as the JVM fold (and DuckDB's
+# bound on the rows a driver-side LUT build collects: query vectors, or
+# (query, probed centroid) pairs on the residual route
+_MAX_LUT_ROWS = 65536
+
+
+def _hat(v: list[float]) -> list[float]:
+    """Zero-guarded L2 normalization in the JVM fold's order (see
+    :func:`_nv_col`)."""
+    import math
+
+    s = 0.0
+    for x in v:
+        s += x * x
+    nrm = math.sqrt(s)
+    return [x / nrm for x in v] if nrm > 0 else [x * 0.0 for x in v]
+
+
+def _det_luts(rows: DataFrame, keys: list[str], vector_of, codebooks: list) -> DataFrame:
+    """The driver-side ADC tables of the replay route: collect
+    ``rows`` (bounded by ``_MAX_LUT_ROWS``), map each to the vector it
+    quantizes (``vector_of``), and return ``keys`` + ``lut``, the m x k
+    squared sub-distances. Python floats are IEEE doubles and the loops
+    accumulate in the same left-assoc order as the JVM fold (and DuckDB's
     list_dot_product), so every distance is bit-identical to the oracle's —
     while the per-search plan stays tiny: a first pure-Column cut shipped
     the m x k codebook as literal expression trees, and MEASURING it showed
     py4j CONSTRUCTION of those trees (~4 s/plan at 16x32) dominating the
-    actual 0.7 s execution. The query side is bounded by contract
-    (``max_queries`` limit-guarded collect, the recall/probe rows use 5-8
-    vectors); the corpus side never comes near the driver."""
-    import math
+    actual 0.7 s execution."""
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-    m, dsub = len(codebooks), len(codebooks[0][0])
-    rows = (
-        queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("_v"))
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(rows) > max_queries:
+    collected = rows.limit(_MAX_LUT_ROWS + 1).collect()
+    if len(collected) > _MAX_LUT_ROWS:
         raise ValueError(
-            f"query batch exceeds max_queries={max_queries} — the ADC table "
-            "collect is bounded by contract; chunk the query set"
+            f"ADC-table input exceeds {_MAX_LUT_ROWS} rows — the driver-side "
+            "LUT collect is bounded by contract; chunk the query set"
         )
+    m, dsub = len(codebooks), len(codebooks[0][0])
     out = []
-    for r in rows:
-        v = [float(x) for x in r["_v"]]
-        if normalize:
-            s = 0.0
-            for x in v:
-                s += x * x
-            nrm = math.sqrt(s)
-            v = [x / nrm for x in v] if nrm > 0 else [x * 0.0 for x in v]
+    for r in collected:
+        x = vector_of(r)
         lut = []
         for j in range(m):
-            sub = v[j * dsub : (j + 1) * dsub]
+            sub = x[j * dsub : (j + 1) * dsub]
             row = []
             for c in codebooks[j]:
                 d2 = 0.0
@@ -206,14 +223,31 @@ def pq_lut_det(
                     d2 += (a - b) * (a - b)
                 row.append(d2)
             lut.append(row)
-        out.append((r["query_id"], lut))
-    id_field = queries.select(F.col(id_col).alias("query_id")).schema.fields[0]
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+        out.append(tuple(r[k] for k in keys) + (lut,))
+    fields = rows.select(*keys).schema.fields
+    schema = StructType(list(fields) + [StructField("lut", ArrayType(ArrayType(DoubleType())))])
+    return rows.sparkSession.createDataFrame(out, schema)
 
-    schema = StructType(
-        [id_field, StructField("lut", ArrayType(ArrayType(DoubleType())))]
+
+def pq_lut_det(
+    queries: DataFrame,
+    codebooks: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    normalize: bool = True,
+) -> DataFrame:
+    """:func:`pq_lut`'s DETERMINISTIC twin for the replay route: the m x k
+    ADC table of each query computed driver-side (:func:`_det_luts`) over
+    the bounded query batch; the corpus side never comes near the driver."""
+    rows = queries.select(
+        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("_v")
     )
-    return queries.sparkSession.createDataFrame(out, schema)
+
+    def vector_of(r):
+        v = [float(x) for x in r["_v"]]
+        return _hat(v) if normalize else v
+
+    return _det_luts(rows, ["query_id"], vector_of, codebooks)
 
 
 def pq_train(
@@ -235,7 +269,7 @@ def pq_train(
     ``sample_n`` rows by id — deterministic across runs and partitionings —
     and the collect is bounded metadata scale (sample_n × dim doubles),
     the same posture as the IVF centroid bootstrap
-    (`operators/similarity.py:101`). numpy seeded init → reproducible.
+    (`similarity.resolve_centroids`). numpy seeded init → reproducible.
     """
     import numpy as np
 
@@ -372,24 +406,35 @@ def pq_search(
     ``lut_mode="det"`` computes the query LUTs with :func:`pq_lut_det`
     (driver-side, bit-identical to the oracle's fold arithmetic) instead of
     numpy."""
-    from pyspark.sql import Window as W
-
-    mm = len(codebooks)
     lut_fn = pq_lut_det if lut_mode == "det" else pq_lut
     q = lut_fn(queries, codebooks, id_col=id_col, vec_col=vec_col, normalize=normalize)
-    c = spread_partitions(codes.select(F.col(id_col).alias("neighbor_id"), "codes"))
+    scored = _flat_candidates(codes, q, id_col, "codes").withColumn(
+        "approx_dist", _adc(len(codebooks))
+    )
+    return _topk_per_query(scored, "approx_dist", k, ascending=True).withColumn(
+        "approx_dist", F.round("approx_dist", 6)
+    )
+
+
+def _adc(m: int) -> F.Column:
+    """A candidate's ADC distance, ``Σⱼ lut[j][code_j]`` — m JVM-side
+    ``element_at`` lookups."""
     approx = F.lit(0.0)
-    for j in range(mm):
+    for j in range(m):
         approx = approx + F.element_at(F.element_at("lut", j + 1), F.col("codes")[j] + 1)
-    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).withColumn(
-        "approx_dist", approx
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("approx_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("approx_dist", 6).alias("approx_dist"), "rank")
-    )
+    return approx
+
+
+def _pq_route(codebook: str):
+    """(trainer, encoder, lut_mode) of a ``codebook`` mode — the one place
+    the ``"kmeans"``/``"spread"`` choice is made. Trainers share the
+    (corpus, dim, m, k, vec_col, id_col, normalize) keywords and encoders
+    the (corpus, codebooks, id_col, vec_col, normalize) ones."""
+    if codebook == "kmeans":
+        return pq_train, pq_encode, "numpy"
+    if codebook == "spread":
+        return pq_codebooks_spread, pq_encode_cols, "det"
+    raise ValueError(f"codebook must be 'kmeans' or 'spread'; got {codebook!r}")
 
 
 def pq_topk(
@@ -417,41 +462,17 @@ def pq_topk(
     DuckDB replay (VERDICT r11 item #2).
     Returns (query_id, neighbor_id, cosine_sim, rank) under refine,
     (query_id, neighbor_id, approx_dist, rank) without."""
-    from pyspark.sql import Window as W
-
-    from parqueryd_spark.operators.similarity import cosine
-
-    if codebook == "spread":
-        cb = pq_codebooks_spread(corpus, dim=dim, m=m, k=k_codes, vec_col=vec_col, id_col=id_col)
-        codes = pq_encode_cols(corpus, cb, id_col=id_col, vec_col=vec_col)
-        lut_mode = "det"
-    elif codebook == "kmeans":
-        cb = pq_train(corpus, dim=dim, m=m, k=k_codes, vec_col=vec_col, id_col=id_col)
-        codes = pq_encode(corpus, cb, id_col=id_col, vec_col=vec_col)
-        lut_mode = "numpy"
-    else:
-        raise ValueError(f"codebook must be 'kmeans' or 'spread'; got {codebook!r}")
+    train, encode, lut_mode = _pq_route(codebook)
+    cb = train(corpus, dim=dim, m=m, k=k_codes, vec_col=vec_col, id_col=id_col)
+    codes = encode(corpus, cb, id_col=id_col, vec_col=vec_col)
     if refine <= 0:
         return pq_search(
             codes, queries, cb, id_col=id_col, vec_col=vec_col, k=k, lut_mode=lut_mode
         )
     shortlist = pq_search(
         codes, queries, cb, id_col=id_col, vec_col=vec_col, k=refine * k, lut_mode=lut_mode
-    ).select("query_id", "neighbor_id")
-    cand = shortlist.join(
-        corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv")),
-        "neighbor_id",
     )
-    qv = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    )
-    rer = cand.join(qv, "query_id").withColumn("cosine_sim", F.round(cosine("qv", "nv"), 6))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rerank(shortlist, queries, corpus, k, id_col, vec_col)
 
 
 def _residual_frame(
@@ -465,8 +486,6 @@ def _residual_frame(
     (transform/zip_with; one broadcast-assign pass, no Python on the corpus).
     Unit space keeps the residual formulation consistent with the cosine
     metric the buckets are probed with (‖â−b̂‖² = 2−2·cos)."""
-    from parqueryd_spark.operators.similarity import ivf_assign, norm
-
     assignment = ivf_assign(corpus, centroids, id_col, vec_col)
     cen = centroids.select("centroid_id", as_double(F.col(vec_col)).alias("__cv"))
     base = (
@@ -481,6 +500,18 @@ def _residual_frame(
         F.col("centroid_id"),
         F.zip_with(xhat, chat, lambda a, b: a - b).alias("__resid"),
     )
+
+
+def _pq_input(vectors: DataFrame, centroids: DataFrame, residual: bool, id_col: str, vec_col: str):
+    """What an IVF-PQ index's codes quantize, as (frame, vector column,
+    normalize, assignment): the raw vectors, normalized by the encoder, or
+    their unit-space residuals (:func:`_residual_frame`, already JVM fold
+    arithmetic, so the spread route stays SQL-replayable on them too);
+    ``assignment`` is (id, centroid_id)."""
+    if residual:
+        resid = _residual_frame(vectors, centroids, id_col, vec_col)
+        return resid, "__resid", False, resid.select(id_col, "centroid_id")
+    return vectors, vec_col, True, ivf_assign(vectors, centroids, id_col, vec_col)
 
 
 def ivfpq_publish(
@@ -527,69 +558,19 @@ def ivfpq_publish(
     sharper at equal (m, k_codes); searches then build one LUT per
     (query, probed centroid) pair instead of per query. The flag is
     persisted as the codes' ``_meta`` sidecar (``sinks.publish_batch``) and
-    honored by load/append/search.
+    honored by load/append/search. ``centroids`` is a frame or a
+    ``similarity.resolve_centroids`` mode string; ``codebook`` picks the
+    ``_pq_route`` for either encoding.
     """
-    from parqueryd_spark.operators.similarity import ivf_assign, kmeans_centroids
-
-    if isinstance(centroids, str):
-        # same coarse-quantizer modes as ivf_publish: "kmeans" (seeded MLlib
-        # cosine fit — the production choice on clustered corpora) or
-        # "first_k" (fit-free, oracle-stable)
-        if n_centroids is None:
-            raise ValueError("centroids mode string requires n_centroids")
-        if centroids == "kmeans":
-            centroids = kmeans_centroids(corpus, n_centroids, vec_col=vec_col, seed=seed)
-        elif centroids == "first_k":
-            centroids = (
-                corpus.orderBy(F.col(id_col).asc())
-                .limit(n_centroids)
-                .select(F.col(id_col).cast("int").alias("centroid_id"), F.col(vec_col))
-            )
-        else:
-            raise ValueError(
-                f"centroids must be a DataFrame, 'kmeans', or 'first_k'; got {centroids!r}"
-            )
-    centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    if residual:
-        # the residual frame is pure JVM fold arithmetic (_residual_frame),
-        # so codebook="spread" composes: spread codebooks over the residual
-        # slices + the pure-Column encode make the RESIDUAL route
-        # SQL-replayable end-to-end, exactly like the raw route (r12)
-        resid = _residual_frame(corpus, centroids, id_col, vec_col)
-        if codebook == "spread":
-            cb = pq_codebooks_spread(
-                resid, dim=dim, m=m, k=k_codes, vec_col="__resid", id_col=id_col,
-                normalize=False,
-            )
-            enc = pq_encode_cols(
-                resid, cb, id_col=id_col, vec_col="__resid", normalize=False
-            )
-        elif codebook == "kmeans":
-            cb = pq_train(
-                resid, dim=dim, m=m, k=k_codes, vec_col="__resid", id_col=id_col,
-                normalize=False,
-            )
-            enc = pq_encode(resid, cb, id_col=id_col, vec_col="__resid", normalize=False)
-        else:
-            raise ValueError(f"codebook must be 'kmeans' or 'spread'; got {codebook!r}")
-        encoded = enc.join(resid.select(id_col, "centroid_id"), id_col)
-    else:
-        # raw-vector encoding with either trainer: seeded kmeans (numpy,
-        # production) or the deterministic SQL-replayable spread route; the
-        # residual branch above supports the same two modes (the residual
-        # frame is pure JVM fold arithmetic, so spread composes there too)
-        if codebook == "spread":
-            cb = pq_codebooks_spread(corpus, dim=dim, m=m, k=k_codes, vec_col=vec_col, id_col=id_col)
-            encoder = pq_encode_cols
-        elif codebook == "kmeans":
-            cb = pq_train(corpus, dim=dim, m=m, k=k_codes, vec_col=vec_col, id_col=id_col)
-            encoder = pq_encode
-        else:
-            raise ValueError(f"codebook must be 'kmeans' or 'spread'; got {codebook!r}")
-        assignment = ivf_assign(corpus, centroids, id_col, vec_col)
-        encoded = encoder(corpus, cb, id_col=id_col, vec_col=vec_col).join(
-            assignment, id_col
-        )
+    train, encode, _ = _pq_route(codebook)
+    centroids = _publish_centroids(
+        resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed), index_dir
+    )
+    src, vcol, normalize, assignment = _pq_input(corpus, centroids, residual, id_col, vec_col)
+    cb = train(src, dim=dim, m=m, k=k_codes, vec_col=vcol, id_col=id_col, normalize=normalize)
+    encoded = encode(src, cb, id_col=id_col, vec_col=vcol, normalize=normalize).join(
+        assignment, id_col
+    )
     cb_rows = [(j, c, cb[j][c]) for j in range(len(cb)) for c in range(len(cb[j]))]
     spark.createDataFrame(cb_rows, "j int, code int, sub array<double>").write.mode(
         "overwrite"
@@ -661,52 +642,18 @@ def _pair_luts(pairs: DataFrame, codebooks: list) -> DataFrame:
     return pairs.withColumn("lut", _lut2("qv", "cv")).drop("qv", "cv")
 
 
-def _pair_luts_det(pairs: DataFrame, codebooks: list, max_pairs: int = 65536) -> DataFrame:
+def _pair_luts_det(pairs: DataFrame, codebooks: list) -> DataFrame:
     """:func:`_pair_luts`' DETERMINISTIC twin for the residual replay route:
-    the per-(query, probed centroid) ADC tables computed driver-side in pure
-    Python over the bounded probe-pair frame (|queries| x nprobe rows,
-    limit-guarded). Same bit-exactness argument as :func:`pq_lut_det` —
-    IEEE doubles in the JVM fold order — so a DuckDB oracle reproduces every
-    distance; same measured motivation: py4j literal trees are the slow
-    part, not the arithmetic."""
-    import math
+    the per-(query, probed centroid) ADC tables over ``q̂ − ĉ``, computed
+    driver-side by :func:`_det_luts` over the bounded probe-pair frame
+    (|queries| x nprobe rows)."""
 
-    m, dsub = len(codebooks), len(codebooks[0][0])
-    rows = pairs.limit(max_pairs + 1).collect()
-    if len(rows) > max_pairs:
-        raise ValueError(
-            f"probe-pair count exceeds max_pairs={max_pairs} — the pair-LUT "
-            "collect is bounded by contract; chunk the query set"
-        )
-
-    def _hat(v):
-        s = 0.0
-        for x in v:
-            s += x * x
-        nrm = math.sqrt(s)
-        return [x / nrm for x in v] if nrm > 0 else [x * 0.0 for x in v]
-
-    out = []
-    for r in rows:
+    def vector_of(r):
         q = _hat([float(x) for x in r["qv"]])
         c = _hat([float(x) for x in r["cv"]])
-        x = [a - b for a, b in zip(q, c)]
-        lut = []
-        for j in range(m):
-            sub = x[j * dsub : (j + 1) * dsub]
-            row = []
-            for cb in codebooks[j]:
-                d2 = 0.0
-                for a, b in zip(sub, cb):
-                    d2 += (a - b) * (a - b)
-                row.append(d2)
-            lut.append(row)
-        out.append((r["query_id"], r["centroid_id"], lut))
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+        return [a - b for a, b in zip(q, c)]
 
-    id_fields = pairs.select("query_id", "centroid_id").schema.fields
-    schema = StructType(list(id_fields) + [StructField("lut", ArrayType(ArrayType(DoubleType())))])
-    return pairs.sparkSession.createDataFrame(out, schema)
+    return _det_luts(pairs, ["query_id", "centroid_id"], vector_of, codebooks)
 
 
 def ivfpq_search(
@@ -738,21 +685,7 @@ def ivfpq_search(
     centroid) pair — same broadcast size (|queries| × nprobe LUT rows reach
     every probed bucket either way), the corpus-sized codes stream and the
     JVM-side ``element_at`` scoring are identical."""
-    from pyspark.sql import Window as W
-
-    from parqueryd_spark.operators.similarity import as_double, cosine
-
-    mm = len(codebooks)
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    cen = centroids.select("centroid_id", as_double(F.col(vec_col)).alias("cv"))
-    w_probe = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-    probes = (
-        q.crossJoin(F.broadcast(cen))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "centroid_id", "qv", "cv")
-    )
+    probes = _probe(queries, centroids, nprobe, id_col, vec_col)
     if residual:
         # nqueries x nprobe LUT rows either way; "det" is the replay route
         lut2_fn = _pair_luts_det if lut_mode == "det" else _pair_luts
@@ -765,49 +698,16 @@ def ivfpq_search(
         # broadcast: |queries| LUT rows by construction (BOUNDED_BUILD_OK) —
         # unhinted this planned a SortMergeJoin that shuffled+sorted both
         # tiny sides into 32 partitions, twice (main plan + DPP subquery)
-        probe_luts = probes.drop("qv", "cv").join(F.broadcast(luts), "query_id")
-    approx = F.lit(0.0)
-    for j in range(mm):
-        approx = approx + F.element_at(F.element_at("lut", j + 1), F.col("codes")[j] + 1)
-    scored = (
-        codes.select(F.col(id_col).alias("neighbor_id"), "codes", "centroid_id")
-        .join(F.broadcast(probe_luts), "centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("approx_dist", approx)
-    )
-    shortlist_k = k if (refine <= 0 or corpus is None) else refine * k
-    w = W.partitionBy("query_id").orderBy(F.col("approx_dist").asc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist_k)
-        .select(
-            "query_id", "neighbor_id", F.round("approx_dist", 6).alias("approx_dist"), "rank"
-        )
+        probe_luts = probes.select("query_id", "centroid_id").join(F.broadcast(luts), "query_id")
+    scored = _probed_candidates(codes, probe_luts, id_col, "codes").withColumn(
+        "approx_dist", _adc(len(codebooks))
     )
     if refine <= 0 or corpus is None:
-        return shortlist
-    # the BOUNDED side (refine*k*|queries| shortlist rows) is the broadcast
-    # build; the sf-growing corpus streams un-shuffled past it. Estimate-driven
-    # planning at toy SF broadcast the CORPUS instead — scale-backwards: at
-    # 100 TB the full-precision vectors would be shuffled (or worse,
-    # broadcast) by neighbor_id for a <=100-row probe (guide §3.1).
-    # shortlist and query vectors FUSED into one pre-joined broadcast frame
-    # (r16, VERDICT r15 item #4): the corpus-sized side pays ONE broadcast
-    # exchange + ONE probe instead of two.
-    plan = shortlist.select("query_id", "neighbor_id").join(q, "query_id")
-    rer = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv")
+        return _topk_per_query(scored, "approx_dist", k, ascending=True).withColumn(
+            "approx_dist", F.round("approx_dist", 6)
         )
-        .join(F.broadcast(plan), "neighbor_id")
-        .withColumn("cosine_sim", F.round(cosine("qv", "nv"), 6))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    shortlist = _topk_per_query(scored, "approx_dist", refine * k, ascending=True)
+    return _rerank(shortlist, queries, corpus, k, id_col, vec_col)
 
 
 def ivfpq_append(
@@ -837,30 +737,18 @@ def ivfpq_append(
     PQ signal); on drift, rebuild with fresh centroids/codebooks and
     republish.
     """
-    from parqueryd_spark.operators.similarity import ivf_assign
-
-    _, _, cb = ivfpq_load(spark, index_dir)
-    centroids = read_resolved(spark, [f"{index_dir}/centroids"])
+    _, centroids, cb = ivfpq_load(spark, index_dir)
     meta = ivfpq_meta(spark, index_dir)
     # a spread index's bit-exact replay contract extends to APPENDS: the
     # numpy encoder's pairwise-summation norms differ from the JVM fold at
     # ulp level, which can flip a near-tie argmin and silently break the
-    # index's hash-match property — encode with the matching path (review r12)
-    encoder = pq_encode_cols if meta["codebook"] == "spread" else pq_encode
-    if meta["residual"]:
-        resid = _residual_frame(new_vectors, centroids, id_col, vec_col)
-        assigned = encoder(resid, cb, id_col=id_col, vec_col="__resid", normalize=False).join(
-            resid.select(id_col, "centroid_id"), id_col
-        )
-    else:
-        assignment = ivf_assign(new_vectors, centroids, id_col, vec_col)
-        assigned = encoder(new_vectors, cb, id_col=id_col, vec_col=vec_col).join(
-            assignment, id_col
-        )
-    write_batch(assigned, f"{index_dir}/codes", batch, partition_by=["centroid_id"])
-    return (
-        read_resolved(spark, [f"{index_dir}/codes"])
-        .filter(F.col("batch") == batch)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n_appended"))
+    # index's hash-match property — encode with the index's own route
+    _, encode, _ = _pq_route(meta["codebook"])
+    src, vcol, normalize, assignment = _pq_input(
+        new_vectors, centroids, meta["residual"], id_col, vec_col
     )
+    encoded = encode(src, cb, id_col=id_col, vec_col=vcol, normalize=normalize).join(
+        assignment, id_col
+    )
+    write_batch(encoded, f"{index_dir}/codes", batch, partition_by=["centroid_id"])
+    return _appended_counts(spark, f"{index_dir}/codes", batch)

@@ -18,11 +18,19 @@ Scale design (100 TB / billions of vectors):
   (:func:`kmeans_centroids`, ``ivf_publish(..., centroids="kmeans")`` — the
   production coarse quantizer; recall dominance on clustered corpora is
   pytest-pinned in tests/test_ivf_lifecycle.py).
+
+Every ANN route here and in ``squant``/``quantization`` runs the same steps
+through one helper each: :func:`resolve_centroids` (the coarse centroids
+from a frame, ``"first_k"`` or ``"kmeans"``), ``_probe`` (each query's
+``nprobe`` nearest centroids), ``_topk_per_query`` (the per-query top-k,
+tie-broken on neighbor id) and ``_rerank`` (the exact cosine re-rank of an
+approximate shortlist).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.util import spread_partitions
@@ -61,24 +69,102 @@ def brute_force_topk(
     tie-broken by neighbor id for determinism. Returns
     (query_id, neighbor_id, cosine_sim, rank).
     """
-    from pyspark.sql import Window as W
-
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
-    c = spread_partitions(
-        corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv"))
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", cosine(F.col("qv"), F.col("cv")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
+    scored = _flat_candidates(
+        corpus, q, id_col, as_double(F.col(vec_col)).alias("cv")
+    ).withColumn("cosine_sim", cosine(F.col("qv"), F.col("cv")))
+    return _topk_per_query(scored, "cosine_sim", k)
+
+
+def _flat_candidates(corpus: DataFrame, per_query: DataFrame, id_col: str, *cols) -> DataFrame:
+    """Every corpus row, as (neighbor_id, ``cols``), against every row of
+    the broadcast ``per_query`` frame (keyed by query_id), self excluded —
+    the exhaustive candidates of :func:`brute_force_topk`, ``sq_search`` and
+    ``pq_search``."""
+    c = spread_partitions(corpus.select(F.col(id_col).alias("neighbor_id"), *cols))
+    return c.join(F.broadcast(per_query), F.col("neighbor_id") != F.col("query_id"))
+
+
+def _probed_candidates(index: DataFrame, probes: DataFrame, id_col: str, *cols) -> DataFrame:
+    """The rows of a centroid-tagged ``index``, as (neighbor_id, ``cols``),
+    in each query's probed buckets, self excluded. ``probes``
+    (query_id, centroid_id, ...) is the broadcast side, so its centroid_id
+    equality prunes a centroid-partitioned scan through DPP."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+        index.select(F.col(id_col).alias("neighbor_id"), *cols, "centroid_id")
+        .join(F.broadcast(probes), "centroid_id")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
     )
+
+
+def _first_per_query(df: DataFrame, n: int, *order: F.Column) -> DataFrame:
+    """The one per-query window of the ANN family: number each query's rows
+    by ``order`` as ``rank`` and keep the first ``n``."""
+    w = W.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= n)
+
+
+def _topk_per_query(
+    scored: DataFrame, score: str, k: int, ascending: bool = False
+) -> DataFrame:
+    """Per-query top-``k`` of a (query_id, neighbor_id, ``score``) frame,
+    best score first (highest, or lowest with ``ascending``), ties broken on
+    the lower neighbor id. Returns (query_id, neighbor_id, score, rank)."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    return _first_per_query(scored, k, order, F.col("neighbor_id").asc()).select(
+        "query_id", "neighbor_id", score, "rank"
+    )
+
+
+def _probe(
+    queries: DataFrame,
+    centroids: DataFrame,
+    nprobe: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Each query's ``nprobe`` nearest centroids by cosine, ties broken on
+    the lower centroid id — the probe step of every IVF search. The centroid
+    list is metadata scale and broadcast. Returns
+    (query_id, qv, centroid_id, cv) with the vectors as ``array<double>``."""
+    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
+    cen = centroids.select("centroid_id", as_double(F.col(vec_col)).alias("cv"))
+    ranked = q.crossJoin(F.broadcast(cen)).withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+    return _first_per_query(
+        ranked, nprobe, F.col("sim").desc(), F.col("centroid_id").asc()
+    ).select("query_id", "qv", "centroid_id", "cv")
+
+
+def _rerank(
+    shortlist: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact cosine re-rank of an approximate (query_id, neighbor_id)
+    shortlist against the full-precision ``corpus`` — the one refine step of
+    ``sq_topk``, ``pq_topk``, ``ivfsq_search`` and ``ivfpq_search``.
+
+    The corpus streams past two bounded broadcasts and is never a build side
+    or shuffled (it grows with the data; a size-estimate plan at small scale
+    would broadcast it). The first broadcast carries the shortlist's
+    refine·k·|Q| (query_id, neighbor_id) id pairs, the second one vector per
+    query, so the payload is refine·k·|Q| id pairs plus |Q| vectors. A fused
+    shortlist × query-vector frame would carry refine·k·|Q| vectors instead.
+    ``cosine_sim`` is rounded to 6 places before ranking. Returns
+    (query_id, neighbor_id, cosine_sim, rank)."""
+    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
+    rer = (
+        corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv"))
+        .join(F.broadcast(shortlist.select("query_id", "neighbor_id")), "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .withColumn("cosine_sim", F.round(cosine("qv", "nv"), 6))
+    )
+    return _topk_per_query(rer, "cosine_sim", k)
 
 
 def ivf_assign(
@@ -149,6 +235,58 @@ def kmeans_centroids(
     return spark.createDataFrame(rows, f"centroid_id int, `{vec_col}` array<double>")
 
 
+def resolve_centroids(
+    corpus: DataFrame,
+    centroids: DataFrame | str,
+    n_centroids: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+) -> DataFrame:
+    """The coarse centroids (centroid_id, vec_col) of every IVF route.
+    ``centroids`` is a prebuilt frame (returned as is) or a mode string, which
+    needs ``n_centroids``: ``"first_k"`` takes the ``n_centroids`` lowest-id
+    corpus vectors, with centroid_id = that vector's id in the id column's
+    type (deterministic and fit-free, a K-row lookup; the oracle-stable mode
+    the registry rows use); ``"kmeans"`` fits seeded MLlib KMeans under
+    cosine distance (:func:`kmeans_centroids`, int ids)."""
+    if not isinstance(centroids, str):
+        return centroids
+    if n_centroids is None:
+        raise ValueError("centroids mode string requires n_centroids")
+    if centroids == "kmeans":
+        return kmeans_centroids(corpus, n_centroids, vec_col=vec_col, seed=seed)
+    if centroids == "first_k":
+        return (
+            corpus.orderBy(F.col(id_col).asc())
+            .limit(n_centroids)
+            .select(F.col(id_col).alias("centroid_id"), F.col(vec_col))
+        )
+    raise ValueError(
+        f"centroids must be a DataFrame, 'kmeans', or 'first_k'; got {centroids!r}"
+    )
+
+
+def _publish_centroids(centroids: DataFrame, index_dir: str) -> DataFrame:
+    """Write an index's coarse centroids to ``<index_dir>/centroids`` with an
+    int ``centroid_id`` (the type the partitioned codes read back with) and
+    return that frame for the publish-time assignment."""
+    cents = centroids.withColumn("centroid_id", F.col("centroid_id").cast("int"))
+    cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
+    return cents
+
+
+def _appended_counts(spark, state_dir: str, batch: str) -> DataFrame:
+    """Per-centroid row counts of one appended ``batch=`` partition of an
+    index's vectors or codes, (centroid_id, n_appended)."""
+    return (
+        read_resolved(spark, [state_dir])
+        .filter(F.col("batch") == batch)
+        .groupBy("centroid_id")
+        .agg(F.count("*").alias("n_appended"))
+    )
+
+
 def ivf_index(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -178,34 +316,11 @@ def ivf_search(
     query (broadcast — centroid lists are metadata-scale), scan only the
     ``nprobe`` best buckets, window-rank the verified cosines. Returns
     (query_id, neighbor_id, cosine_sim, rank)."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    cen = centroids.select("centroid_id", as_double(F.col(vec_col)).alias("cv"))
-    w_probe = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-    probes = (
-        q.crossJoin(F.broadcast(cen))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
-    )
-    scored = (
-        index.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("cv"),
-            "centroid_id",
-        )
-        .join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine_sim", cosine(F.col("qv"), F.col("cv")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    probes = _probe(queries, centroids, nprobe, id_col, vec_col).drop("cv")
+    scored = _probed_candidates(
+        index, probes, id_col, as_double(F.col(vec_col)).alias("cv")
+    ).withColumn("cosine_sim", cosine(F.col("qv"), F.col("cv")))
+    return _topk_per_query(scored, "cosine_sim", k)
 
 
 def ivf_topk(
@@ -225,16 +340,7 @@ def ivf_topk(
     fit-free); ``"kmeans"`` fits MLlib KMeans (better bucket balance =>
     better recall at the same nprobe).
     Returns (query_id, neighbor_id, cosine_sim, rank)."""
-    if centroid_mode not in ("first_k", "kmeans"):
-        raise ValueError(f"centroid_mode must be 'first_k' or 'kmeans', got {centroid_mode!r}")
-    if centroid_mode == "kmeans":
-        centroids = kmeans_centroids(corpus, n_centroids, vec_col=vec_col)
-    else:
-        centroids = (
-            corpus.orderBy(F.col(id_col).asc())
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("centroid_id"), F.col(vec_col))
-        )
+    centroids = resolve_centroids(corpus, centroid_mode, n_centroids, id_col, vec_col)
     index = ivf_index(corpus, centroids, id_col, vec_col)
     return ivf_search(index, centroids, queries, nprobe, id_col, vec_col, k)
 
@@ -344,32 +450,17 @@ def ivf_publish(
     partition); the centroids file is the metadata the appends quantize
     against.
 
-    ``centroids`` is either a prebuilt centroids DataFrame
-    (``centroid_id, vec_col``) or a fit mode string (``n_centroids``
-    required): ``"kmeans"`` fits seeded MLlib KMeans with cosine distance
-    (:func:`kmeans_centroids` — the production coarse quantizer: on
+    ``centroids`` is a prebuilt centroids DataFrame (``centroid_id,
+    vec_col``) or a :func:`resolve_centroids` mode string (``n_centroids``
+    required): ``"kmeans"`` is the production coarse quantizer — on
     clustered corpora fitted centroids track the real cluster structure, so
     equal-``nprobe`` searches probe the buckets the true neighbors actually
-    landed in; recall dominance over first-K is pytest-pinned on a clustered
-    synthetic corpus); ``"first_k"`` takes the first ``n_centroids`` corpus
-    vectors by id (deterministic and fit-free — the oracle-stable default
-    the registry rows use)."""
-    if isinstance(centroids, str):
-        if n_centroids is None:
-            raise ValueError("centroids mode string requires n_centroids")
-        if centroids == "kmeans":
-            centroids = kmeans_centroids(corpus, n_centroids, vec_col=vec_col, seed=seed)
-        elif centroids == "first_k":
-            centroids = (
-                corpus.orderBy(F.col(id_col).asc())
-                .limit(n_centroids)
-                .select(F.col(id_col).cast("int").alias("centroid_id"), F.col(vec_col))
-            )
-        else:
-            raise ValueError(
-                f"centroids must be a DataFrame, 'kmeans', or 'first_k'; got {centroids!r}"
-            )
-    centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
+    landed in (recall dominance over first-K is pytest-pinned on a clustered
+    synthetic corpus); ``"first_k"`` is the oracle-stable mode the registry
+    rows use."""
+    centroids = _publish_centroids(
+        resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed), index_dir
+    )
     publish_batch(
         ivf_index(corpus, centroids, id_col, vec_col),
         f"{index_dir}/vectors",
@@ -419,12 +510,7 @@ def ivf_append(
         batch,
         partition_by=["centroid_id"],
     )
-    return (
-        read_resolved(spark, [f"{index_dir}/vectors"])
-        .filter(F.col("batch") == batch)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n_appended"))
-    )
+    return _appended_counts(spark, f"{index_dir}/vectors", batch)
 
 
 def ivf_bucket_stats(spark, index_dir: str) -> DataFrame:
@@ -482,14 +568,10 @@ def cosine_near_dup_pairs(
             .select("id_a", "id_b", "cosine_sim")
         )
     if centroids is None:
+        first_k = resolve_centroids(vectors, "first_k", n_centroids, id_col, vec_col)
         centroids = [
-            (i, list(r[0]))
-            for i, r in enumerate(
-                vectors.orderBy(F.col(id_col).asc())
-                .limit(n_centroids)
-                .select(vec_col)
-                .collect()
-            )
+            (i, list(r[vec_col]))
+            for i, r in enumerate(sorted(first_k.collect(), key=lambda r: r["centroid_id"]))
         ]
     if not centroids:
         # empty corpus => no buckets; preserve the output schema
@@ -539,25 +621,9 @@ def search_literal(
         cosine(as_double(F.col(vec_col)), q).alias("cosine_sim"),
     )
     out = scored.orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc()).limit(k)
-    from pyspark.sql import Window
-
     return out.withColumn(
         "rank",
-        F.row_number().over(
-            Window.orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-        ),
-    )
-
-
-def _first_k_centroids(
-    vectors: DataFrame, n_centroids: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """Deterministic fit-free centroids: the ``n_centroids`` lowest-id vectors,
-    with centroid_id = that vector's id (a K-row lookup, metadata-scale)."""
-    return (
-        vectors.orderBy(F.col(id_col).asc())
-        .limit(n_centroids)
-        .select(F.col(id_col).alias("centroid_id"), F.col(vec_col))
+        F.row_number().over(W.orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())),
     )
 
 
@@ -591,14 +657,8 @@ def semantic_dedup(
     results accept).
     """
     from parqueryd_spark.operators.dedup import near_dup_groups
-    from pyspark.sql import Window as W
 
-    if centroid_mode not in ("first_k", "kmeans"):
-        raise ValueError(f"centroid_mode must be 'first_k' or 'kmeans', got {centroid_mode!r}")
-    if centroid_mode == "kmeans":
-        centroids = kmeans_centroids(vectors, n_centroids, vec_col=vec_col)
-    else:
-        centroids = _first_k_centroids(vectors, n_centroids, id_col, vec_col)
+    centroids = resolve_centroids(vectors, centroid_mode, n_centroids, id_col, vec_col)
     # localCheckpoint (not persist): the assignment is reused across the
     # fixpoint loop's actions AND the returned plan, so a bare persist could
     # never be unpersisted without recompute — the checkpoint truncates
@@ -654,14 +714,7 @@ def prototype_scores(
     ``proto_rank`` 1 = most prototypical within its cluster. Select a keep set
     with e.g. ``F.col("proto_rank") > F.col("cluster_n") * lit(frac)`` (drop
     the easiest ``frac``)."""
-    from pyspark.sql import Window as W
-
-    if centroid_mode not in ("first_k", "kmeans"):
-        raise ValueError(f"centroid_mode must be 'first_k' or 'kmeans', got {centroid_mode!r}")
-    if centroid_mode == "kmeans":
-        centroids = kmeans_centroids(vectors, n_centroids, vec_col=vec_col)
-    else:
-        centroids = _first_k_centroids(vectors, n_centroids, id_col, vec_col)
+    centroids = resolve_centroids(vectors, centroid_mode, n_centroids, id_col, vec_col)
     assigned = ivf_assign(vectors, centroids, id_col, vec_col, with_sim=True)
     w = W.partitionBy("centroid_id").orderBy(F.col("centroid_sim").desc(), F.col(id_col).asc())
     wc = W.partitionBy("centroid_id")

@@ -20,9 +20,8 @@ query ``q``,
 so the per-query constant and weight vector are computed once on the
 broadcast query side, and each candidate costs one ``zip_with``+``aggregate``
 fold over its int codes — JVM-side, no float vector re-read. Exact re-rank of
-the ``refine × k`` shortlist (the same posture as
-:func:`parqueryd_spark.operators.quantization.pq_topk`) restores full
-precision on |queries| × refine × k rows only.
+the ``refine × k`` shortlist (``similarity._rerank``, shared with the PQ
+routes) restores full precision on |queries| × refine × k rows only.
 
 At 100 TB: train touches every vector once with a map-side-combinable
 min/max aggregate (dim×2 scalars out — no explode, no per-dim shuffle);
@@ -38,8 +37,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parqueryd_spark.operators.similarity import as_double, cosine, norm
-from parqueryd_spark.operators.util import spread_partitions
+from parqueryd_spark.operators.similarity import (
+    _flat_candidates,
+    _probe,
+    _probed_candidates,
+    _publish_centroids,
+    _rerank,
+    _topk_per_query,
+    as_double,
+    ivf_assign,
+    norm,
+    resolve_centroids,
+)
 from parqueryd_spark.sources.parquet import read_resolved
 from parqueryd_spark.sources.sinks import publish_batch, write_batch
 
@@ -129,6 +138,26 @@ def _lit_arr(xs: list[float]):
     return F.array(*[F.lit(float(x)) for x in xs])
 
 
+def _fold_sum(arr) -> F.Column:
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _query_weights(nqv, lo: list[float], step: list[float]) -> list[F.Column]:
+    """The per-query side of the linear-decode identity for a normalized
+    query column: ``q_const = Σ lo_i·q_i`` and ``w_i = step_i·q_i``."""
+    return [
+        _fold_sum(F.zip_with(_lit_arr(lo), nqv, lambda l, x: l * x)).alias("q_const"),
+        F.zip_with(_lit_arr(step), nqv, lambda s, x: s * x).alias("w"),
+    ]
+
+
+def _approx_sim() -> F.Column:
+    """A candidate's approximate cosine, ``q_const + Σ code_i·w_i``."""
+    return F.col("q_const") + _fold_sum(
+        F.zip_with("codes", "w", lambda ci, wi: ci.cast("double") * wi)
+    )
+
+
 def sq_encode(
     corpus: DataFrame,
     lo: list[float],
@@ -167,32 +196,13 @@ def sq_search(
     ``const + Σ code_i·w_i`` (the linear-decode identity above) ranks
     candidates without touching a float vector. Deterministic neighbor-id
     tie-break. Returns (query_id, neighbor_id, approx_sim, rank)."""
-    from pyspark.sql import Window as W
-
-    qv = _normalized(F.col(vec_col), normalize)
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        F.aggregate(
-            F.zip_with(_lit_arr(lo), qv, lambda l, x: l * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("q_const"),
-        F.zip_with(_lit_arr(step), qv, lambda s, x: s * x).alias("w"),
+        *_query_weights(_normalized(F.col(vec_col), normalize), lo, step),
     )
-    c = spread_partitions(codes.select(F.col(id_col).alias("neighbor_id"), "codes"))
-    score = F.col("q_const") + F.aggregate(
-        F.zip_with("codes", "w", lambda ci, wi: ci.cast("double") * wi),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).withColumn(
-        "approx_sim", score
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("approx_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("approx_sim", 6).alias("approx_sim"), "rank")
+    scored = _flat_candidates(codes, q, id_col, "codes").withColumn("approx_sim", _approx_sim())
+    return _topk_per_query(scored, "approx_sim", k).withColumn(
+        "approx_sim", F.round("approx_sim", 6)
     )
 
 
@@ -212,41 +222,29 @@ def sq_topk(
     both paths). Same return shape as ``pq_topk``:
     (query_id, neighbor_id, cosine_sim, rank) under refine,
     (query_id, neighbor_id, approx_sim, rank) without."""
-    from pyspark.sql import Window as W
-
     lo, step = sq_train(corpus, dim=dim, vec_col=vec_col)
     codes = sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col)
     if refine <= 0:
         return sq_search(codes, queries, lo, step, id_col=id_col, vec_col=vec_col, k=k)
     shortlist = sq_search(
         codes, queries, lo, step, id_col=id_col, vec_col=vec_col, k=refine * k
-    ).select("query_id", "neighbor_id")
-    # broadcast the BOUNDED refine*k*|queries| shortlist; the sf-growing
-    # corpus streams un-shuffled (guide §3.1 — estimate-driven planning at
-    # toy SF would pick the corpus as build side, scale-backwards).
-    # r16 (VERDICT r15 item #4): shortlist and query vectors are FUSED into
-    # one pre-joined broadcast frame, so the corpus-side row pays ONE
-    # broadcast exchange + ONE probe instead of two — the refine side's
-    # extra exchange was the one real toy-scale regression of r15. The fused
-    # payload stays bounded: refine*k rows per query, each carrying the
-    # query vector.
-    qside = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
-    plan = shortlist.join(qside, "query_id")
-    rer = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv")
-        )
-        .join(F.broadcast(plan), "neighbor_id")
-        .withColumn("cosine_sim", F.round(cosine("qv", "nv"), 6))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rerank(shortlist, queries, corpus, k, id_col, vec_col)
+
+
+def _write_grid(spark, index_dir: str, lo: list[float], step: list[float]) -> None:
+    """Persist an SQ grid at ``<index_dir>/grid`` as (i, lo, step) rows."""
+    spark.createDataFrame(
+        [(i, float(l), float(s)) for i, (l, s) in enumerate(zip(lo, step))],
+        "i int, lo double, step double",
+    ).write.mode("overwrite").parquet(f"{index_dir}/grid")
+
+
+def _read_grid(spark, index_dir: str) -> tuple[list[float], list[float]]:
+    """(lo, step) of a published SQ grid — a metadata-scale collect of dim
+    rows."""
+    rows = sorted(read_resolved(spark, [f"{index_dir}/grid"]).collect(), key=lambda r: r["i"])
+    return [float(r["lo"]) for r in rows], [float(r["step"]) for r in rows]
 
 
 def sq_publish(
@@ -264,22 +262,15 @@ def sq_publish(
     ``ivf_publish``/``ivfpq_publish``. Appends quantize against the
     PERSISTED grid (saturating clamp keeps out-of-grid increments sound),
     and re-writing a batch overwrites exactly its own partition."""
-    grid_rows = [(i, float(l), float(s)) for i, (l, s) in enumerate(zip(*sq_train(corpus, dim=dim, vec_col=vec_col)))]
-    spark.createDataFrame(grid_rows, "i int, lo double, step double").write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/grid")
-    lo = [r[1] for r in grid_rows]
-    step = [r[2] for r in grid_rows]
+    lo, step = sq_train(corpus, dim=dim, vec_col=vec_col)
+    _write_grid(spark, index_dir, lo, step)
     codes = sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col)
     publish_batch(codes, f"{index_dir}/codes", batch)
 
 
 def sq_load(spark, index_dir: str) -> tuple[DataFrame, list[float], list[float]]:
-    """(codes, lo, step) of a published SQ index — the grid collect is
-    metadata scale (dim rows)."""
-    rows = sorted(read_resolved(spark, [f"{index_dir}/grid"]).collect(), key=lambda r: r["i"])
-    codes = read_resolved(spark, [f"{index_dir}/codes"])
-    return codes, [float(r["lo"]) for r in rows], [float(r["step"]) for r in rows]
+    """(codes, lo, step) of a published SQ index."""
+    return (read_resolved(spark, [f"{index_dir}/codes"]), *_read_grid(spark, index_dir))
 
 
 def sq_append(
@@ -297,29 +288,9 @@ def sq_append(
     outside the trained grid saturate to code 0/255 (bounded, sound);
     if increments drift far from the base distribution, retrain and
     republish."""
-    _, lo, step = sq_load(spark, index_dir)
+    lo, step = _read_grid(spark, index_dir)
     codes = sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col)
     write_batch(codes, f"{index_dir}/codes", batch)
-
-
-def _resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed):
-    from parqueryd_spark.operators.similarity import kmeans_centroids
-
-    if not isinstance(centroids, str):
-        return centroids
-    if n_centroids is None:
-        raise ValueError("centroids mode string requires n_centroids")
-    if centroids == "kmeans":
-        return kmeans_centroids(corpus, n_centroids, vec_col=vec_col, seed=seed)
-    if centroids == "first_k":
-        return (
-            corpus.orderBy(F.col(id_col).asc())
-            .limit(n_centroids)
-            .select(F.col(id_col).cast("int").alias("centroid_id"), F.col(vec_col))
-        )
-    raise ValueError(
-        f"centroids must be a DataFrame, 'kmeans', or 'first_k'; got {centroids!r}"
-    )
 
 
 def ivfsq_publish(
@@ -343,16 +314,13 @@ def ivfsq_publish(
     PQ's ADC tables). Layout: ``centroids``, ``grid`` (global per-dimension
     lo/step — the FAISS "IVF,SQ8" formulation; bucket-local grids would
     tighten steps but break the one-broadcast-weight-per-query identity),
-    and ``codes`` partitioned by ``(batch, centroid_id)``."""
-    cents = _resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed)
-    cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
+    and ``codes`` partitioned by ``(batch, centroid_id)``. ``centroids`` is
+    a frame or a ``similarity.resolve_centroids`` mode string."""
+    cents = _publish_centroids(
+        resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed), index_dir
+    )
     lo, step = sq_train(corpus, dim=dim, vec_col=vec_col)
-    grid_rows = [(i, float(l), float(s)) for i, (l, s) in enumerate(zip(lo, step))]
-    spark.createDataFrame(grid_rows, "i int, lo double, step double").write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/grid")
-    from parqueryd_spark.operators.similarity import ivf_assign
-
+    _write_grid(spark, index_dir, lo, step)
     assigned = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
     publish_batch(
         sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col).join(assigned, id_col),
@@ -364,12 +332,10 @@ def ivfsq_publish(
 
 def ivfsq_load(spark, index_dir: str):
     """(codes, centroids, lo, step) of a published IVF-SQ index."""
-    rows = sorted(read_resolved(spark, [f"{index_dir}/grid"]).collect(), key=lambda r: r["i"])
     return (
         read_resolved(spark, [f"{index_dir}/codes"]),
         read_resolved(spark, [f"{index_dir}/centroids"]),
-        [float(r["lo"]) for r in rows],
-        [float(r["step"]) for r in rows],
+        *_read_grid(spark, index_dir),
     )
 
 
@@ -392,66 +358,18 @@ def ivfsq_search(
     via DPP — shortlist ``refine*k``, exact cosine re-rank against
     full-precision ``corpus`` vectors. ``refine=0``/``corpus=None`` returns
     the raw quantized ranking (query_id, neighbor_id, approx_sim, rank)."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    cen = centroids.select("centroid_id", as_double(F.col(vec_col)).alias("cv"))
-    w_probe = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-    nqv = _normalized(F.col("qv"), True)
-    probes = (
-        q.crossJoin(F.broadcast(cen))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id",
-            "centroid_id",
-            F.aggregate(
-                F.zip_with(_lit_arr(lo), nqv, lambda l, x: l * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("q_const"),
-            F.zip_with(_lit_arr(step), nqv, lambda s, x: s * x).alias("w"),
-        )
+    probes = _probe(queries, centroids, nprobe, id_col, vec_col).select(
+        "query_id", "centroid_id", *_query_weights(_normalized(F.col("qv"), True), lo, step)
     )
-    score = F.col("q_const") + F.aggregate(
-        F.zip_with("codes", "w", lambda ci, wi: ci.cast("double") * wi),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        codes.select(F.col(id_col).alias("neighbor_id"), "codes", "centroid_id")
-        .join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("approx_sim", score)
-    )
-    shortlist_k = k if (refine <= 0 or corpus is None) else refine * k
-    w = W.partitionBy("query_id").orderBy(F.col("approx_sim").desc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist_k)
-        .select("query_id", "neighbor_id", F.round("approx_sim", 6).alias("approx_sim"), "rank")
+    scored = _probed_candidates(codes, probes, id_col, "codes").withColumn(
+        "approx_sim", _approx_sim()
     )
     if refine <= 0 or corpus is None:
-        return shortlist
-    # bounded shortlist broadcast, corpus streamed — same rationale as
-    # sq_topk above (guide §3.1); shortlist and query vectors fused into ONE
-    # broadcast frame (r16, VERDICT r15 item #4) so the corpus pays a single
-    # exchange + probe instead of two.
-    plan = shortlist.select("query_id", "neighbor_id").join(q, "query_id")
-    rer = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv")
+        return _topk_per_query(scored, "approx_sim", k).withColumn(
+            "approx_sim", F.round("approx_sim", 6)
         )
-        .join(F.broadcast(plan), "neighbor_id")
-        .withColumn("cosine_sim", F.round(cosine("qv", "nv"), 6))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    shortlist = _topk_per_query(scored, "approx_sim", refine * k)
+    return _rerank(shortlist, queries, corpus, k, id_col, vec_col)
 
 
 def ivfsq_append(
@@ -468,9 +386,7 @@ def ivfsq_append(
     keeps replays idempotent. Both quantizers are frozen at publish; on
     distribution drift (bucket skew, saturating codes) rebuild and
     republish."""
-    from parqueryd_spark.operators.similarity import ivf_assign
-
-    codes, cents, lo, step = ivfsq_load(spark, index_dir)
+    _, cents, lo, step = ivfsq_load(spark, index_dir)
     assigned = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col)
     write_batch(
         sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col).join(assigned, id_col),

@@ -404,14 +404,9 @@ def served_ivfpq_index(
 
     def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        cents = (
-            emb.orderBy(F.col("vec_id").asc())
-            .limit(n_centroids)
-            .select(F.col("vec_id").cast("int").alias("centroid_id"), "embedding")
-        )
         ivfpq_publish(
-            spark, path, emb, cents, dim=64, m=16, k_codes=k_codes,
-            residual=residual, codebook=codebook,
+            spark, path, emb, "first_k", dim=64, m=16, k_codes=k_codes,
+            residual=residual, n_centroids=n_centroids, codebook=codebook,
         )
 
     key = (os.path.abspath(sf_dir), n_centroids, bool(residual), codebook, k_codes)

@@ -46,7 +46,7 @@ def _cos_sql(x: str, y: str) -> str:
 
 # Shared oracle CTEs: deterministic first-16 centroids + nearest-centroid
 # assignment with the winning cosine — the exact SQL mirror of
-# _first_k_centroids + ivf_assign(with_sim=True).
+# resolve_centroids(..., "first_k") + ivf_assign(with_sim=True).
 _ASSIGN_SQL = f"""
     cen AS (
       SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cv

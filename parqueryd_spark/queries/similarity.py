@@ -156,12 +156,7 @@ def served_ivf_index(
 
     def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        cents = (
-            emb.orderBy(F.col("vec_id").asc())
-            .limit(n_centroids)
-            .select(F.col("vec_id").cast("int").alias("centroid_id"), F.col("embedding"))
-        )
-        ivf_publish(spark, path, emb, cents)
+        ivf_publish(spark, path, emb, "first_k", n_centroids=n_centroids)
 
     path = served_artifact("ivf", (os.path.abspath(sf_dir), n_centroids), build)
     return ivf_load(spark, path)

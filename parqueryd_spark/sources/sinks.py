@@ -431,7 +431,7 @@ def read_meta(spark: SparkSession, state_dir: str) -> Row | None:
     try:
         return _read_meta_files(spark, state_dir).collect()[0]
     except AnalysisException as e:
-        cls = getattr(e, "getErrorClass", lambda: "")() or ""
+        cls = e.getCondition() or ""
         if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):
             return None
         raise

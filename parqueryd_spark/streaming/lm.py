@@ -45,7 +45,7 @@ def _validate_order(spark, lm_dir: str, n: int) -> None:
     try:
         parts = read_batches(spark, lm_dir)
     except AnalysisException as e:
-        cls = getattr(e, "getErrorClass", lambda: "")() or ""
+        cls = e.getCondition() or ""
         if (
             "PATH_NOT_FOUND" in cls
             or "UNABLE_TO_INFER_SCHEMA" in cls
@@ -53,6 +53,11 @@ def _validate_order(spark, lm_dir: str, n: int) -> None:
         ):
             return  # nothing stored yet
         raise
+    _check_order(parts, n)
+
+
+def _check_order(parts: DataFrame, n: int) -> None:
+    """Raise unless every gram in ``parts`` has exactly ``n`` tokens."""
     toks = F.size(F.split("gram", " "))
     probe = parts.agg(F.min(toks).alias("lo"), F.max(toks).alias("hi")).collect()[0]
     if probe["lo"] is not None and not (probe["lo"] == probe["hi"] == n):
@@ -155,14 +160,7 @@ def read_lm(
     if validate is None:
         validate = stored is None or int(n) != stored["n"]
     if validate:
-        toks = F.size(F.split("gram", " "))
-        probe = parts.agg(F.min(toks).alias("lo"), F.max(toks).alias("hi")).collect()[0]
-        if probe["lo"] is not None and not (probe["lo"] == probe["hi"] == n):
-            raise ValueError(
-                f"stored grams have {probe['lo']}..{probe['hi']} tokens but the "
-                f"requested order is n={n} — the model was maintained at a "
-                "different (or mixed) order"
-            )
+        _check_order(parts, n)
     return lm_merge([parts], k, n)
 
 

@@ -126,6 +126,22 @@ def test_batch_state_lifecycle_and_read_jobs(spark, tmp_path):
         read_meta(spark, str(corrupt))
 
 
+def test_missing_state_reads_raise_no_deprecation_warning(spark, tmp_path):
+    """A missing ``_meta`` sidecar (``read_meta``) and a missing LM store
+    (the gram-width check of ``streaming/lm.py``) are recognised from the
+    error's condition without the deprecated ``getErrorClass``, which
+    pyspark 4 reports with a ``FutureWarning``."""
+    import warnings
+
+    from parqueryd_spark.sources.sinks import read_meta
+    from parqueryd_spark.streaming.lm import _validate_order
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert read_meta(spark, str(tmp_path / "no_such_state")) is None
+        assert _validate_order(spark, str(tmp_path / "no_such_lm"), 2) is None
+
+
 def test_meta_sidecar_is_read_through_its_part_files(spark, tmp_path, monkeypatch):
     """``read_meta`` and the meta read of ``compact_batches`` hand Spark the
     sidecar's part files, not the ``_meta`` directory (Spark ignores a

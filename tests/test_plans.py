@@ -80,25 +80,35 @@ def _bounded_build_ok() -> set[str]:
                                      # 16 centroids (published-index route;
                                      # the corpus side is the pruned scan)
         "ann_ivf_exhaustive_topk",   # 5 query vectors + 16 centroids
-        "ann_pq_topk",               # 8 query vectors + 16x16 codebook
+        # the refine rows' re-rank (similarity._rerank) broadcasts the
+        # refine*k*|Q| shortlist id pairs and one vector per query; the
+        # corpus streams past both (tests/test_ann_paths.py pins it)
+        "ann_pq_topk",               # 8 query LUT rows + refine*k shortlist
+                                     # id pairs + 8 query vectors
         "ann_ivfpq_index_topk",      # 5 query vectors x nprobe=4 LUT rows +
                                      # 16 centroids + refine*k shortlist
+                                     # id pairs + 5 query vectors
         "ann_ivfpq_recall_bound",    # same builds, 8 query vectors
         "ann_ivfpq_residual_recall_bound",  # same builds as
                                      # ann_ivfpq_recall_bound (8 query
                                      # vectors x nprobe=4 per-pair LUT rows +
-                                     # 16 centroids + refine*k shortlist);
-                                     # residual encoding changes LUT
-                                     # contents, not build-side cardinality
+                                     # 16 centroids + refine*k shortlist id
+                                     # pairs + query vectors); residual
+                                     # encoding changes LUT contents, not
+                                     # build-side cardinality
         "ann_ivfpq_residual_topk",   # 5 query vectors x nprobe=4 per-pair
                                      # LUT rows + 16 centroids + refine*k
-                                     # shortlist (value-checked replay route;
-                                     # same bounds as the recall row)
-        "ann_sq_recall_bound",       # 8 query vectors (const+weight rows);
-                                     # the corpus side is the codes stream
+                                     # shortlist id pairs + query vectors
+                                     # (value-checked replay route; same
+                                     # bounds as the recall row)
+        "ann_sq_recall_bound",       # 8 query vectors (const+weight rows) +
+                                     # refine*k shortlist id pairs + query
+                                     # vectors; the corpus side is the codes
+                                     # stream
         "ann_ivfsq_index_topk",      # 8 query vectors x nprobe=4 probe rows
                                      # (published-index route; codes scan is
-                                     # DPP-pruned) + refine*k shortlist
+                                     # DPP-pruned) + refine*k shortlist id
+                                     # pairs + query vectors
         "ann_ivfsq_recall_bound",    # same builds, 8 query vectors
         "ann_margin_match",          # bounded query set
         "ann_ivf_recall_bound",      # same builds as the two IVF rows

@@ -4,7 +4,9 @@ state (and its ``_meta`` sidecar) is written, merged and compacted through
 the ``sources/sinks`` helper set, availableNow ``foreachBatch`` queries
 start through its one starter, zone-map verdicts come from one planner,
 datasets are swapped in only by ``sinks.atomic_publish``, every Hadoop
-``FileSystem`` is resolved by ``sources/fs.HadoopFS``, and reused data
+``FileSystem`` is resolved by ``sources/fs.HadoopFS``, every ANN route
+takes its centroids from ``similarity.resolve_centroids`` and its per-query
+probe and top-k windows from ``operators/similarity.py``, and reused data
 follows the two lifetime rules of ``queries.served_artifact``: published
 standing state lives in that one helper, and nothing a function persists
 outlives the function — in the tests too, which share one session. No
@@ -30,6 +32,12 @@ RULES = [
     (r"mkdtemp\(", {"queries/__init__.py"}, "queries.served_artifact"),
     (r"os\.replace\(|os\.rename\(", set(), "sources/sinks.atomic_publish"),
     (r"getFileSystem\(", {"sources/fs.py"}, "sources/fs.HadoopFS"),
+    (
+        r'partitionBy\(\s*"query_id"\s*\)',
+        {"operators/similarity.py"},
+        "similarity._topk_per_query / _probe",
+    ),
+    (r"\.limit\(n_centroids\)", {"operators/similarity.py"}, "similarity.resolve_centroids"),
 ]
 
 
