@@ -11,13 +11,21 @@ shrinks ~``bins``-fold per pass, so
 
     passes ≈ ceil(log_bins(n / exact_threshold))   (2-3 at 10^10+ rows)
 
-Each pass's filter is a plain range predicate on the value column — it
-reaches the parquet scan as a pushed filter, and composes with zone-map
-manifests (sources/manifest.py) when the data is value-clustered, so later
-(narrower) passes can skip most FILES, not just most rows. The final phase
-resolves the answer inside the engine: ``orderBy(v).limit(r).agg(max(v))``
-over the ≤ exact_threshold survivors — the max of the r smallest IS the
-rank-r order statistic; one tiny scalar is collected, never the values.
+One engine answers every entry point: global and grouped, ``quantile_disc``
+and ``quantile_cont``, many probs or one rank. A global call is the grouped
+call over no keys (one group). The unit of work is a (group, rank) pair:
+
+- Pass 0 (:func:`_group_pass0`) is one full-scan aggregation per (group,
+  sign+exponent bucket). Its exact (count, min, max) rows give each group's
+  n and every unit's first interval.
+- Each narrowing pass (:func:`_group_rank_values`) sends every open unit's
+  [lo, hi] interval out as one broadcast frame; a row lands in every interval
+  that covers it, and one aggregation returns per-(unit, bin) counts. Extra
+  probs and groups share the same passes.
+- The resolve is one windowed ``row_number`` over the ≤ exact_threshold
+  survivors of every open unit: the (rank - offset)-th smallest survivor IS
+  the rank-th order statistic. A unit whose landing bin holds one distinct
+  value answers directly, with no sort.
 
 Float-soundness invariant (caught by the hypothesis suite, which fuzzes
 subnormals against bin boundaries): the next pass's interval is NOT the
@@ -33,8 +41,8 @@ comparisons against real data values.
 Rank definition matches SQL ``quantile_disc``: the smallest value whose
 cumulative share reaches p, i.e. rank = ceil(p·n) (1-indexed ascending),
 with p interpreted as an exact decimal (Fraction) so p·n carries no binary
-float error. NULLs are excluded on both sides; NaN values are not supported
-(they poison range predicates — filter them upstream).
+float error. NULLs are excluded on both sides; NaN values sort last, as in a
+Spark sort (pass 0 gives them their own bucket).
 
 Reference parity note: the reference engine (parqueryd) exposes no quantile
 aggregate at all — the complete RPC dispatch handles only the O5 groupby
@@ -50,24 +58,8 @@ from __future__ import annotations
 from fractions import Fraction
 from math import ceil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-
-def _bin_col(v, lo: float, hi: float, bins: int):
-    """Monotone bin assignment over the inclusive interval [lo, hi]: floor
-    arithmetic capped into [0, bins-1] (v == hi computes bins and caps).
-
-    The width clamp to the smallest positive subnormal keeps the divisor
-    nonzero when (hi - lo) / bins underflows (a subnormal-thin interval with
-    hi > lo) — ANSI mode turns the 0-width division into DIVIDE_BY_ZERO.
-    Any positive width keeps floor((v - lo) / width) monotone in v and the
-    cap bounds it into [0, bins-1], so the clamp only coarsens granularity
-    (worst case: everything in one bin -> the no-progress resolve path)."""
-    width = max((hi - lo) / bins, 5e-324)
-    return F.least(
-        F.lit(bins - 1), F.greatest(F.lit(0), F.floor((v - F.lit(lo)) / F.lit(width)).cast("int"))
-    )
 
 
 def quantile_rank(p, n: int) -> int:
@@ -78,16 +70,24 @@ def quantile_rank(p, n: int) -> int:
     return max(1, min(r, n))
 
 
-def _walk(counts: dict[int, tuple], bins: int, offset: int, rank: int):
-    """Walk cumulative bin counts to the landing bin. counts maps bin ->
-    (count, min_v, max_v). Returns (below, in_bin, bin_min, bin_max)."""
-    cum = offset
-    for b in range(bins):
-        c, bmin, bmax = counts.get(b, (0, None, None))
-        if cum + c >= rank:
-            return cum, c, bmin, bmax
-        cum += c
-    raise AssertionError("rank fell past the interval — count drift")
+def _bracket(p, n: int, cont: bool) -> tuple[int, int, float]:
+    """One prob's (lo rank, hi rank, frac) over n values. ``quantile_disc``
+    is the one rank :func:`quantile_rank` (frac 0); ``quantile_cont`` sits at
+    position p·(n-1) (0-indexed) and interpolates the two bracketing order
+    statistics lo + frac·(hi - lo)."""
+    if not cont:
+        r = quantile_rank(p, n)
+        return r, r, 0.0
+    # float (not Fraction) position arithmetic on purpose: DuckDB's
+    # quantile_cont computes p*(n-1) in IEEE double, so matching it
+    # bit-for-bit requires the same product (oracle-pinned since r11)
+    pos = p * (n - 1)
+    lo_r = int(pos) + 1
+    return lo_r, min(lo_r + 1, n), pos - int(pos)
+
+
+def _brackets(probs, cont: bool):
+    return lambda n: [(float(p), *_bracket(p, n, cont)) for p in probs]
 
 
 def exact_rank_value(
@@ -96,83 +96,19 @@ def exact_rank_value(
     rank: int,
     bins: int = 1024,
     exact_threshold: int = 65536,
-    stats: dict | None = None,
 ) -> float | None:
-    """The exact rank-th smallest non-null value (1-indexed). None on an
-    empty (all-null) column. Each narrowing pass is one filtered aggregation
-    job; the resolve phase is one more. ``rank`` outside [1, n] raises.
-    Pass a dict as ``stats`` to receive {"passes": int, "resolve_rows": int}
-    — the observability hook the scale probe uses to show pass depth stays
-    logarithmic as n grows."""
-    v = F.col(value_col).cast("double")
-    base = df.filter(v.isNotNull()).select(v.alias("_v"))
-    first = base.agg(
-        F.min("_v").alias("lo"), F.max("_v").alias("hi"), F.count("_v").alias("n")
-    ).collect()[0]
-    lo, hi, n = first["lo"], first["hi"], first["n"]
-    if n == 0:
-        return None
-    if not 1 <= rank <= n:
-        raise ValueError(f"rank {rank} outside [1, {n}]")
+    """The exact rank-th smallest non-null value (1-indexed): one unit
+    through the engine over no keys, so its pass 0 is the fused stats +
+    first-narrowing job. None on an empty (all-null) column; ``rank``
+    outside [1, n] raises."""
 
-    vv = F.col("_v")
-    offset = 0  # rows known to sort strictly before the current interval
-    in_interval = n
-    passes = 0
-    while in_interval > exact_threshold and hi > lo:
-        passes += 1
-        counts = {
-            r["b"]: (r["c"], r["bmin"], r["bmax"])
-            for r in base.filter((vv >= F.lit(lo)) & (vv <= F.lit(hi)))
-            .groupBy(_bin_col(vv, lo, hi, bins).alias("b"))
-            .agg(
-                F.count(F.lit(1)).alias("c"),
-                F.min("_v").alias("bmin"),
-                F.max("_v").alias("bmax"),
-            )
-            .collect()
-        }
-        below, in_bin, bmin, bmax = _walk(counts, bins, offset, rank)
-        if bmin == bmax:
-            # degenerate landing bin: a single distinct value dominates (e.g.
-            # a zero-heavy column). _walk guarantees below < rank <= below +
-            # in_bin, so the rank-th value IS bmin — no sort-based resolve,
-            # which on a huge stalled interval would funnel through one task.
-            if stats is not None:
-                stats["passes"] = passes
-                stats["resolve_rows"] = 0
-            return bmin
-        if (bmin, bmax) == (lo, hi) or in_bin == in_interval:
-            break  # no progress (mass concentrated) — resolve as-is
-        lo, hi = bmin, bmax
-        offset, in_interval = below, in_bin
+    def one_rank(n):
+        if not 1 <= rank <= n:
+            raise ValueError(f"rank {rank} outside [1, {n}]")
+        return [(None, rank, rank, 0.0)]
 
-    if lo == hi:
-        # the whole surviving interval is one distinct value — already the
-        # answer (also covers the all-values-equal input without any pass)
-        if stats is not None:
-            stats["passes"] = passes
-            stats["resolve_rows"] = 0
-        return lo
-    if stats is not None:
-        stats["passes"] = passes
-        stats["resolve_rows"] = in_interval
-    # resolve: max of the (rank - offset) smallest survivors == the answer
-    row = (
-        base.filter((vv >= F.lit(lo)) & (vv <= F.lit(hi)))
-        .orderBy("_v")
-        .limit(rank - offset)
-        .agg(F.max("_v").alias("ans"))
-        .collect()[0]
-    )
-    return row["ans"]
-
-
-_IDF_SCHEMA_SUFFIX = [
-    ("_lo", "double"),
-    ("_hi", "double"),
-    ("_take", "long"),
-]
+    rows = _global_values(df.sparkSession, df, value_col, one_rank, bins, exact_threshold)
+    return rows[0][1] if rows else None
 
 
 def _exponent_bucket(v):
@@ -181,9 +117,9 @@ def _exponent_bucket(v):
     zero. v1 <= v2 implies eb(v1) <= eb(v2) (negatives get mirrored
     exponents, every positive bucket > 0 > every negative bucket; the
     +/-1100 clamp absorbs subnormals at -1074 and infinities), which is the
-    ONLY property the narrowing walk needs from a binning — _walk consumes
-    per-bucket exact (count, min, max), so coarse sign+exponent granularity
-    costs extra passes at worst, never exactness."""
+    ONLY property the narrowing walk needs from a binning — _walk_buckets
+    consumes per-bucket exact (count, min, max), so coarse sign+exponent
+    granularity costs extra passes at worst, never exactness."""
     mag = F.floor(F.greatest(F.lit(-1100.0), F.least(F.lit(1100.0), F.log2(F.abs(v)))))
     # NaN maps EXPLICITLY to the NULL bucket (_walk_buckets sorts it last,
     # matching Spark's NaN-greatest sort order): without the isnan branch the
@@ -205,10 +141,13 @@ def _nan_pair(lo, hi) -> bool:
 
 
 def _walk_buckets(counts: dict, offset: int, rank: int):
-    """_walk over ARBITRARY ascending bucket ids (the exponent pass's id
-    space is sparse, unlike the dense range(bins) of interval passes). A
-    None id (NaN values' bucket under the exponent map) sorts last, matching
-    the dense walk's NaN-in-last-bin placement."""
+    """Walk cumulative bucket counts to the landing bucket of ``rank``.
+    counts maps bucket id -> (count, min_v, max_v), ids ascending in value:
+    sparse sign+exponent ids in pass 0, interval bins in later passes (a bin
+    with no rows is absent, and an empty bin can never be the landing one).
+    A None id (NaN values' bucket under the exponent map) sorts last,
+    matching Spark's NaN-greatest sort order. Returns (below, in_bin,
+    bin_min, bin_max)."""
     cum = offset
     for b in sorted(counts, key=lambda k: (k is None, k)):
         c, bmin, bmax = counts[b]
@@ -228,155 +167,89 @@ def exact_quantiles(
 ) -> DataFrame:
     """Exact ``quantile_disc`` values for each prob: (prob, value) rows.
 
-    ALL ranks narrow in SHARED passes: per level the still-active ranks'
-    intervals go out as one broadcast frame, each row lands in every
-    interval that covers it (a ≤ len(probs)-row broadcast product, filtered
-    at the scan), and one aggregation returns per-(rank, bin) counts — so a
-    5-quantile request costs the same ~log_bins scan count as one quantile,
-    not 5x. The resolve step answers every rank in one job: a per-rank
-    window over its ≤ exact_threshold survivors. The result is the actual
+    The engine over no keys (:func:`exact_group_quantiles` with
+    ``keys=[]``): ALL ranks narrow in SHARED passes, so a 5-quantile request
+    costs the same ~log_bins scan count as one quantile, not 5x, and the
+    resolve answers every rank in one windowed job. The result is the actual
     data element — exact, bit-for-bit reproducible by any engine's
-    quantile_disc.
-
-    Fused first pass (r15, guide §2.4 "remove passes outright"): the
-    (lo, hi, n) stats aggregation and the first narrowing level run as ONE
-    job by binning pass 0 on the data-independent ORDER-PRESERVING
-    sign+exponent bucket (:func:`_exponent_bucket`) instead of an interval
-    bin that would need lo/hi up front. One full-scan job returns per-bucket
-    (count, min, max); n/lo/hi fall out of the same rows, and walking the
-    ascending buckets seeds every rank's interval exactly as an interval
-    pass would — 3 sequential full scans (stats, narrow, resolve) become 2
-    for the common one-narrowing-pass case, at ANY scale. Exactness is
-    untouched: binning only navigates; the answers come from exact
-    per-bucket min/max and the resolve step.
+    quantile_disc. An all-NULL column gives one (prob, None) row per prob.
     """
-    base = _nonnull_base(df, value_col)
-    n, counts0 = _global_pass0(base)
-    if n == 0:
-        return spark.createDataFrame(
-            [(float(p), None) for p in probs], "prob double, value double"
-        )
-    rank_by_pid = {i: quantile_rank(p, n) for i, p in enumerate(probs)}
-    answers = _global_rank_values(
-        spark, base, counts0, rank_by_pid, bins, exact_threshold
-    )
+    rows = _global_values(spark, df, value_col, _brackets(probs, False), bins, exact_threshold)
     return spark.createDataFrame(
-        [(float(p), answers.get(i)) for i, p in enumerate(probs)], "prob double, value double"
+        rows or [(float(p), None) for p in probs], "prob double, value double"
     )
 
 
-def _nonnull_base(df: DataFrame, value_col: str) -> DataFrame:
-    v = F.col(value_col).cast("double")
-    return df.filter(v.isNotNull()).select(v.alias("_v"))
-
-
-def _global_pass0(base: DataFrame):
-    """The fused stats+first-narrowing job over a ``_v`` base: one full scan
-    returning (n, {exponent_bucket: (count, min, max)})."""
-    bucket_rows = (
-        base.groupBy(_exponent_bucket(F.col("_v")).alias("_b"))
-        .agg(
-            F.count(F.lit(1)).alias("_c"),
-            F.min("_v").alias("_bmin"),
-            F.max("_v").alias("_bmax"),
-        )
-        .collect()
+def _global_values(spark, df, value_col, brackets, bins, exact_threshold, decimals=None):
+    """A global call: the engine over no keys (one group, which always fits
+    the group budget), finished on the driver. The ≤ 2·|probs| exact order
+    statistics come back in one collect and each (prob, lo rank, hi rank,
+    frac) row becomes (prob, value) here; the grouped cont finish's
+    per-(group, prob) aggregation would cost one more job for one group, and
+    units answered directly cost no job at all. Returns None for an all-NULL
+    column."""
+    _, meta, resolve, direct = _narrow(
+        spark, df, [], value_col, brackets, bins, exact_threshold, 1
     )
-    n = sum(r["_c"] for r in bucket_rows)
-    return n, {r["_b"]: (r["_c"], r["_bmin"], r["_bmax"]) for r in bucket_rows}
+    if not meta:
+        return None
+    got = {rank: v for (_, rank), v in direct.items()}
+    if resolve is not None:
+        got.update((r["rank"], r["value"]) for r in resolve.collect())
+    out = []
+    for prob, lo_r, hi_r, frac in meta:
+        lo, hi = got[lo_r], got[hi_r]
+        # an integral position IS the order statistic (as DuckDB and Spark's
+        # percentile return it): lo + 0·(hi - lo) is NaN at an infinite end
+        val = lo if frac == 0 else lo + frac * (hi - lo)
+        out.append((prob, val if decimals is None else round(val, decimals)))
+    return out
 
 
-def _global_rank_values(
-    spark: SparkSession,
-    base: DataFrame,
-    counts0: dict,
-    rank_by_pid: dict[int, int],
-    bins: int,
-    exact_threshold: int,
-) -> dict[int, float]:
-    """The shared global narrowing engine: resolve the exact rank-th-smallest
-    value for every (pid -> rank) unit, seeded from a fused pass-0 bucket
-    map (:func:`_global_pass0`), narrowing all units in shared interval
-    passes and resolving the survivors in one windowed job. Returns
-    pid -> value."""
-    # per-pid narrowing state: pid -> [lo, hi, offset, in_interval, rank],
-    # seeded from the fused pass-0 walk (each rank's landing bucket)
-    state: dict[int, list] = {}
-    # units answered without a resolve sort (degenerate one-value intervals)
-    resolved: dict[int, float] = {}
-    for pid, rank in rank_by_pid.items():
-        below, in_bin, bmin, bmax = _walk_buckets(counts0, 0, rank)
-        if bmin == bmax or _nan_pair(bmin, bmax):
-            resolved[pid] = bmin
-            continue
-        state[pid] = [bmin, bmax, below, in_bin, rank]
+def _narrow(spark, df, ks, value_col, brackets, bins, exact_threshold, max_groups):
+    """The one engine behind every entry point: the fused pass 0
+    (:func:`_group_pass0`), one (group, rank) unit per distinct bracketing
+    rank, and the shared narrowing passes and windowed resolve
+    (:func:`_group_rank_values`). ``brackets(n)`` lists the (prob, lo rank,
+    hi rank, frac) rows of a group of n values; distinct probs can land on
+    the SAME rank (small groups, adjacent probs, cont brackets), and each
+    (group, rank) narrows once. Returns (base, meta rows (*group, prob, lo
+    rank, hi rank, frac), and :func:`_group_rank_values`' (resolve,
+    direct))."""
+    base, groups = _group_pass0(df, ks, value_col, max_groups, bins)
+    state: dict = {}
+    meta = []
+    for g, buckets in groups.items():
+        for prob, lo_r, hi_r, frac in brackets(sum(c for c, _, _ in buckets.values())):
+            for rank in (lo_r, hi_r):
+                if (g, rank) not in state:
+                    # seed from the group's pass-0 bucket walk; a one-value
+                    # landing bucket seeds lo == hi, answered without a sort
+                    below, in_bin, bmin, bmax = _walk_buckets(buckets, 0, rank)
+                    state[(g, rank)] = [bmin, bmax, below, in_bin]
+            meta.append((*g, prob, lo_r, hi_r, frac))
+    return base, meta, *_group_rank_values(spark, base, ks, state, bins, exact_threshold)
 
-    def _intervals_df(pids):
-        rows = [(pid, st[0], st[1], st[4] - st[2]) for pid, st in state.items() if pid in pids]
-        return spark.createDataFrame(rows, "_pid int, _lo double, _hi double, _take long")
 
-    in_window = (F.col("_v") >= F.col("_lo")) & (F.col("_v") <= F.col("_hi"))
-    # per-interval bin over its own [lo, hi] — column-side arithmetic so one
-    # expression serves every interval in the broadcast frame; the subnormal
-    # clamp keeps the divisor nonzero when (hi - lo) / bins underflows on a
-    # subnormal-thin interval (see _bin_col — ANSI DIVIDE_BY_ZERO otherwise)
-    width = F.greatest((F.col("_hi") - F.col("_lo")) / bins, F.lit(5e-324))
-    rel_bin = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor((F.col("_v") - F.col("_lo")) / width).cast("int")),
+def _attach(spark, ks, vals, meta_rows):
+    """Fan each (group, rank) value out to the (group, prob) meta rows whose
+    bracketing ranks name it: one broadcast join, null-safe on the keys
+    (SQL GROUP BY treats NULL as a real group)."""
+    schema = (
+        vals.select(*ks)
+        .schema.add("prob", "double")
+        .add("_lo_r", "long")
+        .add("_hi_r", "long")
+        .add("_frac", "double")
     )
-    active = {
-        pid
-        for pid, st in state.items()
-        if pid not in resolved and st[3] > exact_threshold and st[1] > st[0]
-    }
-    while active:
-        joined = base.crossJoin(F.broadcast(_intervals_df(active))).where(in_window)
-        counts: dict[int, dict[int, tuple]] = {}
-        for r in (
-            joined.groupBy("_pid", rel_bin.alias("_b"))
-            .agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.min("_v").alias("_bmin"),
-                F.max("_v").alias("_bmax"),
-            )
-            .collect()
-        ):
-            counts.setdefault(r["_pid"], {})[r["_b"]] = (r["_c"], r["_bmin"], r["_bmax"])
-        next_active = set()
-        for pid in active:
-            lo, hi, offset, in_interval, rank = state[pid]
-            below, in_bin, bmin, bmax = _walk(counts.get(pid, {}), bins, offset, rank)
-            if bmin == bmax:
-                # degenerate landing bin — the rank-th value IS bmin (below <
-                # rank <= below + in_bin by _walk); skip the sort resolve that
-                # a stalled one-value-dominated interval would degenerate into
-                resolved[pid] = bmin
-                continue
-            if (bmin, bmax) == (lo, hi) or in_bin == in_interval:
-                continue  # no progress — resolve this rank as-is
-            state[pid] = [bmin, bmax, below, in_bin, rank]
-            if in_bin > exact_threshold and bmax > bmin:
-                next_active.add(pid)
-        active = next_active
-
-    # resolve every still-open rank in one job: (rank - offset)-th smallest
-    # survivor; ranks already answered by a degenerate bin skip the sort
-    from pyspark.sql import Window as W
-
-    answers = dict(resolved)
-    unresolved = set(state) - set(resolved)
-    if unresolved:
-        survivors = base.crossJoin(F.broadcast(_intervals_df(unresolved))).where(in_window)
-        rn = F.row_number().over(W.partitionBy("_pid").orderBy("_v"))
-        answers.update(
-            (r["_pid"], r["_v"])
-            for r in survivors.withColumn("_rn", rn)
-            .where(F.col("_rn") == F.col("_take"))
-            .select("_pid", "_v")
-            .collect()
-        )
-    return answers
+    meta = spark.createDataFrame(meta_rows, schema)
+    cond = (vals["rank"] == meta["_lo_r"]) | (vals["rank"] == meta["_hi_r"])
+    for k in ks:
+        cond = cond & vals[k].eqNullSafe(meta[k])
+    joined = vals.join(F.broadcast(meta), cond)
+    for k in ks:
+        joined = joined.drop(meta[k])
+    return joined
 
 
 def exact_group_quantiles(
@@ -413,53 +286,35 @@ def exact_group_quantiles(
     real groups (null-safe interval joins), both matching SQL GROUP BY
     aggregate semantics.
 
-    Fused first pass (r15, guide §2.4, mirroring the global paths): the
-    per-group stats job and the first narrowing level run as ONE full-scan
-    aggregation on the data-independent sign+exponent bucket
-    (:func:`_group_pass0`) — per-group n and every (group, rank) seed
-    interval fall out of the same per-(group, bucket) exact (count, min,
-    max) rows, so the common one-narrowing-pass case costs 2 full scans
-    instead of 3. Exactness is bins/bucket-independent as always.
+    Fused first pass (r15, guide §2.4): the per-group stats job and the
+    first narrowing level run as ONE full-scan aggregation on the
+    data-independent sign+exponent bucket (:func:`_group_pass0`) — per-group
+    n and every (group, rank) seed interval fall out of the same
+    per-(group, bucket) exact (count, min, max) rows, so the common
+    one-narrowing-pass case costs 2 full scans instead of 3. Exactness is
+    bins/bucket-independent as always.
     """
     ks = list(keys)
     probs = [p] if isinstance(p, (int, float)) else list(p)
-    base, groups = _group_pass0(df, ks, value_col, max_groups, bins)
-    # quantile_disc's rank ceil(p*n) per (group, prob); distinct probs can
-    # land on the SAME rank for small groups — the engine computes each
-    # (group, rank) once and the prob->rank metadata join fans the value out
-    state: dict = {}
-    meta_rows = []
-    for g, buckets in groups.items():
-        n = sum(c for c, _, _ in buckets.values())
-        for prob in probs:
-            rank = quantile_rank(prob, n)
-            _seed_unit(state, g, rank, buckets)
-            meta_rows.append((*g, float(prob), rank))
-    vals = _group_rank_values(spark, base, ks, state, bins, exact_threshold)
+    base, meta, resolve, direct = _narrow(
+        spark, df, ks, value_col, _brackets(probs, False), bins, exact_threshold, max_groups
+    )
+    vals = _values(spark, base, ks, resolve, direct)
     if len(probs) == 1:
         return vals.select(*ks, F.lit(float(probs[0])).alias("prob"), "value")
-    meta_schema = base.select(*ks).schema.add("prob", "double").add("rank", "long")
-    meta = spark.createDataFrame(meta_rows, meta_schema)
-    cond = vals["rank"] == meta["rank"]
-    for k in ks:
-        cond = cond & vals[k].eqNullSafe(meta[k])
-    joined = vals.join(F.broadcast(meta), cond)
-    for k in ks:
-        joined = joined.drop(meta[k])
-    return joined.select(*ks, "prob", "value")
+    return _attach(spark, ks, vals, meta).select(*ks, "prob", "value")
 
 
 def _group_pass0(df: DataFrame, ks: list[str], value_col: str, max_groups: int, bins: int):
-    """Fused head of the grouped selection paths (r15, guide §2.4 "remove
-    passes outright"): the per-group (lo, hi, n) stats job and the first
-    narrowing level run as ONE full-scan aggregation by binning pass 0 on
-    the data-independent ORDER-PRESERVING sign+exponent bucket
-    (:func:`_exponent_bucket`, the same fusion as the global paths'
-    :func:`_global_pass0`). One job returns per-(group, bucket) exact
-    (count, min, max); each group's n is the sum of its bucket counts and
-    every (group, rank) seeds its interval by walking that group's ascending
-    buckets exactly as an interval pass would. Returns (base, {group-tuple:
-    {bucket: (count, min, max)}}).
+    """Fused head of the engine (r15, guide §2.4 "remove passes outright"):
+    the per-group (lo, hi, n) stats job and the first narrowing level run as
+    ONE full-scan aggregation by binning pass 0 on the data-independent
+    ORDER-PRESERVING sign+exponent bucket (:func:`_exponent_bucket`). One
+    job returns per-(group, bucket) exact (count, min, max); each group's n
+    is the sum of its bucket counts and every (group, rank) seeds its
+    interval by walking that group's ascending buckets exactly as an
+    interval pass would. A global call is ``ks=[]``: one group. Returns
+    (base, {group-tuple: {bucket: (count, min, max)}}).
 
     Driver-OOM protection (the old limit(max_groups + 1) contract, adapted):
     the collect is bounded by limit(max_groups x max(bins, exponent-bucket
@@ -503,16 +358,6 @@ def _group_pass0(df: DataFrame, ks: list[str], value_col: str, max_groups: int, 
     return base, groups
 
 
-def _seed_unit(state: dict, g: tuple, rank: int, buckets: dict) -> None:
-    """Seed one (group, rank) narrowing unit from its group's pass-0 bucket
-    walk (idempotent — duplicate ranks from different probs share the
-    entry). Degenerate one-value landing buckets seed lo == hi, which
-    :func:`_group_rank_values` answers directly without a sort."""
-    if (g, rank) not in state:
-        below, in_bin, bmin, bmax = _walk_buckets(buckets, 0, rank)
-        state[(g, rank)] = [bmin, bmax, below, in_bin]
-
-
 def _group_rank_values(
     spark: SparkSession,
     base: DataFrame,
@@ -520,22 +365,26 @@ def _group_rank_values(
     state: dict,
     bins: int,
     exact_threshold: int,
-) -> DataFrame:
-    """The shared grouped narrowing engine, generalized to MULTIPLE ranks per
-    group (the cont path needs two bracketing order statistics): ``state``
-    maps (group-tuple, rank) -> [lo, hi, offset, in_interval] (seeded from
-    the fused pass-0 bucket walk since r15); returns a DataFrame
-    (keys..., rank, value). Every pass is ONE aggregation shared by
-    every still-active (group, rank); adjacent ranks' intervals coincide
-    until the final subdivisions, so the second rank rides nearly free. The
-    resolve is one distributed windowed job over all open units; degenerate
-    one-value intervals answer directly (no sort)."""
+) -> tuple[DataFrame | None, dict]:
+    """The one narrowing loop and resolve, over (group, rank) units (any
+    number of ranks per group; the cont path needs two bracketing order
+    statistics): ``state`` maps (group-tuple, rank) -> [lo, hi, offset,
+    in_interval] (seeded from the fused pass-0 bucket walk); returns
+    (resolve, direct). Every pass is ONE aggregation shared by every
+    still-active (group, rank); adjacent ranks' intervals coincide until the
+    final subdivisions, so the second rank rides nearly free. ``resolve`` is
+    one distributed windowed job over all open units, a frame (keys...,
+    rank, value), or None when no unit is open; ``direct`` maps the units
+    whose interval holds one value — answered with no sort — to it."""
 
     def _key_schema():
-        schema = base.select(*ks).schema
-        for name, typ in [("_rank", "long")] + _IDF_SCHEMA_SUFFIX:
-            schema = schema.add(name, typ)
-        return schema
+        return (
+            base.select(*ks)
+            .schema.add("_rank", "long")
+            .add("_lo", "double")
+            .add("_hi", "double")
+            .add("_take", "long")
+        )
 
     # units answered without a resolve sort (degenerate one-value intervals;
     # _nan_pair: a unit seeded in the all-NaN NULL bucket answers NaN)
@@ -554,7 +403,13 @@ def _group_rank_values(
         return spark.createDataFrame(rows, _key_schema())
 
     in_window = (F.col("_v") >= F.col("_lo")) & (F.col("_v") <= F.col("_hi"))
-    # subnormal clamp: see _bin_col (ANSI DIVIDE_BY_ZERO on 0-width underflow)
+    # per-interval bin over its own [lo, hi] — column-side arithmetic so one
+    # expression serves every interval in the broadcast frame. The width
+    # clamp to the smallest positive subnormal keeps the divisor nonzero when
+    # (hi - lo) / bins underflows on a subnormal-thin interval with hi > lo
+    # (ANSI mode turns the 0-width division into DIVIDE_BY_ZERO); any
+    # positive width keeps the bin monotone in v, so the clamp only coarsens
+    # granularity (worst case: one bin -> the no-progress resolve path)
     width = F.greatest((F.col("_hi") - F.col("_lo")) / bins, F.lit(5e-324))
     rel_bin = F.least(
         F.lit(bins - 1),
@@ -599,10 +454,10 @@ def _group_rank_values(
         for gr in active:
             rank = gr[1]
             lo, hi, offset, in_interval = state[gr]
-            below, in_bin, bmin, bmax = _walk(counts.get(gr, {}), bins, offset, rank)
+            below, in_bin, bmin, bmax = _walk_buckets(counts.get(gr, {}), offset, rank)
             if bmin == bmax:
                 # degenerate landing bin — the unit's rank-th value IS bmin
-                # (below < rank <= below + in_bin by _walk); no sort resolve
+                # (below < rank <= below + in_bin by the walk); no sort resolve
                 resolved[gr] = bmin
                 continue
             if (bmin, bmax) == (lo, hi) or in_bin == in_interval:
@@ -613,31 +468,28 @@ def _group_rank_values(
         active = next_active
 
     # resolve every still-open unit in one distributed job: (rank - offset)-th
-    # smallest survivor per (group, rank) via a bounded window; units answered
-    # by a degenerate bin join in as literal rows
-    from pyspark.sql import Window as W
-
-    def _out_schema():
-        return base.select(*ks).schema.add("rank", "long").add("value", "double")
-
+    # smallest survivor per (group, rank) via a bounded window
     unresolved = set(state) - set(resolved)
-    out = None
-    if unresolved:
-        survivors = _join_intervals(_intervals_df(unresolved))
-        rn = F.row_number().over(W.partitionBy(*ks, "_rank").orderBy("_v"))
-        out = (
-            survivors.withColumn("_rn", rn)
-            .where(F.col("_rn") == F.col("_take"))
-            .select(*ks, F.col("_rank").alias("rank"), F.col("_v").alias("value"))
-        )
-    if resolved:
-        direct = spark.createDataFrame(
-            [(*g, r, v) for (g, r), v in resolved.items()], _out_schema()
-        )
-        out = direct if out is None else out.unionByName(direct)
-    if out is None:  # no groups at all (empty input)
-        out = spark.createDataFrame([], _out_schema())
-    return out
+    if not unresolved:
+        return None, resolved
+    survivors = _join_intervals(_intervals_df(unresolved))
+    rn = F.row_number().over(Window.partitionBy(*ks, "_rank").orderBy("_v"))
+    return (
+        survivors.withColumn("_rn", rn)
+        .where(F.col("_rn") == F.col("_take"))
+        .select(*ks, F.col("_rank").alias("rank"), F.col("_v").alias("value")),
+        resolved,
+    )
+
+
+def _values(spark, base, ks, resolve, resolved) -> DataFrame:
+    """Every unit's value as one frame (keys..., rank, value): the windowed
+    resolve, plus the units answered by a degenerate bin as literal rows."""
+    if resolve is not None and not resolved:
+        return resolve
+    schema = base.select(*ks).schema.add("rank", "long").add("value", "double")
+    direct = spark.createDataFrame([(*g, r, v) for (g, r), v in resolved.items()], schema)
+    return direct if resolve is None else resolve.unionByName(direct)
 
 
 def exact_group_quantiles_cont(
@@ -660,54 +512,29 @@ def exact_group_quantiles_cont(
     extra probs ride nearly free, exactly like the disc path.
 
     Per group each prob's continuous definition sits at position p·(n-1) and
-    interpolates the two bracketing order statistics; EVERY bracketing rank
-    of EVERY group narrows together (:func:`_group_rank_values` — adjacent
-    ranks' intervals coincide until the last subdivisions, and distinct
-    probs often share a bracketing rank, deduplicated by the state dict),
-    and the interpolation is distributed: the per-(group, prob)
-    (lo_rank, hi_rank, frac) triple broadcasts as metadata and one final
-    aggregation per (group, prob) forms (1-f)·lo + f·hi. NULL-keyed groups
-    are real groups; groups with no non-null values are absent — SQL
-    GROUP BY semantics, same as the disc path."""
+    interpolates the two bracketing order statistics (:func:`_bracket`);
+    EVERY bracketing rank of EVERY group narrows together (adjacent ranks'
+    intervals coincide until the last subdivisions, and distinct probs often
+    share a bracketing rank, narrowed once), and the interpolation is
+    distributed: the per-(group, prob) (lo_rank, hi_rank, frac) triple
+    broadcasts as metadata and one final aggregation per (group, prob) forms
+    lo + f·(hi - lo). NULL-keyed groups are real groups; groups with no
+    non-null values are absent — SQL GROUP BY semantics, same as the disc
+    path."""
     ks = list(keys)
     probs = [p] if isinstance(p, (int, float)) else list(p)
-    base, groups = _group_pass0(df, ks, value_col, max_groups, bins)
-    state: dict = {}
-    meta_rows = []
-    for g, buckets in groups.items():
-        n = sum(c for c, _, _ in buckets.values())
-        for prob in probs:
-            # float (not Fraction) position arithmetic on purpose: DuckDB's
-            # quantile_cont computes p*(n-1) in IEEE double, so matching it
-            # bit-for-bit requires the same product (oracle-pinned since r11)
-            pos = prob * (n - 1)
-            lo_r = int(pos) + 1
-            hi_r = min(lo_r + 1, n)
-            frac = pos - int(pos)
-            _seed_unit(state, g, lo_r, buckets)
-            _seed_unit(state, g, hi_r, buckets)
-            meta_rows.append((*g, float(prob), lo_r, hi_r, float(frac)))
-    vals = _group_rank_values(spark, base, ks, state, bins, exact_threshold)
-    meta_schema = (
-        base.select(*ks)
-        .schema.add("prob", "double")
-        .add("_lo_r", "long")
-        .add("_hi_r", "long")
-        .add("_frac", "double")
+    base, meta, resolve, direct = _narrow(
+        spark, df, ks, value_col, _brackets(probs, True), bins, exact_threshold, max_groups
     )
-    meta = spark.createDataFrame(meta_rows, meta_schema)
-    cond = None
-    for k in ks:
-        c = vals[k].eqNullSafe(meta[k])
-        cond = c if cond is None else cond & c
-    joined = vals.join(F.broadcast(meta), cond) if ks else vals.crossJoin(F.broadcast(meta))
-    for k in ks:
-        joined = joined.drop(meta[k])
     lo_v = F.max(F.when(F.col("rank") == F.col("_lo_r"), F.col("value")))
     hi_v = F.max(F.when(F.col("rank") == F.col("_hi_r"), F.col("value")))
+    frac = F.max("_frac")
+    # an integral position IS the order statistic (see _global_values)
+    value = F.when(frac == 0, lo_v).otherwise(lo_v + frac * (hi_v - lo_v))
     return (
-        joined.groupBy(*ks, "prob")
-        .agg(F.round(lo_v + F.max("_frac") * (hi_v - lo_v), decimals).alias("value"))
+        _attach(spark, ks, _values(spark, base, ks, resolve, direct), meta)
+        .groupBy(*ks, "prob")
+        .agg(F.round(value, decimals).alias("value"))
         .select(*ks, "prob", "value")
     )
 
@@ -735,38 +562,9 @@ def exact_quantiles_cont(
     consumer expects SQL AVG-style medians; ``exact_quantiles`` returns
     actual data elements (quantile_disc) and needs no rounding at all.
     """
-    # r15: ride the fused pass-0 directly (previously this ran its own
-    # count() job to learn n, then delegated to exact_quantiles which
-    # re-scanned for stats — 4 sequential full scans; now 2 in the common
-    # one-narrowing-pass case, sharing _global_pass0/_global_rank_values
-    # with the disc path)
-    base = _nonnull_base(df, value_col)
-    n, counts0 = _global_pass0(base)
-    if n == 0:
-        return spark.createDataFrame(
-            [(float(p), None) for p in probs], "prob double, value double"
-        )
-    # bracketing 1-indexed ranks per prob at position p*(n-1)
-    want: dict[float, tuple[int, int, float]] = {}
-    ranks: set[int] = set()
-    for p in probs:
-        pos = p * (n - 1)
-        lo_r = int(pos) + 1
-        hi_r = min(lo_r + 1, n)
-        frac = pos - int(pos)
-        want[p] = (lo_r, hi_r, frac)
-        ranks.update((lo_r, hi_r))
-    # dense pid -> rank map (the _pid interval-frame column is int-typed;
-    # raw ranks grow with n and would overflow it at scale)
-    ordered = sorted(ranks)
-    pid_of = {r: i for i, r in enumerate(ordered)}
-    vals = _global_rank_values(
-        spark, base, counts0, {i: r for i, r in enumerate(ordered)}, bins, exact_threshold
+    rows = _global_values(
+        spark, df, value_col, _brackets(probs, True), bins, exact_threshold, decimals
     )
-    got = {r: vals[pid_of[r]] for r in ordered}
-    rows = []
-    for p in probs:
-        lo_r, hi_r, frac = want[p]
-        val = got[lo_r] + frac * (got[hi_r] - got[lo_r])
-        rows.append((float(p), round(val, decimals)))
-    return spark.createDataFrame(rows, "prob double, value double")
+    return spark.createDataFrame(
+        rows or [(float(p), None) for p in probs], "prob double, value double"
+    )

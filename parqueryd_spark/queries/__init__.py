@@ -311,7 +311,8 @@ from parqueryd_spark.queries import tpch_extended  # noqa: E402,F401
 # keeper ≡ dedup_substrings, the strictly finer-grain exact-dedup route;
 # hash-group shape also in dedup_groups), events_exact_quantile_cont (global
 # interpolated ≡ events_exact_quantile_cont_by_type, strictly more general:
-# grouped + multi-prob; global narrowing ≡ events_exact_quantile),
+# grouped + multi-prob; a global call IS the grouped engine over no keys,
+# one selection engine for every quantile row),
 # events_exact_distinct_pcts (exact distinct ≡ groupby_count_variants +
 # sketch_error_bounds' exact side; percentile ≡ events_exact_quantile — the
 # r9 displacement argument, re-applied after its r11 in-window verification),

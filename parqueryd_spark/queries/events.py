@@ -752,10 +752,11 @@ def scd2_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_exact_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT order statistics without a global sort
-    (operators/selection.py): multi-pass histogram narrowing — each pass one
-    filtered range-predicate aggregation (pushdown- and zone-map-composable),
-    candidate population shrinking ~bins-fold per pass, final resolve as
-    max-of-the-r-smallest inside the engine. bins/exact_threshold are set
+    (operators/selection.py): multi-pass histogram narrowing — the grouped
+    engine over no keys: a fused stats + first-narrowing pass, then each pass
+    one aggregation against a broadcast frame of the open intervals,
+    candidate population shrinking ~bins-fold per pass, final resolve one
+    windowed row_number inside the engine. bins/exact_threshold are set
     low here so the gate exercises REAL narrowing passes at sf0.01 (10k
     rows), not just the small-n direct path; the answers are the actual data
     elements, so the oracle's quantile_disc must agree bit-for-bit.
@@ -830,9 +831,9 @@ def events_exact_quantile_by_type(spark: SparkSession, sf_dir: str) -> DataFrame
 def events_exact_quantile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INTERPOLATED exact-quantile definition (operators/selection.py:
     exact_quantiles_cont — SQL quantile_cont / Spark percentile): two
-    bracketing rank selections through the same shared-pass narrowing, with
-    the interpolation arithmetic done on the two exact scalars and rounded
-    to 6 dp. Completes the quantile family's contract: disc rows return
+    bracketing rank selections through the same engine as every quantile
+    row (the grouped engine over no keys), with the interpolation arithmetic
+    done on the two exact scalars and rounded to 6 dp. Completes the quantile family's contract: disc rows return
     actual data elements bit-for-bit; this row matches the AVG-style
     definition dashboards expect."""
     from parqueryd_spark.operators.selection import exact_quantiles_cont

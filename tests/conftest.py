@@ -74,15 +74,35 @@ def _slow_manifest() -> set[str]:
     return ids
 
 
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
     """Apply the `slow` marker from the manifest so the default run
     (`addopts = -m "not slow"`, pytest.ini) fits the driver's verification
     window (VERDICT r15 item #1a). Matching is on the repo-root-relative
-    nodeid, exactly as recorded by --durations."""
+    nodeid, exactly as recorded by --durations.
+
+    A manifest entry that names a collected file but matches none of its
+    items is stale (a renamed or deleted slow test, whose new name would land
+    in the default tier unannounced): collection fails. The check runs before
+    -k/-m/--deselect drop items (tryfirst), skips entries whose file was not
+    collected, and skips a run that selects only part of a file (a node id on
+    the command line, --lf, --sw)."""
     slow_ids = _slow_manifest()
+    collected = set()
     for item in items:
         nodeid = item.nodeid.replace(os.sep, "/")
         if not nodeid.startswith("tests/"):
             nodeid = "tests/" + nodeid.split("tests/")[-1]
+        collected.add(nodeid)
         if nodeid in slow_ids:
             item.add_marker(pytest.mark.slow)
+    partial = any("::" in str(a) for a in config.args) or any(
+        config.getoption(opt, False) for opt in ("lf", "stepwise")
+    )
+    files = {nodeid.split("::")[0] for nodeid in collected}
+    stale = sorted(i for i in slow_ids if i.split("::")[0] in files and i not in collected)
+    if stale and not partial:
+        raise pytest.UsageError(
+            "tests/slow_tests.txt names tests that were not collected "
+            "(renamed or deleted?):\n  " + "\n  ".join(stale)
+        )

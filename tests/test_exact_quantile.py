@@ -159,27 +159,6 @@ def test_group_quantiles_null_key_is_a_real_group(spark):
     assert out == {None: 4.0, "a": 1.0}
 
 
-def test_narrowing_pass_range_filter_reaches_the_parquet_scan(spark, tmp_path):
-    """The 100 TB story rests on each narrowing pass being a pushed range
-    scan: the interval predicate must appear in PushedFilters (so row-group
-    stats — and zone-map manifests on clustered data — can skip I/O)."""
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "vals")
-    spark.range(10000).select((F.col("id") * 1.0).alias("value")).write.parquet(path)
-    df = spark.read.parquet(path)
-    v = F.col("value").cast("double")
-    pass_plan = (
-        df.filter(v.isNotNull() & (v >= F.lit(100.0)) & (v <= F.lit(900.0)))
-        .groupBy(F.floor((v - F.lit(100.0)) / F.lit(50.0)).cast("int").alias("b"))
-        .count()
-    )
-    plan = pass_plan._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan
-    assert "GreaterThanOrEqual(value,100.0)" in plan, plan[:2000]
-    assert "LessThanOrEqual(value,900.0)" in plan, plan[:2000]
-
-
 def test_cont_quantiles_match_duckdb_quantile_cont(spark):
     from parqueryd_spark.operators.selection import exact_quantiles_cont
 

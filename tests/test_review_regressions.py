@@ -77,23 +77,31 @@ def test_invalid_agg_raises_even_with_missing_shards(spark):
 
 def test_degenerate_bin_skips_sort_resolve(spark):
     """A zero-heavy column (one value dominating past exact_threshold) must
-    resolve WITHOUT the sort-based fallback: stats['resolve_rows'] == 0 and
-    the answer is exact (ADVICE r10: the stalled interval otherwise funnels
-    through a single orderBy/limit task)."""
-    from parqueryd_spark.operators.selection import exact_rank_value
+    resolve WITHOUT the sort-based resolve: when every unit lands in a
+    one-value bin, the engine's frame has no Window node and the answer is
+    exact (ADVICE r10: the stalled interval otherwise funnels through one
+    sort). A rank outside the dominated mass still takes the window."""
+    from parqueryd_spark.operators.selection import exact_group_quantiles, exact_rank_value
+
+    def plan(out):
+        return out._jdf.queryExecution().executedPlan().toString()
 
     rows = [(0.0,)] * 500 + [(float(i),) for i in range(1, 51)]
     df = spark.createDataFrame(rows, "value double")
-    stats = {}
     # rank 250 lands mid-zero-mass; threshold far below 500 forces narrowing
-    got = exact_rank_value(df, "value", 250, bins=8, exact_threshold=16, stats=stats)
-    assert got == 0.0
-    assert stats["resolve_rows"] == 0
-    # all-equal column: answered with zero passes and zero resolve rows
+    out = exact_group_quantiles(spark, df, [], "value", 0.45, bins=8, exact_threshold=16)
+    assert [r["value"] for r in out.collect()] == [0.0]
+    assert "Window" not in plan(out)
+    assert exact_rank_value(df, "value", 250, bins=8, exact_threshold=16) == 0.0
+    tail = exact_group_quantiles(spark, df, [], "value", 0.99, bins=8, exact_threshold=16)
+    assert [r["value"] for r in tail.collect()] == [45.0]
+    assert "Window" in plan(tail)
+    # all-equal column: answered with zero passes and no window
     const = spark.createDataFrame([(7.0,)] * 100, "value double")
-    stats2 = {}
-    assert exact_rank_value(const, "value", 50, exact_threshold=10, stats=stats2) == 7.0
-    assert stats2["resolve_rows"] == 0
+    out = exact_group_quantiles(spark, const, [], "value", 0.5, exact_threshold=10)
+    assert [r["value"] for r in out.collect()] == [7.0]
+    assert "Window" not in plan(out)
+    assert exact_rank_value(const, "value", 50, exact_threshold=10) == 7.0
 
 
 def test_degenerate_bin_shared_pass_quantiles(spark):

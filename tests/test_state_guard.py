@@ -6,11 +6,12 @@ start through its one starter, zone-map verdicts come from one planner,
 datasets are swapped in only by ``sinks.atomic_publish``, every Hadoop
 ``FileSystem`` is resolved by ``sources/fs.HadoopFS``, every ANN route
 takes its centroids from ``similarity.resolve_centroids`` and its per-query
-probe and top-k windows from ``operators/similarity.py``, and reused data
-follows the two lifetime rules of ``queries.served_artifact``: published
-standing state lives in that one helper, and nothing a function persists
-outlives the function — in the tests too, which share one session. No
-Spark needed."""
+probe and top-k windows from ``operators/similarity.py``, every exact
+quantile runs through one selection engine (one pass 0, one resolve), and
+reused data follows the two lifetime rules of ``queries.served_artifact``:
+published standing state lives in that one helper, and nothing a function
+persists outlives the function — in the tests too, which share one session.
+No Spark needed."""
 
 from __future__ import annotations
 
@@ -107,6 +108,26 @@ def test_file_verdicts_collected_only_by_the_planner():
             if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_file_verdicts"
         ]
     assert len(calls) == 1, [n.lineno for n in calls]
+
+
+def test_exact_selection_has_one_pass0_and_one_resolve():
+    """Every exact-selection entry point (global, grouped, disc, cont, one
+    rank) runs through one engine: in ``operators/selection.py`` the
+    sign+exponent pass 0 bins through ``_exponent_bucket(`` at one call site
+    and the windowed resolve is the one ``row_number()`` call."""
+    with open(os.path.join(PKG, "operators", "selection.py")) as f:
+        tree = ast.parse(f.read())
+    calls: dict[str, list[int]] = {}
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            name = getattr(n.func, "id", getattr(n.func, "attr", None))
+            calls.setdefault(name, []).append(n.lineno)
+    found = [
+        f"operators/selection.py: {name}( called at lines {calls.get(name)}, want one call"
+        for name in ("_exponent_bucket", "row_number")
+        if len(calls.get(name, [])) != 1
+    ]
+    assert not found, "\n".join(found)
 
 
 def _persists_without_unpersist(text: str) -> list[int]:
