@@ -184,6 +184,30 @@ def test_exponent_bucket_is_order_preserving(spark):
             assert b > zero_bucket, (v, b)
 
 
+def test_global_pass0_buckets_partition_the_value_axis(spark):
+    """The global pass 0 is _group_pass0 over no keys: its one group's bucket
+    map must cover every non-null row exactly once in disjoint, ordered
+    value ranges — the invariant the seeding walk consumes (count drift or
+    range overlap would silently misplace a rank)."""
+    from parqueryd_spark.operators.selection import _group_pass0
+
+    vals = [5e-324, 2.3e-308, 0.0, -0.0, 1.0, 1.5, 2.0, -2.0, -1e300,
+            1e300, 0.1, 0.1, 0.1, -0.25, None, None, 7.0, 1024.0, 1025.0]
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    _, groups = _group_pass0(df, [], "v", max_groups=10, bins=4)
+    present = [v for v in vals if v is not None]
+    assert set(groups) == {()}
+    counts = groups[()]
+    assert sum(c for c, _, _ in counts.values()) == len(present)
+    ordered = [counts[b] for b in sorted(counts)]
+    for c, bmin, bmax in ordered:
+        assert bmin <= bmax and c >= 1
+    for (_, _, prev_max), (_, next_min, _) in zip(ordered, ordered[1:]):
+        assert prev_max <= next_min  # ranges ordered; equal only at +/-0.0
+    assert min(m for _, m, _ in ordered) == min(present)
+    assert max(m for _, _, m in ordered) == max(present)
+
+
 # --------------------------------------- read_lm write-time-enforced order
 
 
@@ -257,10 +281,8 @@ def test_stream_maintain_validates_premeta_store_at_adoption(tmp_path, spark):
 def test_group_pass0_buckets_partition_each_group(spark):
     """_group_pass0's per-group bucket maps must cover every non-null row of
     that group exactly once in disjoint ordered ranges (the invariant each
-    (group, rank) seed walk consumes — count drift or range overlap would
-    silently misplace a rank), with NULL keys kept as a real group and
-    all-null-value groups absent. A global call is the same pass over no
-    keys: one group holding every non-null row."""
+    (group, rank) seed walk consumes), with NULL keys kept as a real
+    group and all-null-value groups absent."""
     from parqueryd_spark.operators.selection import _group_pass0
 
     data = {
@@ -271,28 +293,16 @@ def test_group_pass0_buckets_partition_each_group(spark):
     }
     rows = [(g, v) for g, vals in data.items() for v in vals]
     df = spark.createDataFrame(rows, "grp string, v double")
-    flat = [5e-324, 2.3e-308, 0.0, -0.0, 1.0, 1.5, 2.0, -2.0, -1e300,
-            1e300, 0.1, 0.1, 0.1, -0.25, None, None, 7.0, 1024.0, 1025.0]
-    global_df = spark.createDataFrame([(v,) for v in flat], "v double")
-    for frame, ks, expect in (
-        (df, ["grp"], {(g,): vals for g, vals in data.items()}),
-        (global_df, [], {(): flat}),
-    ):
-        _, groups = _group_pass0(frame, ks, "v", max_groups=10, bins=4)
-        present_by_group = {
-            g: [v for v in vals if v is not None] for g, vals in expect.items()
-        }
-        assert set(groups) == {g for g, vals in present_by_group.items() if vals}
-        for g, buckets in groups.items():
-            present = present_by_group[g]
-            assert sum(c for c, _, _ in buckets.values()) == len(present)
-            ordered = [buckets[b] for b in sorted(buckets)]
-            for c, bmin, bmax in ordered:
-                assert bmin <= bmax and c >= 1
-            for (_, _, pmax), (_, nmin, _) in zip(ordered, ordered[1:]):
-                assert pmax <= nmin  # ranges ordered; equal only at +/-0.0
-            assert min(m for _, m, _ in ordered) == min(present)
-            assert max(m for _, _, m in ordered) == max(present)
+    _, groups = _group_pass0(df, ["grp"], "v", max_groups=10, bins=4)
+    assert set(groups) == {("a",), ("b",), (None,)}  # "d" all-null -> absent
+    for g, buckets in groups.items():
+        present = [v for v in data[g[0]] if v is not None]
+        assert sum(c for c, _, _ in buckets.values()) == len(present)
+        ordered = [buckets[b] for b in sorted(buckets)]
+        for (_, _, pmax), (_, nmin, _) in zip(ordered, ordered[1:]):
+            assert pmax <= nmin
+        assert min(m for _, m, _ in ordered) == min(present)
+        assert max(m for _, _, m in ordered) == max(present)
 
 
 def test_grouped_fused_multiprob_matches_duckdb(spark):
