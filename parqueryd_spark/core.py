@@ -9,6 +9,11 @@ shape to a DataFrame plan:
 
     read_resolved(existing_shards) -> filter(where) -> groupBy(keys).agg(...)
 
+The one exception is a small input: shards whose bytes fit one Spark split
+(``spark.sql.files.maxPartitionBytes``) are read through ``coalesce(1)``, so
+the call runs as one local pass in one task, like the reference's per-file
+worker pass, instead of a shuffled two-stage plan.
+
 Deliberate semantic deviation (documented, SURVEY.md §2 O7): the reference
 concatenates per-shard partial aggregates WITHOUT a final merge, so duplicate
 group keys can reach the client and per-shard ``mean`` is unmergeable. Spark's
@@ -82,6 +87,13 @@ def aggregate_files(
     only the manifest verdict — one job over a cached manifest, which
     ``build_manifest``/``refresh_manifest`` cluster by file — runs before
     the caller's action.
+
+    Execution is one task below Spark's split size: when a read's files sum
+    to at most ``spark.sql.files.maxPartitionBytes`` (the plain read, each
+    ``concat`` part, the fully-pruned empty read), it goes through
+    ``coalesce(1)`` and the aggregate needs no Exchange, so the action runs
+    one job. The size is the file index's own listing, so this adds no job
+    to planning. Above the bound the plan is unchanged.
     """
     if shard_merge not in ("global", "concat"):
         raise ValueError(f"shard_merge must be 'global' or 'concat', got {shard_merge!r}")
@@ -117,13 +129,26 @@ def aggregate_files(
         if not kept:
             # every shard provably disjoint from the predicate: same result
             # as filtering everything out (schema from a real shard, 0 rows)
-            return _one(read_resolved(spark, existing[:1]).filter(_F.lit(False)))
+            return _one(_read(spark, existing[:1]).filter(_F.lit(False)))
         existing = kept
 
     if shard_merge == "concat" and aggregate:
-        parts = [_one(read_resolved(spark, [p])) for p in existing]
+        parts = [_one(_read(spark, [p])) for p in existing]
         return reduce(DataFrame.unionByName, parts)
-    return _one(read_resolved(spark, existing))
+    return _one(_read(spark, existing))
+
+
+def _read(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
+    """``read_resolved(spark, paths)``, through ``coalesce(1)`` when the
+    scan fits one Spark split (``spark.sql.files.maxPartitionBytes``) — F1
+    Query's centralized execution for small queries. The size is the
+    analyzed plan's estimate: the byte sum of the files Spark's file index
+    listed when the DataFrame was built, so reading it runs no job."""
+    df = read_resolved(spark, paths)
+    size = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    if size <= spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes():
+        return df.coalesce(1)
+    return df
 
 
 # agg methods whose output type is knowable without reading any shard; the

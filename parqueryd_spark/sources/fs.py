@@ -19,6 +19,8 @@ docstrings on the publish functions call out the table-format upgrade path.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
 
@@ -31,7 +33,8 @@ class HadoopFS:
     planning call builds one of these per call."""
 
     def __init__(self, spark: SparkSession, anchor_path: str):
-        self._Path = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)
+        self._gateway = spark._jvm._gateway_client
+        self._Path = JavaClass("org.apache.hadoop.fs.Path", self._gateway)
         self._fs = self._Path(anchor_path).getFileSystem(spark._jsc.hadoopConfiguration())
 
     def qualify(self, path: str) -> str:
@@ -79,6 +82,13 @@ class HadoopFS:
         """Child basenames of a directory (``os.listdir`` analog)."""
         return [st.getPath().getName() for st in self._fs.listStatus(self._Path(path))]
 
+    @cached_property
+    def _visible(self):
+        """The ``PathFilter`` dataset listings pass to ``listStatus``: it
+        drops hidden entries JVM-side, so a skipped entry costs no py4j
+        round trip."""
+        return JavaClass("org.apache.hadoop.fs.GlobFilter", self._gateway)(_VISIBLE_GLOB)
+
     def list_files(self, path: str, suffix: str | None = ".parquet") -> list[str]:
         """Fully-qualified data-file paths under ``path`` (recursive), skipping
         hidden/marker entries (``_SUCCESS``, ``.crc``, ``_metadata``). A
@@ -90,15 +100,14 @@ class HadoopFS:
         out: list[str] = []
 
         def walk(p) -> None:
-            for st in self._fs.listStatus(p):
+            for st in self._fs.listStatus(p, self._visible):
                 child = st.getPath()
-                name = child.getName()
-                if _hidden(name):
-                    continue
                 if st.isDirectory():
                     walk(child)
-                elif suffix is None or name.endswith(suffix):
-                    out.append(child.toString())
+                else:
+                    found = child.toString()
+                    if suffix is None or found.endswith(suffix):
+                        out.append(found)
 
         walk(self._Path(path))
         return sorted(out)
@@ -115,12 +124,10 @@ class HadoopFS:
 
         def first(p) -> str | None:
             entries = []
-            for st in self._fs.listStatus(p):
+            for st in self._fs.listStatus(p, self._visible):
                 child = st.getPath()
-                name = child.getName()
-                if not _hidden(name):
-                    is_dir = st.isDirectory()
-                    entries.append((name + "/" if is_dir else name, is_dir, child))
+                name, is_dir = child.getName(), st.isDirectory()
+                entries.append((name + "/" if is_dir else name, is_dir, child))
             for _key, is_dir, child in sorted(entries, key=lambda e: e[0]):
                 found = first(child) if is_dir else child.toString()
                 if found is not None:
@@ -130,7 +137,6 @@ class HadoopFS:
         return first(self._Path(path))
 
 
-def _hidden(name: str) -> bool:
-    """Marker and sidecar entries dataset listings skip (``_SUCCESS``,
-    ``.crc``, ``_metadata``, ``_meta``)."""
-    return name.startswith(("_", "."))
+# the names dataset listings keep: none starting with "_" or "." (marker and
+# sidecar entries: ``_SUCCESS``, ``.crc``, ``_metadata``, ``_meta``)
+_VISIBLE_GLOB = "[!_.]*"

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -24,6 +25,21 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+@contextmanager
+def max_partition_bytes(spark, n: int):
+    """``spark.sql.files.maxPartitionBytes`` set to ``n`` on the test
+    session for the block, restored after it: below the input's bytes, a
+    parity call keeps the shuffled plan instead of reading through one task
+    (``core._read``)."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 @pytest.fixture(scope="session")

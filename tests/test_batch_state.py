@@ -68,6 +68,35 @@ def test_first_file_is_first_of_full_listing(spark, tmp_path):
     assert HadoopFS(spark, str(empty.parent)).first_file(str(empty.parent)) is None
 
 
+def test_list_files_skips_hidden_entries_and_recurses(spark, tmp_path):
+    """``HadoopFS.list_files`` (filtered JVM-side) skips ``_SUCCESS``,
+    ``.crc``, ``_metadata`` and a ``_meta`` sidecar dir at every level, and
+    still recurses into ``key=value`` dirs; ``first_file`` is its head."""
+    from parqueryd_spark.sources.fs import HadoopFS
+
+    root = tmp_path / "ds"
+    visible = ["part-2.parquet", "k=1/part-0.parquet", "k=2/part-1.parquet"]
+    hidden = [
+        "_SUCCESS",
+        ".part-2.parquet.crc",
+        "_metadata",
+        "_meta/part-9.parquet",
+        "k=1/_SUCCESS",
+        "k=2/.part-1.parquet.crc",
+        "k=2/_hidden.parquet",
+    ]
+    for rel in visible + hidden + ["notes.txt"]:
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).touch()
+
+    fs = HadoopFS(spark, str(root))
+    want = sorted(fs.qualify(str(root / rel)) for rel in visible)
+    assert fs.list_files(str(root)) == want
+    everything = fs.list_files(str(root), suffix=None)
+    assert everything == sorted(want + [fs.qualify(str(root / "notes.txt"))])
+    assert fs.first_file(str(root)) == everything[0]
+
+
 def test_batch_state_lifecycle_and_read_jobs(spark, tmp_path):
     """write_batch → write_meta → read_batches → compact_batches →
     read_meta: replayed ids overwrite themselves (int and hive-escaped

@@ -17,6 +17,7 @@ from parqueryd_spark.sources.manifest import (
     scan_pruned,
     skip_stats,
 )
+from tests.conftest import max_partition_bytes
 
 N_FILES = 10
 N_ROWS = 1000
@@ -131,6 +132,93 @@ def test_engine_groupby_with_manifest_equals_plain(spark, layout, manifest):
     # the probe sees jobs when there are any: a pruning call submits one
     kept, jobs = jobs_of("prune-paths-one-term", [["value", ">", 1e9]])
     assert kept == ["/no/such/shard"] and jobs
+
+
+def _parquet_bytes(path: str) -> int:
+    import os
+
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def test_groupby_gives_the_same_rows_on_both_sides_of_the_split_bound(spark, layout):
+    """A call whose input fits one Spark split reads through one task; above
+    ``spark.sql.files.maxPartitionBytes`` it keeps the shuffled plan. Both
+    give the same groups for every term set (double sums to a tolerance:
+    the partition order changes their last bits) and the same raw rows
+    (``aggregate=False``) as a multiset."""
+    import os
+
+    from parqueryd_spark.core import ParquetEngine
+
+    eng = ParquetEngine(spark, data_dir=os.path.dirname(layout))
+    names = [os.path.basename(layout)]
+    aggs = [["k", "count", "n"], ["value", "sum", "s"], ["name", "min", "lo"]]
+
+    def calls(aggregate: bool, below: bool) -> list[DataFrame]:
+        return [
+            eng.groupby(names, ["d"], aggs, terms, aggregate=aggregate).select(
+                F.lit(i).alias("i"), F.lit(below).alias("below"), "*"
+            )
+            for i, terms in enumerate(TERMS)
+        ]
+
+    def one_task(df: DataFrame) -> bool:
+        return "Coalesce 1" in df._jdf.queryExecution().executedPlan().toString()
+
+    with max_partition_bytes(spark, _parquet_bytes(layout) - 1):
+        above = {agg: calls(agg, False) for agg in (True, False)}
+    below = {agg: calls(agg, True) for agg in (True, False)}
+    assert all(one_task(df) for dfs in below.values() for df in dfs)
+    assert not any(one_task(df) for dfs in above.values() for df in dfs)
+
+    for agg in (True, False):
+        rows = reduce(DataFrame.unionByName, above[agg] + below[agg]).collect()
+        for i, terms in enumerate(TERMS):
+            got = {b: sorted(tuple(r[2:]) for r in rows if r.i == i and r.below == b) for b in (True, False)}
+            assert got[True] and len(got[True]) == len(got[False]), (agg, terms)
+            if not agg:
+                assert got[True] == got[False], terms
+                continue
+            for (d, n, v, lo), (d2, n2, v2, lo2) in zip(got[True], got[False]):
+                assert (d, n, lo) == (d2, n2, lo2) and v == pytest.approx(v2, rel=1e-12), terms
+
+
+def test_small_parity_call_runs_one_job_in_one_task(spark, tmp_path):
+    """A plain ``groupby`` over 3 small shards reads through ``coalesce(1)``:
+    collecting it submits exactly one job, and its plan has no Exchange.
+    With ``spark.sql.files.maxPartitionBytes`` below the input, the same call
+    plans the shuffled aggregate (an Exchange, no Coalesce)."""
+    import os
+
+    from parqueryd_spark.core import ParquetEngine
+
+    data = str(tmp_path / "data")
+    rows = spark.range(300).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("g"), F.col("id").cast("double").alias("value")
+    )
+    for i in range(3):
+        rows.filter(F.col("k") % 3 == i).write.parquet(os.path.join(data, f"s{i}"))
+    call = partial(
+        ParquetEngine(spark, data).groupby,
+        ["s0", "s1", "s2"], ["g"], [["value", "sum", "v"]], [["value", ">=", 100.0]],
+    )
+
+    df = call()
+    got, jobs = _jobs_submitted(spark, "small-call-collect", df.collect)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(got) == 7 and len(jobs) == 1
+    assert "Exchange" not in plan and "Coalesce 1" in plan
+
+    with max_partition_bytes(spark, _parquet_bytes(data) - 1):
+        df = call()
+        assert sorted(df.collect()) == sorted(got)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" in plan and "Coalesce" not in plan
 
 
 def test_parity_call_plans_a_republished_shard_on_its_live_files(spark, tmp_path):

@@ -4,6 +4,8 @@ pushdown, pruning, join strategy, and codegen must be the plan we'd want at
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +18,7 @@ from parqueryd_spark.queries.relational import (
     topk_orders,
     window_analytics,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, max_partition_bytes
 
 
 def test_q1_filter_pushdown_and_pruning(spark):
@@ -30,7 +32,12 @@ def test_q1_filter_pushdown_and_pruning(spark):
     assert "l_quantity" in read_schema
     rep = plan_report(df)
     assert rep["batched_scan"] and rep["python_evals"] == 0
-    assert rep["exchanges"] == 1  # one shuffle: partial agg -> final agg
+    # the sf0.001 file fits one split: one task, no shuffle
+    assert rep["exchanges"] == 0 and "Coalesce 1" in explain_str(df, "simple")
+    # above the split size: one shuffle, partial agg -> final agg
+    with max_partition_bytes(spark, os.path.getsize(os.path.join(SF_SMOKE, "lineitem.parquet")) - 1):
+        big = q1_pricing_summary(spark, SF_SMOKE)
+    assert plan_report(big)["exchanges"] == 1 and "Coalesce" not in explain_str(big, "simple")
 
 
 def test_where_term_in_pushdown(spark):
