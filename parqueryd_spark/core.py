@@ -9,8 +9,8 @@ shape to a DataFrame plan:
 
     read_resolved(existing_shards) -> filter(where) -> groupBy(keys).agg(...)
 
-The one exception is a small input: shards whose bytes fit one Spark split
-(``spark.sql.files.maxPartitionBytes``) are read through ``coalesce(1)``, so
+The one exception is a small input: shards whose bytes are at most the
+split size Spark picks for their scan are read through ``coalesce(1)``, so
 the call runs as one local pass in one task, like the reference's per-file
 worker pass, instead of a shuffled two-stage plan.
 
@@ -27,6 +27,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from functools import reduce
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 
 from parqueryd_spark.functions.compile import (
@@ -88,12 +89,13 @@ def aggregate_files(
     ``build_manifest``/``refresh_manifest`` cluster by file — runs before
     the caller's action.
 
-    Execution is one task below Spark's split size: when a read's files sum
-    to at most ``spark.sql.files.maxPartitionBytes`` (the plain read, each
-    ``concat`` part, the fully-pruned empty read), it goes through
-    ``coalesce(1)`` and the aggregate needs no Exchange, so the action runs
-    one job. The size is the file index's own listing, so this adds no job
-    to planning. Above the bound the plan is unchanged.
+    Execution is one task below Spark's split size: when a read's bytes are
+    at most the split size Spark picks for that scan (the plain read, each
+    ``concat`` part, the fully-pruned empty read; see ``_read``), it goes
+    through ``coalesce(1)`` and the aggregate needs no Exchange, so the
+    action runs one job. Both numbers come from the file index's own
+    listing, so this adds no job to planning. Above the bound the plan is
+    unchanged.
     """
     if shard_merge not in ("global", "concat"):
         raise ValueError(f"shard_merge must be 'global' or 'concat', got {shard_merge!r}")
@@ -140,15 +142,24 @@ def aggregate_files(
 
 def _read(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
     """``read_resolved(spark, paths)``, through ``coalesce(1)`` when the
-    scan fits one Spark split (``spark.sql.files.maxPartitionBytes``) — F1
-    Query's centralized execution for small queries. The size is the
-    analyzed plan's estimate: the byte sum of the files Spark's file index
-    listed when the DataFrame was built, so reading it runs no job."""
+    scan's bytes are at most the split size Spark picks for it — F1 Query's
+    centralized execution for small queries.
+
+    The split size is Spark's own ``FilePartition.maxSplitBytes``:
+    ``min(maxPartitionBytes, max(openCostInBytes, (bytes + files *
+    openCostInBytes) / defaultParallelism))``. So one task takes an input
+    under ``openCostInBytes`` (4 MB), or many files whose average size is
+    under ``openCostInBytes / (defaultParallelism - 1)``, where Spark's cost
+    model says opening them costs more than reading them; a few large files
+    keep every core. Both sizes come from the listing Spark's file index did
+    when the DataFrame was built, so reading them runs no job."""
     df = read_resolved(spark, paths)
-    size = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
-    if size <= spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes():
-        return df.coalesce(1)
-    return df
+    files = df._jdf.queryExecution().analyzed().relation().location()
+    nil = spark._jvm.PythonUtils.toSeq([])
+    split = JavaClass(
+        "org.apache.spark.sql.execution.datasources.FilePartition", spark._jvm._gateway_client
+    ).maxSplitBytes(spark._jsparkSession, files.listFiles(nil, nil))
+    return df.coalesce(1) if files.sizeInBytes() <= split else df
 
 
 # agg methods whose output type is knowable without reading any shard; the

@@ -68,6 +68,59 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+Q1_SHARDS = 32
+
+
+def _lineitem_shards(spark: SparkSession, sf_dir: str) -> str:
+    """A data dir whose lineitem is hash-split on ``l_orderkey`` into
+    ``Q1_SHARDS`` files, kept by ``served_artifact`` per sf_dir: the
+    many-small-shards layout the reference's calls fan out over."""
+
+    def build(d: str) -> None:
+        li = read_resolved(spark, [_li(sf_dir)])
+        li.repartition(Q1_SHARDS, "l_orderkey").write.parquet(_li(d))
+
+    return served_artifact("lineitem_shards", os.path.abspath(sf_dir), build)
+
+
+@query(
+    "q1_sharded",
+    oracle="""
+    SELECT l_returnflag, l_linestatus,
+           sum(l_quantity)                AS sum_qty,
+           round(sum(l_extendedprice), 2) AS sum_base_price,
+           avg(l_quantity)                AS avg_qty,
+           round(avg(l_extendedprice), 4) AS avg_price,
+           round(avg(l_discount), 4)      AS avg_disc,
+           count(l_orderkey)              AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+    GROUP BY l_returnflag, l_linestatus
+    """,
+    bench=True,
+)
+def q1_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``q1_pricing_summary`` over the same rows as ``Q1_SHARDS`` shards.
+    The two rows sit on either side of ``aggregate_files``' one-task gate
+    at sf0.1 on a few cores: one 10.8 MB file gets several Spark splits and
+    keeps the shuffled plan, while 32 shards of ~0.3 MB cost more to open
+    than to read, so Spark's split size covers them all and the call runs
+    in one task. The shards change the order doubles are summed in, so the
+    inexact aggregates are rounded on both engines: a sum of 2-decimal
+    prices to cents, the means to 4 places (``sum_qty`` and ``avg_qty``
+    sum whole numbers, which is exact)."""
+    from pyspark.sql import functions as F
+
+    out = q1_pricing_summary(spark, _lineitem_shards(spark, sf_dir))
+    return out.withColumns(
+        {
+            "sum_base_price": F.round("sum_base_price", 2),
+            "avg_price": F.round("avg_price", 4),
+            "avg_disc": F.round("avg_disc", 4),
+        }
+    )
+
+
 @query(
     "groupby_agg_methods",
     oracle="""

@@ -28,18 +28,23 @@ TABLES = [
 
 
 @contextmanager
-def max_partition_bytes(spark, n: int):
-    """``spark.sql.files.maxPartitionBytes`` set to ``n`` on the test
-    session for the block, restored after it: below the input's bytes, a
+def session_conf(spark, conf: dict):
+    """``conf`` set on the test session for the block, restored after it.
+    With ``spark.sql.files.maxPartitionBytes`` below the input's bytes, a
     parity call keeps the shuffled plan instead of reading through one task
     (``core._read``)."""
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, str(v))
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def max_partition_bytes(spark, n: int):
+    return session_conf(spark, {"spark.sql.files.maxPartitionBytes": n})
 
 
 @pytest.fixture(scope="session")

@@ -17,7 +17,7 @@ from parqueryd_spark.sources.manifest import (
     scan_pruned,
     skip_stats,
 )
-from tests.conftest import max_partition_bytes
+from tests.conftest import max_partition_bytes, session_conf
 
 N_FILES = 10
 N_ROWS = 1000
@@ -146,8 +146,9 @@ def _parquet_bytes(path: str) -> int:
 
 
 def test_groupby_gives_the_same_rows_on_both_sides_of_the_split_bound(spark, layout):
-    """A call whose input fits one Spark split reads through one task; above
-    ``spark.sql.files.maxPartitionBytes`` it keeps the shuffled plan. Both
+    """A call whose bytes are at most Spark's split size for its scan reads
+    through one task; with ``spark.sql.files.maxPartitionBytes`` below its
+    bytes it keeps the shuffled plan. Both
     give the same groups for every term set (double sums to a tolerance:
     the partition order changes their last bits) and the same raw rows
     (``aggregate=False``) as a multiset."""
@@ -219,6 +220,41 @@ def test_small_parity_call_runs_one_job_in_one_task(spark, tmp_path):
         assert sorted(df.collect()) == sorted(got)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in plan and "Coalesce" not in plan
+
+
+def test_one_task_gate_is_sparks_split_size(spark, tmp_path):
+    """A parity call reads through one task exactly when its bytes are at
+    most the split size Spark computes for the scan: ``min(maxPartitionBytes,
+    max(openCostInBytes, (bytes + files * openCostInBytes) /
+    defaultParallelism))``. Moving ``openCostInBytes`` takes one file and
+    eight files across that size in both directions; a bound on bytes alone
+    could not do that, since the bytes never change."""
+    import os
+
+    from parqueryd_spark.core import ParquetEngine
+
+    data = str(tmp_path / "data")
+    rows = spark.range(4000).select(F.col("id").alias("k"), (F.col("id") % 7).alias("g"))
+    rows.coalesce(1).write.parquet(os.path.join(data, "one"))
+    rows.repartition(8).write.parquet(os.path.join(data, "eight"))
+    eng = ParquetEngine(spark, data)
+    cores = spark.sparkContext.defaultParallelism
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    seen = set()
+    for shard in ("one", "eight"):
+        size = _parquet_bytes(os.path.join(data, shard))
+        n = len([f for f in os.listdir(os.path.join(data, shard)) if f.endswith(".parquet")])
+        for open_cost in (1, size // n * cores, 4 * 1024 * 1024):
+            want = size <= min(max_split, max(open_cost, (size + n * open_cost) // cores))
+            with session_conf(spark, {"spark.sql.files.openCostInBytes": open_cost}):
+                df = eng.groupby([shard], ["g"], [["k", "sum", "s"]])
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                assert sorted(df.collect()) == sorted(
+                    rows.groupBy("g").agg(F.sum("k").alias("s")).collect()
+                ), (shard, open_cost)
+            assert ("Coalesce 1" in plan) == want and ("Exchange" in plan) != want, (shard, open_cost)
+            seen.add(want)
+    assert seen == ({True, False} if cores > 1 else {True})
 
 
 def test_parity_call_plans_a_republished_shard_on_its_live_files(spark, tmp_path):

@@ -32,9 +32,10 @@ def test_q1_filter_pushdown_and_pruning(spark):
     assert "l_quantity" in read_schema
     rep = plan_report(df)
     assert rep["batched_scan"] and rep["python_evals"] == 0
-    # the sf0.001 file fits one split: one task, no shuffle
+    # the sf0.001 file is under openCostInBytes, so Spark's split size
+    # covers it: one task, no shuffle
     assert rep["exchanges"] == 0 and "Coalesce 1" in explain_str(df, "simple")
-    # above the split size: one shuffle, partial agg -> final agg
+    # with maxPartitionBytes below its bytes: one shuffle, partial agg -> final agg
     with max_partition_bytes(spark, os.path.getsize(os.path.join(SF_SMOKE, "lineitem.parquet")) - 1):
         big = q1_pricing_summary(spark, SF_SMOKE)
     assert plan_report(big)["exchanges"] == 1 and "Coalesce" not in explain_str(big, "simple")
