@@ -1,32 +1,48 @@
 """Deduplication operators for LLM training-data pipelines (north-star scope):
-exact, n-gram Jaccard, MinHash+LSH (one-shot and incremental-against-index),
-SimHash, duplicate-group resolution (connected components), and train/eval
+exact, n-gram Jaccard, MinHash+LSH (one-shot, served from an index, and
+incremental against an index), SimHash, sub-document span/substring dedup,
+duplicate-group resolution (connected components), and train/eval
 decontamination.
 
-Scale design (100 TB documents):
+``exact_dedup`` is one hash-groupBy on a content digest: one shuffle keyed
+by the digest (never by the raw text), with map-side partial aggregation.
+Every near-duplicate generator is block -> verify:
 
-- **exact_dedup**: hash-groupBy on a content digest — one shuffle keyed by the
-  digest (never by the raw text), map-side partial agg.
-- **ngram_jaccard_pairs**: shingle inverted-index join (explode -> equi-join on
-  shingle -> pair counts). Cost is sum over shingles of df^2 — fine for corpus
-  near-dup detection after LSH banding; provided here as the *exact* path.
-- **minhash_lsh_pairs**: the scale path. Per doc: 1 pass computing H minhashes
-  JVM-side (xxhash64 + affine rehash, array_min over higher-order functions —
-  no Python, no MLlib vector materialization), band into b buckets, equi-join
-  on (band, bucket-hash). Candidate count is controlled by banding; each
-  candidate is verified with exact Jaccard so precision is 1.0 and recall is
-  1-(1-s^r)^b (~1-5e-8 at s=0.8 with 32 bands x 4 rows).
-- **simhash**: 64-bit shingle-hash bit-vote signature; near-dup candidates
-  match on at least one of ``max_hamming + 1`` exact bands (pigeonhole: a pair
-  within the hamming radius must agree on some band), verified by true hamming
-  distance. Defaults (64 bits, radius 13, 14 bands) were tuned against the
-  exact-Jaccard oracle: recall of Jaccard>=0.8 pairs is 28/28 at sf0.001,
-  25/25 at sf0.01 and 256/256 at sf0.1 with <=12 extras (the old
-  48-bit/radius-3 config found 14/25). At billion-doc scale, narrow the radius
-  (classic 64-bit/radius-3/4-band a la Manku et al.) or drop to 8 bands —
-  wider bands block far more selectively at a small, measurable recall cost.
+- **Block.** Each doc explodes into blocking keys, and docs sharing a key
+  become candidate pairs. The banded generators (MinHash, SimHash, md5
+  SimHash, image dHash) all go through one band join, :func:`_block_pairs`:
+  a self-join on (band, band hash) with ``a.doc < b.doc``, or the
+  incremental shape (new docs against corpus ∪ new, pairs oriented by id).
+  ``ngram_jaccard_pairs`` blocks with the PPJoin prefix filter instead
+  (``_prefix_candidates``): the first floor((1-t)*|S|)+1 hash-ordered
+  shingles of each doc, joined with the length filter and an optional
+  hot-token cap.
+- **Verify.** One check per similarity: exact Jaccard over the sorted
+  xxhash64 shingle arrays (``_verify_jaccard``, for prefix and MinHash) or
+  true Hamming distance over 64-bit signatures (``_hamming_pairs``, for
+  every SimHash flavour). Precision is 1.0 on every route.
 
-All signatures derive from F.xxhash64 — deterministic across runs/cluster.
+Signatures and recall:
+
+- **MinHash** (``minhash_signature_from_hashes``): one ``aggregate`` pass
+  over each doc's shingle hashes with a ``zip_with`` running minimum of
+  the affine family (a*x + b) mod (2^31 - 1). ``minhash_lsh_pairs`` builds
+  the call's own :func:`minhash_index` and serves it like a published one;
+  recall is 1-(1-s^r)^b (~1-5e-8 at s=0.8 with 32 bands x 4 rows).
+- **SimHash** (``simhash``): 64-bit shingle-hash bit vote
+  (:func:`_vote_bits`). A pair within ``max_hamming`` of each other agrees
+  on at least one of ``max_hamming + 1`` bands (pigeonhole), so that many
+  bands give recall 1.0 within the radius. The default is the scale config
+  ``SIMHASH_SCALE_CONFIG`` (radius 3, 4 bands of 16 bits: random band
+  collisions at p ~= 1.5e-5). Radius 13 / 14 bands catches every exact
+  Jaccard>=0.8 pair at sf0.001-sf0.1 but prunes only about half the pair
+  space, so callers opt into it per call.
+- **md5 SimHash** (``simhash_md5_near_pairs``): the same vote over md5
+  words, so DuckDB can rebuild the signature bit for bit for the gate
+  oracle; 16 bands of 4 bits make it exact for radius <= 15.
+
+Signatures derive from F.xxhash64 (md5 for the oracle flavour) —
+deterministic across runs and clusters.
 """
 
 from __future__ import annotations
@@ -757,16 +773,19 @@ def minhash_signature_from_hashes(hash_arr_col, num_hashes: int = 128):
     return F.aggregate(base, init, step)
 
 
-def minhash_signature(text_col, k: int = 3, num_hashes: int = 128):
-    """Minhash signature straight from a text column (convenience wrapper over
-    :func:`minhash_signature_from_hashes`)."""
-    hashed = F.transform(shingles(text_col, k), lambda s: F.xxhash64(s))
-    return minhash_signature_from_hashes(hashed, num_hashes)
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature rows per LSH band: the bands must tile the signature."""
+    if bands < 1 or num_hashes % bands != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be a positive multiple of bands ({bands}); "
+            "otherwise signature rows are silently dropped or banding degenerates"
+        )
+    return num_hashes // bands
 
 
 def _explode_bands(docs_with_sig: DataFrame, bands: int, rows: int) -> DataFrame:
     """(doc, sig) -> (doc, band, bh): hash each ``rows``-wide signature band —
-    the LSH blocking key. Shared by the one-shot and incremental dedup paths."""
+    the LSH blocking key."""
     return (
         docs_with_sig.select(
             "doc",
@@ -785,6 +804,53 @@ def _explode_bands(docs_with_sig: DataFrame, bands: int, rows: int) -> DataFrame
     )
 
 
+def _block_pairs(left: DataFrame, right: DataFrame | None = None, carry=()) -> DataFrame:
+    """The one band join of every near-dup generator: (doc, band, bh,
+    *carry) rows that share a band hash become candidate pairs.
+
+    ``right=None`` is the self-join, each pair once with ``a.doc < b.doc``.
+    With ``right``, every ``left`` doc meets every other ``right`` doc and
+    each pair is oriented by id — the incremental shape, where ``left`` is
+    the new docs and ``right`` corpus ∪ new, so new-new pairs found from
+    both ends collapse in the ``distinct``. Returns distinct (id_a, id_b,
+    <c>_a, <c>_b for each carried column c) with id_a < id_b."""
+    oriented = right is not None
+    a, b = F.col("a.doc"), F.col("b.doc")
+
+    def pick(c: str, first: bool) -> F.Column:
+        x, y = F.col(f"a.{c}"), F.col(f"b.{c}")
+        if not first:
+            x, y = y, x
+        return F.when(a < b, x).otherwise(y) if oriented else x
+
+    cols = [pick("doc", True).alias("id_a"), pick("doc", False).alias("id_b")]
+    for c in carry:
+        cols += [pick(c, True).alias(f"{c}_a"), pick(c, False).alias(f"{c}_b")]
+    on = (
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bh") == F.col("b.bh"))
+        & ((a != b) if oriented else (a < b))
+    )
+    other = right if oriented else left
+    return left.alias("a").join(other.alias("b"), on).select(*cols).distinct()
+
+
+def _minhash_pairs(
+    index: DataFrame, bands: int, rows: int, threshold: float, right: DataFrame | None = None
+) -> DataFrame:
+    """MinHash near-dup pairs over (doc, sh, sig) index rows: band keys from
+    the signatures, the band join, then exact Jaccard over the shingle
+    arrays. With ``right`` (corpus ∪ new index rows), ``index`` holds the new
+    docs and only pairs touching them are found; a doc id in both indexes is
+    verified once."""
+    banded = _explode_bands(index, bands, rows)
+    if right is None:
+        return _verify_jaccard(_block_pairs(banded), index.select("doc", "sh"), threshold)
+    candidates = _block_pairs(banded, _explode_bands(right, bands, rows))
+    arrays = right.select("doc", "sh").dropDuplicates(["doc"])
+    return _verify_jaccard(candidates, arrays, threshold)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -794,39 +860,20 @@ def minhash_lsh_pairs(
     bands: int = 32,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs, verified with exact Jaccard.
-
-    Candidate generation: split the signature into ``bands`` bands of
-    ``num_hashes//bands`` rows, hash each band, equi-join on (band_id, hash).
-    Verification: exact Jaccard on the candidates only (precision 1.0).
-    The signature and the verification both read the shared hashed-shingle
-    arrays (``_hashed_shingle_arrays``), so the tokenize->shingle->hash
-    pipeline runs once per doc, not three times. As in
-    :func:`ngram_jaccard_pairs`, the call runs one Spark job that
-    checkpoints those arrays eagerly.
+    """MinHash+LSH near-dup pairs, verified with exact Jaccard: the call's own
+    :func:`minhash_index` served through :func:`minhash_pairs_from_index`'s
+    route (split each signature into ``bands`` bands of
+    ``num_hashes//bands`` rows, equi-join on (band, band hash), verify the
+    candidates only — precision 1.0). The index is checkpointed eagerly (the
+    within-call lifetime rule of ``queries.served_artifact``), so the
+    tokenize->shingle->hash pipeline and the signature run once per doc, in
+    one Spark job; the signature-width probe of the served route is skipped
+    because this call built the signatures itself.
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of bands ({bands}); "
-            "otherwise signature rows are silently dropped or banding degenerates"
-        )
-    rows = num_hashes // bands
-    base = _hashed_shingle_arrays(df, id_col, text_col, k).localCheckpoint(eager=True)
-    docs = base.withColumn("sig", minhash_signature_from_hashes(F.col("sh"), num_hashes))
-    banded = _explode_bands(docs, bands, rows)
-    candidates = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
-    )
-    return _verify_jaccard(candidates, base, threshold)
+    rows = _rows_per_band(num_hashes, bands)
+    index = minhash_index(df, id_col, text_col, k, num_hashes).localCheckpoint(eager=True)
+    return _minhash_pairs(index, bands, rows, threshold)
 
 
 def minhash_index(
@@ -883,25 +930,9 @@ def minhash_pairs_from_index(
     corpus-scan cost. At 100 TB this is the difference between re-shingling
     petabytes per run and scanning the ~1-2% index.
     Returns (id_a, id_b, jaccard) with id_a < id_b."""
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of bands ({bands})"
-        )
+    rows = _rows_per_band(num_hashes, bands)
     _check_sig_len(index, num_hashes, "minhash_pairs_from_index")
-    rows = num_hashes // bands
-    banded = _explode_bands(index, bands, rows)
-    candidates = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
-    )
-    return _verify_jaccard(candidates, index.select("doc", "sh"), threshold)
+    return _minhash_pairs(index, bands, rows, threshold)
 
 
 def incremental_minhash_pairs(
@@ -931,38 +962,12 @@ def incremental_minhash_pairs(
     self-pair is excluded rather than reported as a Jaccard-1.0 duplicate of
     itself. Ids must refer to the same text in both indexes; resolving
     *conflicting* texts under one id is upstream's job."""
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of bands ({bands})"
-        )
+    rows = _rows_per_band(num_hashes, bands)
     _check_sig_len(new_index, num_hashes, "incremental_minhash_pairs(new_index)")
     _check_sig_len(corpus_index, num_hashes, "incremental_minhash_pairs(corpus_index)")
-    rows = num_hashes // bands
-    nb = _explode_bands(new_index, bands, rows)
-    cb = _explode_bands(corpus_index, bands, rows)
-    # one side always new; the other side is anything (corpus or new). The
-    # id_a < id_b ordering dedups the new-new pairs that appear from both ends.
-    other = cb.union(nb)
-    candidates = (
-        nb.alias("a")
-        .join(
-            other.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc") != F.col("b.doc")),
-        )
-        .select(
-            F.least(F.col("a.doc"), F.col("b.doc")).alias("id_a"),
-            F.greatest(F.col("a.doc"), F.col("b.doc")).alias("id_b"),
-        )
-        .distinct()
-    )
-    docs_arr = (
-        new_index.select("doc", "sh")
-        .union(corpus_index.select("doc", "sh"))
-        .dropDuplicates(["doc"])
-    )
-    return _verify_jaccard(candidates, docs_arr, threshold)
+    cols = ["doc", "sh", "sig"]
+    both = corpus_index.select(cols).unionByName(new_index.select(cols))
+    return _minhash_pairs(new_index, bands, rows, threshold, right=both)
 
 
 def near_dup_groups(
@@ -1182,6 +1187,33 @@ def contamination_stats(
     )
 
 
+def _vote_bits(hashes, bits: int) -> F.Column:
+    """The SimHash vote: bit b of the result is set when bit b is set in more
+    than half of the ``hashes`` (array<long>). Masks are built with shiftleft
+    (JVM long shift, where 1<<63 is the sign bit) rather than a Python
+    ``1 << b`` literal, which overflows LongType at b=63."""
+
+    def bit(b: int) -> F.Column:
+        # helper closure, NOT a default lambda arg: pyspark's higher-order
+        # lambdas are arity-introspected, so a 3-arg lambda would get b bound
+        # to an unresolved lambda variable instead of the int
+        vote = F.aggregate(
+            hashes,
+            F.lit(0).cast("long"),
+            lambda acc, h: acc + (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1),
+        )
+        return F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
+            F.lit(0).cast("long")
+        )
+
+    # OR, not +: masks are disjoint so they're equivalent, but OR can never
+    # trip ANSI overflow checks when bit 63 (the long sign bit) is set
+    out = bit(0)
+    for b in range(1, bits):
+        out = out.bitwiseOR(bit(b))
+    return out
+
+
 def simhash(text_col, bits: int = 64, k: int = 3) -> F.Column:
     """SimHash signature over k-gram *shingles*: per bit position, sign of the
     vote sum over shingle hashes. Pure higher-order functions — one pass.
@@ -1189,29 +1221,29 @@ def simhash(text_col, bits: int = 64, k: int = 3) -> F.Column:
     Shingles, not raw tokens: on a small-vocabulary corpus every document
     shares most of the token set, so token-level signatures collapse to near
     identical values; shingle sets differ like their Jaccard similarity does.
-
-    Supports up to 64 bits: the bit mask is built with shiftleft (JVM long
-    shift, where 1<<63 is the sign bit) rather than a Python ``1 << b`` literal,
-    which overflows LongType at b=63.
+    Supports up to 64 bits (:func:`_vote_bits`).
     """
     if not 1 <= bits <= 64:
         raise ValueError(f"bits must be in [1, 64], got {bits}")
-    hashed = F.transform(shingles(text_col, k), lambda t: F.xxhash64(t))
-    bit_cols = []
-    for b in range(bits):
-        vote = F.aggregate(
-            hashed,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1),
+    return _vote_bits(F.transform(shingles(text_col, k), lambda t: F.xxhash64(t)), bits)
+
+
+def _md5_simhash(text_col, k: int = 3) -> F.Column:
+    """Cross-engine-reproducible 64-bit SimHash: each shingle votes with the
+    first and the second 8 hex chars of its md5 as two 32-bit words, and the
+    signature is ``(vote(hi) << 32) | vote(lo)``. ANY engine with md5 and
+    integer shifts reproduces it bit for bit — this variant exists to give
+    the simhash gate query an exact DuckDB oracle. Production signatures use
+    :func:`simhash` (one xxhash64 pass: ~10x cheaper than md5)."""
+    gs = shingles(text_col, k)
+
+    def word(start: int) -> F.Column:
+        return _vote_bits(
+            F.transform(gs, lambda s: F.conv(F.substring(F.md5(s), start, 8), 16, 10).cast("long")),
+            32,
         )
-        mask = F.shiftleft(F.lit(1).cast("long"), b)
-        bit_cols.append(F.when(vote > 0, mask).otherwise(F.lit(0).cast("long")))
-    # OR, not +: masks are disjoint so they're equivalent, but OR can never
-    # trip ANSI overflow checks when bit 63 (the long sign bit) is set
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
+
+    return F.shiftleft(word(1), 32).bitwiseOR(word(9))
 
 
 def simhash_bands(sig_col, bits: int, bands: int) -> F.Column:
@@ -1238,6 +1270,38 @@ def simhash_bands(sig_col, bits: int, bands: int) -> F.Column:
     return F.array(*structs)
 
 
+def _text_sigs(df: DataFrame, id_col: str, text_col: str, sig) -> DataFrame:
+    """(doc, sig): ``sig`` maps the text column to each doc's signature."""
+    return _spread(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))).select(
+        "doc", sig(F.col("_t")).alias("sig")
+    )
+
+
+def _hamming_candidates(sigs: DataFrame, bits: int, bands: int) -> DataFrame:
+    """Banded blocking over (doc, sig) rows: pairs that agree on at least one
+    of the ``bands`` exact bands of their ``bits``-wide signatures. Returns
+    distinct (id_a, id_b, sig_a, sig_b)."""
+    # a zero-width band is shared by every doc (all n^2 pairs), and
+    # bands < 1 has no bands at all (no pairs, silently)
+    if not 1 <= bands <= bits:
+        raise ValueError(f"bands must be in [1, bits={bits}], got {bands}")
+    banded = sigs.select("doc", "sig", F.explode(simhash_bands("sig", bits, bands)).alias("bb"))
+    return _block_pairs(banded.select("doc", "sig", "bb.band", "bb.bh"), carry=("sig",))
+
+
+def _hamming_pairs(sigs: DataFrame, bits: int, bands: int, max_hamming: int) -> DataFrame:
+    """Banded blocking verified by true Hamming distance: (id_a, id_b,
+    hamming) for every candidate within ``max_hamming``. With
+    ``bands >= max_hamming + 1`` every pair within the radius shares a band
+    (pigeonhole), so the result is the all-pairs Hamming filter."""
+    return (
+        _hamming_candidates(sigs, bits, bands)
+        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
+
+
 def simhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -1250,28 +1314,8 @@ def simhash_candidate_pairs(
     emitted once. The block join is a hash join on (band, band_hash) — the
     selectivity knob is band width (bits/bands): 16-bit bands collide at
     random with p ~= 2^-16 per band. Returns (id_a, id_b, sig_a, sig_b)."""
-    sigs = _spread(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))).select(
-        "doc", simhash(F.col("_t"), bits).alias("sig")
-    )
-    banded = sigs.select("doc", "sig", F.explode(simhash_bands("sig", bits, bands)).alias("bb")).select(
-        "doc", "sig", "bb.band", "bb.bh"
-    )
-    return (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .distinct()
-    )
+    sigs = _text_sigs(df, id_col, text_col, lambda t: simhash(t, bits))
+    return _hamming_candidates(sigs, bits, bands)
 
 
 # The production (100 TB) blocking config — and the simhash_near_pairs
@@ -1296,7 +1340,8 @@ def simhash_near_pairs(
     """Near-dup candidates via banded SimHash blocking, verified by true
     hamming distance. With ``bands >= max_hamming + 1`` (the default), every
     pair within the hamming radius shares at least one exact band (pigeonhole),
-    so recall within the radius is 1.0. Returns (id_a, id_b, hamming).
+    so recall within the radius is 1.0. ``bands`` must be in [1, bits].
+    Returns (id_a, id_b, hamming).
 
     The DEFAULT is the production config (``SIMHASH_SCALE_CONFIG``: classic
     64-bit / radius-3 / 4 pigeonhole bands of 16 bits): band collisions are
@@ -1314,61 +1359,14 @@ def simhash_near_pairs(
     config prunes only ~half the pair space and exists for recall, not speed —
     opt into it per-call (``max_hamming=13``), never as the default.
     """
-    if bands is None:
-        bands = max_hamming + 1
     # bands >= max_hamming + 1 gives the pigeonhole guarantee (recall 1.0 within
     # the radius); fewer bands is allowed as a scale/recall tradeoff — wider
     # bands block far more selectively, and recall stays high because a real
     # near-dup's differing bits rarely spread across every band
-    if bits < bands:
-        raise ValueError(f"bits ({bits}) must be >= bands ({bands})")
-    pairs = simhash_candidate_pairs(df, id_col, text_col, bits, bands)
-    return (
-        pairs.withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def _md5_word_sig(hashes: F.Column) -> F.Column:
-    """32-bit simhash word over an array of 32-bit hash values: per bit, sign
-    of the vote sum; set bits OR'd into one non-negative long."""
-
-    def vote(b: int) -> F.Column:
-        # helper closure, NOT a default lambda arg: pyspark's higher-order
-        # lambdas are arity-introspected, so a 3-arg lambda would get b bound
-        # to an unresolved lambda variable instead of the int
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1),
-        )
-
-    bit_cols = [
-        F.when(vote(b) > 0, F.lit(1 << b)).otherwise(F.lit(0)) for b in range(32)
-    ]
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out.cast("long")
-
-
-def simhash_md5_words(text_col, k: int = 3) -> F.Column:
-    """Cross-engine-reproducible 64-bit SimHash as TWO 32-bit words
-    ``struct<sig_hi, sig_lo>``: each shingle's hash is the first/second 8 hex
-    chars of its md5, so ANY engine with md5 + integer shifts reproduces the
-    signature bit-for-bit — this variant exists to give the simhash gate
-    query an exact DuckDB oracle. Production signatures use
-    :func:`simhash` (one xxhash64 pass: ~10x cheaper than md5 and a single
-    long per doc); vote/bit mechanics are identical."""
-    gs = shingles(text_col, k)
-    hi = F.transform(
-        gs, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-    )
-    lo = F.transform(
-        gs, lambda s: F.conv(F.substring(F.md5(s), 9, 8), 16, 10).cast("long")
-    )
-    return F.struct(_md5_word_sig(hi).alias("sig_hi"), _md5_word_sig(lo).alias("sig_lo"))
+    if bands is None:
+        bands = max_hamming + 1
+    sigs = _text_sigs(df, id_col, text_col, lambda t: simhash(t, bits))
+    return _hamming_pairs(sigs, bits, bands, max_hamming)
 
 
 def simhash_md5_near_pairs(
@@ -1378,51 +1376,17 @@ def simhash_md5_near_pairs(
     k: int = 3,
     max_hamming: int = 13,
 ) -> DataFrame:
-    """Near-dup pairs on the md5-word signature, blocked by 16 pigeonhole
-    bands of 4 bits (8 per word) and verified by true hamming distance. With
-    16 bands, every pair within hamming 15 shares a band, so for
+    """Near-dup pairs on the md5 SimHash (:func:`_md5_simhash`), blocked by
+    16 pigeonhole bands of 4 bits and verified by true hamming distance.
+    With 16 bands, every pair within hamming 15 shares a band, so for
     ``max_hamming <= 15`` the result equals the brute-force all-pairs hamming
     filter exactly — which is what the DuckDB oracle computes, independently
     verifying the banding machinery's recall guarantee. Returns
     (id_a, id_b, hamming)."""
     if max_hamming > 15:
         raise ValueError(f"max_hamming must be <= 15 for 16-band blocking, got {max_hamming}")
-    sigs = (
-        _spread(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t")))
-        .select("doc", simhash_md5_words(F.col("_t"), k).alias("s"))
-        .select("doc", F.col("s.sig_hi").alias("sig_hi"), F.col("s.sig_lo").alias("sig_lo"))
-    )
-    band_structs = []
-    for w, word in enumerate(("sig_lo", "sig_hi")):
-        for j in range(8):
-            band_structs.append(
-                F.struct(
-                    F.lit(w * 8 + j).alias("band"),
-                    F.shiftright(F.col(word), 4 * j).bitwiseAND(F.lit(15)).alias("bh"),
-                )
-            )
-    banded = sigs.select(
-        "doc", "sig_hi", "sig_lo", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc", "sig_hi", "sig_lo", "bb.band", "bb.bh")
-    return (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            (
-                F.bit_count(F.col("a.sig_hi").bitwiseXOR(F.col("b.sig_hi")))
-                + F.bit_count(F.col("a.sig_lo").bitwiseXOR(F.col("b.sig_lo")))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    sigs = _text_sigs(df, id_col, text_col, lambda t: _md5_simhash(t, k))
+    return _hamming_pairs(sigs, 64, 16, max_hamming)
 
 
 def near_dup_groups_increment(

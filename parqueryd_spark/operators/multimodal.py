@@ -532,29 +532,9 @@ def image_near_dup_pairs(
     — any pair within the radius shares an exact band), verified by true
     hamming distance. Candidate cost is band-collision-bounded exactly like
     text simhash; the decode pass is the only Python, and it runs once per
-    image. Returns (id_a, id_b, hamming)."""
-    from parqueryd_spark.operators.dedup import simhash_bands
+    image. ``max_hamming`` must be in [0, 63]. Returns (id_a, id_b, hamming)."""
+    from parqueryd_spark.operators.dedup import _hamming_pairs
 
     sigs = image_dhash(media, id_col, payload_col).filter(F.col("dhash").isNotNull())
-    bands = max_hamming + 1
-    banded = sigs.select(
-        F.col(id_col).alias("doc"),
-        F.col("dhash").alias("sig"),
-        F.explode(simhash_bands(F.col("dhash"), 64, bands)).alias("bb"),
-    ).select("doc", "sig", "bb.band", "bb.bh")
-    return (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    sigs = sigs.select(F.col("media_id").alias("doc"), F.col("dhash").alias("sig"))
+    return _hamming_pairs(sigs, 64, max_hamming + 1, max_hamming)

@@ -502,16 +502,34 @@ def _residual_frame(
     )
 
 
-def _pq_input(vectors: DataFrame, centroids: DataFrame, residual: bool, id_col: str, vec_col: str):
+def _pq_input(
+    vectors: DataFrame, centroids: DataFrame, residual: bool, encode, id_col: str, vec_col: str
+):
     """What an IVF-PQ index's codes quantize, as (frame, vector column,
-    normalize, assignment): the raw vectors, normalized by the encoder, or
+    normalize, encoded): the raw vectors, normalized by the encoder, or
     their unit-space residuals (:func:`_residual_frame`, already JVM fold
-    arithmetic, so the spread route stays SQL-replayable on them too);
-    ``assignment`` is (id, centroid_id)."""
+    arithmetic, so the spread route stays SQL-replayable on them too).
+    ``encoded(codebooks)`` is the (id, codes, centroid_id) rows ``encode``
+    makes of the frame. The residual frame feeds the codebook sample and the
+    encode, so it is checkpointed eagerly (the within-call lifetime rule of
+    ``queries.served_artifact``) and computed once; its rows carry their
+    centroid, so they are encoded keyed by (id, centroid_id) and need no
+    join back to an assignment."""
     if residual:
-        resid = _residual_frame(vectors, centroids, id_col, vec_col)
-        return resid, "__resid", False, resid.select(id_col, "centroid_id")
-    return vectors, vec_col, True, ivf_assign(vectors, centroids, id_col, vec_col)
+        resid = _residual_frame(vectors, centroids, id_col, vec_col).localCheckpoint(eager=True)
+        keyed = resid.select(F.struct(id_col, "centroid_id").alias("__key"), "__resid")
+
+        def encoded(cb):
+            codes = encode(keyed, cb, id_col="__key", vec_col="__resid", normalize=False)
+            return codes.select("__key.*", "codes")
+
+        return resid, "__resid", False, encoded
+    assignment = ivf_assign(vectors, centroids, id_col, vec_col)
+
+    def encoded(cb):
+        return encode(vectors, cb, id_col=id_col, vec_col=vec_col).join(assignment, id_col)
+
+    return vectors, vec_col, True, encoded
 
 
 def ivfpq_publish(
@@ -566,11 +584,10 @@ def ivfpq_publish(
     centroids = _publish_centroids(
         resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed), index_dir
     )
-    src, vcol, normalize, assignment = _pq_input(corpus, centroids, residual, id_col, vec_col)
-    cb = train(src, dim=dim, m=m, k=k_codes, vec_col=vcol, id_col=id_col, normalize=normalize)
-    encoded = encode(src, cb, id_col=id_col, vec_col=vcol, normalize=normalize).join(
-        assignment, id_col
+    src, vcol, normalize, encoded = _pq_input(
+        corpus, centroids, residual, encode, id_col, vec_col
     )
+    cb = train(src, dim=dim, m=m, k=k_codes, vec_col=vcol, id_col=id_col, normalize=normalize)
     cb_rows = [(j, c, cb[j][c]) for j in range(len(cb)) for c in range(len(cb[j]))]
     spark.createDataFrame(cb_rows, "j int, code int, sub array<double>").write.mode(
         "overwrite"
@@ -578,7 +595,7 @@ def ivfpq_publish(
     meta = spark.createDataFrame(
         [(bool(residual), str(codebook))], "residual boolean, codebook string"
     )
-    publish_batch(encoded, f"{index_dir}/codes", batch, partition_by=["centroid_id"], meta=meta)
+    publish_batch(encoded(cb), f"{index_dir}/codes", batch, partition_by=["centroid_id"], meta=meta)
 
 
 def ivfpq_meta(spark, index_dir: str) -> dict:
@@ -744,11 +761,6 @@ def ivfpq_append(
     # ulp level, which can flip a near-tie argmin and silently break the
     # index's hash-match property — encode with the index's own route
     _, encode, _ = _pq_route(meta["codebook"])
-    src, vcol, normalize, assignment = _pq_input(
-        new_vectors, centroids, meta["residual"], id_col, vec_col
-    )
-    encoded = encode(src, cb, id_col=id_col, vec_col=vcol, normalize=normalize).join(
-        assignment, id_col
-    )
-    write_batch(encoded, f"{index_dir}/codes", batch, partition_by=["centroid_id"])
+    *_, encoded = _pq_input(new_vectors, centroids, meta["residual"], encode, id_col, vec_col)
+    write_batch(encoded(cb), f"{index_dir}/codes", batch, partition_by=["centroid_id"])
     return _appended_counts(spark, f"{index_dir}/codes", batch)

@@ -112,15 +112,6 @@ def punct_ratio(text: Column | str) -> Column:
     return (F.length(c) - F.length(F.regexp_replace(c, "[.,!?;:]", ""))) / F.length(c)
 
 
-def mean_token_len(text: Column | str) -> Column:
-    toks = tokens(text)
-    return F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ) / F.size(toks)
-
-
 def quality_score(text: Column | str) -> Column:
     """Composite [0,1]-ish quality heuristic: length band + stopword presence -
     punctuation excess. Deliberately simple arithmetic so the DuckDB oracle can

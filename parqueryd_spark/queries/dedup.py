@@ -5,10 +5,11 @@ formulation in SQL. The MinHash query's output is LSH candidates *verified with
 exact Jaccard*, so with the banding parameters used (32 bands x 4 rows, and the
 corpus's near-dup pairs all at s >= 0.9 where recall is 1-(1-s^4)^32)
 it equals the exact all-pairs result — the oracle asserts exactly that.
-The SimHash gate query uses the md5-derived two-word signature
-(operators/dedup.py:simhash_md5_words) precisely so DuckDB can rebuild it
-bit-for-bit and brute-force the hamming pairs — independently verifying the
-banded blocking's pigeonhole recall; production simhash stays on xxhash64.
+The SimHash gate query uses the md5-derived signature (two 32-bit vote
+words in one long, operators/dedup.py:_md5_simhash) precisely so DuckDB can
+rebuild it bit-for-bit and brute-force the hamming pairs — independently
+verifying the banded blocking's pigeonhole recall; production simhash stays
+on xxhash64.
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.dedup import (
     exact_dedup,
-    minhash_lsh_pairs,
     minhash_pairs_from_index,
     near_dup_groups,
     ngram_jaccard_pairs,
@@ -257,9 +257,10 @@ _SIMHASH_MD5_SQL = f"""
 
 @query("dedup_simhash", oracle=_SIMHASH_MD5_SQL)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash banded near-dup candidates on the md5-derived two-word
-    signature, radius 13. The oracle rebuilds the identical signature in
-    DuckDB (md5 prefix/suffix 32-bit words, same vote arithmetic) and
+    """SimHash banded near-dup candidates on the md5-derived signature,
+    radius 13. The oracle rebuilds the identical signature in DuckDB (md5
+    prefix/suffix 32-bit words, same vote arithmetic; its two words are the
+    high and low halves of Spark's one long) and
     brute-forces ALL pairs with the hamming filter; Spark runs the banded
     16x4-bit blocking — pigeonhole guarantees equality for radius <= 15, so
     the hash match externally verifies the blocking machinery's recall.

@@ -9,10 +9,8 @@ analog).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from parqueryd_spark.sources.parquet import read_resolved
 
 
 def write_partitioned(
@@ -94,12 +92,3 @@ def zorder_layout(
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
     )
-
-
-def cache_table(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Register + cache a parquet table (the thin analog of the reference's
-    download-to-local-disk layer, O19 — Spark's cache replaces file copying)."""
-    df = read_resolved(spark, [path])
-    df.createOrReplaceTempView(name)
-    spark.catalog.cacheTable(name)
-    return spark.table(name)

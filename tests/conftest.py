@@ -47,6 +47,18 @@ def max_partition_bytes(spark, n: int):
     return session_conf(spark, {"spark.sql.files.maxPartitionBytes": n})
 
 
+def jobs_submitted(spark, group: str, fn):
+    """``(fn(), ids of the Spark jobs fn submitted)``, tracked by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from parqueryd_spark.session import get_spark

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.similarity import brute_force_topk, resolve_centroids
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_submitted
 
 N, DIM, K, N_CENTROIDS = 200, 16, 5, 4
 REFINE = 40  # refine * k = 200 >= the corpus size: the shortlist is everything
@@ -242,3 +242,28 @@ def test_refine_never_broadcasts_the_corpus(spark, route):
     inputs = re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
     assert inputs, plan
     assert not [i for i in inputs if re.search(r"(?<!\w)nv#", i)], inputs
+
+
+def test_residual_publish_computes_its_residuals_once(spark, corpus, tmp_path):
+    """An IVF-PQ publish over residuals computes its residual frame once: the
+    codebook sample and the encode read one checkpoint, and the encoded rows
+    keep their centroid instead of joining back to an assignment. It runs
+    two Spark jobs more than the raw encoding (the checkpoint itself, and
+    the broadcast of the centroid vectors the residuals subtract), where
+    recomputing the frame for each reader ran twice the raw count."""
+    from parqueryd_spark.operators.quantization import ivfpq_publish
+
+    def jobs(residual):
+        return len(
+            jobs_submitted(
+                spark,
+                f"ivfpq_publish_residual_{residual}",
+                lambda: ivfpq_publish(
+                    spark, str(tmp_path / str(residual)), corpus, "first_k", dim=DIM, m=4,
+                    k_codes=8, residual=residual, n_centroids=N_CENTROIDS, codebook="spread",
+                ),
+            )[1]
+        )
+
+    raw, residual = jobs(False), jobs(True)
+    assert residual <= raw + 2, (raw, residual)

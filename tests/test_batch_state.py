@@ -12,17 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-
-def _jobs_submitted(spark, group: str, fn):
-    """``(fn(), ids of the Spark jobs fn submitted)``, tracked by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import jobs_submitted
 
 
 def test_first_file_is_first_of_full_listing(spark, tmp_path):
@@ -128,11 +118,11 @@ def test_batch_state_lifecycle_and_read_jobs(spark, tmp_path):
     write_meta(spark.createDataFrame([(0.5, 2)], "k double, n int"), state)
     assert os.path.isdir(os.path.join(state, "_meta"))
 
-    parts, jobs = _jobs_submitted(spark, "read-batches", lambda: read_batches(spark, state))
+    parts, jobs = jobs_submitted(spark, "read-batches", lambda: read_batches(spark, state))
     assert jobs == []
     assert parts.columns == ["key", "n"]
     assert sorted(map(tuple, parts.collect())) == [("a", 1), ("b", 2), ("c", 3)]
-    _, inference_jobs = _jobs_submitted(
+    _, inference_jobs = jobs_submitted(
         spark, "spark-read-batches", lambda: spark.read.parquet(state).drop("batch")
     )
     assert len(inference_jobs) == 1
@@ -208,12 +198,12 @@ def test_lm_load_and_read_current_plan_without_inference_jobs(spark, tmp_path):
     lm_dir = str(tmp_path / "lm")
     lm_publish(spark, lm_dir, docs, n=2)
     lm_append(spark, lm_dir, docs.where("doc_id = 1"), batch="inc1")
-    lm, jobs = _jobs_submitted(spark, "lm-load", lambda: lm_load(spark, lm_dir))
+    lm, jobs = jobs_submitted(spark, "lm-load", lambda: lm_load(spark, lm_dir))
     assert len(jobs) == 1
     assert lm.n == 2
 
     versioned = str(tmp_path / "versioned")
     publish_versioned(docs, versioned)
-    cur, jobs = _jobs_submitted(spark, "read-current", lambda: read_current(spark, versioned))
+    cur, jobs = jobs_submitted(spark, "read-current", lambda: read_current(spark, versioned))
     assert jobs == []
     assert cur.count() == 2

@@ -17,7 +17,7 @@ from parqueryd_spark.sources.manifest import (
     scan_pruned,
     skip_stats,
 )
-from tests.conftest import max_partition_bytes, session_conf
+from tests.conftest import jobs_submitted, max_partition_bytes, session_conf
 
 N_FILES = 10
 N_ROWS = 1000
@@ -68,18 +68,6 @@ TERMS = [
 ]
 
 
-def _jobs_submitted(spark, group: str, fn):
-    """``(fn(), ids of the Spark jobs fn submitted)``, tracked by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("terms", TERMS)
 def test_scan_pruned_equals_full_scan(spark, layout, manifest, terms):
     from parqueryd_spark.functions.compile import compile_where_terms
@@ -123,7 +111,7 @@ def test_engine_groupby_with_manifest_equals_plain(spark, layout, manifest):
         assert pruned == plain and plain, terms
 
     def jobs_of(group, terms):
-        return _jobs_submitted(
+        return jobs_submitted(
             spark, group, lambda: prune_paths(manifest, [layout, "/no/such/shard"], terms)
         )
 
@@ -210,7 +198,7 @@ def test_small_parity_call_runs_one_job_in_one_task(spark, tmp_path):
     )
 
     df = call()
-    got, jobs = _jobs_submitted(spark, "small-call-collect", df.collect)
+    got, jobs = jobs_submitted(spark, "small-call-collect", df.collect)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(got) == 7 and len(jobs) == 1
     assert "Exchange" not in plan and "Coalesce 1" in plan
@@ -326,7 +314,7 @@ def test_parity_call_plans_with_at_most_the_verdict_job(spark, tmp_path):
     terms = [["value", ">=", 100.0], ["value", "<", 150.0]]
 
     def n_jobs(group, fn):
-        return len(_jobs_submitted(spark, group, fn)[1])
+        return len(jobs_submitted(spark, group, fn)[1])
 
     plain = partial(eng.groupby, names, ["g"], aggs, terms)
     concat = partial(
@@ -353,7 +341,7 @@ def test_parity_call_plans_with_at_most_the_verdict_job(spark, tmp_path):
     tables = str(tmp_path / "tables")
     for name in ("a", "b"):
         rows.write.parquet(os.path.join(tables, f"{name}.parquet"))
-    attached, jobs = _jobs_submitted(spark, "plan-attach", ParquetEngine(spark, tables).attach_tables)
+    attached, jobs = jobs_submitted(spark, "plan-attach", ParquetEngine(spark, tables).attach_tables)
     assert attached == ["a", "b"] and jobs == []
 
 
@@ -376,7 +364,7 @@ def test_pruned_calls_plan_with_one_verdict_job(spark, layout, manifest):
     }
     out = {}
     for name, call in calls.items():
-        out[name], jobs = _jobs_submitted(spark, f"one-verdict-{name}", call)
+        out[name], jobs = jobs_submitted(spark, f"one-verdict-{name}", call)
         assert len(jobs) == 1, (name, jobs)
     assert out["count"] == N_ROWS
     assert out["minmax"] == (0.0, float(N_ROWS - 1))

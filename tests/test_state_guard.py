@@ -7,7 +7,8 @@ datasets are swapped in only by ``sinks.atomic_publish``, every Hadoop
 ``FileSystem`` is resolved by ``sources/fs.HadoopFS``, every ANN route
 takes its centroids from ``similarity.resolve_centroids`` and its per-query
 probe and top-k windows from ``operators/similarity.py``, every exact
-quantile runs through one selection engine (one pass 0, one resolve), and
+quantile runs through one selection engine (one pass 0, one resolve),
+every band-blocked near-dup generator pairs docs through one band join, and
 reused data follows the two lifetime rules of ``queries.served_artifact``:
 published standing state lives in that one helper, and nothing a function
 persists outlives the function — in the tests too, which share one session.
@@ -128,6 +129,34 @@ def test_exact_selection_has_one_pass0_and_one_resolve():
         if len(calls.get(name, [])) != 1
     ]
     assert not found, "\n".join(found)
+
+
+def test_band_join_lives_only_in_block_pairs():
+    """Every band-blocked near-dup generator (MinHash one-shot, served and
+    incremental, SimHash, md5 SimHash, image dHash) pairs docs through one
+    band join: the ``a.bh``/``b.bh`` band-hash columns are named only inside
+    ``operators/dedup._block_pairs``, and ``operators/multimodal.py`` names
+    none."""
+    pattern = r"[\"'][ab]\.bh[\"']"
+    found, inside = [], 0
+    for rel, text in _sources():
+        spans = [
+            (n.lineno, n.end_lineno)
+            for n in ast.parse(text).body
+            if isinstance(n, ast.FunctionDef)
+            and n.name == "_block_pairs"
+            and rel == "operators/dedup.py"
+        ]
+        for m in re.finditer(pattern, text):
+            line = text.count("\n", 0, m.start()) + 1
+            if any(a <= line <= b for a, b in spans):
+                inside += 1
+            else:
+                found.append(f"{rel}:{line}: {m.group(0)} outside dedup._block_pairs")
+    assert not found, "\n".join(found)
+    assert inside == 2, inside
+    with open(os.path.join(PKG, "operators", "multimodal.py")) as f:
+        assert not re.search(r"\bbh\b", f.read())
 
 
 def _persists_without_unpersist(text: str) -> list[int]:
