@@ -85,9 +85,9 @@ def aggregate_files(
     Planning runs at most one Spark job: shards are read through
     ``read_resolved``, whose schema comes from one driver-side footer read
     rather than Spark's inference job (for every ``concat`` part too), so
-    only the manifest verdict — one job over a cached manifest, which
-    ``build_manifest``/``refresh_manifest`` cluster by file — runs before
-    the caller's action.
+    only the zone-map planner's collect of the manifest's stats rows — one
+    job over a cached manifest, whose verdicts are then computed on the
+    driver — runs before the caller's action.
 
     Execution is one task below Spark's split size: when a read's bytes are
     at most the split size Spark picks for that scan (the plain read, each

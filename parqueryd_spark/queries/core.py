@@ -495,11 +495,12 @@ def scan_metadata_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-assisted COUNT + MIN/MAX in one row (sources/manifest.py
     count_pruned / minmax_pruned) over the hive-partitioned events copy:
     the ``event_type = 'view'`` term is fully proven by the directory
-    partition value for every file in that partition, so interior
-    value-clustered files contribute their footer row counts and exact
-    numeric [min, max] WITHOUT being read — only the range's boundary files
-    get the exact scan. The oracle computes the plain aggregates, so the
-    stat/scan split must reassemble exactly."""
+    partition value for every file in that partition, and files of the
+    other partitions or wholly above the range are never read. ``value``
+    is a double, whose footer bounds leave NaN rows out, so ``value <
+    80.0`` proves no file full and the kept files get the exact scan. The
+    oracle computes the plain aggregates, so the stat/scan split must
+    reassemble exactly."""
     from parqueryd_spark.sources.manifest import count_pruned, minmax_pruned
 
     d, mf = _hive_events(spark, sf_dir)

@@ -41,20 +41,18 @@ even a pruning bug a perf bug, not a wrong answer — but the property test
 asserts kept ⊇ matching-files anyway.
 
 Every per-file verdict — keep, full satisfaction, row count, one column's
-bounds — comes from ONE ``groupBy("file")`` aggregation over the manifest
-(``_file_verdicts``): each term is a ``bool_and`` over the file's stats row
-for the term's column, so the number of terms never adds joins or stages.
-The keep and full verdicts are each ONE SQL expression (``F.expr``), built
-as text with every term value and column name rendered by ``_lit`` — a
-handful of py4j calls whatever the term count, and no user value is ever
-quoted or escaped. ``build_manifest`` and ``refresh_manifest`` return the
-manifest hash-partitioned on ``file`` (``_by_file``), so once it is cached
-the aggregation plans no Exchange: planning a pruned scan, a provable count
-or min/max, or a skip statistic is one Spark job, and it is the only one a
-``manifest=`` call of the parity API runs before its query. The driver then
-collects one small row per file (``_collect_by_file``) — the same O(files)
-planning-time listing Spark's own FileIndex does. ``prune_paths`` without
-where-terms keeps every path, lists nothing and runs no job at all.
+bounds — comes from ONE collect in ``_plan``: the manifest rows for the
+terms' columns, the coverage row and the statistics column, selected with
+``F.col("column").isin(...)`` (no user value ever becomes SQL text). The
+keep and full rules then run on the driver over those few rows per file
+(``_keep``, ``_full``), in Spark's comparison order (NaN above every
+number; strings by code point). Over a cached manifest that collect is one
+Spark job, and it is the only one a ``manifest=`` call of the parity API
+runs before its query; ``build_manifest`` and ``refresh_manifest`` return
+at most the session's default parallelism partitions (``_bounded``), so it
+stays a handful of tasks — the same O(files) planning-time listing Spark's
+own FileIndex does. ``prune_paths`` without where-terms keeps every path,
+lists nothing and runs no job at all.
 
 Hive-partitioned layouts compose: ``build_manifest`` records
 directory-derived ``key=value`` partition values as constant-per-file stats
@@ -67,7 +65,8 @@ skips via both layers at once.
 from __future__ import annotations
 
 import datetime as _dt
-from collections.abc import Iterable, Sequence
+import operator
+from collections.abc import Collection, Iterable, Sequence
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -75,6 +74,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
+    FloatType,
     LongType,
     StringType,
     StructField,
@@ -137,15 +137,15 @@ def build_manifest(
     distributed footer sweep; data pages are never read. ``columns`` limits
     the manifest to the hot filter columns (pruning treats absent columns as
     unprunable, so a narrow manifest stays sound)."""
-    return _by_file(_sweep_footers(spark, path, HadoopFS(spark, path).list_files(path), columns))
+    return _bounded(_sweep_footers(spark, path, HadoopFS(spark, path).list_files(path), columns))
 
 
-def _by_file(mf: DataFrame) -> DataFrame:
-    """``mf`` hash-partitioned on ``file`` into the session's default
-    parallelism: every per-file aggregation over the cached result plans no
-    Exchange. A manifest read back from disk is not clustered and plans as
-    before."""
-    return mf.repartition(mf.sparkSession.sparkContext.defaultParallelism, "file")
+def _bounded(mf: DataFrame) -> DataFrame:
+    """``mf`` in at most the session's default parallelism partitions, by a
+    coalesce (no shuffle): the planner's collect over the cached manifest
+    runs one task per partition, so neither a build over many files nor a
+    chain of refreshes may grow the count."""
+    return mf.coalesce(mf.sparkSession.sparkContext.defaultParallelism)
 
 
 def _sweep_footers(
@@ -255,7 +255,9 @@ def _footer_reader(wanted: list[str] | None, root: str | None = None):
                             continue
                         st = cc.statistics
                         cur = acc.setdefault(name, {"null": 0, "ok": True, "mins": [], "maxs": []})
-                        if st is None or not st.has_min_max:
+                        # a NaN bound (parquet-mr writes NaN maxima) bounds
+                        # nothing usable: NaN sorts above every number
+                        if st is None or not st.has_min_max or st.min != st.min or st.max != st.max:
                             cur["ok"] = False
                         else:
                             cur["mins"].append(st.min)
@@ -341,11 +343,11 @@ def refresh_manifest(
     re-reads a day of footers, not the standing corpus's."""
     live = _split_refresh(spark, path, old)
     if live is None:
-        return _by_file(spark.createDataFrame([], MANIFEST_SCHEMA))
+        return _bounded(spark.createDataFrame([], MANIFEST_SCHEMA))
     kept, new_files = live
     if new_files:
         kept = kept.unionByName(_sweep_footers(spark, path, new_files, columns))
-    return _by_file(kept)
+    return _bounded(kept)
 
 
 def _split_refresh(
@@ -368,182 +370,156 @@ def _split_refresh(
     return kept, sorted(f for f in current if _norm_path(f) not in known_n)
 
 
-def _lit(value) -> str:
-    """SQL literal for a term value or a column name: a double as
-    ``CAST('<repr>' AS DOUBLE)`` (``inf``/``nan`` included), a string as
-    ``CAST(X'<utf-8 hex>' AS STRING)`` — no user text ever lands in the SQL
-    unescaped."""
-    if isinstance(value, str):
-        return f"CAST(X'{value.encode('utf-8').hex()}' AS STRING)"
-    return f"CAST('{float(value)!r}' AS DOUBLE)"
+def _key(x):
+    """Comparison key in Spark's order: NaN above every number and equal to
+    itself (Python's ``<`` would make ``v < NaN`` false). Strings compare by
+    code point, which is Spark's UTF-8 byte order."""
+    return (True, 0.0) if isinstance(x, float) and x != x else (False, x)
 
 
-def _bounds(value):
-    """``(lo, hi, v)`` SQL comparing ``value`` against the stats row's
+def _bounds(r: Row, value):
+    """``(lo, hi, v)`` keys comparing ``value`` against the stats row's
     bounds of its encoding family — numeric (numbers, dates, datetimes) or
-    lexical (strings) — or None for a value neither family encodes. Bounds
-    of the wrong family (a numeric term on a string column) are NULL, and
-    each caller coalesces NULL to its conservative answer."""
+    lexical (strings) — or None when the value is neither or the row lacks
+    a bound of that family (a numeric term on a string column). Each caller
+    takes None as its conservative answer: keep, and never full."""
     v_num = _coerce_num(value)
     if v_num is not None:
-        return "min_num", "max_num", _lit(v_num)
-    if isinstance(value, str):
-        return "min_str", "max_str", _lit(value)
-    return None
+        lo, hi, v = r.min_num, r.max_num, v_num
+    elif isinstance(value, str):
+        lo, hi, v = r.min_str, r.max_str, value
+    else:
+        return None
+    if lo is None or hi is None:
+        return None
+    return _key(lo), _key(hi), _key(v)
 
 
-def _window_pred(value) -> str:
-    """SQL predicate: could [min, max] contain ``value``?"""
-    b = _bounds(value)
-    if b is None:
-        return "true"  # unencodable type: never prune on it
-    lo, hi, v = b
-    return f"coalesce({lo} <= {v} AND {hi} >= {v}, true)"
+def _window(r: Row, value) -> bool:
+    """Could the row's [min, max] contain ``value``?"""
+    b = _bounds(r, value)
+    return b is None or b[0] <= b[2] <= b[1]
 
 
-def _point_pred(value) -> str:
-    """SQL predicate: is the file constant at exactly ``value``?"""
-    b = _bounds(value)
-    if b is None:
-        return "false"
-    lo, hi, v = b
-    return f"coalesce({lo} = {v} AND {hi} = {v}, false)"
+def _point(r: Row, value) -> bool:
+    """Is the row's column constant at exactly ``value``?"""
+    b = _bounds(r, value)
+    return b is not None and b[0] == b[2] == b[1]
 
 
-def _bound_pred(op: str, value) -> str:
-    """Keep-verdict SQL for one normalized term over a (file, column) stats
-    row that HAS min/max bounds. Conservative by construction: anything
-    uncertain evaluates to keep."""
-    if op == "==":
-        return _window_pred(value)
+_CMP = {">": operator.gt, ">=": operator.ge, "<": operator.lt, "<=": operator.le}
+
+
+def _keep(r: Row, op: str, value) -> bool:
+    """Could the (file, column) stats row hold a row matching the normalized
+    term? An all-null chunk satisfies no op (``x != v`` is NULL for NULL
+    x) but ``not in []``, which every row satisfies; a chunk without
+    bounds, and anything uncertain, is kept."""
+    if op == "not in" and not value:
+        return True
+    if r.null_count is not None and r.null_count == r.n_rows:
+        return False
+    if not r.has_min_max:
+        return True
     if op == "in":
-        return "(" + " OR ".join(["false", *map(_window_pred, value)]) + ")"
-    if op == "!=":
-        # a constant-at-v file has no satisfying non-null row; NULLs never
-        # satisfy != either, so null_count is irrelevant here
-        return f"NOT {_point_pred(value)}"
+        return any(_window(r, v) for v in value)
     if op == "not in":
-        return "NOT (" + " OR ".join(["false", *map(_point_pred, value)]) + ")"
-    b = _bounds(value)
+        return not any(_point(r, v) for v in value)
+    if op == "==":
+        return _window(r, value)
+    if op == "!=":
+        # NULLs never satisfy != either, so null_count is irrelevant here
+        return not _point(r, value)
+    b = _bounds(r, value)
     if b is None:
-        return "true"
+        return True
     lo, hi, v = b
     # x > v is possible iff max > v; x < v is possible iff min < v
-    return f"coalesce({hi if op[0] == '>' else lo} {op} {v}, true)"
+    return _CMP[op](hi if op[0] == ">" else lo, v)
 
 
-def _keep_pred(op: str, value) -> str:
-    """Keep-verdict SQL for one normalized term over any (file, column)
-    stats row: an all-null chunk satisfies no op (SQL NULL comparison
-    semantics); a chunk without bounds is unprunable."""
-    return (
-        "CASE WHEN null_count IS NOT NULL AND null_count = n_rows THEN false"
-        f" WHEN NOT has_min_max THEN true ELSE {_bound_pred(op, value)} END"
-    )
-
-
-def _full_pred(op: str, value) -> str:
-    """Keep-verdict complement as SQL: does EVERY non-null row of a (file,
-    column) stats row satisfy the normalized term? Conservative toward
-    False (uncertain files get scanned, never stat-counted)."""
-    b = None if op in ("in", "not in") else _bounds(value)
+def _full(r: Row, op: str, value, is_float: bool) -> bool:
+    """Does EVERY row of the (file, column) stats row provably match the
+    normalized term? Conservative toward False (uncertain files get
+    scanned, never stat-counted). NULL rows match no term, so the null
+    count must be a proven zero. Float bounds leave NaN rows out (pyarrow
+    writes no NaN into its statistics), and in Spark's order NaN rows
+    satisfy exactly ``>``, ``>=`` and ``!=`` with a non-NaN value, so only
+    those prove a FLOAT/DOUBLE column full."""
+    if op in ("in", "not in") or not r.has_min_max or r.null_count != 0:
+        return False
+    if is_float and (op not in (">", ">=", "!=") or value != value):
+        return False
+    b = _bounds(r, value)
     if b is None:
-        # set-membership terms and unencodable values are never proved
-        # file-wide: such files scan
-        return "false"
+        return False
     lo, hi, v = b
     if op == "==":
-        core = f"{lo} = {v} AND {hi} = {v}"
-    elif op == "!=":
-        core = f"{hi} < {v} OR {lo} > {v}"
-    else:
-        # every x > v iff min > v; every x < v iff max < v
-        core = f"{lo if op[0] == '>' else hi} {op} {v}"
-    # NULL rows never satisfy a predicate, so a stat-counted file must have
-    # a proven-zero null count for the term's column
-    return (
-        "has_min_max AND null_count IS NOT NULL AND null_count = 0"
-        f" AND coalesce({core}, false)"
-    )
-
-
-def _file_verdicts(
-    mf: DataFrame, terms: list, full: bool = False, stats_col: str | None = None
-) -> DataFrame:
-    """Every per-file planning fact in ONE ``groupBy("file")`` aggregation
-    over the manifest, for normalized ``terms`` (AND-combined):
-
-    - ``n_rows``, and ``keep``: could the file hold a matching row?
-    - with ``full``, ``full``: does every non-null row provably match?
-    - with ``stats_col``, that column's ``has_min_max``/``min_num``/``max_num``.
-
-    Each term reads only its own column's stats row, as
-    ``bool_and(CASE WHEN column = <col> THEN <pred> END)``. A file without
-    that row (the column is absent from the manifest or from the file) gets
-    NULL, which coalesces to keep=True and full=False: absent stats never
-    prune and never prove. Every aggregate is one ``F.expr`` over SQL text,
-    so building them costs the same few py4j calls for any number of
-    terms."""
-
-    def all_terms(pred, missing: str) -> str:
-        per_term = (
-            f"coalesce(bool_and(CASE WHEN `column` = {_lit(c)} THEN {pred(op, v)} END), {missing})"
-            for c, op, v in terms
-        )
-        return " AND ".join(["true", *per_term])
-
-    aggs = {"n_rows": "max(n_rows)", "keep": all_terms(_keep_pred, "true")}
-    if full:
-        aggs["full"] = all_terms(_full_pred, "false")
-    if stats_col is not None:
-        on = f"`column` = {_lit(stats_col)}"
-        aggs["has_min_max"] = f"bool_and(CASE WHEN {on} THEN has_min_max END)"
-        aggs["min_num"] = f"min(CASE WHEN {on} THEN min_num END)"
-        aggs["max_num"] = f"max(CASE WHEN {on} THEN max_num END)"
-    return mf.groupBy("file").agg(*(F.expr(f"{sql} AS {name}") for name, sql in aggs.items()))
+        return lo == v == hi
+    if op == "!=":
+        return hi < v or lo > v
+    # every x > v iff min > v; every x < v iff max < v
+    return _CMP[op](lo if op[0] == ">" else hi, v)
 
 
 class _Verdict(NamedTuple):
-    """One file's planning facts (the ``_file_verdicts`` columns). A live
-    file the manifest has no stats for keeps these defaults: kept, never
-    proven full, no row count or bounds — it is scanned."""
+    """One file's planning facts. A live file the manifest has no stats for
+    keeps these defaults: kept, never proven full, no row count or bounds —
+    it is scanned."""
 
     file: str
     keep: bool = True
     full: bool = False
     n_rows: int | None = None
-    has_min_max: bool | None = None
-    min_num: float | None = None
-    max_num: float | None = None
-
-
-def _collect_by_file(verdicts: DataFrame) -> dict[str, Row]:
-    """Collect per-file verdict rows, keyed by ``_norm_path(file)`` — the
-    one planning-time collect every pruning call makes (O(files), the analog
-    of Spark's own driver-side file listing)."""
-    return {_norm_path(r.file): r for r in verdicts.collect()}
+    bounds: tuple[float, float] | None = None  # stats_col's numeric [min, max]
 
 
 def _plan(
     mf: DataFrame,
     terms: list,
     files: Sequence[str] | None = None,
-    full: bool = False,
     stats_col: str | None = None,
+    floats: Collection[str] = (),
 ) -> list[_Verdict]:
-    """The zone-map planner: one verdict per file for normalized ``terms``,
-    from one collect of ``_file_verdicts``. With ``files`` (a live listing)
-    those are the set, in order, and the manifest only supplies stats (a
-    live file without stats is kept, a row for a vanished file is ignored);
-    without it the manifest's own files are the set."""
-    rows = _collect_by_file(_file_verdicts(mf, terms, full=full, stats_col=stats_col))
+    """The zone-map planner: one verdict per file for normalized ``terms``
+    (AND-combined), from ONE collect of the manifest rows for the terms'
+    columns, the coverage row (``column = ""``) and ``stats_col``, evaluated
+    on the driver. With ``files`` (a live listing) those are the set, in
+    order, and the manifest only supplies stats (a live file without stats
+    is kept, a row for a vanished file is ignored); without it the
+    manifest's own files are the set.
+
+    Per file: ``keep`` (could it hold a matching row?), ``full`` (does
+    every row provably match? ``floats`` names the FLOAT/DOUBLE columns,
+    see ``_full``), ``n_rows``, and with ``stats_col`` that column's
+    numeric ``bounds``. Repeated (file, column) rows are ANDed; a term whose
+    column has no row for the file keeps it and never proves it full."""
+    wanted = {c for c, _op, _v in terms} | {"", stats_col or ""}
+    stats: dict[str, dict[str, list[Row]]] = {}
+    for r in mf.where(F.col("column").isin(*wanted)).collect():
+        stats.setdefault(_norm_path(r.file), {}).setdefault(r.column, []).append(r)
+
+    def verdict(file: str, by_col: dict[str, list[Row]]) -> _Verdict:
+        keep = all(_keep(r, op, v) for c, op, v in terms for r in by_col.get(c, ()))
+        full = all(
+            c in by_col and all(_full(r, op, v, c in floats) for r in by_col[c])
+            for c, op, v in terms
+        )
+        bounds = None
+        col_rows = by_col.get(stats_col, [])
+        if col_rows and all(
+            r.has_min_max and r.min_num is not None and r.max_num is not None for r in col_rows
+        ):
+            bounds = (min(r.min_num for r in col_rows), max(r.max_num for r in col_rows))
+        n_rows = max(r.n_rows for rows in by_col.values() for r in rows)
+        return _Verdict(file, keep, full, n_rows, bounds)
+
     if files is None:
-        return [_Verdict(**r.asDict()) for r in rows.values()]
-    plan = []
-    for f in files:
-        r = rows.get(_norm_path(f))
-        plan.append(_Verdict(f) if r is None else _Verdict(**{**r.asDict(), "file": f}))
-    return plan
+        files = [next(iter(by_col.values()))[0].file for by_col in stats.values()]
+    return [
+        _Verdict(f) if (by_col := stats.get(_norm_path(f))) is None else verdict(f, by_col)
+        for f in files
+    ]
 
 
 def pruned_file_list(
@@ -676,8 +652,9 @@ def count_pruned(
     count, and one without manifest stats is a boundary file (see
     ``_plan``)."""
     mf = manifest if manifest is not None else build_manifest(spark, path)
+    terms = normalize_where_terms(where_terms)
     live = HadoopFS(spark, path).list_files(path)
-    plan = _plan(mf, normalize_where_terms(where_terms), live, full=True)
+    plan = _plan(mf, terms, live, floats=_float_cols(spark, path, terms))
     stat_count = sum(v.n_rows for v in plan if v.keep and v.full)
     boundary = [v.file for v in plan if v.keep and not v.full]
     if not boundary:
@@ -700,56 +677,54 @@ def minmax_pruned(
     files (possibly-matching but not provably-all-matching, or lacking exact
     stats) are scanned with the exact predicate.
 
-    Soundness: this shortcut applies ONLY to numerically-encoded stats
-    (ints/floats — exact by the parquet spec; string min/max may be
-    TRUNCATED toward wider bounds, so string columns always scan), only when
-    the file fully satisfies every term (so every non-null row — including
-    the extremes — is in the result set), and the footer min/max of a fully-
-    matching file ARE its contribution to the aggregate (MIN/MAX ignore
-    NULLs, which the stats exclude by construction). Date/timestamp columns
-    also scan: their numeric encoding (epoch seconds) is planning-grade, not
-    value-grade. Returns ``(None, None)`` when no rows match.
+    Soundness: this shortcut applies ONLY to integer columns (exact by the
+    parquet spec), only when the file fully satisfies every term (so every
+    non-null row — including the extremes — is in the result set), and the
+    footer min/max of a fully-matching file ARE its contribution to the
+    aggregate (MIN/MAX ignore NULLs, which the stats exclude by
+    construction). Every other column scans: string min/max may be
+    TRUNCATED toward wider bounds, float bounds leave NaN out (Spark's MAX
+    of a column holding NaN is NaN), and the date/timestamp encoding (epoch
+    seconds) is planning-grade, not value-grade. Returns ``(None, None)``
+    when no rows match.
 
     ``dtype`` (a Spark type string, e.g. ``"double"``) skips the schema
     lookup — pass it when the answer must come from the manifest ALONE (the
     count_pruned posture: a fully-provable predicate then reads no data
     file, it only lists them)."""
-    num_types = {"tinyint", "smallint", "int", "bigint", "float", "double"}
     if dtype is None:
         dtype = dict(read_resolved(spark, [path]).dtypes).get(col)
-    metadata_ok = dtype in num_types
+    metadata_ok = dtype in ("tinyint", "smallint", "int", "bigint")
     mf = manifest if manifest is not None else build_manifest(spark, path)
+    terms = normalize_where_terms(where_terms)
     live = HadoopFS(spark, path).list_files(path)
-    plan = _plan(mf, normalize_where_terms(where_terms), live, full=True, stats_col=col)
-    lo = hi = None
-    boundary = []
-    for v in plan:
-        if not v.keep:
-            continue
-        if metadata_ok and v.full and v.has_min_max and v.min_num is not None:
-            lo = v.min_num if lo is None else min(lo, v.min_num)
-            hi = v.max_num if hi is None else max(hi, v.max_num)
-        else:
-            boundary.append(v.file)
+    floats = _float_cols(spark, path, terms)
+    plan = [v for v in _plan(mf, terms, live, stats_col=col, floats=floats) if v.keep]
+    proven = [v.bounds for v in plan if metadata_ok and v.full and v.bounds]
+    boundary = [v.file for v in plan if not (metadata_ok and v.full and v.bounds)]
     if boundary:
         scan = _read_kept(spark, path, boundary, where_terms)
-        row = scan.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-        s_lo, s_hi = row["lo"], row["hi"]
-        if s_lo is not None:
-            if not metadata_ok:
-                # non-numeric columns never take the stats shortcut, so the
-                # scan result IS the answer, in the column's native type
-                return (s_lo, s_hi)
-            s_lo, s_hi = float(s_lo), float(s_hi)
-            lo = s_lo if lo is None else min(lo, s_lo)
-            hi = s_hi if hi is None else max(hi, s_hi)
-        elif not metadata_ok:
-            return (None, None)
-    if lo is None:
+        row = scan.agg(F.min(col), F.max(col)).collect()[0]
+        if row[0] is not None:
+            proven.append((row[0], row[1]))
+    if not proven:
         return (None, None)
-    if dtype in {"tinyint", "smallint", "int", "bigint"}:
-        return (int(lo), int(hi))
-    return (float(lo), float(hi))
+    lo, hi = min(b[0] for b in proven), max(b[1] for b in proven)
+    # stats bounds are doubles; a column without the shortcut keeps the
+    # scan's native values
+    return (int(lo), int(hi)) if metadata_ok else (lo, hi)
+
+
+def _float_cols(spark: SparkSession, path: str, terms: list) -> set[str]:
+    """The FLOAT/DOUBLE columns of the dataset at ``path`` (see ``_full``),
+    from its schema — a driver footer read, no Spark job — and only when a
+    term's full proof depends on it: with every term ``>``, ``>=`` or
+    ``!=`` a non-NaN value (or a set op, never full), a provable count or
+    min/max reads no data file at all."""
+    if all(op in ("in", "not in") or (op in (">", ">=", "!=") and v == v) for _c, op, v in terms):
+        return set()
+    fields = read_resolved(spark, [path]).schema.fields
+    return {f.name for f in fields if isinstance(f.dataType, (FloatType, DoubleType))}
 
 
 def bloom_manifest(
@@ -855,8 +830,9 @@ def prune_files_bloom(bloom_mf: DataFrame, values: Sequence, value_type=None) ->
 def _bloom_kept(files: Sequence[str], bloom_mf: DataFrame, values: Sequence, value_type) -> list[str]:
     """The ``files`` whose bloom may contain one of ``values``; a file
     without a bloom row is kept (conservative)."""
-    verdicts = _collect_by_file(prune_files_bloom(bloom_mf, values, value_type=value_type))
-    return [f for f in files if (r := verdicts.get(_norm_path(f))) is None or r.keep]
+    verdicts = prune_files_bloom(bloom_mf, values, value_type=value_type).collect()
+    keep = {_norm_path(r.file): r.keep for r in verdicts}
+    return [f for f in files if keep.get(_norm_path(f), True)]
 
 
 def scan_bloom_pruned(

@@ -60,8 +60,8 @@ TERMS = [
     [["value", "not in", [1.0, 2.0]]],
     [["value", ">=", 250.0], ["name", "<", "u0255"]],
     [],
-    # term values the verdict SQL renders as literals: quotes, backslashes,
-    # non-ASCII text and infinities never reach the SQL text unescaped
+    # term values the planner must compare as plain values: quotes,
+    # backslashes, non-ASCII text and infinities
     [["name", "<", "u0005'\\é"]],
     [["name", "in", ["u0007", "x'; DROP", "u0993"]]],
     [["value", ">", float("-inf")], ["value", "<", 5.0]],
@@ -290,17 +290,28 @@ def test_prune_paths_keeps_a_shard_that_lists_no_data_file(spark, layout, manife
     assert prune_paths(manifest, [layout, empty], [["value", "<", 5.0]]) == [layout, empty]
 
 
+def _executed_plan(spark, job_id: int) -> str:
+    """The physical plan (formatted) of the SQL execution that ran
+    ``job_id``, from the driver's SQL status store."""
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e.jobs().contains(job_id):
+            text = e.physicalPlanDescription()
+            return text[text.index("== Physical Plan ==") :]
+    raise AssertionError(f"no SQL execution ran job {job_id}")
+
+
 def test_parity_call_plans_with_at_most_the_verdict_job(spark, tmp_path):
     """Building a parity call's DataFrame (no action) submits no Spark job
-    but the zone-map verdict: none for a plain call, for ``concat`` over 3
-    shards and for ``attach_tables``; exactly one for where-terms under a
-    cached built or refreshed manifest, whose verdict plan has no
-    Exchange (the manifest is clustered by file)."""
+    but the zone-map verdict collect: none for a plain call, for ``concat``
+    over 3 shards and for ``attach_tables``; exactly one for where-terms
+    under a cached built or refreshed manifest, whose plan has no Exchange
+    above the cached manifest."""
     import os
 
     from parqueryd_spark.core import ParquetEngine, aggregate_files
-    from parqueryd_spark.functions.compile import normalize_where_terms
-    from parqueryd_spark.sources.manifest import _file_verdicts, refresh_manifest
+    from parqueryd_spark.sources.manifest import refresh_manifest
 
     data = str(tmp_path / "data")
     rows = spark.range(300).select(
@@ -330,10 +341,10 @@ def test_parity_call_plans_with_at_most_the_verdict_job(spark, tmp_path):
     refreshed.count()
     for tag, mf in (("built", built), ("refreshed", refreshed)):
         call = partial(eng.groupby, names, ["g"], aggs, terms, manifest=mf)
-        assert n_jobs(f"plan-{tag}-manifest", call) == 1, tag
-        plan = _file_verdicts(mf, normalize_where_terms(terms))._jdf.queryExecution()
+        _df, jobs = jobs_submitted(spark, f"plan-{tag}-manifest", call)
+        assert len(jobs) == 1, tag
         # the cached relation's own build plan (below InMemoryRelation) shuffles
-        above_cache = plan.executedPlan().toString().split("InMemoryRelation")[0]
+        above_cache = _executed_plan(spark, jobs[0]).split("InMemoryRelation")[0]
         assert "InMemoryTableScan" in above_cache and "Exchange" not in above_cache, tag
     refreshed.unpersist()
     built.unpersist()
@@ -345,10 +356,43 @@ def test_parity_call_plans_with_at_most_the_verdict_job(spark, tmp_path):
     assert attached == ["a", "b"] and jobs == []
 
 
+def test_manifest_stays_within_default_parallelism(spark, tmp_path):
+    """The planner's collect runs one task per manifest partition: a build
+    over more files than cores and each of 3 refreshes that add a file
+    return at most ``defaultParallelism`` partitions, and still cover every
+    file."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parqueryd_spark.sources.manifest import refresh_manifest
+
+    data = str(tmp_path / "data")
+    os.makedirs(data)
+    cap = spark.sparkContext.defaultParallelism
+
+    def write(i: int) -> None:
+        pq.write_table(pa.table({"v": [float(i)]}), os.path.join(data, f"part-{i:03d}.parquet"))
+
+    for i in range(2 * cap + 1):
+        write(i)
+    mf = build_manifest(spark, data).cache()
+    assert mf.rdd.getNumPartitions() <= cap
+    for i in range(3):
+        write(100 + i)
+        new = refresh_manifest(spark, data, mf).cache()
+        assert new.rdd.getNumPartitions() <= cap, i
+        assert skip_stats(new, [])["files_total"] == 2 * cap + 2 + i, i
+        mf.unpersist()
+        mf = new
+    mf.unpersist()
+
+
 def test_pruned_calls_plan_with_one_verdict_job(spark, layout, manifest):
     """Over a cached manifest with the files on disk, each zone-map consumer
     plans from one verdict collect: building a ``scan_pruned`` DataFrame (no
-    action), a fully provable ``count_pruned``, a fully provable
+    action), a fully provable ``count_pruned``, a fully provable integer
     ``minmax_pruned`` given ``dtype``, and ``skip_stats`` each submit exactly
     one Spark job. The live file set comes from a driver-side listing."""
     from parqueryd_spark.sources.manifest import count_pruned, minmax_pruned
@@ -358,7 +402,7 @@ def test_pruned_calls_plan_with_one_verdict_job(spark, layout, manifest):
         "scan": lambda: scan_pruned(spark, layout, TERMS[0], manifest=manifest),
         "count": lambda: count_pruned(spark, layout, provable, manifest=manifest),
         "minmax": lambda: minmax_pruned(
-            spark, layout, "value", provable, manifest=manifest, dtype="double"
+            spark, layout, "k", provable, manifest=manifest, dtype="bigint"
         ),
         "skip-stats": lambda: skip_stats(manifest, TERMS[0]),
     }
@@ -367,7 +411,7 @@ def test_pruned_calls_plan_with_one_verdict_job(spark, layout, manifest):
         out[name], jobs = jobs_submitted(spark, f"one-verdict-{name}", call)
         assert len(jobs) == 1, (name, jobs)
     assert out["count"] == N_ROWS
-    assert out["minmax"] == (0.0, float(N_ROWS - 1))
+    assert out["minmax"] == (0, N_ROWS - 1)
     assert out["skip-stats"]["files_total"] == N_FILES
 
 
@@ -1022,9 +1066,11 @@ def test_minmax_pruned_matches_exact(spark, layout, manifest):
 
 
 def test_minmax_pruned_is_metadata_only_when_provable(spark, tmp_path):
-    """A numeric min/max whose predicate every file fully satisfies needs no
-    data read: overwrite the files with junk after the manifest — stats
-    still answer, and a predicate that needs a boundary scan raises."""
+    """An integer min/max whose predicate every file fully satisfies needs
+    no data read: overwrite the files with junk after the manifest — stats
+    still answer, and a predicate that needs a boundary scan raises. A
+    double column always scans (its bounds leave NaN out), so it raises
+    too."""
     from parqueryd_spark.sources.manifest import minmax_pruned
 
     path = str(tmp_path / "junk2")
@@ -1033,18 +1079,15 @@ def test_minmax_pruned_is_metadata_only_when_provable(spark, tmp_path):
     ).repartition(4).write.parquet(path)
     mf = build_manifest(spark, path).cache()
     mf.count()
-    assert minmax_pruned(spark, path, "value", [["value", ">=", 0.0]], manifest=mf) == (
-        5.0,
-        1004.0,
-    )
+    assert minmax_pruned(spark, path, "k", [["value", ">=", 0.0]], manifest=mf) == (5, 1004)
     _overwrite_with_junk(path)
     # with the files unreadable, a fully-provable predicate still answers
     # from stats alone when the caller supplies the dtype (count_pruned
     # posture)
-    got = minmax_pruned(
-        spark, path, "value", [["value", ">=", 0.0]], manifest=mf, dtype="double"
-    )
-    assert got == (5.0, 1004.0)
+    got = minmax_pruned(spark, path, "k", [["value", ">=", 0.0]], manifest=mf, dtype="bigint")
+    assert got == (5, 1004)
     with pytest.raises(Exception):
-        minmax_pruned(spark, path, "value", [["value", ">=", 500.0]], manifest=mf, dtype="double")
+        minmax_pruned(spark, path, "k", [["value", ">=", 500.0]], manifest=mf, dtype="bigint")
+    with pytest.raises(Exception):
+        minmax_pruned(spark, path, "value", [["value", ">=", 0.0]], manifest=mf, dtype="double")
     mf.unpersist()

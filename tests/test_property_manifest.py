@@ -1,6 +1,6 @@
 """Property-based soundness for zone-map pruning: for ARBITRARY small
-datasets (nulls, duplicated values, negatives, empty strings, single-row
-files) and ARBITRARY where-term lists, scan_pruned must equal the full
+datasets (nulls, NaN, ±inf, duplicated values, negatives, empty strings,
+single-row files) and ARBITRARY where-term lists, scan_pruned must equal the full
 filtered scan and count_pruned must equal the exact count. Hypothesis
 drives the generator; Spark executions are slow, so examples are few but
 adversarial (shrinking converges on minimal counterexamples)."""
@@ -17,10 +17,15 @@ from parqueryd_spark.sources.manifest import build_manifest, count_pruned, scan_
 
 import datetime as _dt
 
+# NaN sorts above every number in Spark and equals itself; ±inf are
+# ordinary bounds. Both reach the footers, so both reach the verdicts.
+_SPECIAL = st.sampled_from([float("nan"), float("inf"), float("-inf")])
 _NUMS = st.one_of(
     st.none(),
     st.integers(min_value=-50, max_value=50).map(float),
+    _SPECIAL,
 )
+_NUM_TERMS = st.one_of(st.integers(-55, 55).map(float), _SPECIAL)
 _STRS = st.one_of(st.none(), st.sampled_from(["", "a", "ab", "b", "zz"]))
 _DAYS = st.one_of(st.none(), st.integers(0, 6))  # date offsets from 2026-01-01
 _ROWS = st.lists(st.tuples(_NUMS, _STRS, _DAYS), min_size=1, max_size=30)
@@ -42,7 +47,7 @@ def _terms(draw):
         col = draw(st.sampled_from(["v", "s", "d", "t"]))
         op = draw(st.sampled_from(_OPS_NUM))
         if col == "v":
-            val = draw(st.integers(-55, 55)).__float__()
+            val = draw(_NUM_TERMS)
         elif col == "s":
             val = draw(st.sampled_from(["", "a", "ab", "c", "zz"]))
         else:
@@ -58,7 +63,7 @@ def _terms(draw):
             if col == "s":
                 extra = draw(st.sampled_from(["a", "b"]))
             elif col == "v":
-                extra = float(draw(st.integers(-55, 55)))
+                extra = draw(_NUM_TERMS)
             else:
                 extra = _temporal_val(draw(st.integers(-1, 7)), draw(st.booleans()), 0)
             val = [val, extra]

@@ -54,3 +54,28 @@ def test_span_dedup_matches_pure_python(spark, texts):
             ).collect()
         }
         assert got == expect, rebuild
+
+
+def test_span_dedup_fixed_corpus_matches_pure_python(spark):
+    """Default-tier pin: one corpus with cross-doc repeats (doc 2 repeats
+    doc 0's first span, doc 3 all of doc 1), within-doc repeats (doc 1,
+    doc 4), a ragged tail and a doc shorter than one span, against the
+    pure-Python walk for both rebuild plans."""
+    texts = [
+        "a b c a a b c c c",
+        "b b b b b b a c",
+        "a b c c b a",
+        "b b b b b b a c",
+        "c c c c c c c",
+        "a",
+    ]
+    docs = list(enumerate(texts))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    expect = _py_span_dedup(docs)
+    assert any(n_kept < n for n, n_kept, _t in expect.values())
+    for rebuild in ("carry", "droplist"):
+        got = {
+            r.doc: (r.n_spans, r.n_kept, r.dedup_text)
+            for r in span_dedup(df, "doc_id", "text", span_tokens=SPAN, rebuild=rebuild).collect()
+        }
+        assert got == expect, rebuild

@@ -81,34 +81,46 @@ def test_batch_drop_only_in_read_batches():
 
 def test_file_verdicts_collected_only_by_the_planner():
     """Every zone-map consumer takes its per-file verdicts from one planner:
-    ``_file_verdicts(`` is called once, in ``manifest._plan``, and nowhere
-    else in the package (the parity hook ``prune_paths`` plans through it
-    too)."""
-    allowed = {"_plan"}
-    found = []
+    the one collect of manifest stats rows (selected with
+    ``F.col("column").isin(``) is in ``manifest._plan``, and the stats
+    fields are read only by the planner and its evaluator helpers (and by
+    ``_footer_reader``, from the parquet statistics it writes them from),
+    nowhere else in the package (the parity hook ``prune_paths`` plans
+    through it too)."""
+    evaluator = {"_plan", "_bounds", "_keep", "_full", "_footer_reader"}
+    stats = {"null_count", "has_min_max", "min_num", "max_num", "min_str", "max_str"}
+    found, selects = [], []
     for rel, text in _sources():
         tree = ast.parse(text)
-        spans = [
-            (n.lineno, n.end_lineno)
+        spans = {
+            n.name: (n.lineno, n.end_lineno)
             for n in tree.body
-            if isinstance(n, ast.FunctionDef)
-            and n.name in allowed
-            and rel == "sources/manifest.py"
-        ]
+            if isinstance(n, ast.FunctionDef) and rel == "sources/manifest.py"
+        }
+
+        def inside(n, names):
+            return any(a <= n.lineno <= b for f, (a, b) in spans.items() if f in names)
+
         for n in ast.walk(tree):
-            if not isinstance(n, ast.Call):
-                continue
-            name = getattr(n.func, "id", getattr(n.func, "attr", None))
-            if name == "_file_verdicts" and not any(a <= n.lineno <= b for a, b in spans):
-                found.append(f"{rel}:{n.lineno}: _file_verdicts( outside {sorted(allowed)}")
+            if isinstance(n, ast.Attribute) and n.attr in stats and not inside(n, evaluator):
+                found.append(f"{rel}:{n.lineno}: .{n.attr} read outside {sorted(evaluator)}")
+            if (
+                isinstance(n, ast.Call)
+                and getattr(n.func, "attr", None) == "isin"
+                and isinstance(n.func.value, ast.Call)
+                and [getattr(a, "value", None) for a in n.func.value.args] == ["column"]
+            ):
+                selects.append(f"{rel}:{n.lineno}")
+                if not inside(n, {"_plan"}):
+                    found.append(f"{rel}:{n.lineno}: manifest stats selected outside _plan")
     assert not found, "\n".join(found)
+    assert len(selects) == 1, selects
     with open(os.path.join(PKG, "sources", "manifest.py")) as f:
-        calls = [
-            n
-            for n in ast.walk(ast.parse(f.read()))
-            if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_file_verdicts"
-        ]
-    assert len(calls) == 1, [n.lineno for n in calls]
+        plan = next(
+            n for n in ast.parse(f.read()).body if isinstance(n, ast.FunctionDef) and n.name == "_plan"
+        )
+    collects = [n for n in ast.walk(plan) if getattr(getattr(n, "func", None), "attr", None) == "collect"]
+    assert len(collects) == 1, [n.lineno for n in collects]
 
 
 def test_exact_selection_has_one_pass0_and_one_resolve():
